@@ -1,13 +1,21 @@
 """End-to-end pipeline tests: Spark output == reference labels, resume
 idempotence, metrics lineage, skew handling."""
 
+import math
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from wikisource_latin_text_cleaner_spark.functions import rules
+from wikisource_latin_text_cleaner_spark.functions import (
+    classify,
+    langid,
+    perplexity,
+    pii,
+    rules,
+)
 from wikisource_latin_text_cleaner_spark.operators import skew
 from wikisource_latin_text_cleaner_spark.operators.pipeline import (
     PipelineConfig,
@@ -18,6 +26,7 @@ from wikisource_latin_text_cleaner_spark.plans import checkpoints
 from wikisource_latin_text_cleaner_spark.sources import synth
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+WEB = rules.ExtensionConfig()
 
 
 @pytest.fixture(scope="module")
@@ -51,11 +60,20 @@ def test_spark_output_matches_reference_labels(spark, transformed):
 
 
 def test_transform_has_no_shuffle(spark):
+    """Reference and web mode both plan as scan -> ONE ArrowEvalPython
+    (the fused UDF: text crosses the Arrow boundary once) -> project, with
+    no shuffle (vectorization constraint, BASELINE.md §2)."""
     df = synth.pages_dataframe(spark, 10, seed=7)  # no repartition in source
-    pipe = QualityFilterPipeline(PipelineConfig(langid=False, classify=False))
-    plan = pipe.transform(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan  # vectorization constraint (BASELINE.md §2)
+    for cfg in (
+        PipelineConfig(langid=False, classify=False),
+        PipelineConfig(extensions=WEB, classify=True, langid=True,
+                       perplexity_threshold=60.0, pii_scrub=True,
+                       rule_metrics=True),
+    ):
+        pipe = QualityFilterPipeline(cfg)
+        plan = pipe.transform(df)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_metrics_lineage(spark, pages_df, transformed):
@@ -71,24 +89,22 @@ def test_metrics_lineage(spark, pages_df, transformed):
 
 def test_rule_metrics_per_pattern_counts(spark):
     """ref A4/step5: per-orthography-rule substitution counts surface in the
-    rule_hits column and as variant:<rule> rows in the metrics table, with
-    identical counts on the fused and chained UDF paths."""
+    rule_hits column and as variant:<rule> rows in the metrics table."""
     filler = ("gallia est omnis divisa in partes tres quarum unam incolunt "
               "belgae aliam aquitani tertiam qui ipsorum lingua celtae. ") * 5
     text = filler + "michi placet et michi manet liber tercius hic."
     pages = spark.createDataFrame(
         [("u-variant", None, None, text, "la")], synth.PAGES_SCHEMA_DDL
     )
-    for fused in (True, False):
-        pipe = QualityFilterPipeline(PipelineConfig(
-            langid=False, classify=False, rule_metrics=True, fused=fused))
-        out = pipe.transform(pages)
-        row = out.collect()[0]
-        assert row.rule_hits["michi"] == 2, (fused, row.rule_hits)
-        assert row.rule_hits["tercius"] == 1
-        hits = {r.rule: r.rule_hits for r in pipe.metrics(out).collect()
-                if r.rule.startswith("variant:")}
-        assert hits == {"variant:michi": 2, "variant:tercius": 1}
+    pipe = QualityFilterPipeline(PipelineConfig(
+        langid=False, classify=False, rule_metrics=True))
+    out = pipe.transform(pages)
+    row = out.collect()[0]
+    assert row.rule_hits["michi"] == 2, row.rule_hits
+    assert row.rule_hits["tercius"] == 1
+    hits = {r.rule: r.rule_hits for r in pipe.metrics(out).collect()
+            if r.rule.startswith("variant:")}
+    assert hits == {"variant:michi": 2, "variant:tercius": 1}
 
 
 def test_rule_metrics_off_by_default(spark, transformed):
@@ -154,31 +170,81 @@ def test_salted_repartition_defuses_skew(spark, pages_df):
     assert top[0]["n_docs"] > top[-1]["n_docs"]
 
 
-def test_pii_scrub(spark):
-    rows = [("u1", "scribe ad admin@example.com et vide https://ex.org/a 4111111111111111")]
-    df = spark.createDataFrame(rows, "url string, text string")
-    from wikisource_latin_text_cleaner_spark.functions import udfs
+def _compose(text, ppx_threshold):
+    """The web-mode per-document composition rebuilt on the driver from
+    the pure-Python cores, in the order the transform documents: rule
+    verdict, classification, langid gate, perplexity gate, PII scrub of
+    kept rows, chars_removed against the final text."""
+    v = rules.evaluate_document(text, rules.MIN_SIZE_BYTES, WEB,
+                                collect_rule_hits=True)
+    keep, reasons, clean = v.keep, list(v.drop_reasons), v.clean_text
+    cls = classify.classify_document(text or "")
+    lang_pred, lang_margin = langid.predict(clean or "")
+    if keep and lang_pred != "la":
+        keep, reasons = False, reasons + ["langid"]
+    ppx = perplexity.perplexity(clean or "")
+    if keep and ppx > ppx_threshold:
+        keep, reasons = False, reasons + ["perplexity"]
+    scrubbed, counts = pii.scrub_pii(clean or "")
+    if keep:
+        clean = scrubbed
+    return {
+        "keep": keep, "drop_reasons": reasons, "clean_text": clean,
+        "period": cls["period"], "genre": cls["genre"],
+        "confidence": cls["confidence"],
+        "lang_pred": lang_pred, "lang_margin": lang_margin, "ppx": ppx,
+        "pii_spans": sum(counts.values()), "rule_hits": v.rule_hits,
+        "chars_removed": len(text or "") - len(clean or ""),
+    }
 
-    out = df.select(udfs.pii_udf("text").alias("p")).select("p.*").collect()[0]
-    assert "<EMAIL>" in out["text"] and "<URL>" in out["text"] and "<NUMBER>" in out["text"]
-    assert out["pii_spans"] == 3
 
+def test_transform_matches_in_process_composition(spark, pages_df):
+    """Every output column of the web-mode transform equals the cores
+    composed in-process, over pages where a langid drop, a perplexity drop
+    and a kept row with PII replaced all occur."""
+    src = {r["url"]: r.asDict() for r in pages_df.collect()}
+    # plant a kept Latin page carrying PII that survives the reference
+    # scrub (an IPv4 and a card number; its punctuation whitelist strips
+    # the '@' and '/' that e-mail and URL spans need)
+    base = next(src[u] for u in sorted(src)
+                if _compose(src[u]["text"], math.inf)["keep"])
+    planted = dict(base, url="u-pii", text=base["text"] + (
+        "\n\nseruus ad 10.0.0.1 respondit et numerus 4111111111111111 est.\n"))
+    src["u-pii"] = planted
+    # the planted page sits exactly at the threshold (the gate drops only
+    # ppx > threshold), so it is kept while the pages above it drop
+    threshold = _compose(planted["text"], math.inf)["ppx"]
+    pages = pages_df.unionByName(
+        spark.createDataFrame([planted], synth.PAGES_SCHEMA_DDL))
 
-def test_fused_equals_chained(spark, pages_df):
-    """The single-pass fused UDF path is row-identical to the composable
-    chained-UDF path for the same config."""
-    from pyspark.sql import functions as F
+    out = QualityFilterPipeline(PipelineConfig(
+        extensions=WEB, classify=True, langid=True,
+        perplexity_threshold=threshold, pii_scrub=True, rule_metrics=True,
+    )).transform(pages)
+    assert out.columns == [
+        "url", "warc_ts", "lang", "keep", "drop_reasons", "clean_text",
+        "period", "genre", "confidence", "lang_pred", "lang_margin", "ppx",
+        "pii_spans", "rule_hits", "chars_removed",
+    ]
+    got = out.collect()
+    assert sorted(r["url"] for r in got) == sorted(src)
+    for row in got:
+        s = src[row["url"]]
+        want = {"url": s["url"], "warc_ts": s["warc_ts"], "lang": s["lang"],
+                **_compose(s["text"], threshold)}
+        assert row.asDict() == want, row["url"]
 
-    from wikisource_latin_text_cleaner_spark.functions import rules
+    reasons = Counter(r for row in got for r in row["drop_reasons"])
+    assert reasons["langid"] > 0 and reasons["perplexity"] > 0, reasons
+    pii_kept = {r["url"]: r for r in got if r["keep"] and r["pii_spans"]}
+    assert all("<NUMBER>" in r["clean_text"] for r in pii_kept.values())
+    assert "<IP>" in pii_kept["u-pii"]["clean_text"]
 
-    kw = dict(extensions=rules.ExtensionConfig(), classify=True, langid=True,
-              perplexity_threshold=1e9, pii_scrub=True)
-    a = QualityFilterPipeline(PipelineConfig(fused=True, **kw)).transform(pages_df)
-    b = QualityFilterPipeline(PipelineConfig(fused=False, **kw)).transform(pages_df)
-    assert a.columns == b.columns
-    fix = lambda df: df.withColumn("drop_reasons", F.concat_ws("|", "drop_reasons"))  # noqa: E731
-    assert fix(a).exceptAll(fix(b)).count() == 0
-    assert fix(b).exceptAll(fix(a)).count() == 0
+    # e-mail and URL placeholders, checked on the core directly
+    scrubbed, counts = pii.scrub_pii(
+        "scribe ad admin@example.com et vide https://ex.org/a 4111111111111111")
+    assert "<EMAIL>" in scrubbed and "<URL>" in scrubbed and "<NUMBER>" in scrubbed
+    assert sum(counts.values()) == 3
 
 
 def test_resume_rejects_cross_scheme_manifest(spark, pages_df, tmp_path):

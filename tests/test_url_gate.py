@@ -1,6 +1,5 @@
 """Pipeline URL gate (PipelineConfig.url_blocklist / max_url_kw_hits)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from wikisource_latin_text_cleaner_spark.functions import rules
@@ -60,20 +59,6 @@ def test_dataframe_blocklist_matches_tuple_path(spark, pages_df):
     ).select("url", "keep", "drop_reasons")
     assert via_df.exceptAll(via_tuple).count() == 0
     assert via_tuple.exceptAll(via_df).count() == 0
-
-
-@pytest.mark.parametrize("fused", [True, False])
-def test_fused_and_chained_agree_with_gate(spark, pages_df, fused):
-    out = _run(
-        pages_df, fused=fused, url_blocklist=("site01.example",),
-        max_url_kw_hits=0,
-    ).select("url", "keep", "drop_reasons")
-    ref = _run(
-        pages_df, fused=not fused, url_blocklist=("site01.example",),
-        max_url_kw_hits=0,
-    ).select("url", "keep", "drop_reasons")
-    assert out.exceptAll(ref).count() == 0
-    assert ref.exceptAll(out).count() == 0
 
 
 def test_keyword_gate(spark):

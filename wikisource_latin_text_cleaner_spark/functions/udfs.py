@@ -6,7 +6,7 @@ row-at-a-time Spark Python UDFs anywhere in the engine). The regex batteries
 compile once per executor at module import (the Spark analog of the
 reference's precompile-once singleton, Text Cleaner/optimized_regex_patterns.py:11-14,185-186).
 
-The scrub/verdict UDFs intentionally keep Python ``re`` semantics (not
+The scrub and fused UDFs intentionally keep Python ``re`` semantics (not
 Catalyst ``regexp_replace``) because byte-identical output per url is a
 contract (SURVEY.md §4.3-2).
 """
@@ -27,42 +27,6 @@ from pyspark.sql.types import (
 )
 
 from . import classify, langid, perplexity, pii, rules, scrub
-
-VERDICT_SCHEMA = StructType([
-    StructField("keep", BooleanType()),
-    StructField("drop_reasons", ArrayType(StringType())),
-    StructField("clean_text", StringType()),
-    # per-orthography-rule substitution counts; null unless rule_metrics on
-    StructField("rule_hits", MapType(StringType(), IntegerType())),
-])
-
-CLASSIFY_SCHEMA = StructType([
-    StructField("title", StringType()),
-    StructField("category", StringType()),
-    StructField("text_type", StringType()),
-    StructField("period", StringType()),
-    StructField("period_confidence", StringType()),
-    StructField("genre", StringType()),
-    StructField("genre_confidence", StringType()),
-    StructField("confidence", StringType()),
-])
-
-LANGID_SCHEMA = StructType([
-    StructField("lang_pred", StringType()),
-    StructField("lang_margin", DoubleType()),
-])
-
-PII_SCHEMA = StructType([
-    StructField("text", StringType()),
-    StructField("pii_spans", IntegerType()),
-])
-
-
-@pandas_udf(StringType())
-def scrub_udf(texts: pd.Series) -> pd.Series:
-    """Byte-identical step3..6 scrub composition."""
-    return texts.map(lambda t: scrub.scrub_document(t or ""))
-
 
 #: scrub stage name -> function, in canonical composition order
 #: (ref steps 3,4,5,6 -- Text Cleaner/clean_texts_v2.py:242-251)
@@ -100,48 +64,6 @@ def make_scrub_stages_udf(stages: tuple):
     return scrub_stages_udf
 
 
-def make_verdict_udf(min_size_bytes: int = rules.MIN_SIZE_BYTES,
-                     extensions: rules.ExtensionConfig | None = None,
-                     rule_metrics: bool = False):
-    """Verdict UDF factory; config is captured in the closure (the Spark
-    equivalent of a broadcast rule table)."""
-
-    @pandas_udf(VERDICT_SCHEMA)
-    def verdict_udf(texts: pd.Series) -> pd.DataFrame:
-        verdicts = [
-            rules.evaluate_document(t, min_size_bytes, extensions,
-                                    collect_rule_hits=rule_metrics)
-            for t in texts
-        ]
-        return pd.DataFrame({
-            "keep": [v.keep for v in verdicts],
-            "drop_reasons": [v.drop_reasons for v in verdicts],
-            "clean_text": [v.clean_text for v in verdicts],
-            "rule_hits": [v.rule_hits for v in verdicts],
-        })
-
-    return verdict_udf
-
-
-@pandas_udf(CLASSIFY_SCHEMA)
-def classify_udf(texts: pd.Series) -> pd.DataFrame:
-    recs = [classify.classify_document(t or "") for t in texts]
-    return pd.DataFrame({
-        k: [r[k] for r in recs]
-        for k in ("title", "category", "text_type", "period", "period_confidence",
-                  "genre", "genre_confidence", "confidence")
-    })
-
-
-@pandas_udf(LANGID_SCHEMA)
-def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    preds = [langid.predict(t or "") for t in texts]
-    return pd.DataFrame({
-        "lang_pred": [p[0] for p in preds],
-        "lang_margin": [p[1] for p in preds],
-    })
-
-
 @pandas_udf(StringType())
 def langid_label_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(langid.predict_batch(texts))
@@ -150,16 +72,6 @@ def langid_label_udf(texts: pd.Series) -> pd.Series:
 @pandas_udf(DoubleType())
 def perplexity_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(perplexity.perplexity_batch(texts))
-
-
-@pandas_udf(PII_SCHEMA)
-def pii_udf(texts: pd.Series) -> pd.DataFrame:
-    scrubbed, spans = [], []
-    for t in texts:
-        s, counts = pii.scrub_pii(t or "")
-        scrubbed.append(s)
-        spans.append(sum(counts.values()))
-    return pd.DataFrame({"text": scrubbed, "pii_spans": spans})
 
 
 @pandas_udf(DoubleType())
@@ -194,11 +106,10 @@ def make_fused_udf(
 ):
     """Single-pass UDF computing the whole per-document pipeline.
 
-    Equivalent by construction (and by differential test) to the chained
-    verdict -> classify -> langid -> perplexity -> pii UDF pipeline, but the
-    document text crosses the JVM<->Python Arrow boundary exactly once and
-    only one Python worker pool is needed, instead of two chained
-    ArrowEvalPython stages. Fields for disabled components are null.
+    Composes verdict -> classify -> langid -> perplexity -> pii per
+    document, so the text crosses the JVM<->Python Arrow boundary exactly
+    once, in one ArrowEvalPython stage with one Python worker pool.
+    Fields for disabled components are null.
     """
 
     @pandas_udf(FUSED_SCHEMA)
