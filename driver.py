@@ -15,9 +15,14 @@ Local smoke (same code path; spark-submit not required):
         --master "local[8]"
 
 Stages (one declarative DataFrame chain, SURVEY.md §3.4): read -> [salted
-repartition] -> verdict/scrub Arrow UDF -> langid/perplexity/PII gates ->
-bucket-checkpointed write (quarantine rows kept, never deleted) -> metrics
-append. Resume (--resume) skips buckets whose manifest rows exist.
+repartition] -> fused scrub/verdict/langid/perplexity/PII Arrow UDF -> URL
+and Gopher gates -> run counters (df.observe) -> bucket-checkpointed write
+(quarantine rows kept, never deleted) -> manifest append -> per-run metrics
+rows append. Resume (--resume) skips buckets whose manifest rows exist.
+
+The counters ride the one data write, so the run record and the metrics rows
+cost no scan of the output; only a resume that left buckets untouched reads
+their ``keep`` column once, for the cumulative counts.
 """
 
 from __future__ import annotations
@@ -117,7 +122,8 @@ def main(argv: list[str] | None = None) -> int:
 
     import dataclasses
 
-    from pyspark.sql import SparkSession
+    import pyarrow as pa
+    from pyspark.sql import Observation, SparkSession
 
     from wikisource_latin_text_cleaner_spark import catalog
     from wikisource_latin_text_cleaner_spark.functions import rules
@@ -171,8 +177,8 @@ def main(argv: list[str] | None = None) -> int:
         m_bits, n_hashes = (int(x) for x in args.url_blocklist_bloom.split(","))
         cfg = dataclasses.replace(
             cfg,
-            url_blocklist=spark.createDataFrame(
-                [(d,) for d in args.url_blocklist.split(",")], "domain string"
+            url_blocklist=catalog.local_frame(
+                spark, {"domain": pa.array(args.url_blocklist.split(","))}
             ),
             url_blocklist_bloom=(m_bits, n_hashes),
         )
@@ -206,62 +212,72 @@ def main(argv: list[str] | None = None) -> int:
     else:
         transform = pipe.transform
 
+    obs = None  # set when the transform is built; None = nothing written
+
+    def observed(df):
+        nonlocal obs
+        if pipe is None:  # stage-subset mode: every row passes through
+            obs = Observation("stages")
+            return transform(df).observe(obs, F.count(F.lit(1)).alias("docs_in"))
+        df, obs = pipe.observed(transform(df))
+        return df
+
     part_cols = tuple(c for c in args.partition_by.split(",") if c)
     t0 = time.time()
     run_ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     if args.buckets >= 1:
         run_buckets = checkpoints.run_resumable(
-            transform, pages, args.output, n_buckets=args.buckets,
+            observed, pages, args.output, n_buckets=args.buckets,
             resume=args.resume, partition_cols=part_cols,
         )
-        out = checkpoints.read_output(spark, args.output)
-        # metrics scoped to exactly the buckets this invocation computed
-        # (full-output metrics on every resume would double-count docs).
-        # Known tradeoff: a crash between the manifest write and this append
-        # loses one run's metrics rather than double-counting them.
-        metrics_src = (
-            out.where(out.bucket.isin(run_buckets)) if run_buckets else None
-        )
-        n_run = len(run_buckets) if run_buckets else 0
+        # a resume leaves the buckets it did not run in place
+        untouched = (sorted(set(range(args.buckets)) - set(run_buckets))
+                     if args.resume else [])
+        n_run = len(run_buckets)
     else:
-        flat = transform(pages)
         # same <output>/data layout as the bucketed path, so the metrics
         # table never nests inside the scanned dataset; any prior bucketed
         # manifest is invalidated (overwritten empty) so a later --resume
         # cannot trust checkpoints that no longer describe the data
-        writer = flat.write.mode("overwrite")
+        writer = observed(pages).write.mode("overwrite")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(os.path.join(args.output, "data"))
-        spark.createDataFrame([], "bucket int, n_buckets int").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(args.output, "_checkpoints"))
-        out = checkpoints.read_output(spark, args.output)
-        metrics_src = out
-        n_run = -1
+        checkpoints.write_manifest(spark, args.output, [], 0)
+        untouched, n_run = [], -1
 
-    if metrics_src is not None and pipe is not None:
-        metrics = pipe.metrics(metrics_src).withColumn("run_ts", F.lit(run_ts))
+    # this run's counters came with its write; Observation.get would block
+    # forever when nothing was written
+    run = obs.get if obs is not None else {}
+    docs_processed = run.get("docs_in", 0)
+    docs_kept = (run.get("docs_kept") or 0) if pipe is not None else docs_processed
+    if pipe is not None and obs is not None:
+        # metrics scoped to exactly the buckets this invocation computed
+        # (full-output metrics on every resume would double-count docs).
+        # Known tradeoff: a crash between the manifest write and this append
+        # loses one run's metrics rather than double-counting them.
+        metrics = pipe.observed_metrics(spark, run).withColumn(
+            "run_ts", F.lit(run_ts))
         catalog.append(metrics, args.metrics or f"{args.output.rstrip('/')}/metrics")
 
     # cumulative counts describe the full output table; throughput is scoped
     # to the docs THIS invocation processed (a resume that ran 1 of 64
     # buckets must not report the whole table's docs over its own wall time)
-    if "keep" in out.columns:
-        stats = {
-            r["k"]: r["n"]
-            for r in out.groupBy(out.keep.cast("string").alias("k"))
-            .count().withColumnRenamed("count", "n").collect()
-        }
-    else:  # stage-subset mode: every row passes through
-        stats = {"true": out.count()}
-    docs_processed = metrics_src.count() if metrics_src is not None else 0
+    docs_in = docs_processed
+    if untouched:
+        out = checkpoints.read_output(spark, args.output)
+        n_old, kept_old = out.where(out.bucket.isin(untouched)).agg(
+            F.count(F.lit(1)),
+            F.sum(F.col("keep").cast("long")) if pipe is not None
+            else F.count(F.lit(1)),
+        ).first()
+        docs_in += n_old
+        docs_kept += kept_old or 0
     elapsed = time.time() - t0
-    total = sum(stats.values())
     print(json.dumps({
-        "docs_in": total,
-        "docs_kept": stats.get("true", 0),
-        "docs_quarantined": stats.get("false", 0),
+        "docs_in": docs_in,
+        "docs_kept": docs_kept,
+        "docs_quarantined": docs_in - docs_kept,
         "buckets_run": n_run,
         "docs_processed": docs_processed,
         "sec": round(elapsed, 2),

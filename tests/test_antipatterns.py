@@ -25,10 +25,10 @@ PKG = Path(__file__).resolve().parent.parent / "wikisource_latin_text_cleaner_sp
 #: similarity.py: 2^planes / n_cells histograms + IVF sample training;
 #: sampling.py: n_strata-row threshold collects; lm.py: V*V=1600-cell
 #: count vectors; bpe.py: merge-table counts; decontaminate.py: bloom
-#: build (bounded by filter bits); checkpoints.py: bucket list + resume
-#: manifest.
+#: build (bounded by filter bits); checkpoints.py: the resume manifest
+#: (one row per completed bucket).
 COLLECT_BUDGET = {
-    "plans/checkpoints.py": 2,
+    "plans/checkpoints.py": 1,
     "operators/decontaminate.py": 1,
     "operators/sampling.py": 3,
     "operators/similarity.py": 4,

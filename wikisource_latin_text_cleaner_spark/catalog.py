@@ -21,6 +21,16 @@ def _has_iceberg(spark: SparkSession, table: str) -> bool:
     return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
 
 
+def local_frame(spark: SparkSession, columns: dict) -> DataFrame:
+    """A small driver-built frame (manifest, metrics rows) from typed
+    ``pyarrow`` arrays keyed by column name. A ``pyarrow.Table`` plans as a
+    ``LocalTableScan``; a Python list would plan a pickled-RDD scan and
+    cost an extra Spark job on every write."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns))
+
+
 def read_table(spark: SparkSession, table_or_path: str) -> DataFrame:
     if os.path.sep in table_or_path or table_or_path.endswith(".parquet"):
         return spark.read.parquet(table_or_path)

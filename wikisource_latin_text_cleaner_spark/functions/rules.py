@@ -31,6 +31,11 @@ _I = re.IGNORECASE
 #: Default minimum raw document size in UTF-8 bytes (ref step1:146)
 MIN_SIZE_BYTES = 200
 
+#: drop reasons of the reference gates, in evaluation order
+EARLY_REASONS = ("null_text", "min_size", "index_toc", "pre_clean_len",
+                 "post_clean_len")
+NULL_TEXT, MIN_SIZE, INDEX_TOC, PRE_CLEAN_LEN, POST_CLEAN_LEN = EARLY_REASONS
+
 # -- index/TOC detector patterns (ref: optimized_regex_patterns.py:39-54) --
 _CHAPTER_REF = re.compile(
     r"(liber|book|chapter|capitulum|epistul|carmen|versus|sectio|pars)\s+[ivxlcdm0-9]+",
@@ -129,21 +134,28 @@ class ExtensionConfig:
     langid_gate: bool = False  # off unless a langid model is supplied
 
 
+#: every drop reason ``extension_reasons`` can emit
+EXTENSION_REASONS = ("word_count", "mean_word_len", "symbol_ratio",
+                     "stopword_ratio", "repetition", "dup_lines", "toxicity")
+(WORD_COUNT, MEAN_WORD_LEN, SYMBOL_RATIO, STOPWORD_RATIO, REPETITION,
+ DUP_LINES, TOXICITY) = EXTENSION_REASONS
+
+
 def extension_reasons(clean_text: str, cfg: ExtensionConfig) -> list[str]:
     """Gopher/C4-style quality reasons evaluated on the scrubbed text."""
     reasons = []
     words = _WORD.findall(clean_text.lower())
     n = len(words)
     if n < cfg.min_words or n > cfg.max_words:
-        reasons.append("word_count")
+        reasons.append(WORD_COUNT)
         return reasons  # remaining ratios are meaningless on tiny docs
     mean_len = sum(len(w) for w in words) / n
     if not (cfg.min_mean_word_len <= mean_len <= cfg.max_mean_word_len):
-        reasons.append("mean_word_len")
+        reasons.append(MEAN_WORD_LEN)
     if len(_SYMBOLS.findall(clean_text)) / max(1, len(clean_text)) > cfg.max_symbol_ratio:
-        reasons.append("symbol_ratio")
+        reasons.append(SYMBOL_RATIO)
     if sum(1 for w in words if w in STOPWORDS) / n < cfg.min_stopword_ratio:
-        reasons.append("stopword_ratio")
+        reasons.append(STOPWORD_RATIO)
     if n >= 8:
         bigrams: dict = {}
         for a, b in zip(words, words[1:]):
@@ -151,15 +163,15 @@ def extension_reasons(clean_text: str, cfg: ExtensionConfig) -> list[str]:
             bigrams[key] = bigrams.get(key, 0) + 1
         top = max(bigrams.values())
         if top / (n - 1) > cfg.max_top_bigram_ratio:
-            reasons.append("repetition")
+            reasons.append(REPETITION)
     if cfg.max_dup_line_frac is not None:
         if dup_line_char_fraction(clean_text) > cfg.max_dup_line_frac:
-            reasons.append("dup_lines")
+            reasons.append(DUP_LINES)
     if cfg.max_toxicity is not None:
         from . import pii as _pii
 
         if _pii.toxicity_score(clean_text) > cfg.max_toxicity:
-            reasons.append("toxicity")
+            reasons.append(TOXICITY)
     return reasons
 
 
@@ -206,21 +218,21 @@ def evaluate_document(
     is the byte-identical step3..6 composition output.
     """
     if text is None:
-        return Verdict(False, ["null_text"])
+        return Verdict(False, [NULL_TEXT])
     if len(text.encode("utf-8")) < min_size_bytes:
-        return Verdict(False, ["min_size"])
+        return Verdict(False, [MIN_SIZE])
     if looks_like_index(text):
-        return Verdict(False, ["index_toc"])
+        return Verdict(False, [INDEX_TOC])
 
     hits: dict | None = {} if collect_rule_hits else None
     staged = scrub.stage_orthography(
         scrub.stage_headings(scrub.stage_content(text)), variant_counts=hits
     )
     if len(staged.strip()) < scrub.MIN_CLEAN_CHARS:
-        return Verdict(False, ["pre_clean_len"], rule_hits=hits)
+        return Verdict(False, [PRE_CLEAN_LEN], rule_hits=hits)
     cleaned = scrub.stage_final(staged)
     if len(cleaned.strip()) < scrub.MIN_CLEAN_CHARS:
-        return Verdict(False, ["post_clean_len"], rule_hits=hits)
+        return Verdict(False, [POST_CLEAN_LEN], rule_hits=hits)
 
     if extensions is not None:
         reasons = extension_reasons(cleaned, extensions)

@@ -79,6 +79,10 @@ def toxicity_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: pii.toxicity_score(t or ""))
 
 
+#: drop reasons the fused UDF appends after the rule verdict
+LANGID_REASON = "langid"
+PERPLEXITY_REASON = "perplexity"
+
 FUSED_SCHEMA = StructType([
     StructField("keep", BooleanType()),
     StructField("drop_reasons", ArrayType(StringType())),
@@ -131,13 +135,13 @@ def make_fused_udf(
             if langid_on:
                 lang_pred, lang_margin = langid.predict(cleaned or "")
                 if keep and lang_pred not in allowed_langs:
-                    reasons.append("langid")
+                    reasons.append(LANGID_REASON)
                     keep = False
             px = None
             if ppx_threshold is not None:
                 px = perplexity.perplexity(cleaned or "")
                 if keep and px > ppx_threshold:
-                    reasons.append("perplexity")
+                    reasons.append(PERPLEXITY_REASON)
                     keep = False
             spans = None
             if pii_on:

@@ -18,11 +18,20 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import rules, udfs
+from ..catalog import local_frame
+from ..functions import rules, scrub, udfs
 from .skew import salted_repartition
+
+#: drop reasons the post-UDF gates append
+URL_BLOCKLIST_REASON = "url_blocklist"
+GOPHER_PREFIX = "gopher:"
+GOPHER_REPETITION_REASON = GOPHER_PREFIX + "repetition"
+#: metrics-table rule-name prefix of the per-orthography-rule hit rows
+VARIANT_PREFIX = "variant:"
 
 
 @dataclass
@@ -153,7 +162,7 @@ class QualityFilterPipeline:
 
         if cfg.gopher_gate:
             ff = _q.gopher_first_fail(F.col("clean_text"), **(cfg.gopher_opts or {}))
-            df = _flip(df, ff.isNotNull(), F.concat(F.lit("gopher:"), ff))
+            df = _flip(df, ff.isNotNull(), F.concat(F.lit(GOPHER_PREFIX), ff))
         if cfg.gopher_repetition_gate:
             # Arrow-fused battery (one UDF for all nine fractions); the
             # Catalyst fold twin is ~25x slower when all nine are needed
@@ -161,7 +170,7 @@ class QualityFilterPipeline:
                 _q.repetition_fracs_udf()(F.col("clean_text"))
             )
             df = _flip(df, F.coalesce(rep, F.lit(False)),
-                       F.lit("gopher:repetition"))
+                       F.lit(GOPHER_REPETITION_REASON))
         return df
 
     def _apply_url_gate(self, df: DataFrame) -> DataFrame:
@@ -172,7 +181,7 @@ class QualityFilterPipeline:
         contains() probes. Docs failing the gate get drop reason
         'url_blocklist' (see ``_flip``)."""
         cfg = self.config
-        if cfg.url_blocklist is None and cfg.max_url_kw_hits is None:
+        if not self._url_gate_on():
             return df
         from ..functions import urls as _urls
 
@@ -216,7 +225,11 @@ class QualityFilterPipeline:
             blocked = blocked | (
                 _urls.url_keyword_hits(F.col("url")) > cfg.max_url_kw_hits
             )
-        return _flip(df, blocked, F.lit("url_blocklist")).select(*cols)
+        return _flip(df, blocked, F.lit(URL_BLOCKLIST_REASON)).select(*cols)
+
+    def _url_gate_on(self) -> bool:
+        return (self.config.url_blocklist is not None
+                or self.config.max_url_kw_hits is not None)
 
     def _transform_fused(self, df: DataFrame) -> DataFrame:
         """One ArrowEvalPython stage for the whole per-document pipeline:
@@ -260,31 +273,105 @@ class QualityFilterPipeline:
         )
         return df.select(*cols)
 
+    def reason_vocabulary(self) -> tuple:
+        """The closed set of drop reasons this config can emit, each name
+        taken from the module that emits it."""
+        cfg = self.config
+        reasons = rules.EARLY_REASONS
+        if cfg.extensions is not None:
+            reasons += rules.EXTENSION_REASONS
+        if cfg.langid:
+            reasons += (udfs.LANGID_REASON,)
+        if cfg.perplexity_threshold is not None:
+            reasons += (udfs.PERPLEXITY_REASON,)
+        if self._url_gate_on():
+            reasons += (URL_BLOCKLIST_REASON,)
+        if cfg.gopher_gate:
+            from ..functions import quality as _q
+
+            reasons += tuple(GOPHER_PREFIX + k for k in _q.gopher_rule_flags(
+                F.col("clean_text"), **(cfg.gopher_opts or {})))
+        if cfg.gopher_repetition_gate:
+            reasons += (GOPHER_REPETITION_REASON,)
+        return reasons
+
     def observed(self, transformed: DataFrame, name: str = "quality_filter"):
-        """Attach driver-visible counters to the frame (ref A4/S10: the
+        """Attach driver-visible run counters to the frame (ref A4/S10: the
         running stats the reference's DetailedProgressLogger accumulated,
         Text Cleaner/detailed_progress_logger.py:33-47). ``df.observe``
-        rides the existing job -- the counters cost no extra pass, unlike
-        ``metrics()`` which is a separate (tiny) aggregation.
+        rides the action that writes the frame, so the counters cost no
+        extra pass over the data.
 
-        Returns (df, observation); read ``observation.get`` after an action.
+        Counters: ``docs_in``, ``docs_kept``, ``chars_removed``,
+        ``clean_chars``; one docs-dropped count per name in
+        ``reason_vocabulary()``, keyed by the reason; ``_unlisted``, the
+        docs carrying any reason outside that vocabulary (0 unless an
+        emitter and the vocabulary disagree); and with ``rule_metrics``
+        one ``variant:<rule>`` hit sum per orthography variant rule (NULL
+        when the rule never fired). ``observed_metrics`` turns them into
+        ``metrics()`` rows.
+
+        Returns (df, observation); read ``observation.get`` only after an
+        action ran on ``df``: it blocks until one does.
         """
         from pyspark.sql import Observation
 
-        obs = Observation(name)
-        df = transformed.observe(
-            obs,
+        reasons = self.reason_vocabulary()
+        counters = [
             F.count(F.lit(1)).alias("docs_in"),
             F.sum(F.col("keep").cast("long")).alias("docs_kept"),
+            F.sum("chars_removed").alias("chars_removed"),
             F.sum(F.length("clean_text")).alias("clean_chars"),
-        )
-        return df, obs
+            F.count_if(
+                F.exists("drop_reasons", lambda r: ~r.isin(*reasons))
+            ).alias("_unlisted"),
+        ]
+        counters += [F.count_if(F.array_contains("drop_reasons", r)).alias(r)
+                     for r in reasons]
+        if self.config.rule_metrics:
+            # rule_hits is keyed by each rule's first guard literal
+            names = dict.fromkeys(g[0] for _, _, g in scrub.VARIANT_RULES)
+            counters += [F.sum(F.col("rule_hits")[k]).alias(VARIANT_PREFIX + k)
+                         for k in names]
+        obs = Observation(name)
+        return transformed.observe(obs, *counters), obs
+
+    def observed_metrics(self, spark, counters: dict) -> DataFrame:
+        """``metrics()`` rows for one observed run, built from its
+        ``observed()`` counters without touching the data: the same columns
+        and rule names, one set of rows per run with ``partition_id`` NULL.
+        A run of zero docs yields no rows, as ``metrics()`` does."""
+        if counters["_unlisted"]:
+            import warnings
+
+            warnings.warn(f"{counters['_unlisted']} docs carry drop reasons "
+                          "outside reason_vocabulary(); their per-reason "
+                          "metrics rows are missing")
+        docs_in, kept = counters["docs_in"], counters["docs_kept"] or 0
+        # (rule, docs_dropped, docs_in, docs_out, chars_removed, rule_hits)
+        rows = [("_partition_total", docs_in - kept, docs_in, kept,
+                 counters["chars_removed"], None)] if docs_in else []
+        rows += [(r, counters[r], None, None, None, None)
+                 for r in self.reason_vocabulary() if counters[r]]
+        rows += [(k, None, None, None, None, v) for k, v in counters.items()
+                 if k.startswith(VARIANT_PREFIX) and v is not None]
+        names = ("rule", "docs_dropped", "docs_in", "docs_out",
+                 "chars_removed", "rule_hits")
+        cols = list(zip(*rows)) or [()] * len(names)
+        return local_frame(spark, {
+            "partition_id": pa.nulls(len(rows), pa.int32()),
+            **{n: pa.array(c, pa.string() if n == "rule" else pa.int64())
+               for n, c in zip(names, cols)},
+        })
 
     def metrics(self, transformed: DataFrame) -> DataFrame:
         """Per-partition lineage counters (SURVEY.md §4.3-3): one row per
         (partition_id, rule) plus a `_partition_total` row per partition --
         the Spark re-expression of the reference's per-step report files
-        (Text Cleaner/detailed_progress_logger.py:33-47)."""
+        (Text Cleaner/detailed_progress_logger.py:33-47). This is the
+        library API and a separate aggregation over ``transformed``; the
+        driver writes the same rules per run from ``observed()`` counters
+        instead (``observed_metrics``), with no pass over its output."""
         base = transformed.withColumn("partition_id", F.spark_partition_id())
         per_rule = (
             base.select("partition_id", F.explode_outer("drop_reasons").alias("rule"))
@@ -314,7 +401,7 @@ class QualityFilterPipeline:
                             .alias("rule", "hits"))
                 .where(F.col("rule").isNotNull())
                 .groupBy("partition_id",
-                         F.concat(F.lit("variant:"), "rule").alias("rule"))
+                         F.concat(F.lit(VARIANT_PREFIX), "rule").alias("rule"))
                 .agg(F.sum("hits").cast("long").alias("rule_hits"))
                 .withColumn("docs_dropped", F.lit(None).cast("long"))
                 .withColumn("docs_in", F.lit(None).cast("long"))

@@ -23,8 +23,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..catalog import local_frame
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
@@ -49,14 +52,17 @@ def completed_buckets(spark: SparkSession, out_dir: str,
         if type(e).__name__ == "AnalysisException" or "infer schema" in str(e):
             return set()
         raise
+    if n_buckets is not None and "n_buckets" not in df.columns:
+        raise ValueError(
+            f"checkpoint manifest at {manifest} predates bucket-scheme "
+            "recording and cannot be safely resumed; rerun without "
+            "--resume to recompute"
+        )
+    # one row per bucket a run completed: a single small job, and the
+    # scheme check runs over the collected rows
+    rows = df.collect()
     if n_buckets is not None:
-        if "n_buckets" not in df.columns:
-            raise ValueError(
-                f"checkpoint manifest at {manifest} predates bucket-scheme "
-                "recording and cannot be safely resumed; rerun without "
-                "--resume to recompute"
-            )
-        schemes = {r["n_buckets"] for r in df.select("n_buckets").distinct().collect()}
+        schemes = {r["n_buckets"] for r in rows}
         if None in schemes or schemes - {n_buckets}:
             known = sorted(s for s in schemes if s is not None)
             raise ValueError(
@@ -64,8 +70,20 @@ def completed_buckets(spark: SparkSession, out_dir: str,
                 f"n_buckets={known or 'unknown'}, current run uses {n_buckets}; "
                 "rerun without --resume to recompute under the new scheme"
             )
-    rows = df.select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
+
+
+def write_manifest(spark: SparkSession, out_dir: str, buckets,
+                   n_buckets: int, append: bool = False) -> None:
+    """Mark ``buckets`` complete under the pmod-``n_buckets`` scheme; each
+    row records its scheme so cross-scheme resumes are caught. An empty
+    ``buckets`` with ``append=False`` invalidates every checkpoint."""
+    buckets = sorted(int(b) for b in buckets)
+    local_frame(spark, {
+        "bucket": pa.array(buckets, pa.int32()),
+        "n_buckets": pa.array([n_buckets] * len(buckets), pa.int32()),
+    }).write.mode("append" if append else "overwrite").parquet(
+        os.path.join(out_dir, "_checkpoints"))
 
 
 def run_resumable(
@@ -124,15 +142,10 @@ def run_resumable(
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    # manifest write AFTER data is durable; fresh runs replace the manifest;
-    # each row records its bucket scheme so cross-scheme resumes are caught
-    run_buckets = set(range(n_buckets)) - done
-    manifest = os.path.join(out_dir, "_checkpoints")
-    spark.createDataFrame(
-        [(int(b), int(n_buckets)) for b in sorted(run_buckets)],
-        "bucket int, n_buckets int",
-    ).write.mode("append" if resume else "overwrite").parquet(manifest)
-    return sorted(run_buckets)
+    # manifest write AFTER data is durable; fresh runs replace the manifest
+    run_buckets = sorted(set(range(n_buckets)) - done)
+    write_manifest(spark, out_dir, run_buckets, n_buckets, append=resume)
+    return run_buckets
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
