@@ -16,9 +16,9 @@ Every query is forced with a `noop`-format write so projections and UDFs are
 fully evaluated (a bare ``count()`` lets Catalyst prune unreferenced
 projections and would under-measure).
 
-Scaling evidence (local[8] vs local[32], north rule) lives in
-``bench_scaling.py`` -> ``BENCH/BASELINE.md``; this script stays fast enough
-for the per-round driver loop.
+Scaling evidence (local[8] vs local[32], north rule) is recorded in
+``BENCH/BASELINE.md``; the layered benchmark is ``perfbench/run.py``. This
+script stays fast enough for the per-round driver loop.
 """
 
 from __future__ import annotations
@@ -202,7 +202,7 @@ def main() -> None:
         timings[name] = min(reps[name])
 
     # North-rule headline: full web-mode pipeline throughput in docs/sec.
-    # Tuned for the UDF-chain job (see bench_scaling.py docstring): small
+    # Tuned for the UDF-chain job (BENCH/BASELINE.md): small
     # Arrow batches overlap JVM<->Python transfer with compute; AQE's
     # stage-wise materialization only adds latency to this shuffle-free job.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")

@@ -140,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
         builder
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # small Arrow batches overlap JVM<->Python transfer with UDF compute
-        # in the single fused ArrowEvalPython stage (see bench_scaling.py)
+        # in the single fused ArrowEvalPython stage (BENCH/BASELINE.md)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .getOrCreate()
     )

@@ -199,7 +199,7 @@ def test_exact_span_dedup_matches_python_oracle(spark):
 
 def test_exact_span_dedup_persist_explodes_once(spark, tmp_path):
     """The exploded window frame feeds both the key stats and the
-    join-back; persisted (default) the corpus explodes once."""
+    join-back; cached, the corpus explodes once."""
     from wikisource_latin_text_cleaner_spark.operators import dedup
 
     rows = [(i, " ".join("tok%d%d" % (i % 4, j) for j in range(30)))
@@ -207,17 +207,13 @@ def test_exact_span_dedup_persist_explodes_once(spark, tmp_path):
     path = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
     d = spark.read.parquet(path)
-    out_n = dedup.exact_span_dedup(d, persist=False)
-    plan_n = out_n._jdf.queryExecution().executedPlan().toString()
-    out_p = dedup.exact_span_dedup(d, persist=True)
+    out_p = dedup.exact_span_dedup(d)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     # occ cache read on both consumers inside starts, and the starts
     # cache read by both union branches (its inline-printed child plan
     # re-lists the occ scans, hence >= 4 in the plan string)
     assert plan_p.count("InMemoryTableScan") >= 4, plan_p
-    assert "InMemoryTableScan" not in plan_n
-    rows_p = sorted((r.doc_id, r.kept_text, r.n_removed_words) for r in out_p.collect())
-    rows_n = sorted((r.doc_id, r.kept_text, r.n_removed_words) for r in out_n.collect())
-    assert rows_p == rows_n
+    got = {r.doc_id: (r.kept_text, r.n_removed_words) for r in out_p.collect()}
+    assert got == _span_dedup_py(rows, 13)
     with pytest.raises(ValueError, match="g must be"):
         dedup.exact_span_dedup(d, g=1)

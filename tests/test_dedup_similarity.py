@@ -33,9 +33,30 @@ def test_exact_dedup(docs):
     assert ids == {0, 2, 3, 4, 5}
 
 
+def _minhash_pairs_brute_force(rows, threshold):
+    """All-pairs signature agreement over dedup._minhash_signature, rounded
+    half-up at 4 dp like Spark's ``round`` (50/64 = 0.78125 -> 0.7813, where
+    Python's ``round`` gives 0.7812)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sigs = {i: dedup._minhash_signature(t) for i, t in rows}
+    out = {}
+    for a in sigs:
+        for b in sigs:
+            if a < b:
+                agree = int((sigs[a] == sigs[b]).sum())
+                est = float((Decimal(agree) / Decimal(sigs[a].size))
+                            .quantize(Decimal("0.0001"), ROUND_HALF_UP))
+                if est >= threshold:
+                    out[(a, b)] = est
+    return out
+
+
 def test_minhash_pairs_and_dedup(docs):
     pairs = {(r["id_a"], r["id_b"]): r["est_jaccard"]
              for r in dedup.minhash_near_duplicates(docs, threshold=0.7).collect()}
+    rows = [(r.doc_id, r.text) for r in docs.collect()]
+    assert pairs == _minhash_pairs_brute_force(rows, 0.7)
     assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
     assert (0, 2) in pairs or (0, 5) in pairs  # near dups found
     assert not any({a, b} == {3, 4} for a, b in pairs)  # unrelated texts not paired
@@ -86,53 +107,45 @@ def _planted_corpus(n_base=300, seed=99):
 
 
 def test_simhash_persist_hashes_each_doc_once(spark, tmp_path):
-    """With persist_signatures (default) the band self-join reads the
-    signature cache, not the text scan, on both sides: exactly one FileScan
-    in the plan. Without it the aliased join branches defeat exchange reuse
-    and the corpus is scanned+hashed twice -- the 2x cost this flag removes
-    at scale. Results must be identical either way."""
+    """The band self-join reads the signature cache, not the text scan, on
+    both sides. Uncached, the aliased join branches defeat exchange reuse
+    and the corpus is scanned+hashed twice. Pairs equal the all-pairs
+    Hamming oracle (banding is exhaustive by pigeonhole)."""
     base = "verba multa hic posita sunt et alia verba sequuntur statim "
     rows = [(i, base + ("finis %d" % (i % 3))) for i in range(50)]
     path = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
     d = spark.read.parquet(path)
-    # compile the unpersisted plan FIRST: once persist() registers the
-    # signature frame, the session cache manager substitutes it into any
-    # later logically-matching plan, persisted flag or not
-    out_n = dedup.simhash_near_duplicates(d, persist_signatures=False)
-    plan_n = out_n._jdf.queryExecution().executedPlan().toString()
-    out_p = dedup.simhash_near_duplicates(d, persist_signatures=True)
+    out_p = dedup.simhash_near_duplicates(d)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     # both join sides must read the signature cache (the cached relation
     # prints its child FileScan inline, so count cache scans, not scans)
     assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    assert "InMemoryTableScan" not in plan_n and plan_n.count("FileScan") == 2
     rows_p = sorted((r.id_a, r.id_b, r.hamming) for r in out_p.collect())
-    rows_n = sorted((r.id_a, r.id_b, r.hamming) for r in out_n.collect())
-    assert rows_p == rows_n
+    sims = {i: dedup._simhash64(t) for i, t in rows}
+    want = sorted(
+        (a, b, bin((sims[a] ^ sims[b]) & ((1 << 64) - 1)).count("1"))
+        for a in sims for b in sims if a < b
+    )
+    assert rows_p == [w for w in want if w[2] <= 3]
 
 
 def test_ngram_jaccard_persist_hashes_and_grams_once(spark, tmp_path):
     """The n-gram path needs the word-minhash signature on both band-join
-    sides AND the gram array on both verify-join sides; without the persists
-    that is 2 UDF passes + 4 full text scans. With them (default) all four
-    branches read a cache. Results identical either way."""
+    sides AND the gram array on both verify-join sides; uncached that is 2
+    UDF passes + 4 full text scans. All four branches read a cache."""
     base = "verba multa hic posita sunt et alia verba sequuntur statim "
     rows = [(i, base + ("finis %d" % (i % 3))) for i in range(50)]
     path = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
     d = spark.read.parquet(path)
-    # unpersisted plan compiled FIRST (cache-manager substitution, see
-    # test_simhash_persist_hashes_each_doc_once)
-    out_n = dedup.ngram_jaccard_near_duplicates(d, persist=False)
-    plan_n = out_n._jdf.queryExecution().executedPlan().toString()
-    out_p = dedup.ngram_jaccard_near_duplicates(d, persist=True)
+    out_p = dedup.ngram_jaccard_near_duplicates(d)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     assert plan_p.count("InMemoryTableScan") >= 4, plan_p
-    assert "InMemoryTableScan" not in plan_n and plan_n.count("FileScan") == 4
-    rows_p = sorted((r.id_a, r.id_b, r.jaccard) for r in out_p.collect())
-    rows_n = sorted((r.id_a, r.id_b, r.jaccard) for r in out_n.collect())
-    assert rows_p == rows_n
+    rows_p = {(r.id_a, r.id_b) for r in out_p.collect()}
+    # identical texts (same i % 3) always pair at Jaccard 1
+    assert {(a, b) for a in range(50) for b in range(a + 1, 50)
+            if a % 3 == b % 3} <= rows_p
 
 
 def test_embedding_near_dup_persist_projects_each_vector_once(spark, tmp_path):
@@ -147,15 +160,10 @@ def test_embedding_near_dup_persist_projects_each_vector_once(spark, tmp_path):
     path = str(tmp_path / "emb.parquet")
     spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(path)
     d = spark.read.parquet(path)
-    out_n = dedup.embedding_near_duplicates(d, persist_signatures=False)
-    plan_n = out_n._jdf.queryExecution().executedPlan().toString()
-    out_p = dedup.embedding_near_duplicates(d, persist_signatures=True)
+    out_p = dedup.embedding_near_duplicates(d)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    assert "InMemoryTableScan" not in plan_n and plan_n.count("FileScan") == 2
     rows_p = sorted((r.id_a, r.id_b, r.cosine) for r in out_p.collect())
-    rows_n = sorted((r.id_a, r.id_b, r.cosine) for r in out_n.collect())
-    assert rows_p == rows_n
     assert rows_p, "planted near-dup clique must produce pairs"
 
 
@@ -799,7 +807,7 @@ def test_semdedup_matches_numpy_oracle(spark):
             i += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = similarity.train_ivf_centroids(df, n_cells=4, sample_rows=1000)
-    out = dedup.semdedup(df, threshold=0.98, centroids=cents, persist_cells=False)
+    out = dedup.semdedup(df, threshold=0.98, centroids=cents)
     got = {r.vec_id for r in out.collect()}
 
     c = cents / np.linalg.norm(cents, axis=1, keepdims=True)
@@ -826,31 +834,30 @@ def test_semdedup_is_cell_local(spark):
         (3, [1.0, 0.02]),  # cell 0, cosine(2,3) ~ 1 -> dropped (same cell)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = dedup.semdedup(df, threshold=0.99, centroids=cents, persist_cells=False)
+    out = dedup.semdedup(df, threshold=0.99, centroids=cents)
     assert {r.vec_id for r in out.collect()} == {0, 1, 2}
 
 
 def test_semdedup_persist_assigns_each_vector_once(spark, tmp_path):
     """The cell-assignment UDF must run once per vector, not once per
-    aliased self-join side; compile the unpersisted plan FIRST (cache
-    manager substitutes cached frames into later matching plans)."""
+    aliased self-join side: both sides read the cell cache. (Uncached it
+    is even worse than 2x: the join-key isnotnull(cell) pushdown evaluates
+    the UDF a second time per side -> 4 Arrow passes.)"""
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(30)]
     path = str(tmp_path / "sd.parquet")
     spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(path)
     d = spark.read.parquet(path)
     cents = rng.standard_normal((4, 8))
-    out_n = dedup.semdedup(d, threshold=0.8, centroids=cents, persist_cells=False)
-    plan_n = out_n._jdf.queryExecution().executedPlan().toString()
-    out_p = dedup.semdedup(d, threshold=0.8, centroids=cents, persist_cells=True)
+    out_p = dedup.semdedup(d, threshold=0.8, centroids=cents)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    # Unpersisted it is even worse than 2x: the join-key isnotnull(cell)
-    # pushdown evaluates the UDF a second time per side -> 4 Arrow passes.
-    assert "InMemoryTableScan" not in plan_n and plan_n.count("ArrowEvalPython") == 4
-    assert sorted(r.vec_id for r in out_p.collect()) == sorted(
-        r.vec_id for r in out_n.collect()
-    )
+    vecs = {i: np.asarray(v) for i, v in rows}
+    c = cents / np.linalg.norm(cents, axis=1, keepdims=True)
+    cell_of = {
+        k: int(np.argmax((v / np.linalg.norm(v)) @ c.T)) for k, v in vecs.items()
+    }
+    assert {r.vec_id for r in out_p.collect()} == _semdedup_numpy(vecs, cell_of, 0.8)
 
 
 # --- DSIR importance-resampling selection (Xie et al. 2023) ----------------
@@ -1373,42 +1380,3 @@ def test_minhash_dedup_signature_udf_runs_exactly_once(spark, docs):
         "the persisted signature frame is being recomputed by a concurrent "
         "consumer (see dedup._persist_forced)"
     )
-
-
-def test_minhash_carry_signatures_parity(spark, docs):
-    """carry_signatures=False (band ids only, join sigs back for candidates)
-    must produce the identical verified pair set and identical survivor set
-    as the default verify-in-projection plan -- it is a shuffle-volume dial,
-    not a semantics dial."""
-    heavy = {(r.id_a, r.id_b, r.est_jaccard)
-             for r in dedup.minhash_near_duplicates(
-                 docs, threshold=0.7, carry_signatures=True).collect()}
-    lean = {(r.id_a, r.id_b, r.est_jaccard)
-            for r in dedup.minhash_near_duplicates(
-                docs, threshold=0.7, carry_signatures=False).collect()}
-    assert heavy == lean and heavy, "non-trivial identical pair sets"
-
-    kept_heavy = {r.doc_id for r in dedup.minhash_dedup(
-        docs, threshold=0.9, carry_signatures=True).collect()}
-    kept_lean = {r.doc_id for r in dedup.minhash_dedup(
-        docs, threshold=0.9, carry_signatures=False).collect()}
-    assert kept_heavy == kept_lean
-
-
-def test_incremental_minhash_carry_signatures_parity_with_ledger(spark, docs):
-    """Ledger path: both carry modes must drop the same new docs against the
-    same signature ledger and return byte-identical updated ledgers."""
-    first = docs.where(F.col("doc_id") <= 2)
-    second = docs.where(F.col("doc_id") > 2)
-    outs = {}
-    for carry in (True, False):
-        kept1, ledger = dedup.incremental_minhash_dedup(
-            first, None, threshold=0.9, carry_signatures=carry)
-        kept2, ledger2 = dedup.incremental_minhash_dedup(
-            second, ledger, threshold=0.9, carry_signatures=carry)
-        outs[carry] = (
-            {r.doc_id for r in kept1.collect()},
-            {r.doc_id for r in kept2.collect()},
-            {(r.id, tuple(r.sig)) for r in ledger2.collect()},
-        )
-    assert outs[True] == outs[False]

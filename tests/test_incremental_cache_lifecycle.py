@@ -11,9 +11,12 @@ release the previous batch's pins. These tests pin the MECHANISM:
     across a chained 3-batch ingest loop (the round-4 verdict's ask);
   * results are identical with and without the lifecycle plumbing
     (release changes storage, never answers);
-  * ``collect_caches()`` scoops multi-call scopes and ``release`` is
-    idempotent.
+  * ``collect_caches()`` scoops multi-call scopes on its own thread only,
+    and ``release`` is idempotent;
+  * releasing a derived frame that carries no handle warns.
 """
+
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -176,6 +179,21 @@ def test_collect_caches_scoops_multi_call_scope(spark):
     assert _n_cached(spark) <= base
 
 
+def test_collect_caches_scope_is_thread_local(spark):
+    """A dedup call on another driver thread, outside any scope there, must
+    not land in this thread's open scope: releasing this handle would
+    otherwise unpersist caches the other thread's frames still read."""
+    b1, _, _ = _snapshots(spark)
+    with dedup.collect_caches() as handle:
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            kept, ledger = pool.submit(
+                dedup.incremental_exact_dedup, b1, None
+            ).result(timeout=300)
+    assert len(handle) == 0
+    assert len(kept.dedup_caches) > 0  # the other call did pin its cache
+    dedup.release_caches(kept)
+
+
 def test_release_caches_normalizes_inputs(spark):
     b1, _, _ = _snapshots(spark)
     kept, ledger = dedup.incremental_exact_dedup(b1, None)
@@ -183,6 +201,9 @@ def test_release_caches_normalizes_inputs(spark):
     # releases once
     n = dedup.release_caches([kept, None], ledger, ledger.dedup_caches)
     assert n == 1  # exact first-snapshot pins exactly kept_h
+    # a derived frame does not inherit the handle: nothing to free, so warn
+    with pytest.warns(UserWarning, match="dedup_caches"):
+        assert dedup.release_caches(kept.select("doc_id")) == 0
     with pytest.raises(TypeError):
         dedup.release_caches(42)
     with pytest.raises(TypeError):

@@ -19,23 +19,22 @@ Scale design notes:
     the standard near-dup-dedup approximation -- no iterative connected
     components job needed).
 
-Eager-evaluation / cache-lifecycle contract (applies to EVERY function
-here with a ``persist*`` flag): with the flag True (the default) the
-function runs Spark jobs at CALL time to fill its internal caches (see
-``_persist_forced`` for why lazy persist loses the multi-consumer race),
-so building a plan you never execute, adding filters before your action,
-or calling ``.explain()`` is no longer free. Pass the flag False to
-restore full construction-time laziness (at the measured 4-5x recompute
-cost under concurrent consumers). The caches are intentionally NOT
-auto-unpersisted -- the returned lazy frames still read them -- and disk
-blocks of MEMORY_AND_DISK caches are not LRU-evicted, so a session that
-loops these operators (incremental ingest, per-batch dedup) must release
-the previous batch's caches between batches. That release is MECHANIZED,
-not contractual: every public call attaches the caches it pinned to its
-returned frame(s) as a ``CacheHandle`` (``df.dedup_caches``), the
-``collect_caches()`` context manager scoops them across several calls,
-and the incremental functions accept ``unpersist_prior=`` taking the
-previous batch's handle -- they first make this batch's returned ledger
+Eager-evaluation / cache-lifecycle contract (applies to EVERY near-dup
+function here): each one runs Spark jobs at CALL time to fill its internal
+caches (see ``_persist_forced`` for why a lazy persist loses the
+multi-consumer race), so building a plan you never execute, adding filters
+before your action, or calling ``.explain()`` is not free. There is no
+opt-out. The caches are intentionally NOT auto-unpersisted -- the returned
+lazy frames still read them -- and disk blocks of MEMORY_AND_DISK caches
+are not LRU-evicted, so a session that loops these operators (incremental
+ingest, per-batch dedup) must release the previous batch's caches between
+batches. That release is MECHANIZED, not contractual: the incremental
+functions (and ``minhash_dedup``, which delegates to one) attach the caches
+they pinned to their returned frame(s) as a ``CacheHandle``
+(``df.dedup_caches``), the ``collect_caches()`` context manager scoops the
+caches of every call made inside it on the current thread, and the
+incremental functions accept ``unpersist_prior=`` taking the previous
+batch's handle -- they first make this batch's returned ledger
 self-contained (its own forced cache), then release the prior batch's
 pins. ``tests/test_incremental_cache_lifecycle.py`` pins that executor
 storage stays FLAT across a chained 3-batch ingest loop.
@@ -44,6 +43,8 @@ storage stays FLAT across a chained 3-batch ingest loop.
 from __future__ import annotations
 
 import contextlib
+import contextvars
+import warnings
 from typing import Iterable
 
 import numpy as np
@@ -76,27 +77,29 @@ def _persist_forced(df: DataFrame) -> DataFrame:
     anyway (see module docstring).  Cost: one scheduler round-trip and the
     loss of construction-time laziness, both negligible against a UDF pass.
 
-    Lifecycle: callers (the persist*=True paths of this module's public
-    functions) do not unpersist these caches -- the frames they return
-    still read them lazily. See the module docstring's eager-evaluation /
-    cache-lifecycle contract for the per-batch unpersist guidance.
+    Lifecycle: this module's public functions do not unpersist these
+    caches -- the frames they return still read them lazily. See the
+    module docstring's eager-evaluation / cache-lifecycle contract for the
+    per-batch unpersist guidance.
     """
     from pyspark.storagelevel import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
-    for frames in _ACTIVE_COLLECTORS:
+    for frames in _ACTIVE_COLLECTORS.get():
         frames.append(df)
     return df
 
 
 # -- cache-lifecycle handles (mechanized unpersist for ingest loops) ---------
 
-#: collectors currently in scope; _persist_forced registers every cache it
-#: fills into each. Driver-side, single-threaded by Spark's driver model
-#: (a plain list, no locking -- matches how the rest of this module treats
-#: driver state).
-_ACTIVE_COLLECTORS: list[list[DataFrame]] = []
+#: collectors in scope on the current thread; _persist_forced registers
+#: every cache it fills into each. A context variable, so a dedup call on
+#: one driver thread never lands in another thread's open scope (a new
+#: thread starts with the empty default).
+_ACTIVE_COLLECTORS: contextvars.ContextVar[tuple[list[DataFrame], ...]] = (
+    contextvars.ContextVar("dedup_active_collectors", default=())
+)
 
 
 class CacheHandle:
@@ -141,23 +144,21 @@ def collect_caches():
         handle.release()                 # then drop this batch's pins
     """
     frames: list[DataFrame] = []
-    _ACTIVE_COLLECTORS.append(frames)
+    token = _ACTIVE_COLLECTORS.set(_ACTIVE_COLLECTORS.get() + (frames,))
     try:
         yield CacheHandle(frames)
     finally:
-        # remove by IDENTITY: list.remove compares by ==, and two nested
-        # collectors with equal contents would pop the wrong one
-        for i in range(len(_ACTIVE_COLLECTORS) - 1, -1, -1):
-            if _ACTIVE_COLLECTORS[i] is frames:
-                del _ACTIVE_COLLECTORS[i]
-                break
+        _ACTIVE_COLLECTORS.reset(token)
 
 
 def release_caches(*items, blocking: bool = False) -> int:
     """Normalize-and-release: each item may be a ``CacheHandle``, a
     DataFrame carrying ``.dedup_caches``, or an iterable of either.
     Returns the total number of caches released (shared handles release
-    once -- ``CacheHandle.release`` is idempotent)."""
+    once -- ``CacheHandle.release`` is idempotent). A DataFrame without
+    ``.dedup_caches`` -- typically one derived from a returned frame, such
+    as ``kept.select("doc_id")`` -- frees nothing and emits a
+    ``UserWarning``."""
     n = 0
     for item in items:
         if item is None:
@@ -166,7 +167,12 @@ def release_caches(*items, blocking: bool = False) -> int:
             n += item.release(blocking=blocking)
         elif isinstance(item, DataFrame):
             h = getattr(item, "dedup_caches", None)
-            if h is not None:
+            if h is None:
+                warnings.warn(
+                    "release_caches: DataFrame has no .dedup_caches handle "
+                    "(frames derived from a dedup result do not inherit it); "
+                    "nothing released", UserWarning, stacklevel=2)
+            else:
                 n += h.release(blocking=blocking)
         elif isinstance(item, (str, bytes)):
             # a 1-char str iterates to itself -- recursing would never end
@@ -371,7 +377,6 @@ def winnowing_near_duplicates(
     id_col: str = "doc_id",
     min_containment: float = 0.5,
     max_df: float | None = 0.2,
-    persist_fingerprints: bool = True,
     min_shared_fingerprints: int = 2,
 ) -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint containment (the MOSS scheme):
@@ -397,14 +402,10 @@ def winnowing_near_duplicates(
     on fingerprint (uniform keys, no skew) -> pair-count agg -> containment
     filter against per-doc fingerprint counts (two broadcastable joins).
     """
-    # persisted by default: four consumers (stop-fp agg, sizes agg, both
-    # join sides) would otherwise re-run the winnow UDF per consumer (same
-    # reasoning + opt-out semantics as minhash persist_signatures; Spark
-    # evicts LRU)
-    fps = df.select(F.col(id_col).alias("id"),
-                    F.explode(winnow_udf(text_col)).alias("fp"))
-    if persist_fingerprints:
-        fps = _persist_forced(fps)
+    # persisted: four consumers (stop-fp agg, sizes agg, both join sides)
+    # would otherwise re-run the winnow UDF per consumer
+    fps = _persist_forced(df.select(F.col(id_col).alias("id"),
+                                    F.explode(winnow_udf(text_col)).alias("fp")))
     if max_df is not None:
         n_docs = df.count()
         # absolute floor of 5: a fingerprint in a handful of docs is the
@@ -456,6 +457,38 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 # -- MinHash + LSH near-dup ---------------------------------------------------
 
+def _bands(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """``(id, sig)`` -> ``(id, sig, band_key)``: one row per LSH band. The
+    band index seeds the hash, so equal slices in different bands never
+    share a join key -- the band-join keys on ``band_key`` alone."""
+    return sigs.select(
+        "id",
+        "sig",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band), b),
+            )
+        ).alias("band_key"),
+    )
+
+
+def _agreement(k: int):
+    """Signature agreement of the joined ``sig_a``/``sig_b`` pair (the
+    MinHash Jaccard estimate over ``k`` slots), JVM-side, rounded to 4 dp
+    before any threshold compare."""
+    return F.round(
+        F.size(
+            F.filter(
+                F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
+                lambda x: x == 1,
+            )
+        )
+        / F.lit(k),
+        4,
+    )
+
+
 def minhash_band_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -463,7 +496,6 @@ def minhash_band_candidates(
     bands: int = 16,
     rows_per_band: int = 4,
     signature_udf=None,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) whose MinHash signatures agree
     on at least one LSH band -- the scale-correct candidate generator for
@@ -480,25 +512,12 @@ def minhash_band_candidates(
     similarity and floods the verifier with false candidates (measured
     861k -> ~1k candidate pairs on the sf0.1 corpus for the same 256-pair
     verified output).
-
-    ``persist_signatures`` caches the signature frame so the aliased
-    self-join branches (which defeat exchange reuse) read the cache instead
-    of scanning + re-hashing the corpus twice -- same rationale and opt-out
-    semantics as minhash_near_duplicates.
     """
     sig_udf = signature_udf if signature_udf is not None else minhash_udf
-    sigs = df.select(F.col(id_col).alias("id"), sig_udf(text_col).alias("sig"))
-    if persist_signatures:
-        sigs = _persist_forced(sigs)
-    bands_df = sigs.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band), b),
-            )
-        ).alias("band_key"),
+    sigs = _persist_forced(
+        df.select(F.col(id_col).alias("id"), sig_udf(text_col).alias("sig"))
     )
+    bands_df = _bands(sigs, bands, rows_per_band)
     left = bands_df.select("band_key", F.col("id").alias("id_a"))
     right = bands_df.select("band_key", F.col("id").alias("id_b"))
     return (
@@ -517,7 +536,6 @@ def ngram_jaccard_near_duplicates(
     threshold: float = 0.8,
     bands: int = 16,
     rows_per_band: int = 4,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact word n-gram Jaccard near-dup pairs: MinHash-band candidate
     generation -> JVM-side exact verification (ngram_jaccard_pairs).
@@ -541,10 +559,8 @@ def ngram_jaccard_near_duplicates(
 
     candidates = minhash_band_candidates(
         df, text_col, id_col, bands, rows_per_band, signature_udf=sig_udf,
-        persist_signatures=persist,
     )
-    return ngram_jaccard_pairs(df, candidates, text_col, id_col, n, threshold,
-                               persist_grams=persist)
+    return ngram_jaccard_pairs(df, candidates, text_col, id_col, n, threshold)
 
 
 def minhash_near_duplicates(
@@ -554,99 +570,37 @@ def minhash_near_duplicates(
     threshold: float = 0.8,
     bands: int = 16,
     rows_per_band: int = 4,
-    persist_signatures: bool = True,
-    carry_signatures: bool = True,
 ) -> DataFrame:
     """Verified near-dup pairs (id_a < id_b, est_jaccard >= threshold).
 
     shingle -> minhash (Arrow UDF) -> band -> bucket-join -> JVM-side verify.
 
-    ``persist_signatures`` caches the signature frame so the UDF computes
-    once instead of once per self-join side (measured ~2x end-to-end). This
-    is the in-session analog of what a 100 TB job does anyway: materialize
-    the signature table to storage before the LSH join. Spark evicts the
-    cache LRU; pass False for strictly-streaming-through plans.
-
-    ``carry_signatures`` is the shuffle-volume dial.  True (default)
-    verifies in the band-join projection: one join, but every exploded band
-    row drags the full 64-long signature through the exchange -- ``bands``
-    x ~520 B = ~8 KB/doc of shuffle (event-log measured: 318 MB written +
-    636 MB read for a 21 MB signature table at 40k docs).  False bands
-    (band_key, id) only (~16 B/row), distincts the candidate id pairs, and
-    joins the signatures back for just the candidates -- ~0.25 KB/doc
-    banding + 2 x 0.5 KB/doc sig joins, ~6x less exchange volume.
-    Measured single-box wall-clock: True wins at 40k docs (6.5 s vs
-    12.5 s -- join-stage latency dominates), DEAD EQUAL at 4x10^5 docs
-    (84.4 s vs 85.0 s fresh-JVM interleaved, both dominated by the
-    signature UDF pass) -- loopback shuffle can't exhibit the volume win,
-    so the dial pays exactly when the exchange crosses a real network
-    (cluster runs, 10^9+ docs).  Pair sets are identical (parity tests,
-    including at 4x10^5: same 399,970 survivors in every mode/rep).
+    Verification runs in the band-join projection: one join, with every
+    exploded band row carrying the full 64-long signature through the
+    exchange -- ``bands`` x ~520 B = ~8 KB/doc of shuffle (event-log
+    measured: 318 MB written + 636 MB read for a 21 MB signature table at
+    40k docs). SCALE.md "Dedup at scale" keeps the arithmetic for the
+    band-ids-only alternative at cluster scale.
     """
-    sigs = df.select(F.col(id_col).alias("id"), minhash_udf(text_col).alias("sig"))
-    if persist_signatures:
-        sigs = _persist_forced(sigs)
-    k = bands * rows_per_band
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-                lambda x: x == 1,
-            )
-        )
-        / F.lit(k)
+    sigs = _persist_forced(
+        df.select(F.col(id_col).alias("id"), minhash_udf(text_col).alias("sig"))
     )
-    if not carry_signatures:
-        lean = sigs.select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.hash(
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band), b
-                    ),
-                )
-            ).alias("band_key"),
-        )
-        cand = (
-            lean.select("band_key", F.col("id").alias("id_a"))
-            .join(lean.select("band_key", F.col("id").alias("id_b")), "band_key")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return (
-            cand.join(sigs.select(F.col("id").alias("id_a"),
-                                  F.col("sig").alias("sig_a")), "id_a")
-            .join(sigs.select(F.col("id").alias("id_b"),
-                              F.col("sig").alias("sig_b")), "id_b")
-            .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
-            .where(F.col("est_jaccard") >= threshold)
-        )
-    bands_df = sigs.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band), b),
-            )
-        ).alias("band", "band_key"),
-    )
-    left = bands_df.select("band", "band_key", F.col("id").alias("id_a"),
+    bands_df = _bands(sigs, bands, rows_per_band)
+    left = bands_df.select("band_key", F.col("id").alias("id_a"),
                            F.col("sig").alias("sig_a"))
-    right = bands_df.select("band", "band_key", F.col("id").alias("id_b"),
+    right = bands_df.select("band_key", F.col("id").alias("id_b"),
                             F.col("sig").alias("sig_b"))
     # Verify in the join projection and filter BEFORE deduplicating: the
     # surviving pair set is tiny, so dropDuplicates aggregates 3 scalar
     # columns instead of dragging two 64-long signature arrays through a
     # SortAggregate (which at web scale would shuffle ~1 KB/pair for nothing).
-    # Both join inputs shuffle on (band, band_key) with identical child plans,
-    # so AQE reuses one exchange and the minhash UDF runs once per doc.
+    # Both join inputs shuffle on band_key with identical child plans, so
+    # AQE reuses one exchange.
     return (
-        left.join(right, ["band", "band_key"])
+        left.join(right, "band_key")
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
+        .select("id_a", "id_b",
+                _agreement(bands * rows_per_band).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -654,8 +608,7 @@ def minhash_near_duplicates(
 
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   threshold: float = 0.8, signature_udf=None,
-                  collapse_identical: bool = True,
-                  carry_signatures: bool = True) -> DataFrame:
+                  collapse_identical: bool = True) -> DataFrame:
     """Drop every doc that near-duplicates a smaller-id doc.
 
     Delegates to ``incremental_minhash_dedup`` with an empty ledger: the
@@ -667,7 +620,6 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     kept, _ = incremental_minhash_dedup(
         df, None, text_col, id_col, threshold,
         signature_udf=signature_udf, collapse_identical=collapse_identical,
-        carry_signatures=carry_signatures,
     )
     return kept
 
@@ -695,7 +647,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 4,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by 64-bit SimHash block-combination banding (Manku et
     al., WWW'07): split the signature into ``blocks`` blocks and key
@@ -704,15 +655,6 @@ def simhash_near_duplicates(
     at least one combination matches -- candidate generation is EXHAUSTIVE
     by pigeonhole at every setting. Verification is exact
     (bit_count(xor) <= max_hamming, JVM-side).
-
-    ``persist_signatures`` caches the (id, sim) frame so the signature UDF
-    hashes each document ONCE: the band self-join otherwise re-plans both
-    sides from the text scan (aliased branches defeat exchange reuse --
-    observed 2 FileScans + doubled ArrowEvalPython without the persist).
-    Same opt-out semantics as minhash_near_duplicates: the persisted frame
-    is two scalar columns per doc (16 B/row, ~16 TB at 10^12 docs,
-    MEMORY_AND_DISK spills cleanly); pass False for strictly
-    streaming-through plans that accept hashing twice.
 
     ``blocks`` is the scale dial (SCALE.md "SimHash banding at 10^12"):
       - blocks=4 (default): 4 single-block keys of 16 bits -- 65k buckets,
@@ -727,7 +669,6 @@ def simhash_near_duplicates(
     return hash_near_duplicates(
         sigs, hash_col="sim", id_col="id",
         max_hamming=max_hamming, blocks=blocks,
-        persist_signatures=persist_signatures,
     )
 
 
@@ -737,7 +678,6 @@ def hash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 4,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Generic hamming near-dup join over a PRECOMPUTED 64-bit hash column
     -- the banding core of ``simhash_near_duplicates``, factored out so any
@@ -754,9 +694,9 @@ def hash_near_duplicates(
         raise ValueError("need 0 <= max_hamming < blocks <= 64")
     from itertools import combinations
 
-    sigs = df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sim"))
-    if persist_signatures:
-        sigs = _persist_forced(sigs)
+    sigs = _persist_forced(
+        df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sim"))
+    )
     block_exprs = _simhash_block_exprs(F.col("sim"), blocks)
     keys = [
         # combination index seeds the hash so equal block VALUES in
@@ -789,17 +729,11 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    persist_grams: bool = True,
 ) -> DataFrame:
     """Exact word n-gram Jaccard for candidate (id_a, id_b) pairs.
 
     JVM-side: tokenize once per doc, build distinct n-gram arrays, then
     array_intersect/array_union on the joined pairs.
-
-    ``persist_grams`` caches the per-doc gram arrays: the pair join needs
-    them on BOTH sides (a and b), and without the cache each side is a
-    separate full text scan + gram rebuild. Same opt-out semantics as the
-    signature persists.
     """
     grams = df.select(
         F.col(id_col).alias("id"),
@@ -815,8 +749,7 @@ def ngram_jaccard_pairs(
             )
         ).alias("grams"),
     )
-    if persist_grams:
-        grams = _persist_forced(grams)
+    grams = _persist_forced(grams)
     a = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a"))
     b = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b"))
     joined = candidate_pairs.join(a, "id_a").join(b, "id_b")
@@ -928,16 +861,10 @@ def embedding_near_duplicates(
     planes: int = 12,
     dim: int = 64,
     bands: int = 4,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by cosine >= threshold: ``bands`` independent
     random-hyperplane signatures of ``planes`` bits each; any band equality
     makes a candidate; exact JVM-side cosine verifies.
-
-    ``persist_signatures`` caches the (id, vector, bucket) frame so the
-    hyperplane UDF projects each embedding once instead of once per aliased
-    self-join side (the aliasing defeats exchange reuse, doubling the scan
-    and the matmul). Same opt-out semantics as the text-dedup persists.
 
     Recall math (SCALE.md): a pair at cosine c disagrees on one hyperplane
     with p = arccos(c)/pi (~0.102 at c=0.95), so one ``planes``-bit band
@@ -961,10 +888,10 @@ def embedding_near_duplicates(
             out[:, b] = (bits * weights).sum(axis=1) * bands + b
         return pd.Series(list(out))
 
-    sigs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                     F.explode(buckets_udf(vec_col)).alias("bucket"))
-    if persist_signatures:
-        sigs = _persist_forced(sigs)
+    sigs = _persist_forced(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+                  F.explode(buckets_udf(vec_col)).alias("bucket"))
+    )
     a = sigs.select("bucket", F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     b = sigs.select("bucket", F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0),
@@ -990,7 +917,6 @@ def corpus_line_dedup(
     min_count: int = 2,
     keep_first: bool = False,
     delimiter: str = "\n",
-    persist_line_hashes: bool = True,
     scope_col: str | None = None,
 ) -> DataFrame:
     """Corpus-WIDE duplicate-line removal: any non-blank line occurring at
@@ -1031,16 +957,6 @@ def corpus_line_dedup(
         exactly on the heavy hitters this operator targets.
     If the heavy set ever outgrows broadcast range the joins degrade
     gracefully to shuffled joins on the uniform md5 keys.
-
-    ``persist_line_hashes`` (default True) caches the compact
-    (_id,_pos,_h) hash frame so heavy-counting and affected-doc discovery
-    share ONE explode of the corpus (aliased branches defeat Spark's
-    exchange reuse, same hazard as the dedup self-joins above); the cache
-    holds 16-byte hashes, never line text. At extreme corpus sizes where
-    even that is unwelcome, pass False to trade the cache for a second
-    scan+explode. The tiny heavy/affected frames are always persisted --
-    each feeds two branches and recomputing them would re-aggregate the
-    corpus.
     """
 
     scope_sel = [F.col(scope_col).alias("_scope")] if scope_col else []
@@ -1056,8 +972,7 @@ def corpus_line_dedup(
         .select("_id", *(["_scope"] if scope_col else []), "_pos",
                 F.md5(F.encode("_line", "utf-8")).alias("_h"))
     )
-    if persist_line_hashes:
-        nb_hashes = _persist_forced(nb_hashes)
+    nb_hashes = _persist_forced(nb_hashes)
 
     heavy = (
         nb_hashes.groupBy(*keys)
@@ -1126,7 +1041,6 @@ def semdedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids=None,
-    persist_cells: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): spherical k-means clusters the
     embedding space, then ONLY within each cluster every vector with a
@@ -1170,8 +1084,7 @@ def semdedup(
         .withColumn("cell", cell_udf("v"))
         .withColumn("n", norm)
     )
-    if persist_cells:
-        cells = _persist_forced(cells)
+    cells = _persist_forced(cells)
 
     a = cells.select("cell", F.col("id").alias("id_a"),
                      F.col("v").alias("v_a"), F.col("n").alias("n_a"))
@@ -1198,7 +1111,6 @@ def exact_span_dedup(
     g: int = 13,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
 ) -> DataFrame:
     """Corpus-wide exact duplicated-SPAN removal (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better",
@@ -1224,8 +1136,8 @@ def exact_span_dedup(
     back on the key restricted to duplicated keys, and an AFFECTED-ONLY
     rebuild: the marked-starts frame joins inner, so untouched documents
     never pass through the rebuild projection. The exploded frame is
-    persisted (default) because it feeds both the key stats and the
-    join-back -- unpersisted, the corpus is exploded twice.
+    cached because it feeds both the key stats and the join-back --
+    uncached, the corpus is exploded twice.
     """
 
     if g < 2:
@@ -1252,8 +1164,7 @@ def exact_span_dedup(
         )
         .select("_id", F.col("o.pos").alias("pos"), F.col("o.key").alias("key"))
     )
-    if persist:
-        occ = _persist_forced(occ)
+    occ = _persist_forced(occ)
 
     dup_keys = (
         occ.groupBy("key")
@@ -1269,11 +1180,10 @@ def exact_span_dedup(
         .groupBy("_id")
         .agg(F.collect_set("pos").alias("_starts"))
     )
-    if persist:
-        # feeds BOTH union branches (inner rebuild + left_anti passthrough);
-        # AQE compiles them independently, so without this the key-stats
-        # join + collect_set run twice (plan test counts the collect_set)
-        starts = _persist_forced(starts)
+    # feeds BOTH union branches (inner rebuild + left_anti passthrough);
+    # AQE compiles them independently, so without this the key-stats join
+    # + collect_set run twice (plan test counts the collect_set)
+    starts = _persist_forced(starts)
 
     base = df.withColumn("_w", words)
     touched = (
@@ -1323,7 +1233,6 @@ def incremental_exact_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_col: str = "content_hash",
-    persist: bool = True,
     unpersist_prior=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Exact-dedup a new snapshot against itself and a prior-content ledger.
@@ -1340,8 +1249,8 @@ def incremental_exact_dedup(
     and the ledger anti-join shuffle on the uniform md5 key, so there is
     no skew; storing the ledger bucketed by ``hash_col`` (e.g.
     ``bucketBy(8192, hash_col)``) makes the monthly anti-join shuffle-free
-    on the ledger side. ``persist`` caches the surviving-rows frame because
-    it feeds both returned frames (AQE would otherwise compile the two
+    on the ledger side. The surviving-rows frame is cached because it
+    feeds both returned frames (AQE would otherwise compile the two
     consumers independently and run the anti-join twice).
 
     Cache lifecycle: the returned frames carry ``.dedup_caches`` (a
@@ -1365,8 +1274,7 @@ def incremental_exact_dedup(
             )
         else:
             kept_h = batch_kept
-        if persist:
-            kept_h = _persist_forced(kept_h)
+        kept_h = _persist_forced(kept_h)
         kept = kept_h.select(*new_df.columns)
         new_entries = kept_h.select(hash_col)
         if seen_hashes is None:
@@ -1391,50 +1299,9 @@ def incremental_minhash_dedup(
     threshold: float = 0.9,
     bands: int = 16,
     rows_per_band: int = 4,
-    persist: bool = True,
     signature_udf=None,
     collapse_identical: bool = True,
-    carry_signatures: bool = True,
     unpersist_prior=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Near-dup-dedup a new snapshot against itself and a signature ledger
-    (see ``_incremental_minhash_impl`` for the full algorithm notes).
-
-    Cache lifecycle (the mechanized form of the module contract): the
-    returned frames carry ``.dedup_caches``. In a per-batch ingest loop
-    pass the PREVIOUS batch's handle as ``unpersist_prior=``: this call
-    force-persists the returned ledger first (so it stops reading the
-    prior batch's caches), then releases them -- executor storage stays
-    flat across the loop (tests/test_incremental_cache_lifecycle.py).
-    """
-    with collect_caches() as handle:
-        kept, ledger = _incremental_minhash_impl(
-            new_df, seen_sigs, text_col, id_col, threshold, bands,
-            rows_per_band, persist, signature_udf, collapse_identical,
-            carry_signatures,
-        )
-        if unpersist_prior is not None and seen_sigs is not None:
-            # the ledger union's seen_sigs arm reads the prior batch's
-            # caches; pin it to its own cache before they go away
-            ledger = _persist_forced(ledger)
-    if unpersist_prior is not None:
-        release_caches(unpersist_prior)
-    _attach_handle(handle, kept, ledger)
-    return kept, ledger
-
-
-def _incremental_minhash_impl(
-    new_df: DataFrame,
-    seen_sigs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.9,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    persist: bool = True,
-    signature_udf=None,
-    collapse_identical: bool = True,
-    carry_signatures: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup-dedup a new snapshot against itself and a signature ledger.
 
@@ -1456,13 +1323,6 @@ def _incremental_minhash_impl(
     -- measured: the 1M-page synthetic corpus floods char-shingle LSH but
     runs clean on word 3-grams, BENCH/STRESS.md).
 
-    ``carry_signatures`` (default True): same shuffle-volume dial as
-    minhash_near_duplicates -- False bands (band_key, id) only and joins
-    signatures back for the candidate pairs, ~6x less exchange volume for
-    two extra equi-joins; identical dup set (parity-tested at 6 and
-    4x10^5 docs).  Prefer False on a real cluster where the band exchange
-    crosses the network; on one box the modes measure equal from ~10^5 up.
-
     ``collapse_identical`` (default True) first collapses new docs with
     IDENTICAL signatures to their smallest id via a linear hash-groupBy,
     so a boilerplate cluster of m byte-similar docs costs m rows instead
@@ -1472,9 +1332,9 @@ def _incremental_minhash_impl(
     representative reproduces exactly the pairs its clones would have.
 
     Scale shape: signatures are computed ONCE per new doc (Arrow UDF over
-    the batch, persisted) and candidates come from LSH band-bucket
-    equality against ledger+batch band keys -- ~uniform by construction,
-    so the probe join is skew-free and costs |new| x bands lookups, never
+    the batch, cached) and candidates come from LSH band-bucket equality
+    against ledger+batch band keys -- ~uniform by construction, so the
+    probe join is skew-free and costs |new| x bands lookups, never
     O(|ledger| x |new|). Verification is the JVM-side zip_with agreement
     on the already-joined signature pair. Store the ledger bucketed by
     band key at production scale to keep its side of the probe
@@ -1483,128 +1343,47 @@ def _incremental_minhash_impl(
     Id hygiene: snapshot ids are expected to be DISJOINT from ledger ids
     (a re-crawl of a kept url should arrive under a new capture id; see
     ``latest_capture`` for collapsing revisits first). If a ledger id does
-    reappear in the new snapshot, both paths still drop the new copy when
-    its text is similar to the ledger copy (self-pair against the ledger
-    signature); with CHANGED text the lean path verifies candidates
-    against the ledger's signature only (ledger-wins dedup of the verify
-    side), while the carry path verifies each band row against its own
-    signature -- keep ids disjoint if exact lean/carry parity matters.
+    reappear in the new snapshot, the new copy is still dropped when its
+    text is similar to the ledger copy (self-pair against the ledger
+    signature).
 
-    Eager-evaluation note: with ``persist=True`` (default) construction
-    runs Spark jobs immediately (forced cache fills -- see
-    ``_persist_forced``); pass ``persist=False`` to keep the returned
-    frames fully lazy, at the cost of the measured multi-consumer
-    recompute races. Per-batch loops release the previous batch's caches
-    through the MECHANIZED path on the public wrapper
-    (``incremental_minhash_dedup(..., unpersist_prior=prev_handle)`` /
-    ``.dedup_caches`` / ``release_caches``): forced MEMORY_AND_DISK
-    caches are not LRU-evicted from disk and accumulate for the life of
-    the session if never released.
+    Cache lifecycle (the mechanized form of the module contract):
+    construction runs Spark jobs immediately (forced cache fills -- see
+    ``_persist_forced``), and the returned frames carry ``.dedup_caches``.
+    In a per-batch ingest loop pass the PREVIOUS batch's handle as
+    ``unpersist_prior=``: this call force-persists the returned ledger
+    first (so it stops reading the prior batch's caches), then releases
+    them -- executor storage stays flat across the loop
+    (tests/test_incremental_cache_lifecycle.py).
     """
-
     sig_udf = signature_udf if signature_udf is not None else minhash_udf
-    new_sigs = new_df.select(
-        F.col(id_col).alias("id"), sig_udf(text_col).alias("sig")
-    )
-    if persist:
+    with collect_caches() as handle:
         # new_sigs fans out into 3+ branches (canon groupBy, collapse
         # semi/anti, band sides, kept_sigs), several materialized as
         # CONCURRENT broadcast jobs -- the race _persist_forced exists for
         # (event-log measured 4-5x UDF recompute with a lazy persist here)
-        new_sigs = _persist_forced(new_sigs)
+        new_sigs = _persist_forced(new_df.select(
+            F.col(id_col).alias("id"), sig_udf(text_col).alias("sig")
+        ))
 
-    if collapse_identical:
-        canon = new_sigs.groupBy("sig").agg(F.min("id").alias("id"))
-        survivors = new_sigs.join(canon.select("id"), "id", "left_semi")
-        if persist:
+        if collapse_identical:
+            canon = new_sigs.groupBy("sig").agg(F.min("id").alias("id"))
             # forced, like new_sigs: a lazy persist here measured WORSE
             # (2-core wall 39.5 -> 67 s quiet-window) -- the band-side
             # consumers race and each re-runs the collapse groupBy
             # (SortAggregate over 64-long arrays, the costly part), so the
             # one count() barrier is the cheaper side of the trade.
-            survivors = _persist_forced(survivors)
-        collapse_dropped = new_sigs.join(
-            canon.select("id"), "id", "left_anti"
-        ).select(F.col("id").alias(id_col))
-    else:
-        survivors = new_sigs
-        collapse_dropped = None
-
-    def _bands(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "id",
-            "sig",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.hash(
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band), b
-                    ),
-                )
-            ).alias("band_key"),
-        )
-
-    k = bands * rows_per_band
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-                lambda x: x == 1,
+            survivors = _persist_forced(
+                new_sigs.join(canon.select("id"), "id", "left_semi")
             )
-        )
-        / F.lit(k)
-    )
-    if not carry_signatures:
-        # shuffle-lean variant (see minhash_near_duplicates docstring):
-        # band (band_key, id) only -- ~16 B/row instead of ~540 B -- then
-        # join signatures back for just the candidate pairs.  6x less
-        # exchange volume; identical dup set (parity test).
-        def _lean(sigs: DataFrame) -> DataFrame:
-            return _bands(sigs).select("band_key", "id")
-
-        lean_new = _lean(survivors)
-        r = lean_new.select("band_key", F.col("id").alias("id_b"),
-                            F.lit(False).alias("is_prior"))
-        if seen_sigs is not None:
-            r = r.unionByName(
-                _lean(seen_sigs.select("id", "sig")).select(
-                    "band_key", F.col("id").alias("id_b"),
-                    F.lit(True).alias("is_prior"),
-                )
-            )
-        cand = (
-            lean_new.select("band_key", F.col("id").alias("id_a"))
-            .join(r, "band_key")
-            .where(F.col("is_prior") | (F.col("id_b") < F.col("id_a")))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        if seen_sigs is None:
-            sig_b_src = survivors
+            collapse_dropped = new_sigs.join(
+                canon.select("id"), "id", "left_anti"
+            ).select(F.col("id").alias(id_col))
         else:
-            # Ledger wins on an id collision (a doc re-ingested while
-            # already in the ledger, possibly with changed text): keep only
-            # the ledger's signature for that id so the verify join sees
-            # one sig_b row per candidate, matching the self-pair semantics
-            # of the carry path (which bands the ledger copy under the same
-            # id). Without this, a colliding id contributes BOTH signatures
-            # and id_a is dropped if either passes.
-            sig_b_src = seen_sigs.select("id", "sig").unionByName(
-                survivors.select("id", "sig").join(
-                    seen_sigs.select("id"), "id", "left_anti"
-                )
-            )
-        dup_ids = (
-            cand.join(survivors.select(F.col("id").alias("id_a"),
-                                       F.col("sig").alias("sig_a")), "id_a")
-            .join(sig_b_src.select(F.col("id").alias("id_b"),
-                                   F.col("sig").alias("sig_b")), "id_b")
-            .where(F.round(est, 4) >= threshold)
-            .select(F.col("id_a").alias(id_col))
-            .distinct()
-        )
-    else:
-        new_bands = _bands(survivors)
+            survivors = new_sigs
+            collapse_dropped = None
+
+        new_bands = _bands(survivors, bands, rows_per_band)
         left = new_bands.select(
             "band_key", F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
         )
@@ -1614,7 +1393,7 @@ def _incremental_minhash_impl(
         )
         if seen_sigs is not None:
             right = right.unionByName(
-                _bands(seen_sigs.select("id", "sig")).select(
+                _bands(seen_sigs.select("id", "sig"), bands, rows_per_band).select(
                     "band_key", F.col("id").alias("id_b"),
                     F.col("sig").alias("sig_b"), F.lit(True).alias("is_prior"),
                 )
@@ -1622,20 +1401,29 @@ def _incremental_minhash_impl(
         dup_ids = (
             left.join(right, "band_key")
             .where(F.col("is_prior") | (F.col("id_b") < F.col("id_a")))
-            .where(F.round(est, 4) >= threshold)
+            .where(_agreement(bands * rows_per_band) >= threshold)
             .select(F.col("id_a").alias(id_col))
             .distinct()
         )
-    if collapse_dropped is not None:
-        dup_ids = dup_ids.unionByName(collapse_dropped)
-    dup_ids = _persist_forced(dup_ids)
-    kept = new_df.join(dup_ids, id_col, "left_anti")
-    kept_sigs = new_sigs.join(
-        dup_ids.withColumnRenamed(id_col, "id"), "id", "left_anti"
-    )
-    if seen_sigs is None:
-        return kept, kept_sigs
-    return kept, seen_sigs.select("id", "sig").unionByName(kept_sigs)
+        if collapse_dropped is not None:
+            dup_ids = dup_ids.unionByName(collapse_dropped)
+        dup_ids = _persist_forced(dup_ids)
+        kept = new_df.join(dup_ids, id_col, "left_anti")
+        kept_sigs = new_sigs.join(
+            dup_ids.withColumnRenamed(id_col, "id"), "id", "left_anti"
+        )
+        if seen_sigs is None:
+            ledger = kept_sigs
+        else:
+            ledger = seen_sigs.select("id", "sig").unionByName(kept_sigs)
+            if unpersist_prior is not None:
+                # the ledger union's seen_sigs arm reads the prior batch's
+                # caches; pin it to its own cache before they go away
+                ledger = _persist_forced(ledger)
+    if unpersist_prior is not None:
+        release_caches(unpersist_prior)
+    _attach_handle(handle, kept, ledger)
+    return kept, ledger
 
 
 def latest_capture(
@@ -1692,7 +1480,6 @@ def minhash_estimate_audit(
     threshold: float = 0.8,
     bands: int = 16,
     rows_per_band: int = 4,
-    persist: bool = True,
 ) -> DataFrame:
     """Estimator calibration: for every band-candidate pair the MinHash
     agreement deems >= ``threshold``, compute the EXACT char-5-shingle
@@ -1707,17 +1494,16 @@ def minhash_estimate_audit(
     pair set to the shingle-array table twice and runs
     array_intersect/array_union JVM-side; the corpus-sized work is the one
     Arrow UDF pass producing shingle arrays, shared across both join
-    probes via persist. Run on a SAMPLE at 10^12 docs: calibration needs
+    probes via the cache. Run on a SAMPLE at 10^12 docs: calibration needs
     thousands of pairs, not the full corpus.
     """
 
     pairs = minhash_near_duplicates(
         df, text_col, id_col, threshold, bands, rows_per_band,
-        persist_signatures=persist,
     )
-    sh = df.select(F.col(id_col).alias("_sid"), char_shingle_udf(text_col).alias("_sh"))
-    if persist:
-        sh = _persist_forced(sh)
+    sh = _persist_forced(
+        df.select(F.col(id_col).alias("_sid"), char_shingle_udf(text_col).alias("_sh"))
+    )
     a = sh.select(F.col("_sid").alias("id_a"), F.col("_sh").alias("_sh_a"))
     b = sh.select(F.col("_sid").alias("id_b"), F.col("_sh").alias("_sh_b"))
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
@@ -1741,7 +1527,6 @@ def incremental_bloom_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_col: str = "content_hash",
-    persist: bool = True,
     unpersist_prior=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Zero-join variant of ``incremental_exact_dedup``: the ledger is a
@@ -1779,9 +1564,7 @@ def incremental_bloom_dedup(
         canon = hashed.groupBy(hash_col).agg(F.min(id_col).alias(id_col))
         batch_kept = hashed.join(canon.select(id_col), id_col, "left_semi")
         member = bloom_member_col(F.col(hash_col), seen_bloom_bits, m_bits, k)
-        kept_h = batch_kept.where(~member)
-        if persist:
-            kept_h = _persist_forced(kept_h)
+        kept_h = _persist_forced(batch_kept.where(~member))
         kept = kept_h.select(*new_df.columns)
         new_hashes = kept_h.select(hash_col)
     if unpersist_prior is not None:
