@@ -16,13 +16,17 @@ Local smoke (same code path; spark-submit not required):
 
 Stages (one declarative DataFrame chain, SURVEY.md §3.4): read -> [salted
 repartition] -> fused scrub/verdict/langid/perplexity/PII Arrow UDF -> URL
-and Gopher gates -> run counters (df.observe) -> bucket-checkpointed write
-(quarantine rows kept, never deleted) -> manifest append -> per-run metrics
-rows append. Resume (--resume) skips buckets whose manifest rows exist.
+and Gopher gates -> run counters and per-bucket counts (df.observe) ->
+bucket-checkpointed write (quarantine rows kept, never deleted) -> per-bucket
+counts files -> manifest append -> per-run metrics rows append. Resume
+(--resume) skips buckets whose manifest rows exist.
 
-The counters ride the one data write, so the run record and the metrics rows
-cost no scan of the output; only a resume that left buckets untouched reads
-their ``keep`` column once, for the cumulative counts.
+The bucket write is the run's only Spark job besides the input's schema
+inference. The counters ride that write, so the run record and the metrics
+rows cost no scan of the output; the cumulative counts of the buckets a
+resume leaves untouched come from their counts files. The manifest and
+path-target metrics rows are small parquet files written on the driver with
+pyarrow, so --output (and a path --metrics) must be driver-local paths.
 """
 
 from __future__ import annotations
@@ -132,6 +136,12 @@ def main(argv: list[str] | None = None) -> int:
         QualityFilterPipeline,
     )
     from wikisource_latin_text_cleaner_spark.plans import checkpoints
+
+    # control files are driver-local: reject a URI before any work is done
+    # (an Iceberg metrics table name has no scheme and passes)
+    metrics_target = args.metrics or f"{args.output.rstrip('/')}/metrics"
+    for path in (args.output, metrics_target):
+        catalog.local_path(path)
 
     builder = SparkSession.builder.appName("wltc-quality-filter")
     if args.master:
@@ -243,7 +253,7 @@ def main(argv: list[str] | None = None) -> int:
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(os.path.join(args.output, "data"))
-        checkpoints.write_manifest(spark, args.output, [], 0)
+        checkpoints.write_manifest(args.output, [], 0)
         untouched, n_run = [], -1
 
     # this run's counters came with its write; Observation.get would block
@@ -256,23 +266,20 @@ def main(argv: list[str] | None = None) -> int:
         # (full-output metrics on every resume would double-count docs).
         # Known tradeoff: a crash between the manifest write and this append
         # loses one run's metrics rather than double-counting them.
-        metrics = pipe.observed_metrics(spark, run).withColumn(
-            "run_ts", F.lit(run_ts))
-        catalog.append(metrics, args.metrics or f"{args.output.rstrip('/')}/metrics")
+        metrics = pipe.observed_metrics(run)
+        metrics = metrics.append_column(
+            "run_ts", pa.array([run_ts] * metrics.num_rows, pa.string()))
+        if catalog.is_iceberg(spark, metrics_target):
+            catalog.append(catalog.local_frame(spark, metrics), metrics_target)
+        else:
+            catalog.write_rows(metrics, metrics_target, append=True)
 
     # cumulative counts describe the full output table; throughput is scoped
     # to the docs THIS invocation processed (a resume that ran 1 of 64
     # buckets must not report the whole table's docs over its own wall time)
-    docs_in = docs_processed
-    if untouched:
-        out = checkpoints.read_output(spark, args.output)
-        n_old, kept_old = out.where(out.bucket.isin(untouched)).agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("keep").cast("long")) if pipe is not None
-            else F.count(F.lit(1)),
-        ).first()
-        docs_in += n_old
-        docs_kept += kept_old or 0
+    n_old, kept_old = checkpoints.bucket_counts(args.output, untouched)
+    docs_in = docs_processed + n_old
+    docs_kept += kept_old
     elapsed = time.time() - t0
     print(json.dumps({
         "docs_in": docs_in,

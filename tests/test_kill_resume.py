@@ -18,7 +18,7 @@ def _spawn(args):
     )
 
 
-def test_resume_with_uncommitted_manifest_dir_recomputes(spark, tmp_path):
+def test_resume_with_uncommitted_manifest_dir_recomputes(tmp_path):
     """A crash during the very first manifest write leaves _checkpoints/
     holding only a _temporary dir; --resume must treat that as 'nothing
     complete' and recompute, not die on schema inference."""
@@ -26,7 +26,7 @@ def test_resume_with_uncommitted_manifest_dir_recomputes(spark, tmp_path):
 
     out = tmp_path / "out"
     (out / "_checkpoints" / "_temporary").mkdir(parents=True)
-    assert checkpoints.completed_buckets(spark, str(out), 8) == set()
+    assert checkpoints.completed_buckets(str(out), 8) == set()
 
 
 def test_sigkill_mid_run_then_resume_matches_clean_run(spark, tmp_path):

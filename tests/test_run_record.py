@@ -156,3 +156,58 @@ def test_run_record_matches_rescan(spark, tmp_path, monkeypatch):
     }
     assert not [f for f, names in families.items() if not fired & names]
     assert any(r.startswith(pipeline.VARIANT_PREFIX) for r in fresh)
+
+
+def test_driver_runs_one_spark_job(spark, tmp_path, monkeypatch):
+    """A driver run submits one Spark job inside ``run_resumable``, the
+    bucket write (none when a resume finds nothing to do), and none after
+    it returns: the manifest, the counts files and the metrics rows are
+    driver-local files. Before it, only the input's schema inference may
+    run. A checkpointed bucket whose counts file is gone raises."""
+    import pytest
+
+    from wikisource_latin_text_cleaner_spark.plans import checkpoints
+
+    inp, out = str(tmp_path / "pages.parquet"), str(tmp_path / "out")
+    synth.write_pages_parquet(inp, 120, seed=43)
+    sc = spark.sparkContext
+    phase = {"tag": None}
+    real = checkpoints.run_resumable
+
+    def grouped(*a, **k):
+        sc.setJobGroup(f"{phase['tag']}-inside", "run_resumable")
+        try:
+            return real(*a, **k)
+        finally:
+            sc.setJobGroup(f"{phase['tag']}-after", "after run_resumable")
+
+    monkeypatch.setattr(checkpoints, "run_resumable", grouped)
+
+    def jobs(tag):
+        phase["tag"] = tag
+        sc.setJobGroup(f"{tag}-before", "driver set-up")
+        try:
+            with contextlib.redirect_stdout(io.StringIO()):
+                assert driver.main(["--input", inp, "--output", out,
+                                    "--mode", "web", "--no-classify",
+                                    "--buckets", str(N_BUCKETS), "--resume"]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        return tuple(len(tracker.getJobIdsForGroup(f"{tag}-{p}"))
+                     for p in ("before", "inside", "after"))
+
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev_batch = spark.conf.get(batch)
+    try:
+        fresh = jobs("fresh")
+        _lose_bucket(out, LOST_BUCKET)
+        resume = jobs("resume")
+        noop = jobs("noop")
+        os.remove(os.path.join(out, "data", "bucket=0", checkpoints.COUNTS_FILE))
+        with pytest.raises(ValueError, match="rerun without --resume"):
+            jobs("stale")
+    finally:
+        spark.conf.set(batch, prev_batch)
+    assert [j[1:] for j in (fresh, resume, noop)] == [(1, 0), (1, 0), (0, 0)]
+    assert all(j[0] <= 1 for j in (fresh, resume, noop))

@@ -5,30 +5,67 @@ sandbox has no Iceberg runtime jar, so the same append/overwrite semantics
 are provided over plain parquet directories (SURVEY.md §7.2). All writers use
 dynamic partition overwrite so re-running a partition subset is idempotent --
 the storage half of the checkpoint/resume contract (plans/checkpoints.py).
+
+Driver-built control rows (the checkpoint manifest, per-run metrics rows)
+skip Spark: ``write_rows`` writes them as one ``pyarrow`` parquet file per
+call, so they cost no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+_URI = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
-def _has_iceberg(spark: SparkSession, table: str) -> bool:
+
+def is_iceberg(spark: SparkSession, table: str) -> bool:
     if "." not in table:
         return False
     catalog = table.split(".", 1)[0]
     return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
 
 
-def local_frame(spark: SparkSession, columns: dict) -> DataFrame:
-    """A small driver-built frame (manifest, metrics rows) from typed
+def local_frame(spark: SparkSession, columns) -> DataFrame:
+    """A small driver-built frame from a ``pyarrow.Table`` or typed
     ``pyarrow`` arrays keyed by column name. A ``pyarrow.Table`` plans as a
     ``LocalTableScan``; a Python list would plan a pickled-RDD scan and
     cost an extra Spark job on every write."""
-    import pyarrow as pa
-
     return spark.createDataFrame(pa.table(columns))
+
+
+def local_path(path: str) -> str:
+    """``path`` itself when it names a driver-local path. A ``scheme://``
+    URI raises: control files are read and written with local file IO, so
+    an ``s3a://`` path would silently become a local ``s3a:`` directory."""
+    if _URI.match(path):
+        raise ValueError(
+            f"{path} is a URI; checkpoint and metrics files are written on "
+            "the driver's file system, so pass a local (or mounted) path"
+        )
+    return path
+
+
+def write_rows(table: pa.Table, path: str, append: bool) -> None:
+    """Write ``table`` as one new parquet file in the directory ``path``,
+    with ``pyarrow`` on the driver: no Spark job. The file is written under
+    a ``.``-prefixed name, which Spark and ``pyarrow`` readers skip, and
+    then renamed into place, so a crash leaves no half-written part.
+    ``append=False`` first removes what the directory held."""
+    local_path(path)
+    if not append:
+        shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def read_table(spark: SparkSession, table_or_path: str) -> DataFrame:
@@ -38,7 +75,7 @@ def read_table(spark: SparkSession, table_or_path: str) -> DataFrame:
 
 
 def append(df: DataFrame, table_or_path: str, partition_by: tuple = ()) -> None:
-    if _has_iceberg(df.sparkSession, table_or_path):
+    if is_iceberg(df.sparkSession, table_or_path):
         df.writeTo(table_or_path).append()
         return
     writer = df.write.mode("append")
@@ -50,7 +87,7 @@ def append(df: DataFrame, table_or_path: str, partition_by: tuple = ()) -> None:
 def overwrite_partitions(df: DataFrame, table_or_path: str,
                          partition_by: tuple) -> None:
     """Replace only the partitions present in `df` (idempotent re-runs)."""
-    if _has_iceberg(df.sparkSession, table_or_path):
+    if is_iceberg(df.sparkSession, table_or_path):
         df.writeTo(table_or_path).overwritePartitions()
         return
     spark = df.sparkSession

@@ -22,7 +22,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..catalog import local_frame
 from ..functions import rules, scrub, udfs
 from .skew import salted_repartition
 
@@ -336,11 +335,12 @@ class QualityFilterPipeline:
         obs = Observation(name)
         return transformed.observe(obs, *counters), obs
 
-    def observed_metrics(self, spark, counters: dict) -> DataFrame:
-        """``metrics()`` rows for one observed run, built from its
-        ``observed()`` counters without touching the data: the same columns
-        and rule names, one set of rows per run with ``partition_id`` NULL.
-        A run of zero docs yields no rows, as ``metrics()`` does."""
+    def observed_metrics(self, counters: dict) -> pa.Table:
+        """``metrics()`` rows for one observed run, built on the driver from
+        its ``observed()`` counters without touching the data: the same
+        columns, types and rule names, one set of rows per run with
+        ``partition_id`` NULL. A run of zero docs yields no rows, as
+        ``metrics()`` does."""
         if counters["_unlisted"]:
             import warnings
 
@@ -358,7 +358,7 @@ class QualityFilterPipeline:
         names = ("rule", "docs_dropped", "docs_in", "docs_out",
                  "chars_removed", "rule_hits")
         cols = list(zip(*rows)) or [()] * len(names)
-        return local_frame(spark, {
+        return pa.table({
             "partition_id": pa.nulls(len(rows), pa.int32()),
             **{n: pa.array(c, pa.string() if n == "rule" else pa.int64())
                for n, c in zip(names, cols)},
