@@ -32,7 +32,6 @@ from wikisource_latin_text_cleaner_spark.functions import html as htmlx  # noqa:
 from wikisource_latin_text_cleaner_spark.operators import (  # noqa: E402
     decontaminate,
     dedup,
-    multimodal,
     sampling,
     segment,
     similarity,
@@ -721,80 +720,6 @@ def q_toxicity_stats(spark, sf):
             F.round(F.avg("tox"), 6).alias("avg_toxicity"),
             F.sum((F.col("tox") > 0).cast("long")).alias("n_flagged"),
         )
-    )
-
-
-#: The synthetic media table is persisted once (pyarrow, deterministic) so
-#: the DuckDB oracle scans the SAME parquet bytes the Spark queries read.
-_MEDIA_PARQUET = os.path.join(
-    # v2: image payloads are real PNGs (stdlib encode_png) -- see
-    # operators/multimodal.py _synth_media_rows
-    os.path.dirname(os.path.abspath(__file__)), ".mediacache", "synth_media_v2_n300_s9.parquet"
-)
-
-
-def q_media_image_features(spark, sf):
-    """Multimodal: image feature extraction over a deterministic synthetic
-    media table whose image payloads are REAL PNGs -- the Spark side runs
-    the stdlib decoder (zlib inflate + scanline unfilter, all five filter
-    types across the fixture; operators/multimodal.py decode_png).
-    Oracle-backed: dimensions come from the meta struct the decoder never
-    reads, the constant fill color from the md5(doc_id) fixture recipe,
-    and the phash from a payload digest -- all SQL-reproducible without
-    decoding."""
-    media = spark.read.parquet(
-        multimodal.ensure_synth_media_parquet(_MEDIA_PARQUET, 300, seed=9)
-    )
-    return multimodal.extract_image_features(media)
-
-
-def q_media_video_frames(spark, sf):
-    """Multimodal: 1->N frame-sampling fan-out per video row. Oracle-backed:
-    frame counts/timestamps are pure functions of meta.duration_ms."""
-    media = spark.read.parquet(
-        multimodal.ensure_synth_media_parquet(_MEDIA_PARQUET, 300, seed=9)
-    )
-    frames = multimodal.sample_video_frames(media, every_ms=1000)
-    return frames.groupBy("doc_id").agg(
-        F.count("*").alias("n_frames"),
-        F.max("frame_ts_ms").alias("last_ts_ms"),
-    )
-
-
-#: planted pHash perturbations for media_phash_near_dups: per original
-#: image, a "re-encoded copy" whose hash differs by 0, 2, or 8 bits --
-#: the 8-bit variant is a candidate (it shares 3 of 4 blocks) that the
-#: exact verify must REJECT at max_hamming=3.
-_PHASH_MASK_2BIT = (1 << 40) | (1 << 5)
-_PHASH_MASK_8BIT = 0xFF << 20
-
-
-def q_media_phash_near_dups(spark, sf):
-    """Multimodal near-dup: hamming join over image perceptual hashes
-    (re-uploaded / re-encoded image detection) via the generic
-    dedup.hash_near_duplicates banding primitive. Each image gets a
-    synthetic re-encode whose pHash differs by 0 / 2 / 8 bits by
-    doc_id % 9; expected pairs are exactly the 0- and 2-bit variants.
-    Oracle: all-pairs bit_count(xor) in SQL over the same parquet bytes."""
-    media = spark.read.parquet(
-        multimodal.ensure_synth_media_parquet(_MEDIA_PARQUET, 300, seed=9)
-    )
-    feats = multimodal.extract_image_features(media).select("doc_id", "phash")
-    mask = (
-        F.when(F.col("doc_id") % 9 == 0, F.lit(0))
-        .when(F.col("doc_id") % 9 == 3, F.lit(_PHASH_MASK_2BIT))
-        .otherwise(F.lit(_PHASH_MASK_8BIT))
-    )
-    variants = feats.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.col("phash").bitwiseXOR(mask).alias("phash"),
-    )
-    allhashes = feats.unionByName(variants)
-    pairs = dedup.hash_near_duplicates(
-        allhashes, hash_col="phash", max_hamming=3, blocks=4
-    )
-    return pairs.select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
 
 
@@ -1847,79 +1772,20 @@ def q_pii_redact(spark, sf):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order matters: the driver's CORRECTNESS check covers the
     FIRST 50 entries per round (proven by diffing the r02 vs r03 key sets
-    against the registry of each round). Round-5 ordering policy per the
-    round-4 verdict: (1) the 40 oracle-backed queries whose last
-    driver-green row predates the round-4 code changes (they sat below
-    r04's fold) come first, so every registered query is driver-certified
-    on post-advice-fix code; (2) ten fill slots go to the queries whose
-    code THIS round touches (url_blocklist after the OUTLINK/urls edits;
-    the incremental-dedup family after the cache-lifecycle mechanization;
-    media siblings after the PNG decode un-gating) plus the capstone
-    recipes; (3) the remaining r04 greens sit below the fold with fresh
-    CORRECTNESS_r04 rows on near-current code."""
+    against the registry of each round), and every entry inside that
+    window has a DuckDB oracle. Ordering policy (VERDICT.md "Next round"
+    item 1): (1) the 40 queries whose newest driver certification is
+    CORRECTNESS_r04 come first, so the next window re-certifies them on
+    code newer than the round-5 dedup edits; (2) ten fill slots go to
+    queries over code changed since: the fused pipeline transform, its
+    gates and UDFs (pipeline_decisions, classify_periods, toxicity_stats)
+    and the near-duplicate operators whose MinHash core and cache flags
+    were rewritten (the rest); (3) everything else sits below the fold,
+    led by the one rows-only-by-design witness, pipeline_clean_sample,
+    whose byte fidelity is carried by the golden-vs-live-reference
+    harness that no SQL oracle can strengthen."""
     return {
-        # --- block 1: r2/r3-era greens rotated back in for driver
-        # re-certification on current code (40) ---
-        "smallest10": q_smallest10,
-        "top5_longest": q_top5_longest,
-        "keep_drop_hist": q_keep_drop_hist,
-        "lang_source_cube": q_lang_source_cube,
-        "confidence_tiers": q_confidence_tiers,
-        "success_rate": q_success_rate,
-        "union_corpora": q_union_corpora,
-        "token_counts": q_token_counts,
-        "bpe_token_counts": q_bpe_token_counts,
-        "fingerprints": q_fingerprints,
-        "stopword_ratio": q_stopword_ratio,
-        "mean_line_len": q_mean_line_len,
-        "dup_line_stats": q_dup_line_stats,
-        "repetition_stats": q_repetition_stats,
-        "symbol_ratio": q_symbol_ratio,
-        "mean_word_len": q_mean_word_len,
-        "pii_matches": q_pii_matches,
-        "events_by_type": q_events_by_type,
-        "events_hourly": q_events_hourly,
-        "events_top_users": q_events_top_users,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "orders_by_segment": q_orders_by_segment,
-        "knn_bruteforce": q_knn_bruteforce,
-        "ngram_jaccard_near_dups": q_ngram_jaccard_near_dups,
-        "html_extract": q_html_extract,
-        "main_content": q_main_content,
-        "char_chunks": q_char_chunks,
-        "vocabulary_top100": q_vocabulary_top100,
-        "cluster_keep_best": q_cluster_keep_best,
-        "hash_split_counts": q_hash_split_counts,
-        "stratified_sample": q_stratified_sample,
-        "url_canonical_dedup": q_url_canonical_dedup,
-        "outlink_domains": q_outlink_domains,
-        "sentence_chunks": q_sentence_chunks,
-        "winnowing_pairs": q_winnowing_pairs,
-        "toxicity_stats": q_toxicity_stats,
-        "media_image_features": q_media_image_features,
-        "media_video_frames": q_media_video_frames,
-        "media_phash_near_dups": q_media_phash_near_dups,
-        # --- block 2: fill slots -- queries over code edited this round,
-        # plus the capstones (10) ---
-        "url_blocklist": q_url_blocklist,
-        "incremental_exact": q_incremental_exact,
-        "incremental_minhash": q_incremental_minhash,
-        "incremental_bloom": q_incremental_bloom,
-        "pipeline_decisions": q_pipeline_decisions,
-        "training_recipe": q_training_recipe,
-        "classify_periods": q_classify_periods,
-        "minhash_dedup_count": q_minhash_dedup_count,
-        "dedup_exact": q_dedup_exact,
-        "quality_distill": q_quality_distill,
-        # --- below the fold: every entry here has a green row in
-        # CORRECTNESS_r04.json (post-advice-fix code), plus the one
-        # rows-only-by-design witness (pipeline_clean_sample: byte
-        # fidelity is carried by the golden-vs-live-reference harness,
-        # which no SQL oracle can strengthen; kept outside the driver's
-        # 50-row window so the hard signal reports 50/50 oracle-checked
-        # rows with zero no_oracle noise) ---
-        "pipeline_clean_sample": q_pipeline_clean_sample,
+        # --- block 1: newest driver certification is r04 (40) ---
         "embedding_near_dups": q_embedding_near_dups,
         "gopher_quality_gate": q_gopher_quality_gate,
         "gopher_repetition": q_gopher_repetition,
@@ -1960,6 +1826,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "domain_cap": q_domain_cap,
         "bpe_token_stats": q_bpe_token_stats,
         "size_stats": q_size_stats,
+        # --- block 2: queries over code changed since r04 (10) ---
+        "pipeline_decisions": q_pipeline_decisions,
+        "classify_periods": q_classify_periods,
+        "toxicity_stats": q_toxicity_stats,
+        "minhash_dedup_count": q_minhash_dedup_count,
+        "incremental_minhash": q_incremental_minhash,
+        "incremental_exact": q_incremental_exact,
+        "incremental_bloom": q_incremental_bloom,
+        "ngram_jaccard_near_dups": q_ngram_jaccard_near_dups,
+        "winnowing_pairs": q_winnowing_pairs,
+        "cluster_keep_best": q_cluster_keep_best,
+        # --- below the fold: the rows-only witness, then the queries
+        # CORRECTNESS_r05 certified ---
+        "pipeline_clean_sample": q_pipeline_clean_sample,
+        "smallest10": q_smallest10,
+        "top5_longest": q_top5_longest,
+        "keep_drop_hist": q_keep_drop_hist,
+        "lang_source_cube": q_lang_source_cube,
+        "confidence_tiers": q_confidence_tiers,
+        "success_rate": q_success_rate,
+        "union_corpora": q_union_corpora,
+        "token_counts": q_token_counts,
+        "bpe_token_counts": q_bpe_token_counts,
+        "fingerprints": q_fingerprints,
+        "stopword_ratio": q_stopword_ratio,
+        "mean_line_len": q_mean_line_len,
+        "dup_line_stats": q_dup_line_stats,
+        "repetition_stats": q_repetition_stats,
+        "symbol_ratio": q_symbol_ratio,
+        "mean_word_len": q_mean_word_len,
+        "pii_matches": q_pii_matches,
+        "events_by_type": q_events_by_type,
+        "events_hourly": q_events_hourly,
+        "events_top_users": q_events_top_users,
+        "pricing_summary": q_pricing_summary,
+        "revenue_by_nation": q_revenue_by_nation,
+        "orders_by_segment": q_orders_by_segment,
+        "knn_bruteforce": q_knn_bruteforce,
+        "html_extract": q_html_extract,
+        "main_content": q_main_content,
+        "char_chunks": q_char_chunks,
+        "vocabulary_top100": q_vocabulary_top100,
+        "hash_split_counts": q_hash_split_counts,
+        "stratified_sample": q_stratified_sample,
+        "url_canonical_dedup": q_url_canonical_dedup,
+        "outlink_domains": q_outlink_domains,
+        "sentence_chunks": q_sentence_chunks,
+        "url_blocklist": q_url_blocklist,
+        "training_recipe": q_training_recipe,
+        "dedup_exact": q_dedup_exact,
+        "quality_distill": q_quality_distill,
     }
 
 
@@ -2200,9 +2117,6 @@ _NB_TRAIN_CTES = """t AS (
 
 
 def oracle_sql() -> dict[str, str]:
-    # the media oracles scan the persisted synthetic media parquet; make
-    # sure it exists even when oracle SQL runs before/without the queries
-    multimodal.ensure_synth_media_parquet(_MEDIA_PARQUET, 300, seed=9)
     return {
         "size_stats": """
             SELECT count(*) AS n_docs, min(n_chars) AS min_chars,
@@ -5370,69 +5284,6 @@ def oracle_sql() -> dict[str, str]:
                               w -> list_contains({_TOX_SQL}, w))) > 0
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged
             FROM documents GROUP BY lang
-        """,
-        "media_image_features": f"""
-            -- the Spark side REALLY decodes the PNG payloads (stdlib
-            -- inflate + unfilter, operators/multimodal.py decode_png);
-            -- the oracle re-derives what the pixels must contain without
-            -- decoding: dimensions from the meta struct (which the
-            -- decoder never reads) and the constant fill color from the
-            -- same md5(doc_id) recipe the fixture generator used, with
-            -- the luma expression in the decoder's exact operation order
-            WITH f AS (
-              SELECT doc_id, payload, meta,
-                     md5(CAST(doc_id AS VARCHAR)) AS m,
-                     sha256(lower(hex(payload))) AS d
-              FROM '{_MEDIA_PARQUET}' WHERE media_type = 'image'
-            )
-            SELECT doc_id,
-                   meta.width AS width,
-                   meta.height AS height,
-                   CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-                   CASE WHEN doc_id % 2 = 0
-                        THEN round(CAST('0x' || substr(m, 5, 2) AS INT) / 255.0, 6)
-                        ELSE round((0.299 * CAST('0x' || substr(m, 5, 2) AS INT)
-                                  + 0.587 * CAST('0x' || substr(m, 7, 2) AS INT)
-                                  + 0.114 * CAST('0x' || substr(m, 9, 2) AS INT))
-                                  / 255.0, 6)
-                   END AS mean_luma,
-                   CAST('0x' || substr(d, 1, 15) AS BIGINT) AS phash
-            FROM f
-        """,
-        "media_video_frames": f"""
-            SELECT doc_id,
-                   CAST(greatest(meta.duration_ms // 1000, 1) AS BIGINT) AS n_frames,
-                   CAST((greatest(meta.duration_ms // 1000, 1) - 1) * 1000 AS INT)
-                     AS last_ts_ms
-            FROM '{_MEDIA_PARQUET}' WHERE media_type = 'video'
-        """,
-        "media_phash_near_dups": f"""
-            -- ALL-pairs hamming truth (no banding): a pair the Spark
-            -- side's block-combination candidates missed would appear
-            -- here as an extra row
-            WITH f AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(sha256(lower(hex(payload))), 1, 15)
-                          AS BIGINT) AS phash
-              FROM '{_MEDIA_PARQUET}' WHERE media_type = 'image'
-            ),
-            v AS (
-              SELECT doc_id + 100000 AS doc_id, xor(phash, mask) AS phash
-              FROM (
-                SELECT doc_id, phash,
-                       CASE doc_id % 9
-                         WHEN 0 THEN 0
-                         WHEN 3 THEN {_PHASH_MASK_2BIT}
-                         ELSE {_PHASH_MASK_8BIT}
-                       END AS mask
-                FROM f
-              )
-            ),
-            u AS (SELECT * FROM f UNION ALL SELECT * FROM v)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-            FROM u a JOIN u b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.phash, b.phash)) <= 3
         """,
         "sentence_chunks": """
             -- greedy sentence packing as a recursive recurrence: sentence

@@ -246,14 +246,15 @@ def main(argv: list[str] | None = None) -> int:
         n_run = len(run_buckets)
     else:
         # same <output>/data layout as the bucketed path, so the metrics
-        # table never nests inside the scanned dataset; any prior bucketed
-        # manifest is invalidated (overwritten empty) so a later --resume
-        # cannot trust checkpoints that no longer describe the data
+        # table never nests inside the scanned dataset. The static overwrite
+        # deletes any prior bucketed data and counts files as it starts, so
+        # their manifest is emptied first: a write that then fails leaves no
+        # checkpoints for a later --resume to trust
+        checkpoints.write_manifest(args.output, [], 0)
         writer = observed(pages).write.mode("overwrite")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(os.path.join(args.output, "data"))
-        checkpoints.write_manifest(args.output, [], 0)
         untouched, n_run = [], -1
 
     # this run's counters came with its write; Observation.get would block

@@ -2,6 +2,8 @@
 parts, per-bucket ``_counts.json`` files and the temp names their writers
 rename from, plus the local-path rule they impose on outputs."""
 
+import contextlib
+import io
 import os
 
 import pyarrow.parquet as pq
@@ -9,7 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import driver
+from wikisource_latin_text_cleaner_spark.operators.pipeline import QualityFilterPipeline
 from wikisource_latin_text_cleaner_spark.plans import checkpoints
+from wikisource_latin_text_cleaner_spark.sources import synth
 
 N_BUCKETS = 4
 
@@ -83,6 +87,29 @@ def test_failed_fresh_run_leaves_no_checkpoints(spark, tmp_path):
     with pytest.raises(Exception, match="boom"):
         checkpoints.run_resumable(boom, docs, out, n_buckets=N_BUCKETS,
                                   resume=False)
+    assert checkpoints.completed_buckets(out, N_BUCKETS) == set()
+
+
+def test_failed_flat_driver_run_leaves_no_checkpoints(spark, tmp_path, monkeypatch):
+    """The driver's flat write (``--buckets 0``) is a static overwrite of the
+    same ``data`` dir, so it too must empty a prior bucketed manifest before
+    its job starts, not after the write succeeds."""
+    inp, out = str(tmp_path / "pages.parquet"), str(tmp_path / "out")
+    synth.write_pages_parquet(inp, 40, seed=7)
+    base = ["--input", inp, "--output", out, "--mode", "reference", "--no-classify"]
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert driver.main([*base, "--buckets", str(N_BUCKETS), "--resume"]) == 0
+    assert checkpoints.completed_buckets(out, N_BUCKETS) == set(range(N_BUCKETS))
+
+    observed = QualityFilterPipeline.observed
+
+    def boom(self, df, name="quality_filter"):
+        df, obs = observed(self, df, name)
+        return df.withColumn("keep", F.raise_error(F.lit("boom")).cast("boolean")), obs
+
+    monkeypatch.setattr(QualityFilterPipeline, "observed", boom)
+    with pytest.raises(Exception, match="boom"):
+        driver.main([*base, "--buckets", "0"])
     assert checkpoints.completed_buckets(out, N_BUCKETS) == set()
 
 

@@ -1325,7 +1325,7 @@ def test_hash_near_duplicates_planted_masks(spark):
     """Generic 64-bit hamming join: 0- and 2-bit perturbations pair, an
     8-bit perturbation is a banding CANDIDATE (shares 3 of 4 blocks: the
     flipped byte sits inside one 16-bit block) that exact verify rejects."""
-    base = 0x0123456789ABCDE  # < 2^60, like the media pHash
+    base = 0x0123456789ABCDE
     rows = [
         (1, base),
         (2, base),                      # hamming 0

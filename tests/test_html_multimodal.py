@@ -1,10 +1,6 @@
-"""HTML->text extraction and multimodal plumbing tests."""
-
-import pandas as pd
-import pytest
+"""HTML->text extraction tests."""
 
 from wikisource_latin_text_cleaner_spark.functions import html as H
-from wikisource_latin_text_cleaner_spark.operators import multimodal as MM
 
 
 # -- pure-python extractor ---------------------------------------------------
@@ -50,130 +46,6 @@ def test_html_udf_over_synth_corpus(spark):
     # deterministic across runs
     out2 = pages.select(H.html_to_text_udf("html").alias("extracted")).collect()
     assert [r.extracted for r in out] == [r.extracted for r in out2]
-
-
-# -- multimodal --------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def media(spark):
-    return MM.synth_media(spark, 60, seed=5).cache()
-
-
-def test_media_schema(media):
-    assert set(media.columns) == {"doc_id", "media_type", "payload", "meta"}
-    assert media.count() == 60
-
-
-def test_image_features(media):
-    feats = MM.extract_image_features(media)
-    rows = feats.collect()
-    assert len(rows) == media.where("media_type = 'image'").count()
-    assert feats.columns == ["doc_id", "width", "height", "n_bytes", "mean_luma", "phash"]
-    import hashlib
-
-    for r in rows:
-        # REAL decode: dimensions/luma must match the fixture recipe
-        # (md5(doc_id)-derived constant-color PNG) pixel for pixel
-        d = hashlib.md5(str(r.doc_id).encode()).hexdigest()
-        assert r.width == 8 + int(d[0:2], 16) % 25
-        assert r.height == 8 + int(d[2:4], 16) % 25
-        if r.doc_id % 2 == 0:
-            assert r.mean_luma == round(int(d[4:6], 16) / 255.0, 6)
-        else:
-            rr, gg, bb = (int(d[4:6], 16), int(d[6:8], 16), int(d[8:10], 16))
-            assert r.mean_luma == round(
-                (0.299 * rr + 0.587 * gg + 0.114 * bb) / 255.0, 6
-            )
-        assert r.n_bytes > 0
-    # determinism: same payload -> same features
-    again = {r.doc_id: (r.width, r.height, r.phash) for r in MM.extract_image_features(media).collect()}
-    assert all(again[r.doc_id] == (r.width, r.height, r.phash) for r in rows)
-
-
-def test_audio_features(media):
-    rows = MM.extract_audio_features(media).collect()
-    assert len(rows) == media.where("media_type = 'audio'").count()
-    for r in rows:
-        assert r.duration_ms >= 1000 and r.sample_rate in (8000, 16000, 44100)
-        assert 0.0 <= r.rms <= 255.0
-
-
-def test_video_frame_fanout(media):
-    frames = MM.sample_video_frames(media, every_ms=1000)
-    pdf = frames.toPandas()
-    vids = media.where("media_type = 'video'").select("doc_id", "meta.duration_ms").collect()
-    expected = sum(max(1, v.duration_ms // 1000) for v in vids)
-    assert len(pdf) == expected
-    # per-video frame indices are dense from 0
-    for doc_id, grp in pdf.groupby("doc_id"):
-        assert sorted(grp.frame_idx) == list(range(len(grp)))
-        assert all(grp.frame_ts_ms == grp.frame_idx * 1000)
-
-
-def test_decode_real_path_is_guarded_for_non_png():
-    with pytest.raises(NotImplementedError):
-        MM._decode_image_real(b"xx")
-
-
-def test_png_round_trip_all_filters_and_color_types():
-    """encode_png -> decode_png is the identity for gradient (non-constant)
-    images across every scanline filter type and color type -- the
-    unfilter branches (sub/up/avg/Paeth) are each exercised against
-    content where a wrong predictor would corrupt pixels."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    h, w = 13, 17
-    gray = (np.add.outer(np.arange(h), np.arange(w)) * 3 % 256).astype(np.uint8)
-    ga = np.dstack([gray, np.flip(gray, axis=1)])
-    rgb = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    rgba = rng.integers(0, 256, size=(h, w, 4), dtype=np.uint8)
-    for arr in (gray, ga, rgb, rgba):
-        for ft in range(5):
-            out = MM.decode_png(MM.encode_png(arr, filter_type=ft))
-            assert out.shape == arr.shape, (arr.shape, ft)
-            assert np.array_equal(out, arr), (arr.shape, ft)
-
-
-def test_png_decode_features_match_numpy_mean():
-    """_decode_image_real on a NON-constant RGB PNG agrees with the direct
-    numpy Rec.601 computation (same per-channel-mean-first order)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 256, size=(9, 21, 3), dtype=np.uint8)
-    w, h, luma = MM._decode_image_real(MM.encode_png(arr, filter_type=4))
-    assert (w, h) == (21, 9)
-    r, g, b = (float(arr[:, :, c].mean()) for c in range(3))
-    assert luma == round((0.299 * r + 0.587 * g + 0.114 * b) / 255.0, 6)
-
-
-def test_png_decode_rejects_out_of_envelope():
-    import struct
-    import zlib
-
-    with pytest.raises(ValueError):
-        MM.decode_png(b"not a png at all")
-    # 16-bit depth: valid PNG structure, outside the supported envelope
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 0, 0, 0, 0)
-    deep = (
-        MM.PNG_MAGIC
-        + MM._png_chunk(b"IHDR", ihdr)
-        + MM._png_chunk(b"IDAT", zlib.compress(bytes(2 * (1 + 4))))
-        + MM._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        MM.decode_png(deep)
-    # truncated pixel stream
-    ihdr8 = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
-    short = (
-        MM.PNG_MAGIC
-        + MM._png_chunk(b"IHDR", ihdr8)
-        + MM._png_chunk(b"IDAT", zlib.compress(bytes(3)))
-        + MM._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        MM.decode_png(short)
 
 
 def test_pipeline_html_fallback(spark):

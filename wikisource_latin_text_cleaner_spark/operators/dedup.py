@@ -681,10 +681,9 @@ def hash_near_duplicates(
 ) -> DataFrame:
     """Generic hamming near-dup join over a PRECOMPUTED 64-bit hash column
     -- the banding core of ``simhash_near_duplicates``, factored out so any
-    64-bit signature joins the same way: text SimHash, image perceptual
-    hashes (media pHash near-dup = re-encoded/re-uploaded image detection),
-    audio chromaprints. Same Manku block-combination banding (exhaustive by
-    pigeonhole at every (blocks, max_hamming) setting), same exact JVM-side
+    64-bit signature joins the same way as text SimHash. Same Manku
+    block-combination banding (exhaustive by pigeonhole at every
+    (blocks, max_hamming) setting), same exact JVM-side
     ``bit_count(xor)`` verification, same ``blocks`` scale dial -- see
     simhash_near_duplicates' docstring for the 10^12-tier arithmetic.
 
