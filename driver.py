@@ -59,13 +59,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="comma-separated registrable domains to drop "
                         "(RefinedWeb-style URL gate; omit = gate off). "
                         "For UT1-sized lists pass a table via the API "
-                        "(PipelineConfig.url_blocklist DataFrame).")
-    p.add_argument("--url-blocklist-bloom", default=None, metavar="M_BITS,K",
-                   help="gate via a Bloom filter of the blocklist domains "
-                        "instead of an exact membership test -- the path "
-                        "for blocklists too large to broadcast (no false "
-                        "negatives; deterministic false-positive rate set "
-                        "by M_BITS). Requires --url-blocklist.")
+                        "(PipelineConfig.url_blocklist DataFrame, plus "
+                        "url_blocklist_bloom past broadcast size).")
     p.add_argument("--max-url-kw-hits", type=int, default=None,
                    help="drop docs whose URL contains more than this many "
                         "block keywords (omit = gate off)")
@@ -124,8 +119,6 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    import dataclasses
-
     import pyarrow as pa
     from pyspark.sql import Observation, SparkSession
 
@@ -181,17 +174,6 @@ def main(argv: list[str] | None = None) -> int:
         ),
         gopher_repetition_gate=args.gopher_repetition,
     )
-    if args.url_blocklist_bloom:
-        if not args.url_blocklist:
-            raise SystemExit("--url-blocklist-bloom requires --url-blocklist")
-        m_bits, n_hashes = (int(x) for x in args.url_blocklist_bloom.split(","))
-        cfg = dataclasses.replace(
-            cfg,
-            url_blocklist=catalog.local_frame(
-                spark, {"domain": pa.array(args.url_blocklist.split(","))}
-            ),
-            url_blocklist_bloom=(m_bits, n_hashes),
-        )
     pipe = QualityFilterPipeline(cfg)
     pages = catalog.read_table(spark, args.input)
 

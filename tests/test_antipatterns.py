@@ -14,6 +14,9 @@ Locks in, permanently, what the round-3 judge verified by hand:
   documented where it occurs). A new ``.collect()``
   anywhere else fails this test until it is reviewed and the census
   below is updated.
+
+It also keeps one design rule: the near-duplicate families share one
+symmetric pair self-join, ``dedup._band_pairs``.
 """
 
 import re
@@ -71,3 +74,17 @@ def test_collect_sites_stay_within_reviewed_census():
         "the bound at the call site, then raise the census:\n"
         + "\n".join(over)
     )
+
+
+def test_one_symmetric_pair_self_join():
+    """The near-duplicate families share one candidate self-join,
+    ``dedup._band_pairs``: its ``id_a < id_b`` predicate appears exactly
+    once in the package, inside that helper. A new family calls the core
+    instead of hand-writing a second self-join (the asymmetric
+    incremental-MinHash probe writes ``id_b < id_a``)."""
+    pred = 'F.col("id_a") < F.col("id_b")'
+    hits = {rel: src.count(pred) for rel, src in _sources() if pred in src}
+    assert hits == {"operators/dedup.py": 1}, hits
+    src = (PKG / "operators" / "dedup.py").read_text()
+    core = src[src.index("def _band_pairs("):]
+    assert pred in core[:core.index("\ndef ")], "predicate outside _band_pairs"

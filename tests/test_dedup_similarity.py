@@ -1,5 +1,7 @@
 """Dedup + similarity operator correctness vs pure-python/numpy oracles."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -150,21 +152,58 @@ def test_ngram_jaccard_persist_hashes_and_grams_once(spark, tmp_path):
 
 def test_embedding_near_dup_persist_projects_each_vector_once(spark, tmp_path):
     """Hyperplane bucket UDF must run once per embedding, not once per
-    aliased self-join side: persisted plan reads the cache on both sides."""
+    aliased self-join side: persisted plan reads the cache on both sides.
+    Every call returns the exact oracle -- band keys recomputed in numpy
+    from the seeded planes, cosine by the same left-to-right fold, rounded
+    to 6 dp -- so the planes cannot depend on how many calls ran before."""
     rng = np.random.default_rng(7)
     base = rng.standard_normal(64)
     rows = []
     for i in range(40):
         v = rng.standard_normal(64) if i % 4 else base + rng.standard_normal(64) * 0.01
         rows.append((i, [float(x) for x in v]))
+    # a looser clique around cosine 0.96: which of its pairs share a band
+    # depends on the planes
+    base2 = rng.standard_normal(64)
+    for i in range(40, 52):
+        rows.append((i, [float(x) for x in base2 + rng.standard_normal(64) * 0.2]))
     path = str(tmp_path / "emb.parquet")
     spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(path)
     d = spark.read.parquet(path)
     out_p = dedup.embedding_near_duplicates(d)
     plan_p = out_p._jdf.queryExecution().executedPlan().toString()
     assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    rows_p = sorted((r.id_a, r.id_b, r.cosine) for r in out_p.collect())
-    assert rows_p, "planted near-dup clique must produce pairs"
+
+    bands, planes = 4, 12
+    hyper = np.random.RandomState(1337).standard_normal((bands, planes, 64))
+    mat = np.array([v for _, v in rows])
+    weights = 1 << np.arange(planes, dtype=np.int64)
+    bits = [(mat @ hyper[b].T) > 0 for b in range(bands)]
+    keys = [{int(bits[b][i] @ weights) * bands + b for b in range(bands)}
+            for i in range(len(rows))]
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    def cosine(u, v):
+        return round(fold(x * y for x, y in zip(u, v))
+                     / (math.sqrt(fold(x * x for x in u))
+                        * math.sqrt(fold(x * x for x in v))), 6)
+
+    vecs = dict(rows)
+    near = [(a, b, cosine(vecs[a], vecs[b]))
+            for a in vecs for b in vecs if a < b]
+    near = [p for p in near if p[2] >= 0.95]
+    want = sorted(p for p in near if keys[p[0]] & keys[p[1]])
+    # the oracle covers both cliques and the banding misses some pairs
+    assert 45 < len(want) < len(near)
+    for _ in range(2):
+        got = sorted((r.id_a, r.id_b, r.cosine)
+                     for r in dedup.embedding_near_duplicates(d).collect())
+        assert got == want
 
 
 @pytest.mark.parametrize("blocks", [4, 6])

@@ -464,16 +464,3 @@ def c4_doc_poisoned(col) -> Column:
         out = out | F.lower(col).contains(t)
     return out
 
-
-def quality_columns(text_col: str = "text") -> dict:
-    """Bundle of named quality expressions for select(**)."""
-    c = F.col(text_col)
-    return {
-        "n_words": n_words(c),
-        "mean_word_len": mean_word_len(c),
-        "stopword_ratio": stopword_ratio(c),
-        "symbol_ratio": symbol_ratio(c),
-        "mean_line_len": mean_line_len(c),
-        "dup_line_char_fraction": dup_line_char_fraction(c),
-        "top_bigram_ratio": top_bigram_ratio(c),
-    }

@@ -11,13 +11,19 @@ Scale design notes:
     per batch), so the only shuffles are the band-bucket join (keys are
     ~uniform by construction -> no skew) and the final semi-join;
   - candidate generation is band-bucket equality (classic MinHash-LSH /
-    SimHash banding), never an O(n^2) cross join;
-  - verification stays JVM-side (zip_with/aggregate on signature arrays,
-    bit_count on simhash) -- no Python in the pair loop;
-  - "canonical doc" = smallest id among verified near-dups; a row is dropped
-    iff some verified duplicate has a smaller id (single-level transitivity,
-    the standard near-dup-dedup approximation -- no iterative connected
-    components job needed).
+    SimHash banding), never an O(n^2) cross join. Every symmetric family
+    (MinHash, SimHash/hamming, winnowing, embedding bands, SemDeDup cells)
+    keys its rows and calls the one self-join, ``_band_pairs``; only the
+    incremental MinHash probe (new batch against a ledger) writes its own;
+  - verification stays JVM-side -- no Python in the pair loop -- and each
+    pair rule is written once: signature agreement (``_agreement``), exact
+    set Jaccard (``_pair_jaccard``), cosine from per-vector norms
+    (``similarity._dot`` / ``_norm``), ``bit_count`` of the simhash xor;
+  - "canonical doc" = smallest id: among identical texts (``_smallest_id``)
+    and among verified near-dups, where a row is dropped iff some verified
+    duplicate has a smaller id (single-level transitivity, the standard
+    near-dup-dedup approximation -- no iterative connected components job
+    needed).
 
 Eager-evaluation / cache-lifecycle contract (applies to EVERY near-dup
 function here): each one runs Spark jobs at CALL time to fill its internal
@@ -52,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from .similarity import _dot, _norm, make_cell_udf, train_ivf_centroids
 
 
 def _persist_forced(df: DataFrame) -> DataFrame:
@@ -198,7 +206,6 @@ _MERSENNE = np.int64((1 << 61) - 1)
 _RNG = np.random.RandomState(42)
 _MINHASH_A = _RNG.randint(1, 1 << 31, size=64).astype(np.int64)
 _MINHASH_B = _RNG.randint(0, 1 << 31, size=64).astype(np.int64)
-_SIMHASH_RNG = np.random.RandomState(1337)
 
 
 def _char_shingle_hashes(text: str, width: int = 5) -> np.ndarray:
@@ -371,6 +378,50 @@ def winnow_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _winnow(t or ""))
 
 
+# -- the pair core: one self-join, Jaccard, cosine and smallest-id rule ------
+
+def _band_pairs(keyed: DataFrame, *carry: str) -> DataFrame:
+    """The package's one symmetric candidate self-join: ``(id, band_key,
+    *carry)`` -> ``(id_a, id_b, <c>_a, <c>_b, ...)`` with ``id_a < id_b``,
+    one row per shared band key (a pair sharing k keys comes back k times;
+    callers count or dedupe). Keys are ~uniform by construction, so the
+    equi-join shuffles without skew and is never an O(n^2) cross join."""
+    def side(s):
+        return keyed.select("band_key", F.col("id").alias(f"id_{s}"),
+                            *(F.col(c).alias(f"{c}_{s}") for c in carry))
+
+    return (
+        side("a").join(side("b"), "band_key")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *(f"{c}_{s}" for c in carry for s in "ab"))
+    )
+
+
+def _pair_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """``pairs`` joined to both members' ``(id, set)`` arrays of distinct
+    elements, plus ``jaccard``: the exact set Jaccard, JVM-side
+    array_intersect/array_union, rounded to 4 dp before any compare."""
+    a = sets.select(F.col("id").alias("id_a"), F.col("set").alias("set_a"))
+    b = sets.select(F.col("id").alias("id_b"), F.col("set").alias("set_b"))
+    jac = (F.size(F.array_intersect("set_a", "set_b"))
+           / F.size(F.array_union("set_a", "set_b")))
+    return pairs.join(a, "id_a").join(b, "id_b").withColumn("jaccard", F.round(jac, 4))
+
+
+def _pair_cosine():
+    """Cosine of a ``_band_pairs(..., "v", "n")`` pair from the cached
+    per-vector norms, JVM-side, rounded to 6 dp before any compare."""
+    return F.round(_dot("v_a", "v_b") / (F.col("n_a") * F.col("n_b")), 6)
+
+
+def _smallest_id(df: DataFrame, key, id_col: str) -> DataFrame:
+    """The rows of ``df`` whose ``id_col`` is the smallest among the rows
+    sharing ``key`` (a column name or expression, e.g. a text hash): one
+    hash groupBy and a semi-join on the id, lazy."""
+    canon = df.groupBy(key).agg(F.min(id_col).alias(id_col))
+    return df.join(canon.select(id_col), id_col, "left_semi")
+
+
 def winnowing_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -419,11 +470,8 @@ def winnowing_near_duplicates(
         )
         fps = fps.join(F.broadcast(common), "fp", "left_anti")
     sizes = fps.groupBy("id").agg(F.count("*").alias("n_fp"))
-    a = fps.select("fp", F.col("id").alias("id_a"))
-    b = fps.select("fp", F.col("id").alias("id_b"))
     shared = (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
+        _band_pairs(fps.withColumnRenamed("fp", "band_key"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared_fingerprints"))
     )
@@ -449,10 +497,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     (ref: last-wins filename overwrite, step7_create_merged_datasets.py:62-66,
     made deterministic and explicit.)
     """
-    canon = df.groupBy(F.md5(F.col(text_col)).alias("_h")).agg(
-        F.min(id_col).alias(id_col)
-    )
-    return df.join(canon, id_col, "leftsemi")
+    return _smallest_id(df, F.md5(F.col(text_col)).alias("_h"), id_col)
 
 
 # -- MinHash + LSH near-dup ---------------------------------------------------
@@ -517,15 +562,7 @@ def minhash_band_candidates(
     sigs = _persist_forced(
         df.select(F.col(id_col).alias("id"), sig_udf(text_col).alias("sig"))
     )
-    bands_df = _bands(sigs, bands, rows_per_band)
-    left = bands_df.select("band_key", F.col("id").alias("id_a"))
-    right = bands_df.select("band_key", F.col("id").alias("id_b"))
-    return (
-        left.join(right, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _band_pairs(_bands(sigs, bands, rows_per_band)).distinct()
 
 
 def ngram_jaccard_near_duplicates(
@@ -585,11 +622,6 @@ def minhash_near_duplicates(
     sigs = _persist_forced(
         df.select(F.col(id_col).alias("id"), minhash_udf(text_col).alias("sig"))
     )
-    bands_df = _bands(sigs, bands, rows_per_band)
-    left = bands_df.select("band_key", F.col("id").alias("id_a"),
-                           F.col("sig").alias("sig_a"))
-    right = bands_df.select("band_key", F.col("id").alias("id_b"),
-                            F.col("sig").alias("sig_b"))
     # Verify in the join projection and filter BEFORE deduplicating: the
     # surviving pair set is tiny, so dropDuplicates aggregates 3 scalar
     # columns instead of dragging two 64-long signature arrays through a
@@ -597,8 +629,7 @@ def minhash_near_duplicates(
     # Both join inputs shuffle on band_key with identical child plans, so
     # AQE reuses one exchange.
     return (
-        left.join(right, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
+        _band_pairs(_bands(sigs, bands, rows_per_band), "sig")
         .select("id_a", "id_b",
                 _agreement(bands * rows_per_band).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
@@ -706,13 +737,8 @@ def hash_near_duplicates(
     bands_df = sigs.select(
         "id", "sim", F.explode(F.array(*keys)).alias("band_key"),
     )
-    left = bands_df.select("band_key", F.col("id").alias("id_a"),
-                           F.col("sim").alias("sim_a"))
-    right = bands_df.select("band_key", F.col("id").alias("id_b"),
-                            F.col("sim").alias("sim_b"))
     return (
-        left.join(right, ["band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _band_pairs(bands_df, "sim")
         .select("id_a", "id_b", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
@@ -746,15 +772,10 @@ def ngram_jaccard_pairs(
                     " ", F.slice(F.split(F.lower(text_col), r"\s+"), i + 1, n)
                 ),
             )
-        ).alias("grams"),
+        ).alias("set"),
     )
-    grams = _persist_forced(grams)
-    a = grams.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a"))
-    b = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b"))
-    joined = candidate_pairs.join(a, "id_a").join(b, "id_b")
-    jac = F.size(F.array_intersect("g_a", "g_b")) / F.size(F.array_union("g_a", "g_b"))
     return (
-        joined.withColumn("jaccard", F.round(jac, 4))
+        _pair_jaccard(candidate_pairs, _persist_forced(grams))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -873,7 +894,8 @@ def embedding_near_duplicates(
     set planes ~= log2(N / desired_bucket_size) at scale (e.g. 27 bits for
     10^4-row buckets at 10^12), raising bands to hold recall.
     """
-    hyper = _SIMHASH_RNG.standard_normal((bands, planes, dim))
+    # seeded per call: every call draws the same planes, whatever ran before
+    hyper = np.random.RandomState(1337).standard_normal((bands, planes, dim))
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets_udf(vecs: pd.Series) -> pd.Series:
@@ -887,20 +909,16 @@ def embedding_near_duplicates(
             out[:, b] = (bits * weights).sum(axis=1) * bands + b
         return pd.Series(list(out))
 
+    # each vector's norm is cached next to its band keys, so the pair join
+    # computes only the dot product
     sigs = _persist_forced(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                  F.explode(buckets_udf(vec_col)).alias("bucket"))
+                  _norm(F.col(vec_col)).alias("n"),
+                  F.explode(buckets_udf(vec_col)).alias("band_key"))
     )
-    a = sigs.select("bucket", F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    b = sigs.select("bucket", F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0),
-                                        lambda acc, x: acc + x))  # noqa: E731
     return (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (norm(F.col("v_a")) * norm(F.col("v_b"))), 6))
+        _band_pairs(sigs, "v", "n")
+        .withColumn("cosine", _pair_cosine())
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
         .dropDuplicates(["id_a", "id_b"])
@@ -1056,47 +1074,30 @@ def semdedup(
     training is similarity.train_ivf_centroids (bounded uniform sample,
     constant driver memory); assignment is one vectorized Arrow batch
     matmul per partition (similarity.make_cell_udf). The assigned frame is
-    persisted before the self-join (aliased branches defeat exchange
-    reuse -- see the minhash/ngram self-joins above); cosine itself is
-    JVM-side zip_with/aggregate on double-cast vectors, rounded to 6dp
-    BEFORE the threshold compare in both engines so boundary pairs cannot
-    flap on float noise.
+    persisted before the ``_band_pairs`` self-join on the cell (aliased
+    branches defeat exchange reuse); cosine itself is JVM-side
+    zip_with/aggregate on double-cast vectors, rounded to 6dp BEFORE the
+    threshold compare in both engines so boundary pairs cannot flap on
+    float noise.
     """
-
-    from .similarity import make_cell_udf, train_ivf_centroids
-
     if centroids is None:
         centroids = train_ivf_centroids(df, n_cells=n_cells, vec_col=vec_col)
     cell_udf = make_cell_udf(centroids)
-    norm = F.sqrt(F.aggregate(
-        F.transform("v", lambda x: x * x),
-        F.lit(0.0), lambda acc, x: acc + x))
-    # norms are computed ONCE per vector here (and cached with the cell):
-    # inside the pair join they would be re-evaluated per PAIR, tripling
-    # the per-pair array-aggregate work (5.1s -> 2.7s at sf0.1 together
-    # with a right-sized cell count)
+    # the cell is the band key; norms are computed ONCE per vector here
+    # (and cached with the cell): inside the pair join they would be
+    # re-evaluated per PAIR, tripling the per-pair array-aggregate work
+    # (5.1s -> 2.7s at sf0.1 together with a right-sized cell count)
     cells = (
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
-        .withColumn("cell", cell_udf("v"))
-        .withColumn("n", norm)
+        .withColumn("band_key", cell_udf("v"))
+        .withColumn("n", _norm("v"))
     )
-    cells = _persist_forced(cells)
-
-    a = cells.select("cell", F.col("id").alias("id_a"),
-                     F.col("v").alias("v_a"), F.col("n").alias("n_a"))
-    b = cells.select("cell", F.col("id").alias("id_b"),
-                     F.col("v").alias("v_b"), F.col("n").alias("n_b"))
-    dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
     dropped = (
-        a.join(b, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine",
-                    F.round(dot / (F.col("n_a") * F.col("n_b")), 6))
-        .where(F.col("cosine") >= threshold)
+        _band_pairs(_persist_forced(cells), "v", "n")
+        .where(_pair_cosine() >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
@@ -1265,8 +1266,7 @@ def incremental_exact_dedup(
         hashed = new_df.withColumn(
             hash_col, F.md5(F.encode(F.col(text_col), "utf-8"))
         )
-        canon = hashed.groupBy(hash_col).agg(F.min(id_col).alias(id_col))
-        batch_kept = hashed.join(canon.select(id_col), id_col, "left_semi")
+        batch_kept = _smallest_id(hashed, hash_col, id_col)
         if seen_hashes is not None:
             kept_h = batch_kept.join(
                 seen_hashes.select(hash_col), hash_col, "left_anti"
@@ -1488,33 +1488,25 @@ def minhash_estimate_audit(
     0.125 standard error per pair, so pairs near the threshold carry real
     misclassification risk that this audit quantifies per corpus.
 
-    Scale shape: identical to the word-n-gram verifier
-    (ngram_jaccard_pairs) -- the exact check joins the (tiny) verified
-    pair set to the shingle-array table twice and runs
-    array_intersect/array_union JVM-side; the corpus-sized work is the one
-    Arrow UDF pass producing shingle arrays, shared across both join
-    probes via the cache. Run on a SAMPLE at 10^12 docs: calibration needs
-    thousands of pairs, not the full corpus.
+    Scale shape: the word-n-gram verifier's (both call ``_pair_jaccard``)
+    -- the exact check joins the (tiny) verified pair set to the
+    shingle-array table twice and runs array_intersect/array_union
+    JVM-side; the corpus-sized work is the one Arrow UDF pass producing
+    shingle arrays, shared across both join probes via the cache. Run on a
+    SAMPLE at 10^12 docs: calibration needs thousands of pairs, not the
+    full corpus.
     """
 
     pairs = minhash_near_duplicates(
         df, text_col, id_col, threshold, bands, rows_per_band,
     )
     sh = _persist_forced(
-        df.select(F.col(id_col).alias("_sid"), char_shingle_udf(text_col).alias("_sh"))
+        df.select(F.col(id_col).alias("id"), char_shingle_udf(text_col).alias("set"))
     )
-    a = sh.select(F.col("_sid").alias("id_a"), F.col("_sh").alias("_sh_a"))
-    b = sh.select(F.col("_sid").alias("id_b"), F.col("_sh").alias("_sh_b"))
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    exact = F.round(inter / union, 4)
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select(
-            "id_a", "id_b", "est_jaccard",
-            exact.alias("exact_jaccard"),
-            F.round(F.abs(F.col("est_jaccard") - exact), 4).alias("abs_err"),
-        )
+    return _pair_jaccard(pairs, sh).select(
+        "id_a", "id_b", "est_jaccard",
+        F.col("jaccard").alias("exact_jaccard"),
+        F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 4).alias("abs_err"),
     )
 
 
@@ -1560,8 +1552,7 @@ def incremental_bloom_dedup(
         hashed = new_df.withColumn(
             hash_col, F.md5(F.encode(F.col(text_col), "utf-8"))
         )
-        canon = hashed.groupBy(hash_col).agg(F.min(id_col).alias(id_col))
-        batch_kept = hashed.join(canon.select(id_col), id_col, "left_semi")
+        batch_kept = _smallest_id(hashed, hash_col, id_col)
         member = bloom_member_col(F.col(hash_col), seen_bloom_bits, m_bits, k)
         kept_h = _persist_forced(batch_kept.where(~member))
         kept = kept_h.select(*new_df.columns)

@@ -411,10 +411,6 @@ class QualityFilterPipeline:
             out = out.unionByName(variant_rows.select(*out.columns))
         return out
 
-    def run(self, pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-        out = self.transform(pages)
-        return out, self.metrics(out)
-
 
 def drop_reason_histogram(transformed: DataFrame) -> DataFrame:
     """Corpus-level decision histogram (ref step1 keep/drop counters,

@@ -20,9 +20,8 @@ from pyspark.sql.types import LongType
 _PLANES_RNG = np.random.RandomState(271828)
 
 
-def _dot(vec_col, query: list) -> F.Column:
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return F.aggregate(F.zip_with(vec_col, q, lambda a, b: a * b), F.lit(0.0),
+def _dot(a, b) -> F.Column:
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
                        lambda acc, x: acc + x)
 
 
@@ -32,8 +31,8 @@ def _norm(vec_col) -> F.Column:
 
 
 def cosine_similarity_col(vec_col, query: list) -> F.Column:
-    qn = float(np.linalg.norm(query))
-    return _dot(vec_col, query) / (_norm(vec_col) * F.lit(qn))
+    q = F.array(*[F.lit(float(x)) for x in query])
+    return _dot(vec_col, q) / (_norm(vec_col) * F.lit(float(np.linalg.norm(query))))
 
 
 def brute_force_topk(
