@@ -48,7 +48,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "20000"))
 
 #: representative spread: relational aggs/joins, cube, window top-k, text
-#: heuristics, dedup (exact + minhash + simhash + jaccard), ANN, and the
+#: heuristics, dedup (exact + minhash + simhash + jaccard), and the
 #: full-fidelity pipeline decisions over the sf documents table.
 HEADLINE = (
     "pricing_summary",
@@ -63,7 +63,6 @@ HEADLINE = (
     "minhash_dedup_count",
     "simhash_pairs",
     "ngram_jaccard_near_dups",
-    "knn_bruteforce",
     "langid_histogram",
     "pipeline_decisions",
     # added round 3 (totals are NOT comparable to earlier rounds' JSON;

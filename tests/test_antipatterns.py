@@ -25,15 +25,14 @@ from pathlib import Path
 PKG = Path(__file__).resolve().parent.parent / "wikisource_latin_text_cleaner_spark"
 
 #: reviewed-bounded .collect() census: file -> max allowed occurrences.
-#: similarity.py: 2^planes / n_cells histograms + IVF sample training;
+#: similarity.py: the k-means training sample (whole frame below the
+#: cap, a seeded fraction above it, both bounded by ``sample_rows``);
 #: sampling.py: n_strata-row threshold collects; lm.py: V*V=1600-cell
-#: count vectors; bpe.py: merge-table counts; decontaminate.py: bloom
-#: build (bounded by filter bits).
+#: count vectors; decontaminate.py: bloom build (bounded by filter bits).
 COLLECT_BUDGET = {
     "operators/decontaminate.py": 1,
     "operators/sampling.py": 3,
-    "operators/similarity.py": 4,
-    "functions/bpe.py": 1,
+    "operators/similarity.py": 2,
     "functions/lm.py": 2,
 }
 

@@ -274,73 +274,6 @@ def test_ngram_jaccard(docs, spark):
     assert out[(3, 4)] < 0.1
 
 
-@pytest.fixture(scope="module")
-def embeddings(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-
-
-QUERY = [1.0 if i % 3 == 0 else (-0.5 if i % 3 == 1 else 0.25) for i in range(64)]
-
-
-def test_brute_force_topk_matches_numpy(embeddings):
-    got = similarity.brute_force_topk(embeddings, QUERY, k=5).collect()
-    rows = embeddings.select("vec_id", "embedding").collect()
-    q = np.array(QUERY)
-    sims = sorted(
-        (
-            (float(np.dot(r["embedding"], q) / (np.linalg.norm(r["embedding"]) * np.linalg.norm(q))), -r["vec_id"])
-            for r in rows
-        ),
-        reverse=True,
-    )[:5]
-    expect_ids = [int(-neg_id) for _, neg_id in sims]
-    assert [r["vec_id"] for r in got] == expect_ids
-    for r, (s, _) in zip(got, sims):
-        assert abs(r["cosine"] - round(s, 6)) < 1e-4
-
-
-def test_lsh_topk_recall_random_data(embeddings):
-    # testdata embeddings are near-random (top cosine ~0.33), which bounds
-    # sublinear ANN recall; assert a loose floor at a 30% probe budget.
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(embeddings, QUERY, k=10).collect()]
-    approx = [r["vec_id"] for r in similarity.lsh_topk(embeddings, QUERY, k=10).collect()]
-    overlap = len(set(exact) & set(approx)) / 10
-    assert overlap >= 0.3, (exact, approx)
-
-
-def test_lsh_topk_absolute_budget_is_sublinear(spark):
-    """The default budget is absolute, so 'ANN' can't silently become a
-    corpus-proportional scan; with a tight explicit budget on clustered
-    data the probe covers a strict subset of buckets yet keeps recall."""
-    rng = np.random.RandomState(8)
-    centers = rng.standard_normal((10, 64)) * 4
-    rows = [
-        (int(i), (centers[i % 10] + rng.standard_normal(64) * 0.3).tolist())
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = centers[3].tolist()
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, q, k=10).collect()]
-    approx = [r["vec_id"] for r in
-              similarity.lsh_topk(df, q, k=10, probe_budget=64).collect()]
-    assert len(set(exact) & set(approx)) / 10 >= 0.8, (exact, approx)
-
-
-def test_lsh_topk_recall_clustered_data(spark):
-    # on clustered embeddings (the realistic case) recall should be high
-    rng = np.random.RandomState(8)
-    centers = rng.standard_normal((10, 64)) * 4
-    rows = [
-        (int(i), (centers[i % 10] + rng.standard_normal(64) * 0.3).tolist())
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = centers[3].tolist()
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, q, k=10).collect()]
-    approx = [r["vec_id"] for r in similarity.lsh_topk(df, q, k=10).collect()]
-    assert len(set(exact) & set(approx)) / 10 >= 0.9
-
-
 def test_embedding_near_duplicates(spark):
     v = np.random.RandomState(5).standard_normal(64)
     rows = [
@@ -640,42 +573,17 @@ def clustered_vecs(spark):
     return df, centers
 
 
-def test_ivf_topk_exact_below_budget(embeddings):
-    # default budget >> corpus: every cell probed, result == brute force
-    exact = similarity.brute_force_topk(embeddings, QUERY, k=10).collect()
-    approx = similarity.ivf_topk(embeddings, QUERY, k=10).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in approx] == \
-           [(r["vec_id"], r["cosine"]) for r in exact]
-
-
-def test_ivf_topk_sublinear_probe_high_recall(clustered_vecs):
-    """Tight budget: probes a strict subset of cells, still finds the
-    query's cluster (learned cells align with the data)."""
-    df, centers = clustered_vecs
-    q = centers[3].tolist()
-    cents = similarity.train_ivf_centroids(df, n_cells=16, sample_rows=500)
-    bucketed = df.withColumn("_cell", similarity.make_cell_udf(cents)("embedding"))
-    n_cells_used = bucketed.select("_cell").distinct().count()
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, q, k=10).collect()]
-    approx = [r["vec_id"] for r in
-              similarity.ivf_topk(df, q, k=10, centroids=cents, probe_budget=64).collect()]
-    assert len(set(exact) & set(approx)) / 10 >= 0.9, (exact, approx)
-    # and the probe really was sublinear: budget 64 << 500 rows means at
-    # most a few of the occupied cells were scanned
-    per_cell = 500 / n_cells_used
-    assert 64 < 500 - per_cell, "budget must exclude at least one cell"
-
-
 def test_ivf_sample_not_limit_on_clustered_input(spark):
     """Training must SAMPLE the corpus, not take the first N rows.
 
     Embedding tables are routinely written clustered (e.g. sorted by a
     prior cluster id). On such input, first-N-rows training only ever sees
-    the leading cluster(s): every centroid lands inside cluster 0, cell
-    assignment of far clusters is arbitrary, and a bounded probe misses the
-    query's true neighbors. df.sample() sees every cluster and keeps
-    recall. This is VERDICT r2 item #3; the limit() half of the assertion
-    pins the failure mode so a regression back to limit() trips the test.
+    the leading cluster(s): every centroid lands inside cluster 0 and cell
+    assignment of far clusters is content-blind. df.sample() sees every
+    cluster, and the query's own cell (the one SemDeDup pairs it within)
+    holds its exact top-10. This is VERDICT r2 item #3. The two coverage
+    asserts are what a regression back to limit() trips; the limit() half
+    pins that the fixture still shows the hazard.
     """
     rng = np.random.RandomState(99)
     centers = rng.standard_normal((8, 64)) * 4
@@ -690,19 +598,30 @@ def test_ivf_sample_not_limit_on_clustered_input(spark):
         .coalesce(1)  # preserve the sorted order for limit()
         .cache()
     )
-    q = centers[7].tolist()  # query near the LAST cluster
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, q, k=10).collect()]
+    q = centers[7]  # query near the LAST cluster
+    ids = np.array([r[0] for r in rows])
+    mat = np.array([r[1] for r in rows])
+    sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
+    exact = set(ids[np.argsort(-sims, kind="stable")[:10]].tolist())
 
     # sample_rows=150 < one cluster's 200 rows: the old limit() path would
     # train entirely inside cluster 0
     cents = similarity.train_ivf_centroids(df, n_cells=8, sample_rows=150)
-    approx = [
-        r["vec_id"]
-        for r in similarity.ivf_topk(
-            df, q, k=10, centroids=cents, probe_budget=220
+    with_query = df.unionByName(
+        spark.createDataFrame([(-1, q.tolist())], "vec_id long, embedding array<double>")
+    )
+    cell = {
+        r["vec_id"]: r["_cell"]
+        for r in with_query.withColumn(
+            "_cell", similarity.make_cell_udf(cents)("embedding")
         ).collect()
-    ]
-    assert len(set(exact) & set(approx)) / 10 >= 0.8, (exact, approx)
+    }
+    q_cell = cell.pop(-1)
+    in_q_cell = {i for i, c in cell.items() if c == q_cell}
+    # the query's cell holds its exact neighbours and stays about one
+    # cluster wide (200 rows), so a one-cell probe is both exact and bounded
+    assert exact <= in_q_cell, (sorted(exact - in_q_cell), len(in_q_cell))
+    assert len(in_q_cell) <= 220, len(in_q_cell)
 
     def coverage(c):
         """min over true clusters of the best centroid cosine: 1.0 means

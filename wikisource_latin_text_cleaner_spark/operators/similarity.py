@@ -1,12 +1,5 @@
-"""Similarity search over embedding columns: brute-force cosine top-k and an
-LSH-bucketed approximate variant (task brief; no reference precedent).
-
-Brute force stays fully JVM-side (zip_with/aggregate dot products inside
-whole-stage codegen) -- the correct baseline and the oracle for the ANN
-variant. The ANN path buckets by random-hyperplane signature with multiprobe
-(flip each bit once), so a query touches ~(planes+1)/2^planes of the corpus;
-at 10^12 rows the bucket column is what you'd partition/bucket the table by
-so a probe prunes partitions at scan time.
+"""Vector helpers for embedding dedup and SemDeDup: JVM-side dot product and
+norm folds, spherical k-means centroids, and nearest-centroid assignment.
 """
 
 from __future__ import annotations
@@ -16,8 +9,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
-
-_PLANES_RNG = np.random.RandomState(271828)
 
 
 def _dot(a, b) -> F.Column:
@@ -29,128 +20,6 @@ def _norm(vec_col) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(vec_col, lambda x: x * x), F.lit(0.0),
                               lambda acc, x: acc + x))
 
-
-def cosine_similarity_col(vec_col, query: list) -> F.Column:
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return _dot(vec_col, q) / (_norm(vec_col) * F.lit(float(np.linalg.norm(query))))
-
-
-def brute_force_topk(
-    df: DataFrame,
-    query: list,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int = 6,
-) -> DataFrame:
-    """Exact cosine top-k; deterministic tie-break on id.
-
-    This is a full-scan + TakeOrderedAndProject plan: no shuffle of the
-    vectors themselves, only k rows reach the driver. Selection orders on
-    the ROUNDED cosine (round_to), so an oracle re-implementation that
-    rounds before ranking selects the identical member set -- ordering on
-    full precision and rounding afterwards would let 1-ulp fold-order
-    differences flip membership at the k boundary.
-    """
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(cosine_similarity_col(F.col(vec_col), query), round_to).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def hyperplane_buckets(planes: int = 8, dim: int = 64) -> np.ndarray:
-    return _PLANES_RNG.standard_normal((planes, dim))
-
-
-def make_bucket_udf(hyper: np.ndarray):
-    planes = hyper.shape[0]
-
-    @F.pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_list())
-        bits = (mat @ hyper.T) > 0
-        return pd.Series((bits * (1 << np.arange(planes))).sum(axis=1).astype(np.int64))
-
-    return bucket_udf
-
-
-#: Default absolute candidate budget: a CONSTANT rerank cost regardless of
-#: corpus size. At 10^12 rows this probes ~1e-7 of the corpus (true ANN); on
-#: a small corpus it degenerates to an exact scan, which is the correct
-#: behavior -- an index only pays off past the budget.
-DEFAULT_PROBE_BUDGET = 100_000
-
-
-def lsh_topk(
-    df: DataFrame,
-    query: list,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    planes: int = 4,
-    probe_budget: int | None = None,
-    probe_fraction: float | None = None,
-    round_to: int = 6,
-) -> DataFrame:
-    """Approximate cosine top-k, IVF-style: hyperplane signatures partition
-    the corpus into 2^planes cells; cells are probed in order of signature
-    hamming distance to the query until the candidate budget is met, then
-    candidates are exactly reranked.
-
-    The budget is ABSOLUTE by default (max(8k, DEFAULT_PROBE_BUDGET)):
-    rerank cost must not scale with the corpus, or "ANN" silently becomes a
-    30%-scan at web scale. ``probe_fraction`` is an opt-in override for
-    recall-first workloads that accept corpus-proportional cost.
-
-    At 10^12 rows the `_bucket` column is a table partition key, so the
-    probe's `isin` prunes partitions at scan time; the bucket-count pass is
-    a 2^planes-row aggregate (broadcast-sized)."""
-    hyper = hyperplane_buckets(planes, len(query))
-    q = np.asarray(query, dtype=np.float64)
-    qsig = int((((hyper @ q) > 0) * (1 << np.arange(planes))).sum())
-
-    bucket_udf = make_bucket_udf(hyper)
-    bucketed = df.withColumn("_bucket", bucket_udf(vec_col))
-    counts = {
-        r["_bucket"]: r["n"]
-        for r in bucketed.groupBy("_bucket").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(counts.values())
-    if probe_fraction is not None:
-        budget = max(8 * k, int(probe_fraction * total))
-    else:
-        budget = max(8 * k, probe_budget if probe_budget is not None
-                     else DEFAULT_PROBE_BUDGET)
-    order = sorted(counts, key=lambda b: (bin(b ^ qsig).count("1"), b))
-    probe, got = [], 0
-    for b in order:
-        probe.append(b)
-        got += counts[b]
-        if got >= budget:
-            break
-
-    return (
-        bucketed.where(F.col("_bucket").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_similarity_col(F.col(vec_col), query), round_to).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-# -- IVF: learned-centroid ANN ------------------------------------------------
-#
-# Random hyperplanes (lsh_topk) ignore the data distribution; real embedding
-# corpora are clustered, so k-means cells put far fewer candidates in the
-# query's neighborhood cells. Training is a bounded driver-side pass (same
-# shape as the BPE trainer: distributed sample -> small numpy problem);
-# assignment and probing are embarrassingly parallel.
 
 _IVF_RNG_SEED = 31337
 
@@ -171,7 +40,7 @@ def train_ivf_centroids(
     routinely written clustered/sorted, and first-N rows of a clustered
     table train centroids that only see the leading clusters, collapsing
     recall for queries near every other cluster
-    (tests/test_similarity.py::test_ivf_sample_not_limit_on_clustered_input
+    (tests/test_dedup_similarity.py::test_ivf_sample_not_limit_on_clustered_input
     demonstrates the failure with the old limit() path). kmeans++ init +
     Lloyd iterations, all numpy; empty cells are reseeded to the point
     farthest from every centroid, so exactly ``n_cells`` centroids come
@@ -242,59 +111,3 @@ def make_cell_udf(centroids: np.ndarray):
 
     return cell_udf
 
-
-def ivf_topk(
-    df: DataFrame,
-    query: list,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 64,
-    centroids: np.ndarray | None = None,
-    probe_budget: int | None = None,
-    round_to: int = 6,
-) -> DataFrame:
-    """Approximate cosine top-k with learned (k-means) cells: probe cells in
-    order of centroid similarity to the query until the candidate budget is
-    met, then exactly rerank the probed cells.
-
-    Same absolute-budget contract as lsh_topk (max(8k, 100k) candidates):
-    rerank cost stays constant as the corpus grows. Below the budget every
-    cell is probed and the result is EXACTLY brute_force_topk -- which is
-    what the knn_ivf driver oracle checks; sublinearity is asserted by the
-    clustered-data unit test with a small explicit budget. At 10^12 rows
-    persist `_cell` as the table's partition key (write once, query many):
-    the probe's isin() prunes partitions at scan time, and the per-query
-    cost is the cell-count aggregate (n_cells rows) + the probed scan.
-    """
-    if centroids is None:
-        centroids = train_ivf_centroids(df, n_cells=n_cells, vec_col=vec_col)
-    c = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-    q = np.asarray(query, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    cell_udf = make_cell_udf(centroids)
-    bucketed = df.withColumn("_cell", cell_udf(vec_col))
-    counts = {
-        r["_cell"]: r["n"]
-        for r in bucketed.groupBy("_cell").agg(F.count("*").alias("n")).collect()
-    }
-    budget = max(8 * k, probe_budget if probe_budget is not None
-                 else DEFAULT_PROBE_BUDGET)
-    qsim = c @ q
-    order = sorted(counts, key=lambda j: (-qsim[j], j))
-    probe, got = [], 0
-    for j in order:
-        probe.append(j)
-        got += counts[j]
-        if got >= budget:
-            break
-
-    return (
-        bucketed.where(F.col("_cell").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_similarity_col(F.col(vec_col), query), round_to).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
