@@ -1379,24 +1379,6 @@ def q_exact_span_dedup(spark, sf):
     )
 
 
-_TEMP_ALPHA = 0.5
-
-
-def q_temperature_mix(spark, sf):
-    """Temperature/alpha language mixing (operators/sampling.py:
-    temperature_sample, mT5/XLM-R style): keep fraction per lang
-    proportional to p^(alpha-1), scaled so the most-boosted (smallest)
-    lang keeps everything; selection via the shared md5-bucket mechanism.
-    Oracle re-derives counts -> boosts -> thresholds -> per-doc bucket
-    test entirely in SQL."""
-    d = _docs(spark, sf, spread=True)
-    kept = sampling.temperature_sample(d, "lang", alpha=_TEMP_ALPHA)
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_kept"),
-        F.sum("doc_id").alias("id_sum"),
-    )
-
-
 _KMV_K = 64  # below the pair-union sizes so the estimator actually estimates
 
 
@@ -1411,36 +1393,6 @@ def q_corpus_overlap(spark, sf):
     d = _docs(spark, sf, spread=True)
     item = F.floor(F.col("doc_id") / 3)
     return textstats.kmv_overlap(d, "lang", item, k=_KMV_K)
-
-
-_UNIMAX_EPOCHS = 2
-_UNIMAX_BUDGET_FRAC = 1.3  # >1 so small langs earn full repeat epochs
-
-
-def q_unimax_mix(spark, sf):
-    """UniMax language mixing (Chung et al. 2023; operators/sampling.py:
-    unimax_sample): uniform-share greedy allocation, smallest lang first,
-    each lang capped at max_epochs repeats; budget = floor(1.3 * corpus)
-    at 2 epochs so the four smaller langs land full-epoch-plus-partial
-    (n_copies in {1,2}) while the largest gets a sub-epoch md5-bucket
-    draw. Oracle replays the greedy loop with a recursive CTE over langs
-    ordered (count asc, lang asc) -- identical IEEE double sequence --
-    then the floor/round threshold split and the per-doc bucket test."""
-    import math
-
-    d = _docs(spark, sf, spread=True)
-    total = d.where(F.col("lang").isNotNull()).count()
-    kept = sampling.unimax_sample(
-        d,
-        "lang",
-        budget=int(math.floor(_UNIMAX_BUDGET_FRAC * total)),
-        max_epochs=_UNIMAX_EPOCHS,
-    )
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_copies").alias("total_copies"),
-        F.sum("doc_id").alias("id_sum"),
-    )
 
 
 _BLOOM_M = 512  # deliberately tiny so FALSE POSITIVES occur and must match
@@ -1463,30 +1415,6 @@ def q_bloom_blocklist(spark, sf):
     ).where("in_bloom")
     return flagged.groupBy("lang").agg(
         F.count("*").alias("n_flagged"),
-        F.sum("doc_id").alias("id_sum"),
-    )
-
-
-_DSIR_TARGET_LANG = "en"
-_DSIR_FRAC = 0.1
-
-
-def q_dsir_select(spark, sf):
-    """DSIR importance-resampling selection (operators/sampling.py:
-    dsir_select): target model trained on the 'en' docs, pool model on the
-    rest, top-ceil(0.1*|pool|) pool docs by 6dp-rounded log importance
-    weight (weight desc, doc_id asc tiebreak). Oracle re-derives BOTH
-    trainings and the scoring in SQL (LEFT JOINs + COALESCE for bigrams
-    unseen in a model -- add-one smoothing gives them (0+1)/(0+40)), ranks
-    with the same rounded weight + tiebreak, and witnesses the selected
-    set per lang via count, 2dp avg weight, and sum(doc_id)."""
-    d = _docs(spark, sf, spread=True)
-    sel = sampling.dsir_select_split(
-        d, F.col("lang") == _DSIR_TARGET_LANG, frac=_DSIR_FRAC
-    )
-    return sel.groupBy("lang").agg(
-        F.count("*").alias("n_sel"),
-        F.round(F.avg("dsir_w"), 2).alias("avg_w"),
         F.sum("doc_id").alias("id_sum"),
     )
 
@@ -1639,40 +1567,6 @@ def q_c4_line_filter(spark, sf):
     )
 
 
-_PACK_SEQ_LEN = 512
-_PACK_BUCKETS = 8
-
-
-def q_sequence_pack(spark, sf):
-    """Training-sequence packing (operators/sampling.py:sequence_pack):
-    concat-and-split document packing into seq_len=512 windows, dealt into
-    8 md5 buckets (the shard = parallelism unit; packing within a shard is
-    a window cumsum, never a global sort). Witness per bucket: doc count,
-    distinct bins, token total, and an md5 digest over every
-    (doc_id, bin, offset_in_bin) assignment -- the full packing layout must
-    match the oracle's window-cumsum re-derivation exactly."""
-    d = _docs(spark, sf, spread=True)
-    toks = d.select(
-        "doc_id", textstats.token_count_col(F.col("text")).alias("n_tokens")
-    )
-    packed = sampling.sequence_pack(
-        toks, seq_len=_PACK_SEQ_LEN, n_buckets=_PACK_BUCKETS
-    )
-    return packed.groupBy("bucket").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("bin").alias("n_bins"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.sort_array(
-                    F.collect_list(F.concat_ws(":", "doc_id", "bin", "offset_in_bin"))
-                ),
-            )
-        ).alias("digest"),
-    )
-
-
 def _synth_pii_text() -> F.Column:
     """Deterministic PII planting (the raw corpus is PII-free): every doc
     gets a doc_id-derived email; ids % 3 add a tracker URL, % 5 a phone,
@@ -1718,20 +1612,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     FIRST 50 entries per round (proven by diffing the r02 vs r03 key sets
     against the registry of each round), and every entry inside that
     window has a DuckDB oracle. Ordering policy (VERDICT.md "Next round"
-    item 1): (1) the 37 queries whose newest driver certification is
+    item 1): (1) the 33 queries whose newest driver certification is
     CORRECTNESS_r04 come first, so the next window re-certifies them on
     code newer than the round-5 dedup edits; (2) ten fill slots go to
     queries over code changed since: the fused pipeline transform, its
     gates and UDFs (pipeline_decisions, classify_periods, toxicity_stats)
     and the near-duplicate operators whose MinHash core and cache flags
-    were rewritten (the rest); (3) three oracle-backed queries over the
-    filter and PII code (keep_drop_hist, pii_matches, repetition_stats)
-    complete the window; (4) everything else sits below the fold, led by
-    the one rows-only-by-design witness, pipeline_clean_sample, whose byte
-    fidelity is carried by the golden-vs-live-reference harness that no
-    SQL oracle can strengthen."""
+    were rewritten (the rest); (3) seven oracle-backed queries over the
+    filter, quality-signal and PII code (keep_drop_hist, pii_matches,
+    repetition_stats, stopword_ratio, mean_line_len, dup_line_stats,
+    symbol_ratio) complete the window; (4) everything else sits below
+    the fold, led by the one rows-only-by-design witness,
+    pipeline_clean_sample, whose byte fidelity is carried by the
+    golden-vs-live-reference harness that no SQL oracle can strengthen."""
     return {
-        # --- block 1: newest driver certification is r04 (37) ---
+        # --- block 1: newest driver certification is r04 (33) ---
         "embedding_near_dups": q_embedding_near_dups,
         "gopher_quality_gate": q_gopher_quality_gate,
         "gopher_repetition": q_gopher_repetition,
@@ -1739,10 +1634,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c4_line_filter": q_c4_line_filter,
         "exact_span_dedup": q_exact_span_dedup,
         "semdedup_survivors": q_semdedup,
-        "dsir_select": q_dsir_select,
         "trained_perplexity": q_trained_perplexity,
         "nb_langid_confusion": q_nb_langid,
-        "sequence_pack": q_sequence_pack,
         "pii_redact": q_pii_redact,
         "corpus_line_dedup": q_corpus_line_dedup,
         "corpus_line_keep_first": q_corpus_line_keep_first,
@@ -1759,8 +1652,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "paragraph_langid": q_paragraph_langid,
         "bloom_blocklist": q_bloom_blocklist,
         "ccnet_ppx_buckets": q_ccnet_buckets,
-        "temperature_mix": q_temperature_mix,
-        "unimax_mix": q_unimax_mix,
         "corpus_overlap_kmv": q_corpus_overlap,
         "simhash_pairs": q_simhash_pairs,
         "dedup_clusters": q_dedup_clusters,
@@ -1780,10 +1671,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard_near_dups": q_ngram_jaccard_near_dups,
         "winnowing_pairs": q_winnowing_pairs,
         "cluster_keep_best": q_cluster_keep_best,
-        # --- block 3: oracle-backed filter and PII queries (3) ---
+        # --- block 3: oracle-backed filter, quality-signal and PII
+        # queries (7) ---
         "keep_drop_hist": q_keep_drop_hist,
         "pii_matches": q_pii_matches,
         "repetition_stats": q_repetition_stats,
+        "stopword_ratio": q_stopword_ratio,
+        "mean_line_len": q_mean_line_len,
+        "dup_line_stats": q_dup_line_stats,
+        "symbol_ratio": q_symbol_ratio,
         # --- below the fold: the rows-only witness, then the queries
         # CORRECTNESS_r05 certified ---
         "pipeline_clean_sample": q_pipeline_clean_sample,
@@ -1796,10 +1692,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_counts": q_token_counts,
         "bpe_token_counts": q_bpe_token_counts,
         "fingerprints": q_fingerprints,
-        "stopword_ratio": q_stopword_ratio,
-        "mean_line_len": q_mean_line_len,
-        "dup_line_stats": q_dup_line_stats,
-        "symbol_ratio": q_symbol_ratio,
         "mean_word_len": q_mean_word_len,
         "events_by_type": q_events_by_type,
         "events_hourly": q_events_hourly,
@@ -4566,30 +4458,6 @@ def oracle_sql() -> dict[str, str]:
                                   ORDER BY md5(kept_text))) AS digest
             FROM rebuilt GROUP BY lang
         """,
-        "temperature_mix": f"""
-            -- alpha-mixing re-derivation: per-lang counts -> boost
-            -- p^(alpha-1) -> threshold scaled to the max boost ->
-            -- md5-bucket keep test (same bucket kernel as hash_split)
-            WITH cnt AS (SELECT lang, count(*) AS n FROM documents
-                         WHERE lang IS NOT NULL GROUP BY lang),
-            tot AS (SELECT CAST(sum(n) AS DOUBLE) AS t FROM cnt),
-            b AS (SELECT lang, pow(n / tot.t, {_TEMP_ALPHA} - 1.0) AS boost
-                  FROM cnt, tot),
-            mx AS (SELECT max(boost) AS m FROM b),
-            thr AS (SELECT lang,
-                           CAST(round(boost / mx.m * {sampling.SPLIT_BUCKETS})
-                                AS BIGINT) AS th
-                    FROM b, mx),
-            kept AS (
-              SELECT d.doc_id, d.lang
-              FROM documents d JOIN thr ON d.lang = thr.lang
-              WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
-                         AS BIGINT) % {sampling.SPLIT_BUCKETS} < thr.th
-            )
-            SELECT lang, count(*) AS n_kept,
-                   CAST(sum(doc_id) AS BIGINT) AS id_sum
-            FROM kept GROUP BY lang
-        """,
         "corpus_overlap_kmv": f"""
             -- KMV re-derivation: distinct (lang, 60-bit md5 hash) of the
             -- floor(doc_id/3) items, per-pair union tagging, row_number
@@ -4623,58 +4491,6 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(in_a * in_b) * 1.0 / count(*), 6) AS j_exact,
                    count(*) AS n_union
             FROM ranked GROUP BY ga, gb
-        """,
-        "unimax_mix": f"""
-            -- UniMax re-derivation: greedy allocation replayed with a
-            -- recursive CTE over langs ordered (count asc, lang asc) --
-            -- the same IEEE double sequence as the driver loop -- then
-            -- quota -> floor full epochs + round(partial * buckets)
-            -- threshold -> per-doc md5-bucket n_copies
-            WITH RECURSIVE
-            cnt AS (SELECT lang, count(*) AS n FROM documents
-                    WHERE lang IS NOT NULL GROUP BY lang),
-            tot AS (SELECT CAST(floor({_UNIMAX_BUDGET_FRAC} * sum(n))
-                            AS BIGINT) AS b,
-                           count(*) AS k
-                    FROM cnt),
-            ord AS (SELECT lang, n,
-                           row_number() OVER (ORDER BY n ASC, lang ASC) AS rk
-                    FROM cnt),
-            alloc AS (
-              SELECT o.rk, o.lang, o.n,
-                     LEAST({_UNIMAX_EPOCHS} * o.n, tot.b * 1.0 / tot.k)
-                       AS quota,
-                     tot.b * 1.0
-                       - LEAST({_UNIMAX_EPOCHS} * o.n, tot.b * 1.0 / tot.k)
-                       AS rem
-              FROM ord o, tot WHERE o.rk = 1
-              UNION ALL
-              SELECT o.rk, o.lang, o.n,
-                     LEAST({_UNIMAX_EPOCHS} * o.n,
-                           a.rem / (tot.k - o.rk + 1)),
-                     a.rem - LEAST({_UNIMAX_EPOCHS} * o.n,
-                                   a.rem / (tot.k - o.rk + 1))
-              FROM ord o JOIN alloc a ON o.rk = a.rk + 1, tot
-            ),
-            thr AS (SELECT lang, n,
-                           CAST(floor(quota / n) AS BIGINT) AS nfull,
-                           CAST(round((quota / n - floor(quota / n))
-                                      * {sampling.SPLIT_BUCKETS})
-                                AS BIGINT) AS th
-                    FROM alloc),
-            kept AS (
-              SELECT d.doc_id, d.lang,
-                     thr.nfull
-                     + (CASE WHEN CAST(('0x' || substr(md5(CAST(d.doc_id
-                                  AS VARCHAR)), 1, 8)) AS BIGINT)
-                               % {sampling.SPLIT_BUCKETS} < thr.th
-                        THEN 1 ELSE 0 END) AS n_copies
-              FROM documents d JOIN thr ON d.lang = thr.lang
-            )
-            SELECT lang, count(*) AS n_docs,
-                   CAST(sum(n_copies) AS BIGINT) AS total_copies,
-                   CAST(sum(doc_id) AS BIGINT) AS id_sum
-            FROM kept WHERE n_copies > 0 GROUP BY lang
         """,
         "ccnet_ppx_buckets": f"""
             -- CCNet tiles: frozen-matrix ppx (same kernel as
@@ -4858,64 +4674,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT lang, count(*) AS n_flagged,
                    CAST(sum(doc_id) AS BIGINT) AS id_sum
             FROM probe WHERE flagged GROUP BY lang
-        """,
-        "dsir_select": f"""
-            -- DSIR re-derivation: train target ('{_DSIR_TARGET_LANG}') and
-            -- pool (rest) char-bigram models, score pool docs with the
-            -- summed log importance ratio (LEFT JOIN + COALESCE = add-one
-            -- smoothing for unseen bigrams), 6dp-round BEFORE ranking
-            -- (weight desc, doc_id asc), keep top ceil({_DSIR_FRAC}*|pool|)
-            WITH t AS (
-              SELECT doc_id, lang,
-                     translate(lower(text), '123456789', '000000000') AS s,
-                     length(translate(lower(text), '123456789', '000000000')) AS n
-              FROM documents
-            ),
-            ch AS (
-              SELECT doc_id, lang,
-                     strpos('abcdefghijklmnopqrstuvwxyz0 .,;:!?''"-()',
-                            substr(s, CAST(u.i AS INT), 1)) - 1 AS raw1,
-                     strpos('abcdefghijklmnopqrstuvwxyz0 .,;:!?''"-()',
-                            substr(s, CAST(u.i AS INT) + 1, 1)) - 1 AS raw2
-              FROM t, UNNEST(range(1, CAST(n AS INT))) AS u(i)
-              WHERE n >= 2
-            ),
-            big AS (
-              SELECT doc_id, lang,
-                     CASE WHEN raw1 < 0 THEN 39 ELSE raw1 END AS i1,
-                     CASE WHEN raw2 < 0 THEN 39 ELSE raw2 END AS i2
-              FROM ch
-            ),
-            tcnt AS (SELECT i1, i2, count(*) AS c FROM big
-                     WHERE lang = '{_DSIR_TARGET_LANG}' GROUP BY i1, i2),
-            trt  AS (SELECT i1, sum(c) AS rs FROM tcnt GROUP BY i1),
-            pcnt AS (SELECT i1, i2, count(*) AS c FROM big
-                     WHERE lang <> '{_DSIR_TARGET_LANG}' GROUP BY i1, i2),
-            prt  AS (SELECT i1, sum(c) AS rs FROM pcnt GROUP BY i1),
-            scored AS (
-              SELECT b.doc_id, b.lang,
-                     round(sum(
-                         ln((COALESCE(tc.c, 0) + 1) / (COALESCE(tr.rs, 0) + 40.0))
-                       - ln((COALESCE(pc.c, 0) + 1) / (COALESCE(pr.rs, 0) + 40.0))
-                     ), 6) AS w
-              FROM big b
-              LEFT JOIN tcnt tc ON b.i1 = tc.i1 AND b.i2 = tc.i2
-              LEFT JOIN trt  tr ON b.i1 = tr.i1
-              LEFT JOIN pcnt pc ON b.i1 = pc.i1 AND b.i2 = pc.i2
-              LEFT JOIN prt  pr ON b.i1 = pr.i1
-              WHERE b.lang <> '{_DSIR_TARGET_LANG}'
-              GROUP BY b.doc_id, b.lang
-            ),
-            kk AS (SELECT CAST(ceil({_DSIR_FRAC} * count(*)) AS BIGINT) AS k
-                   FROM documents WHERE lang <> '{_DSIR_TARGET_LANG}'),
-            ranked AS (
-              SELECT doc_id, lang, w,
-                     row_number() OVER (ORDER BY w DESC, doc_id ASC) AS rn
-              FROM scored
-            )
-            SELECT lang, count(*) AS n_sel, round(avg(w), 2) AS avg_w,
-                   CAST(sum(doc_id) AS BIGINT) AS id_sum
-            FROM ranked, kk WHERE rn <= kk.k GROUP BY lang
         """,
         "trained_perplexity": """
             -- full SQL re-derivation of TRAINING + scoring: bigram counts
@@ -5361,30 +5119,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(CASE WHEN clean THEN n_kept ELSE 0 END) AS BIGINT) AS kept_lines,
                    md5(array_to_string(list_sort(list(h) FILTER (WHERE h IS NOT NULL)), '|')) AS digest
             FROM per GROUP BY lang
-        """,
-        "sequence_pack": """
-            WITH toks AS (
-              SELECT doc_id,
-                     len(list_filter(string_split_regex(trim(text), '\\s+'),
-                                     x -> x <> '')) AS n_tokens,
-                     CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                          AS BIGINT) % 10000 % 8 AS bucket
-              FROM documents
-            ),
-            packed AS (
-              SELECT bucket, doc_id, n_tokens,
-                     sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-                                         ROWS UNBOUNDED PRECEDING) - n_tokens AS strt
-              FROM toks
-            )
-            SELECT bucket, count(*) AS n_docs,
-                   count(DISTINCT strt // 512) AS n_bins,
-                   CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-                   md5(array_to_string(list_sort(list(
-                     CAST(doc_id AS VARCHAR) || ':' ||
-                     CAST(strt // 512 AS VARCHAR) || ':' ||
-                     CAST(strt % 512 AS VARCHAR))), '|')) AS digest
-            FROM packed GROUP BY bucket
         """,
         "pii_redact": _pii_redact_oracle_sql(),
     }

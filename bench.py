@@ -72,18 +72,15 @@ HEADLINE = (
     "corpus_line_dedup",
     "trained_perplexity",
     # added round 3, later: cluster-local semantic dedup over embeddings
-    # and DSIR importance-resampling selection (two LM trainings + top-k)
     "semdedup_survivors",
-    "dsir_select",
     "exact_span_dedup",
     # added round 3, later still: the Gopher repetition battery
     # (Arrow-fused nine-fraction UDF), the DCLM-style distilled quality
-    # classifier (teacher labels -> NB training -> full re-score), UniMax
-    # mixing, and the KMV overlap sketch — representative of the final
-    # training-data surface
+    # classifier (teacher labels -> NB training -> full re-score), and
+    # the KMV overlap sketch — representative of the final training-data
+    # surface
     "gopher_repetition",
     "quality_distill",
-    "unimax_mix",
     "corpus_overlap_kmv",
     # snapshot-over-snapshot near-dup dedup against a signature ledger
     # (UDF signatures for both sides + LSH band probe + anti-join)

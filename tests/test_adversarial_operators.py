@@ -89,11 +89,6 @@ def test_langid_and_segmentation_survive(corpus):
     lid = corpus.withColumn("pred", udfs.langid_label_udf(F.col("text")))
     assert lid.count() == corpus.count()
     assert segment.fixed_char_chunks(corpus, width=512).count() > 0
-    packed = sampling.sequence_pack(
-        corpus.withColumn("n_tokens", textstats.token_count_col(F.col("text"))),
-        seq_len=128,
-    )
-    assert packed.count() > 0
     segment.vocabulary(corpus, top_n=50).count()
 
 

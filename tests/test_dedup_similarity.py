@@ -397,8 +397,10 @@ def test_hash_split_stable_and_partitioning_invariant(spark):
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        sampling.hash_split(d, "doc_id", {"a": 0.9, "b": 0.9})
+    # over-full sums, and negative fractions that a valid sum would hide
+    for bad in ({"a": 0.9, "b": 0.9}, {"a": -0.2, "b": 0.7, "c": 0.5}):
+        with _pytest.raises(ValueError):
+            sampling.hash_split(d, "doc_id", bad)
 
 
 def test_domain_cap_keeps_k_smallest(spark):
@@ -818,87 +820,6 @@ def test_semdedup_persist_assigns_each_vector_once(spark, tmp_path):
     assert {r.vec_id for r in out_p.collect()} == _semdedup_numpy(vecs, cell_of, 0.8)
 
 
-# --- DSIR importance-resampling selection (Xie et al. 2023) ----------------
-
-def _bigram_logprobs_np(texts):
-    """Add-one-smoothed char-bigram log-prob matrix, mirrors functions/lm.py."""
-    from wikisource_latin_text_cleaner_spark.functions.perplexity import V, _ids
-
-    counts = np.zeros((V, V), dtype=np.float64)
-    for t in texts:
-        if t and len(t) >= 2:
-            ids = _ids(t.lower())
-            np.add.at(counts, (ids[:-1], ids[1:]), 1.0)
-    counts += 1.0
-    return np.log(counts / counts.sum(axis=1, keepdims=True))
-
-
-def test_dsir_select_matches_numpy_oracle(spark):
-    """Top-k by summed log importance ratio must match the from-scratch
-    numpy derivation, and the English-like planted doc must outrank the
-    consonant-soup docs when the target corpus is English."""
-    from wikisource_latin_text_cleaner_spark.functions.perplexity import _ids
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    target_texts = [
-        "the quick brown fox jumps over the lazy dog and then rests",
-        "a stitch in time saves nine and all that glitters is not gold",
-        "to be or not to be that is the question for the ages",
-    ]
-    pool_rows = [
-        (0, "wherefore the gentle reader turns the page with great delight"),
-        (1, "zxqv kjht wpfg mzxn qqrt bbvc zzxw ppqq kkjj hhgg ffdd ssaa"),
-        (2, "mmnn ccvv bbzz xxqq wwee rrtt yyuu iioo pplk jjhg gfds aqwz"),
-        (3, "the cat sat on the mat and the dog lay by the door"),
-        (4, "qqqq wwww eeee rrrr tttt yyyy uuuu iiii oooo pppp aaaa ssss"),
-        (5, "x"),  # < 2 chars: -inf weight, must never be selected
-    ]
-    target = spark.createDataFrame([(i, t) for i, t in enumerate(target_texts)],
-                                   "doc_id long, text string")
-    pool = spark.createDataFrame(pool_rows, "doc_id long, text string")
-
-    out = sampling.dsir_select(pool, target, k=2)
-    got = sorted((r.doc_id, r.dsir_w) for r in out.collect())
-
-    delta = _bigram_logprobs_np(target_texts) - _bigram_logprobs_np(
-        [t for _, t in pool_rows])
-    want = []
-    for i, t in pool_rows:
-        if len(t) < 2:
-            want.append((i, -np.inf))
-            continue
-        ids = _ids(t.lower())
-        want.append((i, round(float(delta[ids[:-1], ids[1:]].sum()), 6)))
-    want = sorted(sorted(want, key=lambda p: (-p[1], p[0]))[:2])
-    assert got == want
-    assert {i for i, _ in got} <= {0, 3}, "English-like docs must win"
-
-
-def test_dsir_select_topk_is_take_ordered_not_global_sort(spark):
-    """Selection must compile to TakeOrderedAndProject (per-partition heaps
-    + driver merge), not a global Sort over an Exchange rangepartitioning —
-    that distinction is what makes top-k viable at corpus scale."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    rows = [(i, f"some english filler text number {i} with common words") for i in range(50)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = sampling.dsir_select(d, d.limit(10), k=5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "rangepartitioning" not in plan, plan
-    assert out.count() == 5
-
-
-def test_dsir_select_validation(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    d = spark.createDataFrame([(0, "ab")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="frac"):
-        sampling.dsir_select(d, d, frac=0.0)
-    with pytest.raises(ValueError, match="k must be positive"):
-        sampling.dsir_select(d, d, k=0)
-
-
 # --- Bloom-filter blocklist gate -------------------------------------------
 
 def _bloom_py(keys, m, k):
@@ -979,146 +900,6 @@ def test_bloom_validation():
             F.col("text"), np.zeros(4, dtype=np.uint8), m_bits=256, k=3)
 
 
-# --- temperature (alpha) mixing --------------------------------------------
-
-def test_temperature_sample_ratios_and_nesting(spark):
-    """alpha=0.5 must pull the kept distribution toward the temperature-
-    adjusted target: smallest stratum kept whole, each stratum's kept
-    count ~= f_s * n_s (md5-bucket binomial noise), and the alpha=0.25
-    sample nests inside alpha-free (=1.0) membership per stratum."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    rows = ([(i, "big") for i in range(4000)]
-            + [(i + 4000, "mid") for i in range(900)]
-            + [(i + 4900, "small") for i in range(100)])
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = sampling.temperature_sample(df, "lang", alpha=0.5)
-    got = {r["lang"]: r["n"] for r in
-           kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    n = {"big": 4000, "mid": 900, "small": 100}
-    tot = 5000
-    boost = {s: (c / tot) ** -0.5 for s, c in n.items()}
-    top = boost["small"]
-    for s_, c in n.items():
-        frac = round(boost[s_] / top * sampling.SPLIT_BUCKETS) / sampling.SPLIT_BUCKETS
-        assert abs(got.get(s_, 0) - frac * c) <= 4 * (frac * c * (1 - frac) + 1) ** 0.5, \
-            (s_, got.get(s_, 0), frac * c)
-    assert got["small"] == 100  # most-boosted stratum kept whole
-
-    # alpha=1 keeps everything; lower alpha keeps a subset of higher alpha
-    all_kept = sampling.temperature_sample(df, "lang", alpha=1.0)
-    assert all_kept.count() == tot
-    low = {r["doc_id"] for r in
-           sampling.temperature_sample(df, "lang", alpha=0.25).collect()}
-    mid = {r["doc_id"] for r in kept.collect()}
-    assert low <= mid  # nested: same md5 buckets, smaller thresholds
-
-
-def test_temperature_sample_null_strata_dropped_and_validation(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(0, "a"), (1, None), (2, "a")], "doc_id long, lang string")
-    kept = sampling.temperature_sample(df, "lang", alpha=0.5)
-    assert {r.doc_id for r in kept.collect()} == {0, 2}
-    with pytest.raises(ValueError, match="alpha"):
-        sampling.temperature_sample(df, "lang", alpha=-0.1)
-    empty = spark.createDataFrame([(0, None)], "doc_id long, lang string")
-    with pytest.raises(ValueError, match="strata"):
-        sampling.temperature_sample(empty, "lang")
-
-
-# --- UniMax (budget + epoch cap) mixing ------------------------------------
-
-def _unimax_rows():
-    return ([(i, "big") for i in range(4000)]
-            + [(i + 4000, "mid") for i in range(900)]
-            + [(i + 4900, "small") for i in range(100)])
-
-
-def test_unimax_budget_total_keeps_everything_once(spark):
-    """budget == corpus at 1 epoch: the greedy loop gives every stratum
-    exactly its own size (smaller strata can always absorb their uniform
-    share's leftover), so everything survives with n_copies = 1."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(_unimax_rows(), "doc_id long, lang string")
-    kept = sampling.unimax_sample(df, "lang", budget=5000, max_epochs=1)
-    assert kept.count() == 5000
-    assert kept.agg(F.min("n_copies"), F.max("n_copies")).first() == (1, 1)
-
-
-def test_unimax_epoch_cap_binds(spark):
-    """budget far above max_epochs * corpus: every stratum caps at
-    max_epochs full repeats and the leftover budget is simply unused."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(_unimax_rows(), "doc_id long, lang string")
-    kept = sampling.unimax_sample(df, "lang", budget=50000, max_epochs=2)
-    assert kept.count() == 5000
-    assert kept.agg(F.min("n_copies"), F.max("n_copies")).first() == (2, 2)
-
-
-def test_unimax_uniform_share_flows_to_large_strata(spark):
-    """budget=2000 over (4000, 900, 100) at 1 epoch: small and mid fit
-    inside their uniform share and are kept whole; the re-flowed
-    remainder gives big a 1000/4000 partial draw (md5-bucket binomial
-    noise around 1000)."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(_unimax_rows(), "doc_id long, lang string")
-    kept = sampling.unimax_sample(df, "lang", budget=2000, max_epochs=1)
-    got = {r["lang"]: r["n"] for r in
-           kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert got["small"] == 100 and got["mid"] == 900
-    frac = 1000 / 4000
-    assert abs(got["big"] - 1000) <= 4 * (4000 * frac * (1 - frac)) ** 0.5
-    assert kept.agg(F.max("n_copies")).first()[0] == 1
-
-
-def test_unimax_partial_epoch_on_top_of_full(spark):
-    """One stratum, budget=2.5x its size at 3 epochs: two full epochs for
-    every doc plus a ~half partial draw -- n_copies in {2, 3} and the
-    copy total lands near the budget."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(i, "only") for i in range(1000)], "doc_id long, lang string")
-    kept = sampling.unimax_sample(df, "lang", budget=2500, max_epochs=3)
-    assert kept.count() == 1000
-    lo, hi, tot = kept.agg(
-        F.min("n_copies"), F.max("n_copies"), F.sum("n_copies")).first()
-    assert (lo, hi) == (2, 3)
-    assert abs(tot - 2500) <= 4 * (1000 * 0.25) ** 0.5
-
-
-def test_unimax_deterministic_and_partitioning_invariant(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(_unimax_rows(), "doc_id long, lang string")
-    a = {(r.doc_id, r.n_copies) for r in
-         sampling.unimax_sample(df, "lang", budget=2000).collect()}
-    b = {(r.doc_id, r.n_copies) for r in
-         sampling.unimax_sample(df.repartition(7), "lang", budget=2000).collect()}
-    assert a == b
-
-
-def test_unimax_null_strata_dropped_and_validation(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(0, "a"), (1, None), (2, "a")], "doc_id long, lang string")
-    kept = sampling.unimax_sample(df, "lang", budget=3)
-    assert {r.doc_id for r in kept.collect()} == {0, 2}
-    with pytest.raises(ValueError, match="budget"):
-        sampling.unimax_sample(df, "lang", budget=0)
-    with pytest.raises(ValueError, match="max_epochs"):
-        sampling.unimax_sample(df, "lang", budget=10, max_epochs=0)
-    empty = spark.createDataFrame([(0, None)], "doc_id long, lang string")
-    with pytest.raises(ValueError, match="strata"):
-        sampling.unimax_sample(empty, "lang", budget=10)
-
-
 # --- KMV corpus-overlap sketches -------------------------------------------
 
 def test_kmv_overlap_exact_below_k(spark):
@@ -1173,74 +954,6 @@ def test_kmv_overlap_validation(spark):
         textstats.kmv_overlap(df, "grp", F.col("item"), k=0)
     with pytest.raises(ValueError, match="prefilter_frac"):
         textstats.kmv_overlap(df, "grp", F.col("item"), prefilter_frac=1.5)
-
-
-def test_dsir_select_split_is_bit_identical_to_two_frame_form(spark):
-    """The one-pass predicate-split variant must select the IDENTICAL rows
-    with IDENTICAL weights (exact integer counts -> same matrices), and
-    NULL-condition rows must join neither side."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    rows = [(i, ("english common words here number %d" % i)
-             if i % 3 else ("verba latina posita sunt numero %d" % i),
-             "en" if i % 3 else "la") for i in range(60)]
-    rows.append((60, "orphan row with null lang", None))
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    cond = F.col("lang") == "en"
-    split = sorted((r.doc_id, r.dsir_w) for r in
-                   sampling.dsir_select_split(df, cond, k=7).collect())
-    two = sorted((r.doc_id, r.dsir_w) for r in
-                 sampling.dsir_select(
-                     df.where(~cond), df.where(cond), k=7).collect())
-    assert split == two
-    assert all(i != 60 for i, _ in split)
-    # frac path: k derives from the pool-doc count that rode the training
-    # reduce -- must equal the two-frame form's separate count() exactly
-    split_f = sorted((r.doc_id, r.dsir_w) for r in
-                     sampling.dsir_select_split(df, cond, frac=0.3).collect())
-    two_f = sorted((r.doc_id, r.dsir_w) for r in
-                   sampling.dsir_select(
-                       df.where(~cond), df.where(cond), frac=0.3).collect())
-    assert split_f == two_f and len(split_f) > 0
-    with pytest.raises(ValueError, match="non-empty"):
-        sampling.dsir_select_split(df, F.lit(True), k=2)
-    with pytest.raises(ValueError, match="frac"):
-        sampling.dsir_select_split(df, cond, frac=0.0)
-
-
-def test_dsir_gumbel_resampling_deterministic_and_weight_biased(spark):
-    """Gumbel-top-k draw: reproducible under repartitioning, reduces to
-    plain top-k as temp -> 0, and still favors high-weight docs at
-    moderate temp (picks more target-like than anti-target docs)."""
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    rows = [(i, ("the quick brown fox and the lazy dog %d" % i)
-             if i < 30 else ("zxqv kjht wpfg mzxn qqrt bbvc %d" % i),
-             i < 30) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, is_t boolean")
-    # target model: english-like; pool: all 60 (both text shapes)
-    target = df.where("is_t").select("doc_id", "text")
-    pool = df.select("doc_id", "text")
-
-    g1 = {r.doc_id for r in sampling.dsir_select(
-        pool, target, k=15, gumbel_temp=50.0).collect()}
-    g2 = {r.doc_id for r in sampling.dsir_select(
-        pool.repartition(13), target, k=15, gumbel_temp=50.0).collect()}
-    assert g1 == g2, "derandomized draw must not depend on partitioning"
-
-    plain = sorted(r.dsir_w for r in sampling.dsir_select(
-        pool, target, k=15).collect())
-    cold = sorted(r.dsir_w for r in sampling.dsir_select(
-        pool, target, k=15, gumbel_temp=1e-6).collect())
-    # temp -> 0 recovers plain top-k up to ties in the 6dp weight (equal
-    # weights are interchangeable under gumbel tie-breaking)
-    assert cold == plain
-
-    n_target_like = sum(1 for i in g1 if i < 30)
-    assert n_target_like > 10, (n_target_like, g1)
-
-    with pytest.raises(ValueError, match="gumbel_temp"):
-        sampling.dsir_select(pool, target, k=5, gumbel_temp=0.0)
 
 
 def test_cluster_representatives_argmax_and_singletons(spark):

@@ -181,3 +181,23 @@ def test_driver_drop_noindex(tmp_path):
     assert r_gate["docs_in"] == 200 - n_opted
     assert (r_gate["docs_kept"] + r_gate["docs_quarantined"]
             == 200 - n_opted)
+
+
+def test_pipeline_zip_matches_package_tree():
+    """``spark-submit --py-files pipeline.zip`` ships the executors'
+    package, so the zip's ``.py`` members must be exactly the package's
+    ``.py`` files, byte for byte. Rebuild it after any package edit:
+    ``zip -r pipeline.zip wikisource_latin_text_cleaner_spark -x '*__pycache__*'``."""
+    import zipfile
+    from pathlib import Path
+
+    pkg = Path(REPO) / "wikisource_latin_text_cleaner_spark"
+    tree = {
+        p.relative_to(REPO).as_posix(): p.read_bytes()
+        for p in pkg.rglob("*.py") if "__pycache__" not in p.parts
+    }
+    with zipfile.ZipFile(os.path.join(REPO, "pipeline.zip")) as z:
+        shipped = {n: z.read(n) for n in z.namelist() if n.endswith(".py")}
+    assert sorted(shipped) == sorted(tree)
+    stale = [n for n in tree if shipped[n] != tree[n]]
+    assert not stale, f"pipeline.zip is stale for {stale}"

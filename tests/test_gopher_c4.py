@@ -1,10 +1,9 @@
-"""Gopher gate / repetition battery, C4 line cleaning, sequence packing,
-and PII redaction: Spark Catalyst expressions vs pure-Python twins on
-planted and randomized inputs. The corpus oracles check the aggregate
-surface; these pin per-document semantics (tie-breaks, guards, rule order,
-chain order) on inputs the synthetic corpus cannot produce."""
+"""Gopher gate / repetition battery, C4 line cleaning and PII redaction:
+Spark Catalyst expressions vs pure-Python twins on planted and randomized
+inputs. The corpus oracles check the aggregate surface; these pin
+per-document semantics (tie-breaks, guards, rule order, chain order) on
+inputs the synthetic corpus cannot produce."""
 
-import hashlib
 import random
 import re
 from collections import Counter
@@ -12,7 +11,6 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from wikisource_latin_text_cleaner_spark.functions import pii, quality
-from wikisource_latin_text_cleaner_spark.operators import sampling
 
 
 # -- python twins -----------------------------------------------------------
@@ -184,36 +182,6 @@ def test_c4_line_clean_and_poison(spark):
     assert rows[0]["c"]["n_kept"] == 2
     assert not rows[0]["p"]
     assert rows[1]["p"] and rows[2]["p"]
-
-
-def test_sequence_pack_matches_pandas_and_is_partition_invariant(spark):
-    rng = random.Random(7)
-    rows = [(i, rng.randint(1, 700)) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-    seq_len, n_buckets = 512, 8
-
-    def expected():
-        buckets = {}
-        for i, nt in rows:
-            b = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 10_000 % n_buckets
-            buckets.setdefault(b, []).append((i, nt))
-        out = {}
-        for b, docs in buckets.items():
-            start = 0
-            for i, nt in sorted(docs):
-                out[i] = (b, start // seq_len, start % seq_len)
-                start += nt
-        return out
-
-    want = expected()
-    for reparted in (df, df.repartition(13), df.repartition(1)):
-        packed = sampling.sequence_pack(
-            reparted, seq_len=seq_len, n_buckets=n_buckets
-        ).collect()
-        assert len(packed) == len(rows)
-        for r in packed:
-            assert (r["bucket"], r["bin"], r["offset_in_bin"]) == want[r["doc_id"]], r
-            assert 0 <= r["offset_in_bin"] < seq_len
 
 
 def test_pii_redact_matches_python_scrub(spark):

@@ -83,8 +83,7 @@ def make_perplexity_udf(logp: np.ndarray):
 
 
 def train_char_bigram_lm_by(
-    df: DataFrame, label_col: str = "lang", text_col: str = "text",
-    return_counts: bool = False,
+    df: DataFrame, label_col: str = "lang", text_col: str = "text"
 ):
     """Per-label corpus-trained models in ONE pass: supervised Naive-Bayes
     training (the fastText-supervised analog for this engine's 40-char
@@ -144,12 +143,6 @@ def train_char_bigram_lm_by(
         counts = v[: V * V].reshape(V, V) + 1.0
         models[lab] = np.log(counts / counts.sum(axis=1, keepdims=True))
         priors[lab] = v[V * V] / total_docs
-    if return_counts:
-        # doc counts already rode the reduce (the +1 cell) -- callers that
-        # need |label| (e.g. DSIR's k) can skip a separate count() job
-        return models, priors, {
-            lab: int(v[V * V]) for lab, v in flat.items()
-        }
     return models, priors
 
 

@@ -1,20 +1,17 @@
-"""Corpus sampling operators for training-data assembly: deterministic
-hash-based train/val/test splits and per-domain quota capping.
+"""Corpus sampling operators: deterministic hash-based train/val/test
+splits, stratified samples, per-domain quota capping and the domain-level
+quality gate.
 
 No reference precedent (the reference emits whole corpora); these are the
 standard last-mile ops a pretraining pipeline runs after the quality filter
-(task brief scope). Both are pure Catalyst expressions, deterministic under
-re-runs and resumes (a requirement the engine's checkpointing already
-imposes: same input -> same bytes), and exactly replicable in ANSI SQL, so
-both carry DuckDB oracles in the driver contract.
+(task brief scope). All are Catalyst plans, deterministic under re-runs and
+resumes (a requirement the engine's checkpointing already imposes: same
+input -> same bytes), and exactly replicable in ANSI SQL, so each carries a
+DuckDB oracle in the driver contract.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,12 +36,15 @@ def split_bucket_col(key_col) -> F.Column:
 def hash_split(df: DataFrame, key_col: str, fractions: dict) -> DataFrame:
     """Assign every row a stable split label by hashed key.
 
-    ``fractions`` maps label -> fraction (must sum to <= 1.0; any remainder
-    falls into the LAST label). Rows with the same key always land in the
-    same split, across runs, engines, and cluster sizes -- the property
-    random() sampling cannot give and training pipelines need (no
-    train/test leakage through re-shuffles).
+    ``fractions`` maps label -> fraction (each in [0, 1], summing to
+    (0, 1]; any remainder falls into the LAST label). Rows with the same
+    key always land in the same split, across runs, engines, and cluster
+    sizes -- the property random() sampling cannot give and training
+    pipelines need (no train/test leakage through re-shuffles).
     """
+    for name, frac in fractions.items():
+        if not 0.0 <= frac <= 1.0:
+            raise ValueError(f"fraction for {name!r} must be in [0, 1], got {frac}")
     total = sum(fractions.values())
     if not 0 < total <= 1.0 + 1e-9:
         raise ValueError(f"fractions must sum to (0, 1], got {total}")
@@ -194,297 +194,6 @@ def stratified_sample(
             .otherwise(threshold)
         )
     return df.where(bucket < threshold)
-
-
-def dsir_select(
-    pool: DataFrame,
-    target: DataFrame,
-    frac: float = 0.1,
-    k: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weight_col: str = "dsir_w",
-    gumbel_temp: float | None = None,
-) -> DataFrame:
-    """DSIR data selection (Xie et al. 2023, "Data Selection for Language
-    Models via Importance Resampling"): train one n-gram bag model on the
-    TARGET distribution and one on the RAW POOL, score every pool document
-    with the log importance weight log p_target(x) - log p_pool(x), and
-    keep the top-k. The paper draws k samples with Gumbel noise; this
-    implementation takes the deterministic top-k (weight desc, id asc) so
-    runs are reproducible and exactly SQL-re-derivable.
-
-    Feature model: the corpus-trained char-bigram LM from functions/lm.py
-    (add-one smoothing, shared 40-char vocab) standing in for the paper's
-    hashed word-bigram bag -- same estimator family, deterministic and
-    cross-engine portable.
-
-    Scale shape: two LM trainings = two mapInPandas passes that fold each
-    partition into one 1600-cell vector (collect is 1600 rows regardless
-    of corpus size); scoring closes over the 12.8 KB delta matrix in one
-    Arrow pass; selection is orderBy(...).limit(k), which Spark executes
-    as TakeOrderedAndProject -- per-partition top-k heaps merged on the
-    driver, no global sort shuffle. Docs shorter than 2 chars score -inf
-    (no bigram evidence) and sort last.
-
-    No reference precedent; task-brief scope (quality-filter data
-    selection at corpus scale).
-    """
-    from ..functions.lm import train_char_bigram_lm
-
-    delta = np.ascontiguousarray(
-        train_char_bigram_lm(target, text_col=text_col)
-        - train_char_bigram_lm(pool, text_col=text_col)
-    )
-    return _dsir_topk(pool, delta, frac, k, text_col, id_col, weight_col,
-                      gumbel_temp)
-
-
-def dsir_select_split(
-    df: DataFrame,
-    target_cond,
-    frac: float = 0.1,
-    k: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weight_col: str = "dsir_w",
-    gumbel_temp: float | None = None,
-) -> DataFrame:
-    """dsir_select for the common case where target and pool are a
-    PREDICATE split of one corpus: both models train in a SINGLE map pass
-    (functions/lm.py:train_char_bigram_lm_by -- the per-label counts ride
-    one reduce), halving the corpus scans vs training each side
-    separately. Counts are exact integers either way, so the trained
-    matrices -- and therefore the selection -- are bit-identical to
-    dsir_select(df.where(~cond), df.where(cond)); the equivalence test
-    asserts it. Rows where ``target_cond`` is NULL join neither side.
-    """
-    from ..functions.lm import train_char_bigram_lm_by
-
-    cond = F.col(target_cond) if isinstance(target_cond, str) else target_cond
-    labeled = df.withColumn(
-        "_dsir_side", F.when(cond, "t").when(~cond, "p")
-    )
-    models, _, n_docs = train_char_bigram_lm_by(
-        labeled, label_col="_dsir_side", text_col=text_col,
-        return_counts=True,
-    )
-    if set(models) != {"t", "p"}:
-        raise ValueError(
-            f"target_cond must split the corpus into two non-empty sides; "
-            f"saw sides {sorted(models)}"
-        )
-    delta = np.ascontiguousarray(models["t"] - models["p"])
-    if k is None:
-        if not 0.0 < frac <= 1.0:
-            raise ValueError(f"frac must be in (0, 1], got {frac}")
-        k = int(np.ceil(frac * n_docs["p"]))  # counted during training
-    return _dsir_topk(
-        df.where(~cond), delta, frac, k, text_col, id_col, weight_col,
-        gumbel_temp,
-    )
-
-
-def _dsir_topk(pool, delta, frac, k, text_col, id_col, weight_col,
-               gumbel_temp=None):
-    """Shared DSIR scoring + deterministic top-k (TakeOrderedAndProject).
-
-    ``gumbel_temp`` switches from plain top-k to the paper's
-    sampling-without-replacement: top-k of (w/temp + Gumbel noise) draws k
-    docs from softmax(w/temp) (the Gumbel-top-k identity). The noise is
-    derandomized -- g = -ln(-ln(u)) with u = (md5_bucket(id)+0.5)/buckets
-    -- so the draw is reproducible across runs, engines, and cluster
-    sizes, exactly like every other sampler here. temp -> 0 recovers
-    plain top-k; larger temp flattens toward uniform."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions.perplexity import _ids
-
-    if k is None:
-        if not 0.0 < frac <= 1.0:
-            raise ValueError(f"frac must be in (0, 1], got {frac}")
-        k = int(np.ceil(frac * pool.count()))
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-
-    @pandas_udf("double")
-    def dsir_w(texts: pd.Series) -> pd.Series:
-        out = np.empty(len(texts), dtype=np.float64)
-        for i, t in enumerate(texts):
-            if not t or len(t) < 2:
-                out[i] = -np.inf
-                continue
-            ids = _ids(t.lower())
-            out[i] = np.round(delta[ids[:-1], ids[1:]].sum(), 6)
-        return pd.Series(out)
-
-    scored = pool.withColumn(weight_col, dsir_w(F.col(text_col)))
-    if gumbel_temp is None:
-        return (
-            scored.orderBy(F.col(weight_col).desc(), F.col(id_col).asc())
-            .limit(k)
-        )
-    if gumbel_temp <= 0:
-        raise ValueError(f"gumbel_temp must be positive, got {gumbel_temp}")
-    u = (split_bucket_col(F.col(id_col)) + F.lit(0.5)) / SPLIT_BUCKETS
-    key = F.round(F.col(weight_col) / gumbel_temp - F.log(-F.log(u)), 6)
-    return (
-        scored.withColumn("_dsir_key", key)
-        .orderBy(F.col("_dsir_key").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop("_dsir_key")
-    )
-
-
-def temperature_sample(
-    df: DataFrame,
-    strata_col: str,
-    alpha: float = 0.5,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Temperature / alpha mixing (mT5, XLM-R): re-balance strata (e.g.
-    languages) toward p_s^alpha. With q_s = p_s^alpha / sum(p^alpha), each
-    stratum keeps the deterministic fraction f_s = (q_s/p_s) / max(q_s/p_s)
-    -- the kept corpus follows the temperature-adjusted distribution
-    exactly (in ratio), the most-boosted stratum is kept whole, and
-    alpha=1 keeps everything. Selection reuses the md5-bucket mechanism
-    (split_bucket_col): same row survives across runs/engines/cluster
-    sizes, samples are nested in alpha, and the whole thing re-derives in
-    SQL.
-
-    Scale shape: one small groupBy(strata).count() (collect = n_strata
-    rows), then a pure Catalyst filter -- no shuffle of the corpus, no
-    RNG, no state. Thresholds are computed on exact counts; at 10^12 docs
-    run the count on the same pass that wrote the corpus manifest.
-    """
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    counts = {
-        r["s"]: r["n"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-        if r["s"] is not None
-    }
-    if not counts:
-        raise ValueError("no non-null strata to sample")
-    total = sum(counts.values())
-    boost = {s: (n / total) ** (alpha - 1.0) for s, n in counts.items()}
-    top = max(boost.values())
-    bucket = split_bucket_col(F.col(key_col))
-    threshold = F.lit(-1)  # NULL strata keep nothing
-    for s, b in sorted(boost.items()):
-        threshold = F.when(
-            F.col(strata_col) == s, int(round(b / top * SPLIT_BUCKETS))
-        ).otherwise(threshold)
-    return df.where(bucket < threshold)
-
-
-def unimax_sample(
-    df: DataFrame,
-    strata_col: str,
-    budget: int,
-    max_epochs: int = 1,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """UniMax sampling (Chung et al. 2023): allocate a total ``budget``
-    (in documents) across strata so every stratum gets as uniform a share
-    as possible without repeating any stratum more than ``max_epochs``
-    times. Greedy, smallest stratum first: each stratum receives
-    ``min(max_epochs * n_s, remaining / strata_left)``; whatever a small
-    stratum cannot absorb flows to the larger ones. Unlike temperature
-    mixing there is no tail-suppressing exponent -- low-resource strata
-    are never downsampled below their uniform share, and over-allocation
-    is bounded by the epoch cap rather than unbounded repetition.
-
-    A stratum's quota q_s turns into ``floor(q_s / n_s)`` full epochs plus
-    an md5-bucket partial epoch for the fractional remainder (same
-    split_bucket_col kernel as hash_split/temperature_sample: the same
-    rows survive across runs, engines, and cluster sizes, and the draw
-    re-derives in SQL). Returns the kept rows with ``n_copies`` -- the
-    number of times a downstream writer should emit the row (full epochs
-    + 1 inside the partial draw).
-
-    Scale shape: one groupBy(strata).count() collect (n_strata rows), a
-    driver-side greedy loop over n_strata entries, then a pure Catalyst
-    projection + filter -- no corpus shuffle, no RNG, no state. The
-    allocation arithmetic is plain IEEE doubles applied in a fixed order
-    (strata ascending by count, name as tie-break), so the DuckDB oracle
-    replays it bit-for-bit with a recursive CTE.
-    """
-    if budget <= 0:
-        raise ValueError(f"budget must be > 0, got {budget}")
-    if max_epochs <= 0:
-        raise ValueError(f"max_epochs must be > 0, got {max_epochs}")
-    counts = {
-        r["s"]: r["n"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-        if r["s"] is not None
-    }
-    if not counts:
-        raise ValueError("no non-null strata to sample")
-    order = sorted(counts.items(), key=lambda kv: (kv[1], kv[0]))
-    remaining = budget * 1.0
-    full_expr = F.lit(None).cast("long")  # NULL strata keep nothing
-    thr_expr = F.lit(None).cast("long")
-    for i, (s, n) in enumerate(order):
-        quota = min(max_epochs * n, remaining / (len(order) - i))
-        remaining -= quota
-        epochs = quota / n
-        full = math.floor(epochs)
-        th = int(round((epochs - full) * SPLIT_BUCKETS))
-        full_expr = F.when(F.col(strata_col) == s, F.lit(full)).otherwise(full_expr)
-        thr_expr = F.when(F.col(strata_col) == s, F.lit(th)).otherwise(thr_expr)
-    bucket = split_bucket_col(F.col(key_col))
-    n_copies = full_expr + (bucket < thr_expr).cast("long")
-    return df.withColumn("n_copies", n_copies).where(F.col("n_copies") > 0)
-
-
-def sequence_pack(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-    seq_len: int = 2048,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Concat-and-split training-sequence packing (the GPT-2/3 data layout:
-    documents are concatenated and the stream is chopped into fixed
-    ``seq_len`` windows). Each document is assigned the window its FIRST
-    token lands in: bin = floor(running_token_offset / seq_len).
-
-    Scale design: packing is inherently sequential, so it is made parallel
-    the way production pipelines do -- per SHARD. Documents are dealt into
-    ``n_buckets`` md5 buckets (engine-portable, same idiom as hash_split);
-    within a bucket the concatenation order is ``id_col`` ascending and the
-    running offset is a window cumsum. The shuffle is one hash exchange on
-    uniform keys + a per-bucket sort; no global sort, no driver state, and
-    bucket count is the parallelism dial (at 10^12 docs use n_buckets ~=
-    10-100x executor count). Deterministic across runs and cluster sizes.
-
-    Returns df + (bucket, bin, offset_in_bin) -- offset_in_bin is where the
-    document's first token sits inside its window, which a writer needs to
-    materialize the packed examples.
-    """
-    if seq_len <= 0 or n_buckets <= 0:
-        raise ValueError(f"seq_len and n_buckets must be > 0, got {seq_len}, {n_buckets}")
-    from pyspark.sql import Window
-
-    bucket = split_bucket_col(F.col(id_col)) % n_buckets
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = df.withColumn("bucket", bucket)
-    start = (F.sum(token_col).over(w) - F.col(token_col)).cast("long")
-    return out.select(
-        "*",
-        F.floor(start / seq_len).cast("long").alias("bin"),
-        (start % seq_len).alias("offset_in_bin"),
-    )
 
 
 def domain_quality_gate(
