@@ -38,6 +38,12 @@ import sys
 import time
 
 
+def comma_list(value: str | None) -> tuple[str, ...]:
+    """Items of a comma-separated flag value, each stripped of surrounding
+    whitespace, empty items dropped: ``"la, en,"`` -> ``("la", "en")``."""
+    return tuple(s for s in (v.strip() for v in (value or "").split(",")) if s)
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="web-text quality-filter pipeline")
     p.add_argument("--input", required=True, help="pages parquet dir or table name")
@@ -59,8 +65,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="comma-separated registrable domains to drop "
                         "(RefinedWeb-style URL gate; omit = gate off). "
                         "For UT1-sized lists pass a table via the API "
-                        "(PipelineConfig.url_blocklist DataFrame, plus "
-                        "url_blocklist_bloom past broadcast size).")
+                        "(PipelineConfig.url_blocklist DataFrame, a "
+                        "broadcast join).")
     p.add_argument("--max-url-kw-hits", type=int, default=None,
                    help="drop docs whose URL contains more than this many "
                         "block keywords (omit = gate off)")
@@ -157,16 +163,14 @@ def main(argv: list[str] | None = None) -> int:
         ),
         classify=not args.no_classify,
         langid=web,
-        allowed_langs=tuple(args.allowed_langs.split(",")),
+        allowed_langs=comma_list(args.allowed_langs),
         perplexity_threshold=args.perplexity_threshold,
         pii_scrub=web,
         salt_partitions=args.salt_partitions,
         html_fallback=args.html_fallback,
         html_extractor=args.html_extractor.replace("-", "_"),
         rule_metrics=args.rule_metrics,
-        url_blocklist=(
-            tuple(args.url_blocklist.split(",")) if args.url_blocklist else None
-        ),
+        url_blocklist=comma_list(args.url_blocklist) or None,
         max_url_kw_hits=args.max_url_kw_hits,
         gopher_gate=args.gopher_gate,
         gopher_opts=(
@@ -190,9 +194,7 @@ def main(argv: list[str] | None = None) -> int:
         # shape so a later full/suffix run can consume it directly
         from wikisource_latin_text_cleaner_spark.functions import udfs
 
-        stage_udf = udfs.make_scrub_stages_udf(
-            tuple(s for s in args.stages.split(",") if s)
-        )
+        stage_udf = udfs.make_scrub_stages_udf(comma_list(args.stages))
 
         def stage_transform(df):
             return df.select(
@@ -214,7 +216,7 @@ def main(argv: list[str] | None = None) -> int:
         df, obs = pipe.observed(transform(df))
         return df
 
-    part_cols = tuple(c for c in args.partition_by.split(",") if c)
+    part_cols = comma_list(args.partition_by)
     t0 = time.time()
     run_ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     if args.buckets >= 1:

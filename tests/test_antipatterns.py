@@ -10,10 +10,10 @@ Locks in, permanently, what the round-3 judge verified by hand:
   is the point);
 * zero ``toPandas`` -- no whole-DataFrame driver materialization;
 * ``.collect()`` only at the known bounded call sites (k-means
-  samples, the capped heavy-domain list, 1600-cell LM vectors, bloom
-  bits -- each bound documented where it occurs). A new ``.collect()``
-  anywhere else fails this test until it is reviewed and the census
-  below is updated.
+  samples, the capped heavy-domain list, 1600-cell LM vectors -- each
+  bound documented where it occurs). A new ``.collect()`` anywhere
+  else fails this test until it is reviewed and the census below is
+  updated.
 
 It also keeps one design rule: the near-duplicate families share one
 symmetric pair self-join, ``dedup._band_pairs``.
@@ -28,10 +28,8 @@ PKG = Path(__file__).resolve().parent.parent / "wikisource_latin_text_cleaner_sp
 #: similarity.py: the k-means training sample (whole frame below the
 #: cap, a seeded fraction above it, both bounded by ``sample_rows``);
 #: sampling.py: domain_cap's heavy-domain list (capped at
-#: _MAX_HEAVY_DOMAINS + 1 rows); lm.py: V*V=1600-cell count vectors;
-#: decontaminate.py: bloom build (bounded by filter bits).
+#: _MAX_HEAVY_DOMAINS + 1 rows); lm.py: V*V=1600-cell count vectors.
 COLLECT_BUDGET = {
-    "operators/decontaminate.py": 1,
     "operators/sampling.py": 1,
     "operators/similarity.py": 2,
     "functions/lm.py": 2,

@@ -820,86 +820,6 @@ def test_semdedup_persist_assigns_each_vector_once(spark, tmp_path):
     assert {r.vec_id for r in out_p.collect()} == _semdedup_numpy(vecs, cell_of, 0.8)
 
 
-# --- Bloom-filter blocklist gate -------------------------------------------
-
-def _bloom_py(keys, m, k):
-    """Pure-python bloom oracle over md5 double hashing."""
-    import hashlib
-
-    def positions(key):
-        h1 = int(hashlib.md5(key.encode()).hexdigest()[:8], 16)
-        h2 = int(hashlib.md5(
-            (key + decontaminate_mod.BLOOM_SALT).encode()).hexdigest()[:8], 16)
-        return [(h1 + i * h2) % m for i in range(k)]
-
-    bits = set()
-    for key in keys:
-        bits.update(positions(key))
-    return bits, positions
-
-
-from wikisource_latin_text_cleaner_spark.operators import (  # noqa: E402
-    decontaminate as decontaminate_mod,
-)
-
-
-def test_bloom_matches_python_oracle_including_false_positives(spark):
-    """Exact parity with a from-scratch python bloom: guaranteed hits AND
-    the deterministic false-positive set (tiny m forces collisions)."""
-    m, k = 64, 3
-    block = [f"blocked document text {i}" for i in range(10)]
-    probes = block + [f"novel probe text number {i}" for i in range(200)]
-    bdf = spark.createDataFrame([(t,) for t in block], "text string")
-    pdf = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(probes)], "pid long, text string")
-    bits = decontaminate_mod.build_bloom(bdf, "text", m_bits=m, k=k)
-    got = {r.pid: r.in_bloom for r in decontaminate_mod.bloom_flag(
-        pdf, bits, "text", m_bits=m, k=k).collect()}
-
-    bset, positions = _bloom_py(block, m, k)
-    want = {i: all(p in bset for p in positions(t))
-            for i, t in enumerate(probes)}
-    assert got == want
-    assert all(got[i] for i in range(len(block))), "no false negatives ever"
-    assert any(got[i] for i in range(len(block), len(probes))), \
-        "m=64 over 10 keys must produce at least one false positive"
-
-
-def test_bloom_null_key_never_flagged(spark):
-    bdf = spark.createDataFrame([("x y z",)], "text string")
-    bits = decontaminate_mod.build_bloom(bdf, "text", m_bits=256, k=3)
-    pdf = spark.createDataFrame([(0, None), (1, "x y z")], "pid long, text string")
-    got = {r.pid: r.in_bloom for r in decontaminate_mod.bloom_flag(
-        pdf, bits, "text", m_bits=256, k=3).collect()}
-    assert got == {0: False, 1: True}
-
-
-def test_bloom_probe_is_shuffle_free(spark):
-    """The probe must be one scan->project stage: positions are Catalyst
-    expressions and membership is an O(k) closure gather -- any Exchange
-    in the plan means the corpus is being shuffled to answer a per-row
-    question."""
-    bdf = spark.createDataFrame([("a b c",)], "text string")
-    bits = decontaminate_mod.build_bloom(bdf, "text", m_bits=256, k=3)
-    pdf = spark.createDataFrame([(i, f"t {i}") for i in range(20)],
-                                "pid long, text string")
-    plan = (
-        decontaminate_mod.bloom_flag(pdf, bits, "text", m_bits=256, k=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan, plan
-
-
-def test_bloom_validation():
-    import numpy as np
-
-    with pytest.raises(ValueError, match="positive"):
-        decontaminate_mod.build_bloom(None, "text", m_bits=0, k=3)
-    with pytest.raises(ValueError, match="bits"):
-        decontaminate_mod.bloom_member_col(
-            F.col("text"), np.zeros(4, dtype=np.uint8), m_bits=256, k=3)
-
-
 # --- KMV corpus-overlap sketches -------------------------------------------
 
 def test_kmv_overlap_exact_below_k(spark):

@@ -134,8 +134,9 @@ def test_driver_flat_mode_output_layout(tmp_path, spark):
 
 def test_driver_url_blocklist_and_bloom_variant(tmp_path):
     """--url-blocklist gates docs through the spark-submit surface. (The
-    Bloom variant is API-only, PipelineConfig.url_blocklist_bloom; its
-    exact-vs-bloom parity lives in tests/test_url_gate.py.)"""
+    table-sized form is API-only, a PipelineConfig.url_blocklist
+    DataFrame; its parity with the inline list lives in
+    tests/test_url_gate.py.)"""
     from wikisource_latin_text_cleaner_spark.sources import synth
 
     inp = str(tmp_path / "pages.parquet")
@@ -147,6 +148,21 @@ def test_driver_url_blocklist_and_bloom_variant(tmp_path):
     exact = _run([*base, "--output", str(tmp_path / "o1"),
                   "--url-blocklist", "site00.example"])
     assert exact["docs_kept"] < plain["docs_kept"]
+
+
+def test_comma_list_flags_strip_items():
+    """The comma-list flags (--allowed-langs, --url-blocklist,
+    --partition-by, --stages) strip each item and drop empty ones: a
+    space after a comma must not leave " site03.example", which no
+    registrable domain equals, in the blocklist."""
+    import driver
+
+    assert driver.comma_list("site00.example, site03.example") == (
+        "site00.example", "site03.example")
+    assert driver.comma_list(" la ,en,, ") == ("la", "en")
+    assert driver.comma_list("period,genre") == ("period", "genre")
+    assert driver.comma_list("") == ()
+    assert driver.comma_list(None) == ()
 
 
 def test_driver_drop_noindex(tmp_path):

@@ -134,38 +134,6 @@ def test_minhash_loop_storage_flat_and_answers_unchanged(spark):
     assert _n_cached(spark) <= base
 
 
-def test_bloom_loop_releases_prior(spark):
-    from wikisource_latin_text_cleaner_spark.operators.decontaminate import (
-        build_bloom,
-    )
-
-    import numpy as np
-
-    m_bits, k = 1 << 16, 5
-    b1, b2, b3 = _snapshots(spark)
-    base = _n_cached(spark)
-
-    empty = bytes(m_bits // 8)
-    k1, h1 = dedup.incremental_bloom_dedup(b1, empty, m_bits, k)
-    bloom1 = build_bloom(h1, "content_hash", m_bits, k)
-    k2, h2 = dedup.incremental_bloom_dedup(
-        b2, bloom1, m_bits, k, unpersist_prior=h1
-    )
-    after2 = _n_cached(spark)
-    bloom2 = np.bitwise_or(bloom1, build_bloom(h2, "content_hash", m_bits, k))
-    k3, h3 = dedup.incremental_bloom_dedup(
-        b3, bloom2, m_bits, k, unpersist_prior=h2
-    )
-    after3 = _n_cached(spark)
-
-    assert after3 <= after2
-    # bloom semantics: ledger text never re-admitted
-    assert _ids(k2) == [11, 12]
-    assert _ids(k3) == [22]
-    dedup.release_caches(k3, h3)
-    assert _n_cached(spark) <= base
-
-
 def test_collect_caches_scoops_multi_call_scope(spark):
     b1, b2, _ = _snapshots(spark)
     base = _n_cached(spark)

@@ -373,38 +373,6 @@ def test_domain_gate_null_scores_do_not_throw(spark):
     assert kept.count() == 3
 
 
-# -- bloom-ledger variant --------------------------------------------------------
-
-def test_incremental_bloom_ledger(spark):
-    """No false negatives (everything previously kept stays dropped on
-    recrawl), batch canonicalization exact, null text passes, and the
-    returned hashes extend the next filter build."""
-    from wikisource_latin_text_cleaner_spark.operators import decontaminate
-
-    M, K = 1 << 16, 5  # big enough that false positives are negligible
-    snap1 = spark.createDataFrame([(1, "alpha"), (2, "beta")],
-                                  ["doc_id", "text"])
-    seen = snap1.select(
-        F.md5(F.encode("text", "utf-8")).alias("content_hash")).distinct()
-    bits = decontaminate.build_bloom(seen, "content_hash", m_bits=M, k=K)
-    snap2 = spark.createDataFrame(
-        [(20, "alpha"), (21, "delta"), (22, "delta"), (23, None)],
-        "doc_id long, text string",
-    )
-    kept, new_hashes = dedup.incremental_bloom_dedup(snap2, bits, M, K)
-    assert _ids(kept) == [21, 23]  # alpha recrawl dropped; 22 loses to 21
-    # chaining: OR the survivors into the filter and re-probe
-    import numpy as np
-    bits2 = np.bitwise_or(
-        bits, decontaminate.build_bloom(new_hashes.where(
-            F.col("content_hash").isNotNull()), "content_hash",
-            m_bits=M, k=K))
-    snap3 = spark.createDataFrame([(30, "delta"), (31, "omega")],
-                                  ["doc_id", "text"])
-    kept3, _ = dedup.incremental_bloom_dedup(snap3, bits2, M, K)
-    assert _ids(kept3) == [31]
-
-
 def test_corpus_line_dedup_scoped_python_twin(spark):
     """Scoped rule vs an independent pure-Python twin over a mixed fixture
     (several domains, shared lines, blanks, keep_first both ways)."""

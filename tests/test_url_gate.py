@@ -59,6 +59,12 @@ def test_dataframe_blocklist_matches_tuple_path(spark, pages_df):
     ).select("url", "keep", "drop_reasons")
     assert via_df.exceptAll(via_tuple).count() == 0
     assert via_tuple.exceptAll(via_df).count() == 0
+    # the table gate stays Catalyst-only: the fused UDF is the plan's one
+    # Python stage, and the blocklist is a broadcast join
+    plan = via_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_keyword_gate(spark):
@@ -79,28 +85,3 @@ def test_keyword_gate(spark):
     flagged = out.where(F.array_contains("drop_reasons", "url_blocklist"))
     assert flagged.count() > 0
     assert all("casino" in r["url"] for r in flagged.collect())
-
-
-def test_bloom_blocklist_matches_exact_path(spark, pages_df):
-    """With a generously-sized filter (no collisions at this domain count)
-    the bloom gate must make the IDENTICAL decisions as the exact
-    broadcast join; listed domains are blocked under ANY sizing (bloom
-    guarantees no false negatives)."""
-    bl_df = spark.createDataFrame(
-        [("site00.example",), ("site03.example",)], "domain string"
-    )
-    exact = _run(pages_df, url_blocklist=bl_df).select(
-        "url", "keep", "drop_reasons"
-    )
-    bloom = _run(
-        pages_df, url_blocklist=bl_df, url_blocklist_bloom=(1 << 16, 5)
-    ).select("url", "keep", "drop_reasons")
-    assert exact.exceptAll(bloom).count() == 0
-    assert bloom.exceptAll(exact).count() == 0
-    # tiny filter: over-blocking allowed, under-blocking never
-    tiny = _run(
-        pages_df, url_blocklist=bl_df, url_blocklist_bloom=(64, 2)
-    )
-    assert tiny.where(
-        F.col("url").contains("site00.example") & F.col("keep")
-    ).count() == 0

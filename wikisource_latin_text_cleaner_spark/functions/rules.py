@@ -130,8 +130,6 @@ class ExtensionConfig:
     #: any-badword-drops-the-page rule; None (default) keeps the gate off
     #: so existing keep/drop decisions stay byte-stable.
     max_toxicity: float | None = None
-    allowed_langs: tuple = ("la",)
-    langid_gate: bool = False  # off unless a langid model is supplied
 
 
 #: every drop reason ``extension_reasons`` can emit

@@ -64,9 +64,10 @@ def canonicalize_url_sql(col_sql: str) -> str:
 # al. 2023, sec 3.1) filters pages by (a) a curated domain blocklist and
 # (b) soft keyword scoring of the URL itself. Both are pure Catalyst here:
 # the blocklist is a broadcast join on the registrable domain (UT1-sized
-# lists -- a few million rows -- still broadcast comfortably; beyond that
-# the join degrades to a shuffled semi-join on the domain key) and keyword
-# scoring is a fixed sum of contains() probes.
+# lists -- a few million rows -- still broadcast comfortably; the
+# F.broadcast hint is forced, so a larger list does not fall back to a
+# shuffled join -- see SCALE.md) and keyword scoring is a fixed sum of
+# contains() probes.
 
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/:?#]+)"
 

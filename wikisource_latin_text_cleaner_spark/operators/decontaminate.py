@@ -18,8 +18,6 @@ plan degrades gracefully to a shuffled semi-join on uniform md5 gram keys.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,111 +71,4 @@ def flag_contaminated(
         docs.join(hits, docs[id_col] == hits["_did"], "left")
         .drop("_did")
         .withColumn("is_contaminated", F.coalesce("is_contaminated", F.lit(False)))
-    )
-
-
-# --- Bloom-filter blocklist gate -------------------------------------------
-
-#: salt for the second md5-derived base hash (Kirsch-Mitzenmacher scheme);
-#: shared verbatim with the driver's SQL oracle.
-BLOOM_SALT = "wikisource-bloom-h2"
-
-
-def bloom_positions_col(key_col, m_bits: int, k: int):
-    """k Bloom bit positions for a string key, pure Catalyst expressions.
-
-    Kirsch-Mitzenmacher double hashing: position_i = (h1 + i*h2) mod m,
-    with h1/h2 the first 32 bits of md5(key) and md5(key || salt). md5
-    (not xxhash64) for the same reason as sampling.split_bucket_col: every
-    engine computes it identically, so membership is exactly re-derivable
-    in SQL. 32-bit bases in int64 arithmetic cannot overflow for any sane
-    k. NULL keys yield an empty array (never flagged)."""
-    h1 = F.conv(F.substring(F.md5(key_col), 1, 8), 16, 10).cast("long")
-    h2 = F.conv(
-        F.substring(F.md5(F.concat(key_col, F.lit(BLOOM_SALT))), 1, 8), 16, 10
-    ).cast("long")
-    pos = F.array(*[(h1 + F.lit(i) * h2) % m_bits for i in range(k)])
-    return F.when(key_col.isNotNull(), pos).otherwise(
-        F.array().cast("array<long>")
-    )
-
-
-def build_bloom(
-    df: DataFrame, key_col: str, m_bits: int = 1 << 23, k: int = 5
-):
-    """Distributed Bloom build: packed uint8 bitset (m_bits/8 bytes) of a
-    blocklist key column.
-
-    Positions are computed JVM-side (whole-stage codegen), deduped with a
-    distinct (map-side partial agg), and the driver collects AT MOST
-    min(|keys|*k, m_bits) ints -- the collect is bounded by the filter
-    SIZE, never the blocklist row count, so a 10^9-row blocklist with a
-    2^23-bit filter still collects <= 8.4M ints once. The packed result
-    (1 MiB at the default m) broadcasts inside the probe UDF closure --
-    that is the point of the structure: membership against a set too large
-    to broadcast exactly.
-    """
-    if m_bits <= 0 or k <= 0:
-        raise ValueError(f"m_bits and k must be positive, got {m_bits}, {k}")
-    rows = (
-        df.select(
-            F.explode(
-                bloom_positions_col(F.col(key_col), m_bits, k)
-            ).alias("p")
-        )
-        .distinct()
-        .collect()
-    )
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    pos = np.array([r["p"] for r in rows], dtype=np.int64)
-    if pos.size:
-        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-    return bits
-
-
-def bloom_member_col(key_col, bits, m_bits: int, k: int):
-    """Boolean membership Column for any string key EXPRESSION -- true iff
-    ALL k positions of the key are set (standard Bloom semantics: no false
-    negatives, deterministic false positives that the SQL oracle
-    reproduces bit-for-bit). Positions stay JVM-side; the UDF is an O(k)
-    numpy bit gather closing over the packed bitset. Zero shuffle."""
-    from pyspark.sql.functions import pandas_udf
-
-    if len(bits) * 8 < m_bits:
-        raise ValueError(
-            f"bitset holds {len(bits) * 8} bits, need {m_bits}"
-        )
-    # accept the serialized form too (a filter read back from storage is
-    # bytes); ndarray passes through unchanged
-    packed = (
-        np.frombuffer(bits, dtype=np.uint8)
-        if isinstance(bits, (bytes, bytearray))
-        else bits
-    )
-
-    @pandas_udf("boolean")
-    def probe(pos: pd.Series) -> pd.Series:
-        out = np.zeros(len(pos), dtype=bool)
-        for i, p in enumerate(pos):
-            if p is not None and len(p) == k:
-                a = np.asarray(p, dtype=np.int64)
-                out[i] = bool(
-                    (((packed[a >> 3] >> (a & 7)) & 1) == 1).all()
-                )
-        return pd.Series(out)
-
-    return probe(bloom_positions_col(key_col, m_bits, k))
-
-
-def bloom_flag(
-    df: DataFrame,
-    bits,
-    key_col: str,
-    m_bits: int,
-    k: int,
-    flag_col: str = "in_bloom",
-) -> DataFrame:
-    """DataFrame form of bloom_member_col: adds boolean ``flag_col``."""
-    return df.withColumn(
-        flag_col, bloom_member_col(F.col(key_col), bits, m_bits, k)
     )

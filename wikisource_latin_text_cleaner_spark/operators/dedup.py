@@ -1510,59 +1510,6 @@ def minhash_estimate_audit(
     )
 
 
-def incremental_bloom_dedup(
-    new_df: DataFrame,
-    seen_bloom_bits,
-    m_bits: int,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_col: str = "content_hash",
-    unpersist_prior=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Zero-join variant of ``incremental_exact_dedup``: the ledger is a
-    Bloom filter of previously-kept content hashes
-    (``decontaminate.build_bloom`` over the hash column), so the probe is
-    an O(k) in-closure bit gather -- NO shuffle against ledger state at
-    all. The trade: Bloom semantics. Nothing previously kept is ever
-    re-admitted (no false negatives), but a deterministic false-positive
-    fraction of genuinely-new docs is over-dropped -- size ``m_bits`` for
-    the tolerated loss, FP ~ (1 - e^(-k*n/m))^k. At 10^12 ledger entries
-    and a 0.1% loss budget that is ~2 TB of filter sharded across
-    executors, vs a 16 TB joinable hash table -- the dial between this and
-    the exact operator is (memory, loss) vs (shuffle, exactness).
-
-    Within-batch duplicates are still resolved EXACTLY (hash groupBy,
-    smallest id wins): the batch is one snapshot, exactness there is
-    cheap. Returns ``(kept, new_hashes)``; the caller ORs ``new_hashes``
-    into the next filter build (build_bloom ∪ is bitwise-or of packed
-    bitsets). NULL text never matches the filter (empty position array)
-    and passes through, matching the exact operator's null semantics.
-
-    Cache lifecycle: the returned frames carry ``.dedup_caches``; pass
-    the previous batch's handle as ``unpersist_prior=`` to release it
-    after this call's forced fills. Unlike the join-ledger operators no
-    returned frame reads prior-batch caches (the ledger is driver-side
-    bloom bytes), so no re-pin is needed before the release.
-    """
-
-    from .decontaminate import bloom_member_col
-
-    with collect_caches() as handle:
-        hashed = new_df.withColumn(
-            hash_col, F.md5(F.encode(F.col(text_col), "utf-8"))
-        )
-        batch_kept = _smallest_id(hashed, hash_col, id_col)
-        member = bloom_member_col(F.col(hash_col), seen_bloom_bits, m_bits, k)
-        kept_h = _persist_forced(batch_kept.where(~member))
-        kept = kept_h.select(*new_df.columns)
-        new_hashes = kept_h.select(hash_col)
-    if unpersist_prior is not None:
-        release_caches(unpersist_prior)
-    _attach_handle(handle, kept, new_hashes)
-    return kept, new_hashes
-
-
 # -- quality-aware cluster retention ------------------------------------------
 
 def cluster_representatives(

@@ -65,15 +65,6 @@ class PipelineConfig:
     #: column (broadcast join, the UT1-sized path). None (default) keeps
     #: the gate off so existing keep/drop decisions stay byte-stable.
     url_blocklist: object | None = None
-    #: when set to (m_bits, k) and url_blocklist is a DataFrame, gate via
-    #: a Bloom filter of the blocklist domains instead of the broadcast
-    #: join -- the path for blocklists too large to broadcast exactly
-    #: (10^9 domains -> a fixed m_bits/8-byte closure instead of a
-    #: multi-GB hash relation). Bloom semantics: every listed domain is
-    #: still blocked (no false negatives); a deterministic false-positive
-    #: fraction of clean domains is over-blocked -- size m_bits for the
-    #: tolerated rate. None (default) keeps the exact join.
-    url_blocklist_bloom: tuple | None = None
     #: drop when more than this many functions.urls.BLOCK_KEYWORDS occur as
     #: substrings of the URL; None (default) = gate off.
     max_url_kw_hits: int | None = None
@@ -175,10 +166,10 @@ class QualityFilterPipeline:
     def _apply_url_gate(self, df: DataFrame) -> DataFrame:
         """RefinedWeb-style URL gate (domain blocklist + keyword score),
         applied after the fused UDF. Pure Catalyst over the url column: a
-        literal isin for small inline lists, a broadcast join for
-        table-sized blocklists; keyword scoring is a fixed sum of
-        contains() probes. Docs failing the gate get drop reason
-        'url_blocklist' (see ``_flip``)."""
+        literal isin for small inline lists, the broadcast join of
+        ``urls.flag_blocked_urls`` for table-sized blocklists; keyword
+        scoring is a fixed sum of contains() probes. Docs failing the gate
+        get drop reason 'url_blocklist' (see ``_flip``)."""
         cfg = self.config
         if not self._url_gate_on():
             return df
@@ -187,34 +178,9 @@ class QualityFilterPipeline:
         cols = df.columns
         blocked = F.lit(False)
         if cfg.url_blocklist is not None:
-            if (cfg.url_blocklist_bloom is not None
-                    and isinstance(cfg.url_blocklist, DataFrame)):
-                from ..operators.decontaminate import (
-                    bloom_member_col, build_bloom,
-                )
-
-                m_bits, n_hashes = cfg.url_blocklist_bloom
-                bits = build_bloom(
-                    cfg.url_blocklist.select(
-                        F.lower(F.col("domain")).alias("domain")
-                    ),
-                    "domain", m_bits=m_bits, k=n_hashes,
-                )
-                blocked = blocked | bloom_member_col(
-                    _urls.registrable_domain(F.col("url")),
-                    bits, m_bits, n_hashes,
-                )
-            elif isinstance(cfg.url_blocklist, DataFrame):
-                bl = (
-                    cfg.url_blocklist
-                    .select(F.lower(F.col("domain")).alias("_bl_dom"))
-                    .distinct()
-                    .withColumn("_bl", F.lit(True))
-                )
-                df = df.withColumn(
-                    "_bl_dom", _urls.registrable_domain(F.col("url"))
-                ).join(F.broadcast(bl), "_bl_dom", "left")
-                blocked = blocked | F.coalesce(F.col("_bl"), F.lit(False))
+            if isinstance(cfg.url_blocklist, DataFrame):
+                df = _urls.flag_blocked_urls(df, cfg.url_blocklist, keywords=())
+                blocked = blocked | F.col("url_blocked")
             else:
                 doms = sorted({d.lower() for d in cfg.url_blocklist})
                 blocked = blocked | _urls.registrable_domain(
