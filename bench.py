@@ -48,7 +48,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "20000"))
 
 #: representative spread: relational aggs/joins, cube, window top-k, text
-#: heuristics, dedup (exact + minhash + simhash + jaccard), and the
+#: heuristics, dedup (exact + minhash + jaccard), and the
 #: full-fidelity pipeline decisions over the sf documents table.
 HEADLINE = (
     "pricing_summary",
@@ -61,7 +61,6 @@ HEADLINE = (
     "fingerprints",
     "dedup_exact",
     "minhash_dedup_count",
-    "simhash_pairs",
     "ngram_jaccard_near_dups",
     "langid_histogram",
     "pipeline_decisions",
@@ -71,8 +70,7 @@ HEADLINE = (
     # partial counts + JVM reduce + scoring UDF)
     "corpus_line_dedup",
     "trained_perplexity",
-    # added round 3, later: cluster-local semantic dedup over embeddings
-    "semdedup_survivors",
+    # added round 3, later: ExactSubstr duplicated-span removal
     "exact_span_dedup",
     # added round 3, later still: the Gopher repetition battery
     # (Arrow-fused nine-fraction UDF), the DCLM-style distilled quality

@@ -9,11 +9,10 @@ Locks in, permanently, what the round-3 judge verified by hand:
   everywhere (all-pairs appears only inside DuckDB oracle SQL, where it
   is the point);
 * zero ``toPandas`` -- no whole-DataFrame driver materialization;
-* ``.collect()`` only at the known bounded call sites (k-means
-  samples, the capped heavy-domain list, 1600-cell LM vectors -- each
-  bound documented where it occurs). A new ``.collect()`` anywhere
-  else fails this test until it is reviewed and the census below is
-  updated.
+* ``.collect()`` only at the known bounded call sites (the capped
+  heavy-domain list, 1600-cell LM vectors -- each bound documented
+  where it occurs). A new ``.collect()`` anywhere else fails this test
+  until it is reviewed and the census below is updated.
 
 It also keeps one design rule: the near-duplicate families share one
 symmetric pair self-join, ``dedup._band_pairs``.
@@ -25,13 +24,10 @@ from pathlib import Path
 PKG = Path(__file__).resolve().parent.parent / "wikisource_latin_text_cleaner_spark"
 
 #: reviewed-bounded .collect() census: file -> max allowed occurrences.
-#: similarity.py: the k-means training sample (whole frame below the
-#: cap, a seeded fraction above it, both bounded by ``sample_rows``);
 #: sampling.py: domain_cap's heavy-domain list (capped at
 #: _MAX_HEAVY_DOMAINS + 1 rows); lm.py: V*V=1600-cell count vectors.
 COLLECT_BUDGET = {
     "operators/sampling.py": 1,
-    "operators/similarity.py": 2,
     "functions/lm.py": 2,
 }
 

@@ -1,12 +1,9 @@
 """Dedup + similarity operator correctness vs pure-python/numpy oracles."""
 
-import math
-
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from wikisource_latin_text_cleaner_spark.operators import dedup, similarity
+from wikisource_latin_text_cleaner_spark.operators import dedup
 
 
 @pytest.fixture(scope="module")
@@ -66,72 +63,6 @@ def test_minhash_pairs_and_dedup(docs):
     assert 0 in kept and 1 not in kept and 3 in kept and 4 in kept
 
 
-def test_simhash_pairs(docs):
-    # 4x16-bit banding guarantees candidate generation for hamming <= 3
-    # (pigeonhole); exact dups are always caught, unrelated texts never.
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in dedup.simhash_near_duplicates(docs, max_hamming=3).collect()}
-    assert pairs[(0, 1)] == 0
-    assert not any({a, b} == {3, 4} for a, b in pairs)
-
-
-def test_simhash_matches_numpy_oracle(docs):
-    rows = docs.select("doc_id", "text").collect()
-    sigs = {r["doc_id"]: dedup._simhash64(r["text"]) for r in rows}
-    spark_sigs = {
-        r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", dedup.simhash_udf("text").alias("s")).collect()
-    }
-    assert sigs == spark_sigs
-
-
-def _planted_corpus(n_base=300, seed=99):
-    """Distinct random-word docs + planted near-dup groups (word edits)."""
-    import random
-
-    rng = random.Random(seed)
-
-    def words(k):
-        return ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
-                        for _ in range(7)) for _ in range(k)]
-
-    rows = [(i, " ".join(words(60))) for i in range(n_base)]
-    nxt = n_base
-    for g in range(3):  # 3 planted groups of 4 variants each
-        base = words(60)
-        for v in range(4):
-            w = list(base)
-            for pos in range(v):  # v word edits
-                w[5 + 7 * pos] = f"editum{g}{v}{pos}"
-            rows.append((nxt, " ".join(w)))
-            nxt += 1
-    return rows
-
-
-def test_simhash_persist_hashes_each_doc_once(spark, tmp_path):
-    """The band self-join reads the signature cache, not the text scan, on
-    both sides. Uncached, the aliased join branches defeat exchange reuse
-    and the corpus is scanned+hashed twice. Pairs equal the all-pairs
-    Hamming oracle (banding is exhaustive by pigeonhole)."""
-    base = "verba multa hic posita sunt et alia verba sequuntur statim "
-    rows = [(i, base + ("finis %d" % (i % 3))) for i in range(50)]
-    path = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
-    d = spark.read.parquet(path)
-    out_p = dedup.simhash_near_duplicates(d)
-    plan_p = out_p._jdf.queryExecution().executedPlan().toString()
-    # both join sides must read the signature cache (the cached relation
-    # prints its child FileScan inline, so count cache scans, not scans)
-    assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    rows_p = sorted((r.id_a, r.id_b, r.hamming) for r in out_p.collect())
-    sims = {i: dedup._simhash64(t) for i, t in rows}
-    want = sorted(
-        (a, b, bin((sims[a] ^ sims[b]) & ((1 << 64) - 1)).count("1"))
-        for a in sims for b in sims if a < b
-    )
-    assert rows_p == [w for w in want if w[2] <= 3]
-
-
 def test_ngram_jaccard_persist_hashes_and_grams_once(spark, tmp_path):
     """The n-gram path needs the word-minhash signature on both band-join
     sides AND the gram array on both verify-join sides; uncached that is 2
@@ -150,121 +81,6 @@ def test_ngram_jaccard_persist_hashes_and_grams_once(spark, tmp_path):
             if a % 3 == b % 3} <= rows_p
 
 
-def test_embedding_near_dup_persist_projects_each_vector_once(spark, tmp_path):
-    """Hyperplane bucket UDF must run once per embedding, not once per
-    aliased self-join side: persisted plan reads the cache on both sides.
-    Every call returns the exact oracle -- band keys recomputed in numpy
-    from the seeded planes, cosine by the same left-to-right fold, rounded
-    to 6 dp -- so the planes cannot depend on how many calls ran before."""
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal(64)
-    rows = []
-    for i in range(40):
-        v = rng.standard_normal(64) if i % 4 else base + rng.standard_normal(64) * 0.01
-        rows.append((i, [float(x) for x in v]))
-    # a looser clique around cosine 0.96: which of its pairs share a band
-    # depends on the planes
-    base2 = rng.standard_normal(64)
-    for i in range(40, 52):
-        rows.append((i, [float(x) for x in base2 + rng.standard_normal(64) * 0.2]))
-    path = str(tmp_path / "emb.parquet")
-    spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(path)
-    d = spark.read.parquet(path)
-    out_p = dedup.embedding_near_duplicates(d)
-    plan_p = out_p._jdf.queryExecution().executedPlan().toString()
-    assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-
-    bands, planes = 4, 12
-    hyper = np.random.RandomState(1337).standard_normal((bands, planes, 64))
-    mat = np.array([v for _, v in rows])
-    weights = 1 << np.arange(planes, dtype=np.int64)
-    bits = [(mat @ hyper[b].T) > 0 for b in range(bands)]
-    keys = [{int(bits[b][i] @ weights) * bands + b for b in range(bands)}
-            for i in range(len(rows))]
-
-    def fold(xs):
-        acc = 0.0
-        for x in xs:
-            acc += x
-        return acc
-
-    def cosine(u, v):
-        return round(fold(x * y for x, y in zip(u, v))
-                     / (math.sqrt(fold(x * x for x in u))
-                        * math.sqrt(fold(x * x for x in v))), 6)
-
-    vecs = dict(rows)
-    near = [(a, b, cosine(vecs[a], vecs[b]))
-            for a in vecs for b in vecs if a < b]
-    near = [p for p in near if p[2] >= 0.95]
-    want = sorted(p for p in near if keys[p[0]] & keys[p[1]])
-    # the oracle covers both cliques and the banding misses some pairs
-    assert 45 < len(want) < len(near)
-    for _ in range(2):
-        got = sorted((r.id_a, r.id_b, r.cosine)
-                     for r in dedup.embedding_near_duplicates(d).collect())
-        assert got == want
-
-
-@pytest.mark.parametrize("blocks", [4, 6])
-def test_simhash_block_banding_is_exhaustive(spark, blocks):
-    """Manku block-combination banding must return EXACTLY the all-pairs
-    hamming<=3 truth at any blocks setting (pigeonhole guarantee), on a
-    corpus with planted near-dup cliques."""
-    rows = _planted_corpus()
-    sigs = {i: dedup._simhash64(t) for i, t in rows}
-    truth = {
-        (a, b)
-        for ai, a in enumerate(sorted(sigs))
-        for b in sorted(sigs)[ai + 1:]
-        if bin(sigs[a] ^ sigs[b]).count("1") <= 3
-    }
-    assert truth, "fixture must plant at least one hamming<=3 pair"
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b)
-           for r in dedup.simhash_near_duplicates(df, max_hamming=3,
-                                                  blocks=blocks).collect()}
-    assert got == truth
-
-
-def test_simhash_blocks_validation():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup.simhash_near_duplicates(None, max_hamming=4, blocks=4)
-
-
-def test_embedding_banding_recall_vs_truth(spark):
-    """Multi-band hyperplane bucketing must recover most threshold pairs a
-    single 12-plane bucket provably misses (~72% at cosine 0.95)."""
-    rng = np.random.RandomState(17)
-    base = rng.standard_normal((40, 64))
-    rows, truth_vecs = [], []
-    vid = 0
-    for i in range(40):
-        v = base[i] / np.linalg.norm(base[i])
-        for _ in range(3):  # 3 jittered copies per direction
-            u = v + rng.standard_normal(64) * 0.02
-            u = u / np.linalg.norm(u)
-            rows.append((vid, u.tolist()))
-            truth_vecs.append(u)
-            vid += 1
-    mat = np.stack(truth_vecs)
-    cos = mat @ mat.T
-    truth = {(a, b) for a in range(vid) for b in range(a + 1, vid)
-             if round(cos[a, b], 6) >= 0.95}
-    assert len(truth) >= 30
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got1 = {(r.id_a, r.id_b) for r in dedup.embedding_near_duplicates(
-        df, threshold=0.95, bands=1).collect()}
-    got8 = {(r.id_a, r.id_b) for r in dedup.embedding_near_duplicates(
-        df, threshold=0.95, bands=8).collect()}
-    assert got8 <= truth and got1 <= truth  # verification is exact
-    recall1, recall8 = len(got1) / len(truth), len(got8) / len(truth)
-    assert recall8 >= 0.85, (recall1, recall8)
-    assert recall8 >= recall1
-
-
 def test_ngram_jaccard(docs, spark):
     cands = spark.createDataFrame([(0, 1), (0, 2), (3, 4)], "id_a long, id_b long")
     out = {(r["id_a"], r["id_b"]): r["jaccard"]
@@ -272,18 +88,6 @@ def test_ngram_jaccard(docs, spark):
     assert out[(0, 1)] == 1.0
     assert 0.5 < out[(0, 2)] < 1.0
     assert out[(3, 4)] < 0.1
-
-
-def test_embedding_near_duplicates(spark):
-    v = np.random.RandomState(5).standard_normal(64)
-    rows = [
-        (0, (v / np.linalg.norm(v)).tolist()),
-        (1, (v / np.linalg.norm(v) * 2.0).tolist()),     # same direction
-        (2, np.random.RandomState(6).standard_normal(64).tolist()),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = dedup.embedding_near_duplicates(df, threshold=0.99).collect()
-    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(0, 1)]
 
 
 def test_ngram_jaccard_near_duplicates_finds_one_word_edit(spark):
@@ -502,8 +306,8 @@ def test_signature_kernels_bounded_memory_on_huge_doc():
         resource.setrlimit(resource.RLIMIT_AS, (lim, lim))
         sig = dedup._minhash_signature(doc)
         assert sig.shape == (64,)
-        sim = dedup._simhash64(doc)
-        assert -(1 << 63) <= sim < (1 << 63)
+        wsig = dedup._word_minhash_signature(doc)
+        assert wsig.shape == (64,)
         print("OK")
         """
     )
@@ -511,156 +315,6 @@ def test_signature_kernels_bounded_memory_on_huge_doc():
         [sys.executable, "-c", prog], capture_output=True, text=True, timeout=120
     )
     assert r.returncode == 0 and "OK" in r.stdout, r.stderr[-2000:]
-
-
-# -- winnowing ---------------------------------------------------------------
-
-def test_winnow_shared_substring_guarantee():
-    """Any shared substring of length >= k + window - 1 must yield a shared
-    fingerprint (the winnowing paper's core guarantee)."""
-    from wikisource_latin_text_cleaner_spark.operators.dedup import _winnow
-
-    shared = "lorem ipsum dolor sit amet consectetur"
-    a = "PREFIX AAA " + shared + " SUFFIX BBB"
-    b = "other text here " + shared + " different tail"
-    fa, fb = set(_winnow(a)), set(_winnow(b))
-    assert fa & fb, "shared substring produced no shared fingerprint"
-
-
-def test_winnow_empty_and_short():
-    from wikisource_latin_text_cleaner_spark.operators.dedup import _winnow
-
-    assert _winnow("") == []
-    assert _winnow("abc") == []          # shorter than k
-    assert len(_winnow("abcdef")) == 1   # one window
-
-
-def test_winnowing_near_duplicates_finds_planted_pair(spark):
-    from wikisource_latin_text_cleaner_spark.operators import dedup
-
-    base = "et in de ad cum ex pro per ab rex deus homo populus senatus " * 20
-    rows = [
-        (1, base + " cauda prima"),
-        (2, base + " cauda secunda"),     # near-dup of 1
-        (3, "completely different text with other words entirely " * 15),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.id_a, r.id_b) for r in
-             dedup.winnowing_near_duplicates(df, min_containment=0.5).collect()}
-    assert (1, 2) in pairs
-    assert all(3 not in p for p in pairs)
-
-
-def test_winnowing_identical_tiny_vocab_docs_pair(spark):
-    """Containment scoring catches identical docs even when a repetitive
-    vocabulary winnows to very few distinct fingerprints."""
-    from wikisource_latin_text_cleaner_spark.operators import dedup
-
-    rows = [(i, "verbum " * 100) for i in range(3)] + [(9, "alia res omnino " * 80)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.id_a, r.id_b) for r in
-             dedup.winnowing_near_duplicates(df, max_df=None).collect()}
-    assert pairs == {(0, 1), (0, 2), (1, 2)}
-
-
-@pytest.fixture(scope="module")
-def clustered_vecs(spark):
-    rng = np.random.RandomState(8)
-    centers = rng.standard_normal((10, 64)) * 4
-    rows = [
-        (int(i), (centers[i % 10] + rng.standard_normal(64) * 0.3).tolist())
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
-    return df, centers
-
-
-def test_ivf_sample_not_limit_on_clustered_input(spark):
-    """Training must SAMPLE the corpus, not take the first N rows.
-
-    Embedding tables are routinely written clustered (e.g. sorted by a
-    prior cluster id). On such input, first-N-rows training only ever sees
-    the leading cluster(s): every centroid lands inside cluster 0 and cell
-    assignment of far clusters is content-blind. df.sample() sees every
-    cluster, and the query's own cell (the one SemDeDup pairs it within)
-    holds its exact top-10. This is VERDICT r2 item #3. The two coverage
-    asserts are what a regression back to limit() trips; the limit() half
-    pins that the fixture still shows the hazard.
-    """
-    rng = np.random.RandomState(99)
-    centers = rng.standard_normal((8, 64)) * 4
-    # rows SORTED by cluster: all of cluster 0 first, then cluster 1, ...
-    rows = [
-        (int(c * 200 + i), (centers[c] + rng.standard_normal(64) * 0.3).tolist())
-        for c in range(8)
-        for i in range(200)
-    ]
-    df = (
-        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        .coalesce(1)  # preserve the sorted order for limit()
-        .cache()
-    )
-    q = centers[7]  # query near the LAST cluster
-    ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows])
-    sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
-    exact = set(ids[np.argsort(-sims, kind="stable")[:10]].tolist())
-
-    # sample_rows=150 < one cluster's 200 rows: the old limit() path would
-    # train entirely inside cluster 0
-    cents = similarity.train_ivf_centroids(df, n_cells=8, sample_rows=150)
-    with_query = df.unionByName(
-        spark.createDataFrame([(-1, q.tolist())], "vec_id long, embedding array<double>")
-    )
-    cell = {
-        r["vec_id"]: r["_cell"]
-        for r in with_query.withColumn(
-            "_cell", similarity.make_cell_udf(cents)("embedding")
-        ).collect()
-    }
-    q_cell = cell.pop(-1)
-    in_q_cell = {i for i, c in cell.items() if c == q_cell}
-    # the query's cell holds its exact neighbours and stays about one
-    # cluster wide (200 rows), so a one-cell probe is both exact and bounded
-    assert exact <= in_q_cell, (sorted(exact - in_q_cell), len(in_q_cell))
-    assert len(in_q_cell) <= 220, len(in_q_cell)
-
-    def coverage(c):
-        """min over true clusters of the best centroid cosine: 1.0 means
-        every cluster has a centroid pointing at it; ~0 (random 64-dim
-        directions) means that cluster was never seen in training."""
-        cn = np.stack([v / np.linalg.norm(v) for v in centers])
-        return float((cn @ c.T).max(axis=1).min())
-
-    # sampled training saw every cluster -> every center is well covered
-    assert coverage(cents) >= 0.9, coverage(cents)
-
-    # the failure mode the fix removes: training on the FIRST 150 rows
-    # (exactly what `limit(sample_rows)` collects on this sorted input --
-    # all cluster 0) leaves clusters 1..7 with no nearby centroid, so cell
-    # probing over them is content-blind at scale
-    biased_rows = df.select("embedding").limit(150).collect()
-    biased_df = spark.createDataFrame(
-        [(i, list(r[0])) for i, r in enumerate(biased_rows)],
-        "vec_id long, embedding array<double>",
-    )
-    biased_cents = similarity.train_ivf_centroids(
-        biased_df, n_cells=8, sample_rows=150
-    )
-    assert coverage(biased_cents) < 0.5, (
-        "limit()-trained centroids unexpectedly cover all clusters; "
-        "fixture no longer demonstrates the hazard",
-        coverage(biased_cents),
-    )
-
-
-def test_ivf_centroids_deterministic_and_normalized(clustered_vecs):
-    df, _ = clustered_vecs
-    c1 = similarity.train_ivf_centroids(df, n_cells=8, sample_rows=500)
-    c2 = similarity.train_ivf_centroids(df, n_cells=8, sample_rows=500)
-    assert np.array_equal(c1, c2)
-    assert c1.shape == (8, 64)
-    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
 
 def test_stratified_sample_nested_and_deterministic(spark):
@@ -725,99 +379,6 @@ def test_word_ngrams_col_short_doc_empty(spark):
         decontaminate.word_ngrams_col(F.col("text"), 13).alias("g")
     ).collect()[0]["g"]
     assert got == []
-
-
-def test_ivf_train_rejects_empty_input(spark):
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="no rows"):
-        similarity.train_ivf_centroids(empty)
-
-
-# --- SemDeDup (Abbas et al. 2023) -----------------------------------------
-
-def _semdedup_numpy(vecs: dict, cells: dict, tau: float) -> set:
-    """Pure-numpy oracle: survivors = ids with no smaller-id same-cell
-    neighbor at 6dp-rounded cosine >= tau."""
-    alive = set(vecs)
-    for b in sorted(vecs):
-        vb = np.asarray(vecs[b])
-        for a in sorted(vecs):
-            if a >= b or cells[a] != cells[b]:
-                continue
-            va = np.asarray(vecs[a])
-            cos = round(float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb))), 6)
-            if cos >= tau:
-                alive.discard(b)
-                break
-    return alive
-
-
-def test_semdedup_matches_numpy_oracle(spark):
-    """Trained-centroid path: planted dup pairs inside natural clusters are
-    dropped (keep-smallest-id), cross-cluster similars survive."""
-    rng = np.random.default_rng(42)
-    anchors = rng.standard_normal((4, 16))
-    rows, vecs = [], {}
-    i = 0
-    for a in anchors:
-        for _ in range(8):
-            v = a + rng.standard_normal(16) * 0.05
-            rows.append((i, [float(x) for x in v]))
-            vecs[i] = v
-            i += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.train_ivf_centroids(df, n_cells=4, sample_rows=1000)
-    out = dedup.semdedup(df, threshold=0.98, centroids=cents)
-    got = {r.vec_id for r in out.collect()}
-
-    c = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    cell_of = {
-        k: int(np.argmax((v / np.linalg.norm(v)) @ c.T)) for k, v in vecs.items()
-    }
-    want = _semdedup_numpy(vecs, cell_of, 0.98)
-    assert got == want
-    assert len(got) < len(vecs), "tight planted clusters must shed members"
-
-
-def test_semdedup_is_cell_local(spark):
-    """Identical vectors assigned to different cells must BOTH survive:
-    the O(n^2) join never crosses cell boundaries (that locality is what
-    makes the operator scale)."""
-    # Pinned centroids: cell 0 <- +x, cell 1 <- +y. A vector on the 45deg
-    # diagonal ties; argmax picks cell 0. Put an exact dup of the diagonal
-    # vector nudged into cell 1 territory: cosine ~1 but cells differ.
-    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
-    rows = [
-        (0, [1.0, 0.9]),   # cell 0
-        (1, [0.9, 1.0]),   # cell 1, cosine(0,1) = 0.994 -> would drop if joined
-        (2, [1.0, 0.01]),  # cell 0
-        (3, [1.0, 0.02]),  # cell 0, cosine(2,3) ~ 1 -> dropped (same cell)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = dedup.semdedup(df, threshold=0.99, centroids=cents)
-    assert {r.vec_id for r in out.collect()} == {0, 1, 2}
-
-
-def test_semdedup_persist_assigns_each_vector_once(spark, tmp_path):
-    """The cell-assignment UDF must run once per vector, not once per
-    aliased self-join side: both sides read the cell cache. (Uncached it
-    is even worse than 2x: the join-key isnotnull(cell) pushdown evaluates
-    the UDF a second time per side -> 4 Arrow passes.)"""
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(30)]
-    path = str(tmp_path / "sd.parquet")
-    spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(path)
-    d = spark.read.parquet(path)
-    cents = rng.standard_normal((4, 8))
-    out_p = dedup.semdedup(d, threshold=0.8, centroids=cents)
-    plan_p = out_p._jdf.queryExecution().executedPlan().toString()
-    assert plan_p.count("InMemoryTableScan") >= 2, plan_p
-    vecs = {i: np.asarray(v) for i, v in rows}
-    c = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    cell_of = {
-        k: int(np.argmax((v / np.linalg.norm(v)) @ c.T)) for k, v in vecs.items()
-    }
-    assert {r.vec_id for r in out_p.collect()} == _semdedup_numpy(vecs, cell_of, 0.8)
 
 
 # --- KMV corpus-overlap sketches -------------------------------------------
@@ -910,30 +471,6 @@ def test_cluster_representatives_aggregates_without_window(spark):
     # one mega cluster of 100: argmax quality (4.0) then min id among ties
     row = reps.collect()[0]
     assert (row.doc_id, row.cluster_id, row.cluster_size, row.quality) == (4, 0, 100, 4.0)
-
-
-def test_hash_near_duplicates_planted_masks(spark):
-    """Generic 64-bit hamming join: 0- and 2-bit perturbations pair, an
-    8-bit perturbation is a banding CANDIDATE (shares 3 of 4 blocks: the
-    flipped byte sits inside one 16-bit block) that exact verify rejects."""
-    base = 0x0123456789ABCDE
-    rows = [
-        (1, base),
-        (2, base),                      # hamming 0
-        (3, base ^ ((1 << 40) | 1)),    # hamming 2
-        (4, base ^ (0xFF << 20)),       # hamming 8 -> candidate, rejected
-        (5, 0x7FFABCDEF123456),         # unrelated
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, h long")
-    pairs = dedup.hash_near_duplicates(df, hash_col="h", max_hamming=3, blocks=4)
-    got = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
-    assert got == {(1, 2): 0, (1, 3): 2, (2, 3): 2}
-
-
-def test_hash_near_duplicates_validation():
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="max_hamming"):
-        dedup.hash_near_duplicates(None, hash_col="h", max_hamming=4, blocks=4)
 
 
 def test_minhash_dedup_signature_udf_runs_exactly_once(spark, docs):

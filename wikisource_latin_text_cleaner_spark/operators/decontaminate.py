@@ -12,8 +12,10 @@ re-derivable in SQL (the driver oracle does).
 
 Scale shape: benchmark gram sets are small (eval suites are ~10^5-10^7
 grams) -> broadcast semi-join, zero shuffle of the corpus side beyond the
-explode projection. If the benchmark outgrows broadcast range, the same
-plan degrades gracefully to a shuffled semi-join on uniform md5 gram keys.
+explode projection. Open limit: the join forces ``F.broadcast``, which
+overrides ``autoBroadcastJoinThreshold``, so a benchmark gram set past the
+executors' broadcast budget fails the job instead of falling back to a
+shuffled semi-join.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine.
+"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard.
 
 The reference's only dedup is last-write-wins by filename during dataset
 merges (Text Cleaner/step7_create_merged_datasets.py:62-66) -- made explicit
@@ -10,15 +9,13 @@ Scale design notes:
   - signatures are computed in Arrow-batched pandas UDFs (numpy; one pass
     per batch), so the only shuffles are the band-bucket join (keys are
     ~uniform by construction -> no skew) and the final semi-join;
-  - candidate generation is band-bucket equality (classic MinHash-LSH /
-    SimHash banding), never an O(n^2) cross join. Every symmetric family
-    (MinHash, SimHash/hamming, winnowing, embedding bands, SemDeDup cells)
-    keys its rows and calls the one self-join, ``_band_pairs``; only the
-    incremental MinHash probe (new batch against a ledger) writes its own;
+  - candidate generation is MinHash-LSH band-bucket equality, never an
+    O(n^2) cross join. Every symmetric candidate search keys its rows and
+    calls the one self-join, ``_band_pairs``; only the incremental MinHash
+    probe (new batch against a ledger) writes its own;
   - verification stays JVM-side -- no Python in the pair loop -- and each
-    pair rule is written once: signature agreement (``_agreement``), exact
-    set Jaccard (``_pair_jaccard``), cosine from per-vector norms
-    (``similarity._dot`` / ``_norm``), ``bit_count`` of the simhash xor;
+    pair rule is written once: signature agreement (``_agreement``) and
+    exact set Jaccard (``_pair_jaccard``);
   - "canonical doc" = smallest id: among identical texts (``_smallest_id``)
     and among verified near-dups, where a row is dropped iff some verified
     duplicate has a smaller id (single-level transitivity, the standard
@@ -58,8 +55,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
-
-from .similarity import _dot, _norm, make_cell_udf, train_ivf_centroids
 
 
 def _persist_forced(df: DataFrame) -> DataFrame:
@@ -220,8 +215,8 @@ def _char_shingle_hashes(text: str, width: int = 5) -> np.ndarray:
     return np.unique(acc & np.int64(0x7FFFFFFFFFFFFFFF))
 
 
-#: Per-block element budget for signature kernels. Caps the transient
-#: (k x block) / (block x 64) matrices at ~32 MB so one outlier web document
+#: Per-block element budget for the MinHash kernel. Caps the transient
+#: (k x block) permutation matrix at ~32 MB so one outlier web document
 #: (a 1 M-char page would otherwise allocate ~0.5 GB in a single UDF call)
 #: cannot OOM an executor's Python worker. Same fix shape as the langid
 #: long-doc block processing (functions/langid.py:75-82).
@@ -268,9 +263,7 @@ _VECTOR_BYTE_CAP = 256
 
 
 def _token_hashes(text: str) -> np.ndarray:
-    """Full-width 64-bit FNV-1a per token (uint64): all 64 signature bits
-    carry signal. (An earlier version masked to 63 bits, permanently
-    zeroing votes for bit 63.)
+    """Full-width 64-bit FNV-1a per token (uint64).
 
     Vectorized across tokens: tokens are length-sorted so the set still
     active at byte position j is a contiguous prefix, and each step is three
@@ -311,28 +304,6 @@ def _token_hashes(text: str) -> np.ndarray:
     return out
 
 
-def _simhash64(text: str) -> int:
-    hashes = _token_hashes(text)
-    # block-wise vote accumulation: the (block x 64) bit matrix stays under
-    # the kernel budget regardless of document length. unpackbits over the
-    # little-endian byte view puts bit position b of each hash in column b
-    # -- one C call instead of 64 uint64 broadcast shifts (~20x faster).
-    votes = np.zeros(64, dtype=np.int64)
-    byte_view = np.ascontiguousarray(hashes).view(np.uint8).reshape(-1, 8)
-    for start in range(0, hashes.size, _KERNEL_BLOCK):
-        chunk = byte_view[start: start + _KERNEL_BLOCK]
-        ones = np.unpackbits(chunk, axis=1, bitorder="little").sum(
-            axis=0, dtype=np.int64
-        )
-        votes += 2 * ones - len(chunk)
-    sig = 0
-    for b in np.nonzero(votes > 0)[0]:
-        sig |= 1 << int(b)
-    # proper two's-complement fold to a Spark LongType (an earlier version
-    # subtracted 2^63, which CLEARED bit 63 instead of signing the value)
-    return sig - (1 << 64) if sig >= (1 << 63) else sig
-
-
 @F.pandas_udf(ArrayType(LongType()))
 def minhash_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _minhash_signature(t or "").tolist())
@@ -347,38 +318,7 @@ def word_minhash_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _word_minhash_signature(t or "").tolist())
 
 
-@F.pandas_udf(LongType())
-def simhash_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: _simhash64(t or ""))
-
-
-# -- winnowing (rolling-hash) fingerprints -----------------------------------
-
-def _winnow(text: str, k: int = 5, window: int = 4) -> list[int]:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
-    rolling k-gram hashes -> min of each sliding window -> distinct picks.
-    Guarantees any shared substring of length >= k + window - 1 contributes
-    at least one shared fingerprint."""
-    codes = np.frombuffer(text.lower().encode("utf-32-le"), dtype=np.uint32)
-    codes = codes.astype(np.int64)
-    if codes.size < k:
-        return []
-    acc = np.zeros(codes.size - k + 1, dtype=np.int64)
-    for i in range(k):
-        acc = acc * np.int64(1_000_003) + codes[i: codes.size - k + 1 + i]
-    acc &= np.int64(0x7FFFFFFFFFFFFFFF)
-    if acc.size < window:
-        return [int(acc.min())]
-    sw = np.lib.stride_tricks.sliding_window_view(acc, window)
-    return sorted(set(sw.min(axis=1).tolist()))
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def winnow_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: _winnow(t or ""))
-
-
-# -- the pair core: one self-join, Jaccard, cosine and smallest-id rule ------
+# -- the pair core: one self-join, Jaccard and smallest-id rule -------------
 
 def _band_pairs(keyed: DataFrame, *carry: str) -> DataFrame:
     """The package's one symmetric candidate self-join: ``(id, band_key,
@@ -408,85 +348,12 @@ def _pair_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
     return pairs.join(a, "id_a").join(b, "id_b").withColumn("jaccard", F.round(jac, 4))
 
 
-def _pair_cosine():
-    """Cosine of a ``_band_pairs(..., "v", "n")`` pair from the cached
-    per-vector norms, JVM-side, rounded to 6 dp before any compare."""
-    return F.round(_dot("v_a", "v_b") / (F.col("n_a") * F.col("n_b")), 6)
-
-
 def _smallest_id(df: DataFrame, key, id_col: str) -> DataFrame:
     """The rows of ``df`` whose ``id_col`` is the smallest among the rows
     sharing ``key`` (a column name or expression, e.g. a text hash): one
     hash groupBy and a semi-join on the id, lazy."""
     canon = df.groupBy(key).agg(F.min(id_col).alias(id_col))
     return df.join(canon.select(id_col), id_col, "left_semi")
-
-
-def winnowing_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_containment: float = 0.5,
-    max_df: float | None = 0.2,
-    min_shared_fingerprints: int = 2,
-) -> DataFrame:
-    """Near-dup pairs by winnowing-fingerprint containment (the MOSS scheme):
-    containment = shared / min(|fps_a|, |fps_b|) >= min_containment, with an
-    absolute floor of ``min_shared_fingerprints`` shared picks. The floor
-    guards the stop-fingerprint interaction: n_fp is counted AFTER the
-    max_df filter, so two boilerplate-heavy docs left with e.g. 2 surviving
-    fingerprints each must not be flagged from a single coincidental shared
-    pick.
-
-    Containment (not an absolute shared count) is what makes the verdict
-    scale-free: identical tiny-vocabulary docs winnow to few distinct
-    fingerprints but still hit containment 1.0, while large docs need
-    proportionally many matches.
-
-    ``max_df`` drops stop-fingerprints occurring in more than that fraction
-    of documents before the self-join -- the standard MOSS trick, and the
-    thing that keeps the fingerprint join from going quadratic on corpora
-    with a shared boilerplate vocabulary (measured: 500 jargon docs produce
-    117k raw candidate pairs without it). Costs one count() job when set.
-
-    Plan shape: fingerprint UDF -> explode -> [stop-fp filter] -> self-join
-    on fingerprint (uniform keys, no skew) -> pair-count agg -> containment
-    filter against per-doc fingerprint counts (two broadcastable joins).
-    """
-    # persisted: four consumers (stop-fp agg, sizes agg, both join sides)
-    # would otherwise re-run the winnow UDF per consumer
-    fps = _persist_forced(df.select(F.col(id_col).alias("id"),
-                                    F.explode(winnow_udf(text_col)).alias("fp")))
-    if max_df is not None:
-        n_docs = df.count()
-        # absolute floor of 5: a fingerprint in a handful of docs is the
-        # signal we're looking for, however small the corpus; only
-        # corpus-proportional boilerplate is stop-listed
-        cutoff = max(5.0, n_docs * max_df)
-        common = (
-            fps.groupBy("fp").agg(F.count("*").alias("df"))
-            .where(F.col("df") > cutoff)
-            .select("fp")
-        )
-        fps = fps.join(F.broadcast(common), "fp", "left_anti")
-    sizes = fps.groupBy("id").agg(F.count("*").alias("n_fp"))
-    shared = (
-        _band_pairs(fps.withColumnRenamed("fp", "band_key"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("shared_fingerprints"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_fp").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_fp").alias("n_b"))
-    return (
-        shared.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("shared_fingerprints") / F.least("n_a", "n_b"), 4),
-        )
-        .where(F.col("containment") >= min_containment)
-        .where(F.col("shared_fingerprints") >= min_shared_fingerprints)
-        .select("id_a", "id_b", "shared_fingerprints", "containment")
-    )
 
 
 # -- exact dedup (ref U2) ----------------------------------------------------
@@ -655,96 +522,6 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return kept
 
 
-# -- SimHash near-dup ---------------------------------------------------------
-
-def _simhash_block_exprs(sim_col, blocks: int) -> list:
-    """Split the 64-bit signature into ``blocks`` contiguous blocks (widths
-    differ by at most 1 when 64 % blocks != 0). The post-shift mask keeps
-    the arithmetic sign-extension of shiftright from leaking into any
-    block, including the top one."""
-    base, extra = divmod(64, blocks)
-    exprs, start = [], 0
-    for i in range(blocks):
-        width = base + (1 if i < extra else 0)
-        mask = (1 << width) - 1
-        exprs.append(F.shiftright(sim_col, start).bitwiseAND(F.lit(mask)))
-        start += width
-    return exprs
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by 64-bit SimHash block-combination banding (Manku et
-    al., WWW'07): split the signature into ``blocks`` blocks and key
-    candidates on every combination of (blocks - max_hamming) blocks. A
-    pair within ``max_hamming`` differs in at most max_hamming blocks, so
-    at least one combination matches -- candidate generation is EXHAUSTIVE
-    by pigeonhole at every setting. Verification is exact
-    (bit_count(xor) <= max_hamming, JVM-side).
-
-    ``blocks`` is the scale dial (SCALE.md "SimHash banding at 10^12"):
-      - blocks=4 (default): 4 single-block keys of 16 bits -- 65k buckets,
-        fine to ~10^8 docs;
-      - blocks=6: C(6,3)=20 keys of ~32 bits -- ~4x10^9 buckets, in-bucket
-        cardinality ~250 docs at 10^12, at 20x key-explosion cost.
-    Requires max_hamming < blocks <= 64.
-    """
-    if not (0 <= max_hamming < blocks <= 64):
-        raise ValueError("need 0 <= max_hamming < blocks <= 64")
-    sigs = df.select(F.col(id_col).alias("id"), simhash_udf(text_col).alias("sim"))
-    return hash_near_duplicates(
-        sigs, hash_col="sim", id_col="id",
-        max_hamming=max_hamming, blocks=blocks,
-    )
-
-
-def hash_near_duplicates(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
-    """Generic hamming near-dup join over a PRECOMPUTED 64-bit hash column
-    -- the banding core of ``simhash_near_duplicates``, factored out so any
-    64-bit signature joins the same way as text SimHash. Same Manku
-    block-combination banding (exhaustive by pigeonhole at every
-    (blocks, max_hamming) setting), same exact JVM-side
-    ``bit_count(xor)`` verification, same ``blocks`` scale dial -- see
-    simhash_near_duplicates' docstring for the 10^12-tier arithmetic.
-
-    Returns ``(id_a, id_b, hamming)`` pairs with hamming <= max_hamming.
-    """
-    if not (0 <= max_hamming < blocks <= 64):
-        raise ValueError("need 0 <= max_hamming < blocks <= 64")
-    from itertools import combinations
-
-    sigs = _persist_forced(
-        df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sim"))
-    )
-    block_exprs = _simhash_block_exprs(F.col("sim"), blocks)
-    keys = [
-        # combination index seeds the hash so equal block VALUES in
-        # different combinations never collide into one join key
-        F.hash(*(block_exprs[i] for i in combo), F.lit(ci))
-        for ci, combo in enumerate(combinations(range(blocks), blocks - max_hamming))
-    ]
-    bands_df = sigs.select(
-        "id", "sim", F.explode(F.array(*keys)).alias("band_key"),
-    )
-    return (
-        _band_pairs(bands_df, "sim")
-        .select("id_a", "id_b", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 # -- exact n-gram Jaccard (verification-grade) --------------------------------
 
 def ngram_jaccard_pairs(
@@ -871,60 +648,6 @@ def duplicate_clusters(
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 
-# -- embedding-cosine near-dup ------------------------------------------------
-
-def embedding_near_duplicates(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    planes: int = 12,
-    dim: int = 64,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by cosine >= threshold: ``bands`` independent
-    random-hyperplane signatures of ``planes`` bits each; any band equality
-    makes a candidate; exact JVM-side cosine verifies.
-
-    Recall math (SCALE.md): a pair at cosine c disagrees on one hyperplane
-    with p = arccos(c)/pi (~0.102 at c=0.95), so one ``planes``-bit band
-    matches with (1-p)^planes (~0.28 at planes=12) -- single-band banding
-    MISSES ~72% of threshold pairs. With bands=4 recall is 1-(1-0.28)^4
-    ~= 0.73; bands=8 ~= 0.93. ``planes`` is the in-bucket-cardinality dial:
-    set planes ~= log2(N / desired_bucket_size) at scale (e.g. 27 bits for
-    10^4-row buckets at 10^12), raising bands to hold recall.
-    """
-    # seeded per call: every call draws the same planes, whatever ran before
-    hyper = np.random.RandomState(1337).standard_normal((bands, planes, dim))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)).to_list())
-        weights = 1 << np.arange(planes, dtype=np.int64)
-        out = np.empty((mat.shape[0], bands), dtype=np.int64)
-        for b in range(bands):
-            bits = (mat @ hyper[b].T) > 0
-            # band index folded in so equal signatures in different bands
-            # never share a join key
-            out[:, b] = (bits * weights).sum(axis=1) * bands + b
-        return pd.Series(list(out))
-
-    # each vector's norm is cached next to its band keys, so the pair join
-    # computes only the dot product
-    sigs = _persist_forced(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                  _norm(F.col(vec_col)).alias("n"),
-                  F.explode(buckets_udf(vec_col)).alias("band_key"))
-    )
-    return (
-        _band_pairs(sigs, "v", "n")
-        .withColumn("cosine", _pair_cosine())
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 # -- corpus-level duplicate-line removal (CCNet/C4-style) ---------------------
 
 def corpus_line_dedup(
@@ -972,8 +695,10 @@ def corpus_line_dedup(
         groupBy(line).agg(min(struct(id,pos))) -- partial-aggregatable --
         instead of a row_number window, whose per-key sort would hotspot
         exactly on the heavy hitters this operator targets.
-    If the heavy set ever outgrows broadcast range the joins degrade
-    gracefully to shuffled joins on the uniform md5 keys.
+    Open limit: both heavy-set joins force ``F.broadcast``, which overrides
+    ``autoBroadcastJoinThreshold``, so a heavy set past the executors'
+    broadcast budget fails the job instead of falling back to a shuffled
+    join on the md5 keys (SCALE.md).
     """
 
     scope_sel = [F.col(scope_col).alias("_scope")] if scope_col else []
@@ -1047,61 +772,6 @@ def corpus_line_dedup(
         .select(*df.columns)
     )
     return untouched.select(*df.columns).unionByName(fixed)
-
-
-# -- SemDeDup: semantic dedup via cluster-local cosine (Abbas et al. 2023) ---
-
-def semdedup(
-    df: DataFrame,
-    n_cells: int = 32,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids=None,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): spherical k-means clusters the
-    embedding space, then ONLY within each cluster every vector with a
-    smaller-id neighbor at cosine >= ``threshold`` is dropped; survivors
-    are returned with all original columns. The keep rule is the
-    deterministic pairwise form (drop b iff exists a < b in the same cell
-    with cos(a,b) >= threshold) rather than the paper's random-per-group
-    pick -- same asymptotics, engine-portable, exactly SQL-re-derivable.
-
-    No reference precedent; task-brief scope (embedding-cosine near-dup at
-    corpus scale). Cluster-locality is the point: the O(n^2) cosine join
-    collapses to sum over cells of O(|cell|^2), and the cell id is the
-    shuffle/partition key -- the join never crosses cells. Centroid
-    training is similarity.train_ivf_centroids (bounded uniform sample,
-    constant driver memory); assignment is one vectorized Arrow batch
-    matmul per partition (similarity.make_cell_udf). The assigned frame is
-    persisted before the ``_band_pairs`` self-join on the cell (aliased
-    branches defeat exchange reuse); cosine itself is JVM-side
-    zip_with/aggregate on double-cast vectors, rounded to 6dp BEFORE the
-    threshold compare in both engines so boundary pairs cannot flap on
-    float noise.
-    """
-    if centroids is None:
-        centroids = train_ivf_centroids(df, n_cells=n_cells, vec_col=vec_col)
-    cell_udf = make_cell_udf(centroids)
-    # the cell is the band key; norms are computed ONCE per vector here
-    # (and cached with the cell): inside the pair join they would be
-    # re-evaluated per PAIR, tripling the per-pair array-aggregate work
-    # (5.1s -> 2.7s at sf0.1 together with a right-sized cell count)
-    cells = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .withColumn("band_key", cell_udf("v"))
-        .withColumn("n", _norm("v"))
-    )
-    dropped = (
-        _band_pairs(_persist_forced(cells), "v", "n")
-        .where(_pair_cosine() >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(dropped, id_col, "left_anti")
 
 
 # -- exact duplicated-span removal (Lee et al. 2021, ExactSubstr) -----------
