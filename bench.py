@@ -66,27 +66,18 @@ HEADLINE = (
     "pipeline_decisions",
     # added round 3 (totals are NOT comparable to earlier rounds' JSON;
     # per-query timings are): corpus-wide line dedup (explode + broadcast
-    # heavy set + affected-only rebuild) and corpus-trained LM (mapInPandas
-    # partial counts + JVM reduce + scoring UDF)
+    # heavy set + affected-only rebuild)
     "corpus_line_dedup",
-    "trained_perplexity",
     # added round 3, later: ExactSubstr duplicated-span removal
     "exact_span_dedup",
     # added round 3, later still: the Gopher repetition battery
-    # (Arrow-fused nine-fraction UDF), the DCLM-style distilled quality
-    # classifier (teacher labels -> NB training -> full re-score), and
-    # the KMV overlap sketch — representative of the final training-data
-    # surface
+    # (Arrow-fused nine-fraction UDF) and the KMV overlap sketch
     "gopher_repetition",
-    "quality_distill",
     "corpus_overlap_kmv",
     # snapshot-over-snapshot near-dup dedup against a signature ledger
     # (UDF signatures for both sides + LSH band probe + anti-join)
     "incremental_minhash",
-    # trained-model stages added late round 3: NB training + per-paragraph
-    # classification with the doc-level majority fold, and the Gopher
-    # rule-ablation single-pass report
-    "paragraph_langid",
+    # added late round 3: the Gopher rule-ablation single-pass report
     "gopher_ablation",
     # added round 3, session 2: jusText-style block extraction (Arrow
     # struct UDF over synthesized pages) and the pure-Catalyst outlink

@@ -106,8 +106,9 @@ def build_parser() -> argparse.ArgumentParser:
                    help="comma-separated output columns to physically "
                         "partition the data by (e.g. period,genre -- the "
                         "ref's sorted_texts/{period}/{genre}/ layout); "
-                        "requires classification unless --no-classify is "
-                        "omitted for those columns")
+                        "period/genre/confidence exist only when "
+                        "classification runs (do not combine with "
+                        "--no-classify)")
     p.add_argument("--stages", default="",
                    help="comma-separated scrub stage subset "
                         "(content,headings,orthography,final) -- re-run only "

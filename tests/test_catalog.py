@@ -1,4 +1,4 @@
-"""Table-IO abstraction: append + idempotent partition overwrite semantics."""
+"""Table-IO abstraction: appends and driver-local control-row writes."""
 
 from pyspark.sql import functions as F
 
@@ -11,22 +11,6 @@ def test_append_accumulates(spark, tmp_path):
     catalog.append(df, path, partition_by=("p",))
     catalog.append(df, path, partition_by=("p",))
     assert catalog.read_table(spark, path).count() == 20
-
-
-def test_overwrite_partitions_is_idempotent(spark, tmp_path):
-    path = str(tmp_path / "t")
-    base = spark.range(100).withColumn("p", F.pmod("id", F.lit(4)))
-    catalog.append(base, path, partition_by=("p",))
-
-    # rewrite only partition p=1 with new content; p=0,2,3 untouched
-    repl = spark.range(5).withColumn("id", F.col("id") + 1000).withColumn("p", F.lit(1))
-    catalog.overwrite_partitions(repl, path, partition_by=("p",))
-    out = catalog.read_table(spark, path)
-    assert out.where("p = 1").count() == 5
-    assert out.where("p != 1").count() == 75
-    # idempotent: same overwrite again -> same state
-    catalog.overwrite_partitions(repl, path, partition_by=("p",))
-    assert catalog.read_table(spark, path).count() == 80
 
 
 def test_control_plane_frames_plan_as_local_table_scan(spark):

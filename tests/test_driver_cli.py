@@ -132,7 +132,7 @@ def test_driver_flat_mode_output_layout(tmp_path, spark):
     assert spark.read.parquet(os.path.join(outd, "metrics")).count() > 0
 
 
-def test_driver_url_blocklist_and_bloom_variant(tmp_path):
+def test_driver_url_blocklist(tmp_path):
     """--url-blocklist gates docs through the spark-submit surface. (The
     table-sized form is API-only, a PipelineConfig.url_blocklist
     DataFrame; its parity with the inline list lives in

@@ -203,8 +203,9 @@ def test_incremental_minhash_plan_shape(spark):
 
 
 def test_incremental_minhash_collapse_parity(spark):
-    """collapse_identical is lossless: same kept set with it on or off,
-    including identical-text clusters and cross/within-batch near-dups."""
+    """The identical-signature collapse is lossless: an identical-text
+    cluster keeps its smallest id, and cross/within-batch near-dups still
+    drop."""
     seen_src = spark.createDataFrame([(50, OTHER)], ["doc_id", "text"])
     seen = seen_src.select(
         F.col("doc_id").alias("id"), dedup.minhash_udf("text").alias("sig")
@@ -212,11 +213,8 @@ def test_incremental_minhash_collapse_parity(spark):
     rows = [(1, BASE), (2, BASE), (3, BASE), (4, NEAR), (5, OTHER),
             (6, "totally fresh standalone content about gardening tips")]
     new = spark.createDataFrame(rows, ["doc_id", "text"])
-    kept_on, _ = dedup.incremental_minhash_dedup(
-        new, seen, threshold=0.8, collapse_identical=True)
-    kept_off, _ = dedup.incremental_minhash_dedup(
-        new, seen, threshold=0.8, collapse_identical=False)
-    assert _ids(kept_on) == _ids(kept_off) == [1, 6]
+    kept, _ = dedup.incremental_minhash_dedup(new, seen, threshold=0.8)
+    assert _ids(kept) == [1, 6]
 
 
 def test_incremental_minhash_word_signature(spark):

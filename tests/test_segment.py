@@ -1,7 +1,5 @@
 """Passage segmentation + vocabulary operators."""
 
-from pyspark.sql import functions as F
-
 from wikisource_latin_text_cleaner_spark.operators import segment
 
 
@@ -55,57 +53,3 @@ def test_vocabulary(spark):
         ("beta", 3), ("alpha", 1)]
     plan = freq._jdf.queryExecution().executedPlan().toString()
     assert "distinct" not in plan.lower()
-
-
-def test_paragraph_langid_majority_and_mixing(spark):
-    """Plumbing invariants with a deterministic fake classifier: majority
-    by count with lang-asc tiebreak, blank paragraphs skipped, 6dp
-    mixed_frac."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    from wikisource_latin_text_cleaner_spark.operators import segment
-
-    @pandas_udf("string")
-    def fake_lang(texts):
-        import pandas as pd
-        return pd.Series(["en" if "fox" in t else "la" for t in texts])
-
-    rows = [
-        # 2 la + 1 en -> majority la, mixed 1/3
-        (1, "arma virumque cano\n\nthe fox runs\n\ntroiae qui primus"),
-        # blank middle paragraph is skipped entirely
-        (2, "gallia est omnis\n\n   \n\ndivisa in partes"),
-        # 1 en + 1 la -> tie -> lang-asc: en wins
-        (3, "the fox\n\nlupus est"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in
-           segment.paragraph_langid(df, fake_lang).collect()}
-    assert out[1]["majority_lang"] == "la"
-    assert out[1]["n_paras"] == 3 and out[1]["n_langs"] == 2
-    assert out[1]["mixed_frac"] == round(1 - 2 / 3, 6)
-    assert out[2]["majority_lang"] == "la"
-    assert out[2]["n_paras"] == 2 and out[2]["n_langs"] == 1
-    assert out[2]["mixed_frac"] == 0.0
-    assert out[3]["majority_lang"] == "en"  # tie breaks lang-asc
-    assert out[3]["mixed_frac"] == 0.5
-
-
-def test_paragraph_langid_plan_shape(spark):
-    """One Arrow classify pass, NO window (the majority fold is a
-    partial-aggregatable min_by, not a rank)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from wikisource_latin_text_cleaner_spark.operators import segment
-
-    @pandas_udf("string")
-    def fake_lang(texts):
-        import pandas as pd
-        return pd.Series(["x"] * len(texts))
-
-    df = spark.createDataFrame([(1, "a\n\nb")], ["doc_id", "text"])
-    plan = (segment.paragraph_langid(df, fake_lang)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan
-    assert plan.count("ArrowEvalPython") == 1

@@ -1,10 +1,11 @@
 """Thin table-IO abstraction: Iceberg when available, parquet-dir fallback.
 
 The production target is an Iceberg catalog (BASELINE.json:input_hint); this
-sandbox has no Iceberg runtime jar, so the same append/overwrite semantics
-are provided over plain parquet directories (SURVEY.md §7.2). All writers use
-dynamic partition overwrite so re-running a partition subset is idempotent --
-the storage half of the checkpoint/resume contract (plans/checkpoints.py).
+sandbox has no Iceberg runtime jar, so appends go to plain parquet
+directories (SURVEY.md §7.2). The bucketed output is written by
+``plans/checkpoints.run_resumable``, which picks static overwrite for a full
+run and dynamic partition overwrite for a resume, so re-running a bucket
+subset is idempotent.
 
 Driver-built control rows (the checkpoint manifest, per-run metrics rows)
 skip Spark: ``write_rows`` writes them as one ``pyarrow`` parquet file per
@@ -83,17 +84,3 @@ def append(df: DataFrame, table_or_path: str, partition_by: tuple = ()) -> None:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_or_path)
 
-
-def overwrite_partitions(df: DataFrame, table_or_path: str,
-                         partition_by: tuple) -> None:
-    """Replace only the partitions present in `df` (idempotent re-runs)."""
-    if is_iceberg(df.sparkSession, table_or_path):
-        df.writeTo(table_or_path).overwritePartitions()
-        return
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(table_or_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

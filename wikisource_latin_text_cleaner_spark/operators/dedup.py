@@ -505,19 +505,17 @@ def minhash_near_duplicates(
 
 
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  threshold: float = 0.8, signature_udf=None,
-                  collapse_identical: bool = True) -> DataFrame:
+                  threshold: float = 0.8, signature_udf=None) -> DataFrame:
     """Drop every doc that near-duplicates a smaller-id doc.
 
     Delegates to ``incremental_minhash_dedup`` with an empty ledger: the
     identical single-level-transitivity survivor set (pinned by the
-    pair-formulation parity test), plus the ``signature_udf`` /
-    ``collapse_identical`` scale dials that defuse the low-entropy LSH
+    pair-formulation parity test), plus the ``signature_udf`` scale dial
+    and the identical-signature collapse that defuse the low-entropy LSH
     candidate flood (see that docstring and BENCH/STRESS.md).
     """
     kept, _ = incremental_minhash_dedup(
-        df, None, text_col, id_col, threshold,
-        signature_udf=signature_udf, collapse_identical=collapse_identical,
+        df, None, text_col, id_col, threshold, signature_udf=signature_udf,
     )
     return kept
 
@@ -969,7 +967,6 @@ def incremental_minhash_dedup(
     bands: int = 16,
     rows_per_band: int = 4,
     signature_udf=None,
-    collapse_identical: bool = True,
     unpersist_prior=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup-dedup a new snapshot against itself and a signature ledger.
@@ -992,13 +989,13 @@ def incremental_minhash_dedup(
     -- measured: the 1M-page synthetic corpus floods char-shingle LSH but
     runs clean on word 3-grams, BENCH/STRESS.md).
 
-    ``collapse_identical`` (default True) first collapses new docs with
-    IDENTICAL signatures to their smallest id via a linear hash-groupBy,
-    so a boilerplate cluster of m byte-similar docs costs m rows instead
-    of m^2/bands band-join pairs. Lossless by construction: identical
-    signatures give agreement 1 with each other (>= any threshold) and
-    IDENTICAL estimates against every third signature, so the surviving
-    representative reproduces exactly the pairs its clones would have.
+    New docs with IDENTICAL signatures are first collapsed to their
+    smallest id via a linear hash-groupBy, so a boilerplate cluster of m
+    byte-similar docs costs m rows instead of m^2/bands band-join pairs.
+    Lossless by construction: identical signatures give agreement 1 with
+    each other (>= any threshold) and IDENTICAL estimates against every
+    third signature, so the surviving representative reproduces exactly
+    the pairs its clones would have.
 
     Scale shape: signatures are computed ONCE per new doc (Arrow UDF over
     the batch, cached) and candidates come from LSH band-bucket equality
@@ -1035,22 +1032,18 @@ def incremental_minhash_dedup(
             F.col(id_col).alias("id"), sig_udf(text_col).alias("sig")
         ))
 
-        if collapse_identical:
-            canon = new_sigs.groupBy("sig").agg(F.min("id").alias("id"))
-            # forced, like new_sigs: a lazy persist here measured WORSE
-            # (2-core wall 39.5 -> 67 s quiet-window) -- the band-side
-            # consumers race and each re-runs the collapse groupBy
-            # (SortAggregate over 64-long arrays, the costly part), so the
-            # one count() barrier is the cheaper side of the trade.
-            survivors = _persist_forced(
-                new_sigs.join(canon.select("id"), "id", "left_semi")
-            )
-            collapse_dropped = new_sigs.join(
-                canon.select("id"), "id", "left_anti"
-            ).select(F.col("id").alias(id_col))
-        else:
-            survivors = new_sigs
-            collapse_dropped = None
+        canon = new_sigs.groupBy("sig").agg(F.min("id").alias("id"))
+        # forced, like new_sigs: a lazy persist here measured WORSE
+        # (2-core wall 39.5 -> 67 s quiet-window) -- the band-side
+        # consumers race and each re-runs the collapse groupBy
+        # (SortAggregate over 64-long arrays, the costly part), so the
+        # one count() barrier is the cheaper side of the trade.
+        survivors = _persist_forced(
+            new_sigs.join(canon.select("id"), "id", "left_semi")
+        )
+        collapse_dropped = new_sigs.join(
+            canon.select("id"), "id", "left_anti"
+        ).select(F.col("id").alias(id_col))
 
         new_bands = _bands(survivors, bands, rows_per_band)
         left = new_bands.select(
@@ -1073,9 +1066,8 @@ def incremental_minhash_dedup(
             .where(_agreement(bands * rows_per_band) >= threshold)
             .select(F.col("id_a").alias(id_col))
             .distinct()
+            .unionByName(collapse_dropped)
         )
-        if collapse_dropped is not None:
-            dup_ids = dup_ids.unionByName(collapse_dropped)
         dup_ids = _persist_forced(dup_ids)
         kept = new_df.join(dup_ids, id_col, "left_anti")
         kept_sigs = new_sigs.join(

@@ -206,8 +206,8 @@ def domain_quality_gate(
     round_to: int = 6,
 ) -> DataFrame:
     """Domain-LEVEL quality filtering: aggregate a per-document quality
-    score (any Catalyst column -- stopword ratio, distilled classifier
-    probability, a 0/1 rule verdict) to the registrable domain and drop
+    score (any Catalyst column -- stopword ratio, a perplexity score
+    or a 0/1 rule verdict) to the registrable domain and drop
     EVERY page of a domain whose mean falls outside ``[min_mean,
     max_mean]`` or that has fewer than ``min_docs`` pages. This is the
     measured counterpart of a static domain blocklist: spam/SEO farms are

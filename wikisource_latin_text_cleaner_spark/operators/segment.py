@@ -112,48 +112,3 @@ def vocabulary(
         vocab = vocab.orderBy(F.desc("n_occurrences"), "word").limit(top_n)
     return vocab
 
-
-def paragraph_langid(
-    df: DataFrame,
-    classify_udf,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delimiter: str = "\n\n",
-) -> DataFrame:
-    """Per-paragraph language ID with a doc-level mixing report (the CCNet
-    practice of classifying at paragraph granularity, Wenzek et al. 2020
-    sec 3.2: web pages routinely embed a second language -- nav chrome,
-    quotes, code comments -- that a whole-doc classifier averages away).
-    ``classify_udf`` is any text->label pandas UDF (use
-    lm.make_nb_classifier_udf for the corpus-trained NB). Returns one row
-    per doc: ``majority_lang`` (most paragraphs; ties break lang-asc),
-    ``n_paras`` (non-blank), ``n_langs`` (distinct predicted), and
-    ``mixed_frac`` = 1 - majority_share, 6dp-rounded -- the column a
-    mixing gate thresholds on.
-
-    Scale shape: explode -> one Arrow UDF pass over paragraphs -> counts
-    partial-aggregate on (id, lang) -> per-doc fold via min_by on the
-    (-count, lang) struct (partial-aggregatable; NO window, nothing sorts
-    the corpus). Skew-free: keys are doc ids.
-    """
-    paras = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(F.split(F.col(text_col), delimiter, -1)).alias("_p"),
-        )
-        .where(F.trim(F.col("_p")) != "")
-    )
-    scored = paras.select("_id", classify_udf(F.col("_p")).alias("_plang"))
-    counts = scored.groupBy("_id", "_plang").agg(F.count(F.lit(1)).alias("_cnt"))
-    return (
-        counts.groupBy("_id")
-        .agg(
-            F.min_by(
-                "_plang", F.struct((-F.col("_cnt")).alias("nc"), F.col("_plang"))
-            ).alias("majority_lang"),
-            F.sum("_cnt").alias("n_paras"),
-            F.count(F.lit(1)).alias("n_langs"),
-            F.round(1 - F.max("_cnt") / F.sum("_cnt"), 6).alias("mixed_frac"),
-        )
-        .withColumnRenamed("_id", id_col)
-    )
