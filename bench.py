@@ -47,14 +47,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: synthetic corpus size for the docs/sec headline (scrub is ~165 docs/s/core)
 PAGES_ROWS = int(os.environ.get("BENCH_PAGES_ROWS", "20000"))
 
-#: representative spread: relational aggs/joins, cube, window top-k, text
-#: heuristics, dedup (exact + minhash + jaccard), and the
-#: full-fidelity pipeline decisions over the sf documents table.
+#: representative spread: cube, text heuristics, dedup (exact + minhash +
+#: jaccard), and the full-fidelity pipeline decisions over the sf
+#: documents table.
 HEADLINE = (
-    "pricing_summary",
-    "revenue_by_nation",
-    "orders_by_segment",
-    "events_top_users",
     "lang_source_cube",
     "token_counts",
     "stopword_ratio",
@@ -90,9 +86,6 @@ HEADLINE = (
     "doc_line_dedup",
     "oov_rate",
     "mojibake_stats",
-    # capstone composition: Gopher gate -> exact dedup -> hash split ->
-    # per-split totals, one chained plan
-    "training_recipe",
 )
 
 

@@ -140,73 +140,6 @@ def test_minhash_band_candidates_are_bucketed_not_allpairs(spark):
     assert dedup.minhash_band_candidates(df).count() == 0
 
 
-def test_duplicate_clusters_merges_chains(spark):
-    """a~b and b~c (but never a~c verified) must land in ONE cluster with
-    cluster_id = min id -- the case single-level transitivity misses."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9), (10, 11), (9, 11)], "id_a long, id_b long"
-    )
-    got = {r.id: r.cluster_id for r in dedup.duplicate_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 10: 7, 11: 7}
-
-
-def test_duplicate_clusters_long_path_converges(spark):
-    """A 40-node path must converge under the convergence check (not a
-    fixed round count), in O(log diameter) rounds thanks to pointer
-    jumping."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
-    )
-    got = {r.id: r.cluster_id
-           for r in dedup.duplicate_clusters(pairs, max_iter=50).collect()}
-    assert set(got.values()) == {0} and len(got) == 41
-    assert dedup.duplicate_clusters.last_rounds <= 9
-
-
-def test_duplicate_clusters_thousand_node_chain_round_bound(spark):
-    """The documented worst-case bound: a planted 1,000-node adversarial
-    chain (diameter 1,000) converges within the DEFAULT max_iter because
-    pointer jumping at least doubles the minimum's reach per round
-    (~log2(1000) + slack rounds), and every node lands in one cluster."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000)], "id_a long, id_b long"
-    )
-    got = {r.id: r.cluster_id for r in dedup.duplicate_clusters(pairs).collect()}
-    assert set(got.values()) == {0} and len(got) == 1001
-    assert dedup.duplicate_clusters.last_rounds <= 14
-
-
-def test_duplicate_clusters_raises_instead_of_silent_partial(spark):
-    """Hitting max_iter mid-propagation must fail loudly, never return
-    half-merged clusters."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000)], "id_a long, id_b long"
-    )
-    with pytest.raises(ValueError, match="did not converge"):
-        dedup.duplicate_clusters(pairs, max_iter=3)
-
-
-def test_hash_split_stable_and_partitioning_invariant(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    d = spark.range(0, 2000).selectExpr("id AS doc_id")
-    s1 = {r.doc_id: r.split for r in
-          sampling.hash_split(d, "doc_id", {"a": 0.5, "b": 0.5}).collect()}
-    s2 = {r.doc_id: r.split for r in
-          sampling.hash_split(d.repartition(13), "doc_id",
-                              {"a": 0.5, "b": 0.5}).collect()}
-    assert s1 == s2  # same key -> same split regardless of partitioning
-    frac_a = sum(1 for v in s1.values() if v == "a") / len(s1)
-    assert 0.45 < frac_a < 0.55
-
-    import pytest as _pytest
-
-    # over-full sums, and negative fractions that a valid sum would hide
-    for bad in ({"a": 0.9, "b": 0.9}, {"a": -0.2, "b": 0.7, "c": 0.5}):
-        with _pytest.raises(ValueError):
-            sampling.hash_split(d, "doc_id", bad)
-
-
 def test_domain_cap_keeps_k_smallest(spark):
     from wikisource_latin_text_cleaner_spark.operators import sampling
 
@@ -317,68 +250,21 @@ def test_signature_kernels_bounded_memory_on_huge_doc():
     assert r.returncode == 0 and "OK" in r.stdout, r.stderr[-2000:]
 
 
-def test_stratified_sample_nested_and_deterministic(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
+def test_word_ngrams_col_short_doc_empty(spark):
+    """A doc shorter than n words yields no grams (not a descending
+    F.sequence); exactly n words yields the one whole-doc gram."""
+    from wikisource_latin_text_cleaner_spark.functions import quality
 
-    rows = [(i, ["en", "la", "zh"][i % 3]) for i in range(3000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    small = sampling.stratified_sample(df, "lang", {"en": 0.3}, default_fraction=0.2)
-    big = sampling.stratified_sample(df, "lang", {"en": 0.6}, default_fraction=0.4)
-    s_ids = {r["doc_id"] for r in small.collect()}
-    b_ids = {r["doc_id"] for r in big.collect()}
-    assert s_ids <= b_ids, "nested-sample property violated"
-    # deterministic across invocations
-    again = {r["doc_id"] for r in
-             sampling.stratified_sample(df, "lang", {"en": 0.3},
-                                        default_fraction=0.2).collect()}
-    assert again == s_ids
-    # per-stratum fractions roughly honored (md5 buckets are uniform)
-    by_lang = {r["lang"]: r["n"] for r in
-               small.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert abs(by_lang["en"] / 1000 - 0.3) < 0.05
-    assert abs(by_lang.get("la", 0) / 1000 - 0.2) < 0.05
-
-
-def test_stratified_sample_rejects_bad_fractions(spark):
-    from wikisource_latin_text_cleaner_spark.operators import sampling
-
-    df = spark.createDataFrame([(1, "en")], "doc_id long, lang string")
-    with pytest.raises(ValueError):
-        sampling.stratified_sample(df, "lang", {"en": 1.5})
-    with pytest.raises(ValueError):
-        sampling.stratified_sample(df, "lang", {}, default_fraction=-0.1)
-
-
-def test_flag_contaminated_thirteen_gram_rule(spark):
-    from wikisource_latin_text_cleaner_spark.operators import decontaminate
-
-    words13 = " ".join(f"w{i}" for i in range(13))
-    words12 = " ".join(f"w{i}" for i in range(12))
-    docs = spark.createDataFrame(
-        [
-            (0, "prefix words here " + words13 + " and a suffix"),  # shares 13-gram
-            (1, "prefix words here " + words12 + " then different ending entirely now"),
-            (2, "completely unrelated text with plenty of its own words to use here"),
-            (3, "tiny doc"),                                        # < 13 words: never flags
-        ],
+    df = spark.createDataFrame(
+        [(0, "only five words right here"),
+         (1, " ".join(f"w{i}" for i in range(13)))],
         "doc_id long, text string",
     )
-    bench = spark.createDataFrame(
-        [(words13 + " trailing benchmark context words go here",)], "text string"
-    )
-    out = {r["doc_id"]: r["is_contaminated"]
-           for r in decontaminate.flag_contaminated(docs, bench).collect()}
-    assert out == {0: True, 1: False, 2: False, 3: False}
-
-
-def test_word_ngrams_col_short_doc_empty(spark):
-    from wikisource_latin_text_cleaner_spark.operators import decontaminate
-
-    df = spark.createDataFrame([("only five words right here",)], "text string")
-    got = df.select(
-        decontaminate.word_ngrams_col(F.col("text"), 13).alias("g")
-    ).collect()[0]["g"]
-    assert got == []
+    got = {r["doc_id"]: r["g"] for r in df.select(
+        "doc_id", quality.word_ngrams(F.col("text"), 13).alias("g")
+    ).collect()}
+    assert got[0] == []
+    assert got[1] == [" ".join(f"w{i}" for i in range(13))]
 
 
 # --- KMV corpus-overlap sketches -------------------------------------------
@@ -435,42 +321,6 @@ def test_kmv_overlap_validation(spark):
         textstats.kmv_overlap(df, "grp", F.col("item"), k=0)
     with pytest.raises(ValueError, match="prefilter_frac"):
         textstats.kmv_overlap(df, "grp", F.col("item"), prefilter_frac=1.5)
-
-
-def test_cluster_representatives_argmax_and_singletons(spark):
-    """Highest-quality doc wins its cluster; quality ties break to the
-    smallest id; docs in no cluster survive as their own singletons."""
-    df = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.9), (7, 0.1), (8, 0.5), (20, 0.0)],
-        "doc_id long, q double",
-    )
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)], "id long, cluster_id long"
-    )
-    reps = dedup.cluster_representatives(df, clusters, F.col("q"))
-    got = {r.cluster_id: (r.doc_id, r.cluster_size, r.quality)
-           for r in reps.collect()}
-    # cluster 1: 2 and 3 tie at 0.9 -> smallest id (2) kept, size 3
-    # cluster 7: 8 beats 7, size 2; doc 20 unclustered -> singleton
-    assert got == {1: (2, 3, 0.9), 7: (8, 2, 0.5), 20: (20, 1, 0.0)}
-
-
-def test_cluster_representatives_aggregates_without_window(spark):
-    """The mega-cluster defense: the plan must be a partial-aggregable
-    HashAggregate, never a Window sort that co-locates a whole cluster
-    in one task."""
-    df = spark.createDataFrame([(i, float(i % 5)) for i in range(100)],
-                               "doc_id long, q double")
-    clusters = spark.createDataFrame(
-        [(i, 0) for i in range(100)], "id long, cluster_id long"
-    )
-    reps = dedup.cluster_representatives(df, clusters, F.col("q"))
-    plan = reps._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "HashAggregate" in plan or "SortAggregate" in plan or "ObjectHashAggregate" in plan
-    # one mega cluster of 100: argmax quality (4.0) then min id among ties
-    row = reps.collect()[0]
-    assert (row.doc_id, row.cluster_id, row.cluster_size, row.quality) == (4, 0, 100, 4.0)
 
 
 def test_minhash_dedup_signature_udf_runs_exactly_once(spark, docs):

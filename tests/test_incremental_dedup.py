@@ -269,25 +269,6 @@ def test_latest_capture_plan_has_no_window(spark):
     assert "Window" not in plan and "partial" in plan.lower()
 
 
-# -- minhash estimator calibration ---------------------------------------------
-
-def test_minhash_estimate_audit(spark):
-    rows = [(1, BASE), (2, NEAR), (3, OTHER), (4, BASE)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {(r["id_a"], r["id_b"]): r
-           for r in dedup.minhash_estimate_audit(df, threshold=0.8).collect()}
-    # the identical-text pair is estimated AND exactly 1.0 with zero error
-    assert out[(1, 4)]["est_jaccard"] == 1.0
-    assert out[(1, 4)]["exact_jaccard"] == 1.0
-    assert out[(1, 4)]["abs_err"] == 0.0
-    # the one-char-edit pair: both numbers high, error is their gap
-    r = out[(1, 2)]
-    assert r["exact_jaccard"] > 0.8
-    assert r["abs_err"] == round(abs(r["est_jaccard"] - r["exact_jaccard"]), 4)
-    # unrelated doc 3 pairs with nothing
-    assert not any(3 in k for k in out)
-
-
 def test_incremental_exact_bucketed_ledger_is_shuffle_free(spark, tmp_path):
     """SCALE.md claim, verified: a ledger stored bucketed by content_hash
     joins with NO Exchange above its scan -- only the (small) new snapshot

@@ -15,16 +15,17 @@ Scale design notes:
     probe (new batch against a ledger) writes its own;
   - verification stays JVM-side -- no Python in the pair loop -- and each
     pair rule is written once: signature agreement (``_agreement``) and
-    exact set Jaccard (``_pair_jaccard``);
-  - "canonical doc" = smallest id: among identical texts (``_smallest_id``)
-    and among verified near-dups, where a row is dropped iff some verified
-    duplicate has a smaller id (single-level transitivity, the standard
-    near-dup-dedup approximation -- no iterative connected components job
-    needed).
+    exact n-gram set Jaccard (``ngram_jaccard_pairs``);
+  - one survivor rule, "canonical doc" = smallest id: among identical
+    texts (``_smallest_id``) and among verified near-dups, where a row is
+    dropped iff some verified duplicate has a smaller id (single-level
+    transitivity, the standard near-dup-dedup approximation -- no
+    iterative connected components job needed).
 
-Eager-evaluation / cache-lifecycle contract (applies to EVERY near-dup
-function here): each one runs Spark jobs at CALL time to fill its internal
-caches (see ``_persist_forced`` for why a lazy persist loses the
+Eager-evaluation / cache-lifecycle contract (applies to EVERY function
+here that caches -- each pins its caches through ``_persist_forced``, none
+through a lazy ``persist``): each one runs Spark jobs at CALL time to fill
+its internal caches (see ``_persist_forced`` for why a lazy persist loses the
 multi-consumer race), so building a plan you never execute, adding filters
 before your action, or calling ``.explain()`` is not free. There is no
 opt-out. The caches are intentionally NOT auto-unpersisted -- the returned
@@ -318,7 +319,7 @@ def word_minhash_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _word_minhash_signature(t or "").tolist())
 
 
-# -- the pair core: one self-join, Jaccard and smallest-id rule -------------
+# -- the pair core: one self-join and the smallest-id rule ------------------
 
 def _band_pairs(keyed: DataFrame, *carry: str) -> DataFrame:
     """The package's one symmetric candidate self-join: ``(id, band_key,
@@ -335,17 +336,6 @@ def _band_pairs(keyed: DataFrame, *carry: str) -> DataFrame:
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", *(f"{c}_{s}" for c in carry for s in "ab"))
     )
-
-
-def _pair_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
-    """``pairs`` joined to both members' ``(id, set)`` arrays of distinct
-    elements, plus ``jaccard``: the exact set Jaccard, JVM-side
-    array_intersect/array_union, rounded to 4 dp before any compare."""
-    a = sets.select(F.col("id").alias("id_a"), F.col("set").alias("set_a"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("set").alias("set_b"))
-    jac = (F.size(F.array_intersect("set_a", "set_b"))
-           / F.size(F.array_union("set_a", "set_b")))
-    return pairs.join(a, "id_a").join(b, "id_b").withColumn("jaccard", F.round(jac, 4))
 
 
 def _smallest_id(df: DataFrame, key, id_col: str) -> DataFrame:
@@ -532,10 +522,11 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact word n-gram Jaccard for candidate (id_a, id_b) pairs.
 
-    JVM-side: tokenize once per doc, build distinct n-gram arrays, then
-    array_intersect/array_union on the joined pairs.
+    JVM-side: tokenize once per doc, build distinct n-gram arrays (one
+    forced cache read by both join probes), then array_intersect/array_union
+    on the joined pairs, rounded to 4 dp before the threshold compare.
     """
-    grams = df.select(
+    grams = _persist_forced(df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(
             F.transform(
@@ -548,102 +539,17 @@ def ngram_jaccard_pairs(
                 ),
             )
         ).alias("set"),
-    )
+    ))
+    a = grams.select(F.col("id").alias("id_a"), F.col("set").alias("set_a"))
+    b = grams.select(F.col("id").alias("id_b"), F.col("set").alias("set_b"))
+    jac = (F.size(F.array_intersect("set_a", "set_b"))
+           / F.size(F.array_union("set_a", "set_b")))
     return (
-        _pair_jaccard(candidate_pairs, _persist_forced(grams))
+        candidate_pairs.join(a, "id_a").join(b, "id_b")
+        .withColumn("jaccard", F.round(jac, 4))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-# -- duplicate clustering (connected components over near-dup pairs) ----------
-
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph: (id, cluster_id)
-    with cluster_id = the smallest doc id reachable from id. One row per
-    node that appears in at least one pair.
-
-    Single-level transitivity (drop b if (a,b) verified) under-merges
-    chains a~b~c where (a,c) was never verified; cluster-level dedup keeps
-    exactly one doc per component. Algorithm: min-label propagation with
-    pointer jumping (hash-to-min shape) -- each round does
-    label(v) <- min(label(v), min label of neighbors) and then
-    label(v) <- min(label(v), label(label(v))), so the minimum's reach at
-    least doubles per round: O(log diameter) rounds instead of O(diameter),
-    and a 1,000-node adversarial chain converges in ~10 rounds (planted
-    test). Each round is one shuffle join on uniform id keys plus a light
-    label self-join; the driver-side loop runs O(log d) tiny Spark jobs,
-    NOT per-row work; convergence is checked with a count of changed
-    labels. ``max_iter`` stays as a loud backstop (the default 20 covers a
-    diameter of ~2^19); the rounds the last call actually took are exposed
-    as ``duplicate_clusters.last_rounds`` for audit/metrics.
-    """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges.union(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).distinct()
-    edges.persist()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least("label", F.coalesce("nlabel", "label")).alias("label"),
-                (F.col("nlabel") < F.col("label")).alias("changed"),
-            )
-        )
-        # localCheckpoint truncates the lineage so plan size stays O(1)
-        # across iterations instead of doubling each round; it also keeps
-        # the pointer-jump self-join below from recomputing the edge join
-        stepped = stepped.localCheckpoint(eager=True)
-        # pointer jump: chase one level of the label forest. Every label
-        # value is itself a node id in ``stepped`` (labels are mins of
-        # initial ids), so the self-join is total for moved labels.
-        parent = stepped.select(
-            F.col("id").alias("p_id"), F.col("label").alias("p_label")
-        )
-        new_labels = (
-            stepped.join(parent, stepped.label == parent.p_id, "left")
-            .select(
-                "id",
-                F.least("label", F.coalesce("p_label", "label")).alias("label"),
-                (
-                    F.col("changed") | (F.col("p_label") < F.col("label"))
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.where(F.col("changed")).limit(1).count()
-        labels = new_labels.drop("changed")
-        if changed == 0:
-            break
-    else:
-        # labels are still moving: returning them would silently mis-cluster
-        edges.unpersist()
-        raise ValueError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds (graph diameter exceeds 2^max_iter); raise max_iter"
-        )
-    edges.unpersist()
-    duplicate_clusters.last_rounds = rounds
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 
 # -- corpus-level duplicate-line removal (CCNet/C4-style) ---------------------
@@ -790,11 +696,11 @@ def exact_span_dedup(
     but the first.
 
     Output adds two columns: ``kept_text`` -- the surviving word stream
-    (the operator is defined over the \\w+ lowercase token stream, the
-    same normalization the decontamination gate uses, so punctuation /
-    casing / spacing are NOT preserved; Lee et al. likewise operate on
-    the token stream) -- and ``n_removed_words``. Rows keep all original
-    columns; docs shorter than g words are untouched by construction.
+    (the operator is defined over the lowercase \\w+ token stream, so
+    punctuation / casing / spacing are NOT preserved; Lee et al. likewise
+    operate on the token stream) -- and ``n_removed_words``. Rows keep all
+    original columns; docs shorter than g words are untouched by
+    construction.
 
     The reference has no corpus-level operators; task-brief scope. Scale
     shape mirrors corpus_line_dedup: one explode to (doc, pos, md5(gram))
@@ -1124,105 +1030,4 @@ def latest_capture(
             ).alias("_r")
         )
         .select(url_col, "_r.*")
-    )
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def char_shingle_udf(texts: pd.Series) -> pd.Series:
-    """Distinct char-5-shingle hashes per doc (the minhash kernel's input
-    universe), exposed for exact-Jaccard verification and auditing."""
-    return texts.map(lambda t: _char_shingle_hashes(t or "").tolist())
-
-
-def minhash_estimate_audit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Estimator calibration: for every band-candidate pair the MinHash
-    agreement deems >= ``threshold``, compute the EXACT char-5-shingle
-    Jaccard (the quantity the signature estimates) and the absolute error.
-    This is how the 64-permutation estimator's boundary behavior is
-    measured instead of assumed -- a k=64 signature has ~1/sqrt(64) =
-    0.125 standard error per pair, so pairs near the threshold carry real
-    misclassification risk that this audit quantifies per corpus.
-
-    Scale shape: the word-n-gram verifier's (both call ``_pair_jaccard``)
-    -- the exact check joins the (tiny) verified pair set to the
-    shingle-array table twice and runs array_intersect/array_union
-    JVM-side; the corpus-sized work is the one Arrow UDF pass producing
-    shingle arrays, shared across both join probes via the cache. Run on a
-    SAMPLE at 10^12 docs: calibration needs thousands of pairs, not the
-    full corpus.
-    """
-
-    pairs = minhash_near_duplicates(
-        df, text_col, id_col, threshold, bands, rows_per_band,
-    )
-    sh = _persist_forced(
-        df.select(F.col(id_col).alias("id"), char_shingle_udf(text_col).alias("set"))
-    )
-    return _pair_jaccard(pairs, sh).select(
-        "id_a", "id_b", "est_jaccard",
-        F.col("jaccard").alias("exact_jaccard"),
-        F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 4).alias("abs_err"),
-    )
-
-
-# -- quality-aware cluster retention ------------------------------------------
-
-def cluster_representatives(
-    df: DataFrame,
-    clusters: DataFrame,
-    quality,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Quality-aware near-dup retention (the RefinedWeb/FineWeb step that
-    follows clustering): keep exactly ONE document per duplicate cluster --
-    the highest-``quality`` one, ties broken by smallest id -- and keep
-    every unclustered document as its own singleton cluster.
-
-    ``clusters`` is ``duplicate_clusters`` output ``(id, cluster_id)``;
-    ``quality`` is any deterministic numeric Column over ``df`` (e.g.
-    ``quality.stopword_ratio(F.col("text"))`` or a Gopher composite).
-
-    Scale design -- this is deliberately an AGGREGATION, not a window:
-    ``row_number() OVER (PARTITION BY cluster_id ...)`` must co-locate and
-    sort every member of a cluster in one task, so the pathological web
-    case (one boilerplate page near-duplicated 10^8 times -> one mega
-    cluster) turns into one straggler task holding 10^8 rows.
-    ``max(struct(q, -id))`` instead partial-aggregates: each map task
-    reduces its slice of the mega cluster to a single row before the
-    shuffle, so the reduce side sees at most one row per cluster per
-    upstream partition regardless of skew. Struct max compares fields
-    left-to-right, so ``(q, -id)`` = argmax quality, then argmin id.
-
-    Returns one row per cluster: ``(id_col, cluster_id, cluster_size,
-    quality)`` with quality as computed (un-rounded).
-
-    No reference precedent (the reference keeps last-write-wins only,
-    Text Cleaner/step7_create_merged_datasets.py:62-66); task-brief
-    extension.
-    """
-    labeled = (
-        df.join(
-            clusters.withColumnRenamed("id", id_col), id_col, "left"
-        ).withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
-    )
-    best = labeled.groupBy("cluster_id").agg(
-        F.max(
-            F.struct(
-                quality.alias("q"), (-F.col(id_col)).alias("neg_id")
-            )
-        ).alias("best"),
-        F.count("*").alias("cluster_size"),
-    )
-    return best.select(
-        (-F.col("best.neg_id")).cast("long").alias(id_col),
-        "cluster_id",
-        "cluster_size",
-        F.col("best.q").alias("quality"),
     )

@@ -143,8 +143,12 @@ class QualityFilterPipeline:
     def _apply_quality_gates(self, df: DataFrame) -> DataFrame:
         """Gopher quality/repetition gates over the CLEANED text (gate
         discipline of ``_flip``; dropped rows keep their clean_text for the
-        quarantine sink). clean_text is NULL for already-dropped rows, so
-        the ladder evaluates to NULL there and no reason is appended."""
+        quarantine sink). Both gates evaluate every row, already-dropped
+        ones included: the early drops (null_text, min_size, index_toc,
+        pre_clean_len, post_clean_len) carry clean_text == "", and the
+        extension, langid, perplexity and URL-gate drops carry the full
+        cleaned text. What stops a second reason on an already-dropped row
+        is ``_flip``'s ``keep`` guard, not the clean_text value."""
         cfg = self.config
         if not cfg.gopher_gate and not cfg.gopher_repetition_gate:
             return df

@@ -1,10 +1,9 @@
-"""Corpus sampling operators: deterministic hash-based train/val/test
-splits, stratified samples, per-domain quota capping and the domain-level
-quality gate.
+"""Corpus sampling operators: the deterministic md5 bucket, per-domain
+quota capping and the domain-level quality gate.
 
 No reference precedent (the reference emits whole corpora); these are the
-standard last-mile ops a pretraining pipeline runs after the quality filter
-(task brief scope). All are Catalyst plans, deterministic under re-runs and
+web-pipeline ops that run after the per-document quality filter (task
+brief scope). All are Catalyst plans, deterministic under re-runs and
 resumes (a requirement the engine's checkpointing already imposes: same
 input -> same bytes), and exactly replicable in ANSI SQL, so each carries a
 DuckDB oracle in the driver contract.
@@ -15,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: bucket space for split assignment; 10^4 gives 0.01% split granularity
+#: bucket space of split_bucket_col; 10^4 gives 0.01% granularity
 SPLIT_BUCKETS = 10_000
 
 
@@ -31,34 +30,6 @@ def split_bucket_col(key_col) -> F.Column:
         F.conv(F.substring(F.md5(key_col.cast("string")), 1, 8), 16, 10)
         .cast("long") % SPLIT_BUCKETS
     )
-
-
-def hash_split(df: DataFrame, key_col: str, fractions: dict) -> DataFrame:
-    """Assign every row a stable split label by hashed key.
-
-    ``fractions`` maps label -> fraction (each in [0, 1], summing to
-    (0, 1]; any remainder falls into the LAST label). Rows with the same
-    key always land in the same split, across runs, engines, and cluster
-    sizes -- the property random() sampling cannot give and training
-    pipelines need (no train/test leakage through re-shuffles).
-    """
-    for name, frac in fractions.items():
-        if not 0.0 <= frac <= 1.0:
-            raise ValueError(f"fraction for {name!r} must be in [0, 1], got {frac}")
-    total = sum(fractions.values())
-    if not 0 < total <= 1.0 + 1e-9:
-        raise ValueError(f"fractions must sum to (0, 1], got {total}")
-    bucket = split_bucket_col(F.col(key_col))
-    expr = None
-    cum = 0.0
-    labels = list(fractions.items())
-    for name, frac in labels[:-1]:
-        cum += frac
-        cond = bucket < int(round(cum * SPLIT_BUCKETS))
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = labels[-1][0]
-    split = F.lit(last) if expr is None else expr.otherwise(last)
-    return df.withColumn("split", split)
 
 
 #: refuse to literal-inline more heavy domains than this (an isin() with
@@ -160,40 +131,6 @@ def domain_cap(
         .drop("_rn")
     )
     return light.unionByName(heavy_capped)
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict,
-    key_col: str = "doc_id",
-    default_fraction: float = 0.0,
-) -> DataFrame:
-    """Deterministic per-stratum downsampling: keep a stable
-    ``fractions[stratum]`` share of each stratum (e.g. per-language mixing
-    ratios for a training corpus), falling back to ``default_fraction`` for
-    unlisted strata.
-
-    Same md5-bucket mechanism as hash_split, so (a) the SAME row survives
-    across runs, engines, and cluster sizes, (b) a row kept at fraction f
-    is also kept at every fraction > f (nested samples: growing a mix never
-    churns the subset already shipped), and (c) the selection is exactly
-    re-derivable in SQL -- the driver oracle re-computes it in DuckDB.
-    Pure Catalyst projection: no shuffle, no RNG, no state.
-    """
-    for name, frac in fractions.items():
-        if not 0.0 <= frac <= 1.0:
-            raise ValueError(f"fraction for {name!r} must be in [0, 1], got {frac}")
-    if not 0.0 <= default_fraction <= 1.0:
-        raise ValueError(f"default_fraction must be in [0, 1], got {default_fraction}")
-    bucket = split_bucket_col(F.col(key_col))
-    threshold = F.lit(int(round(default_fraction * SPLIT_BUCKETS)))
-    for name, frac in fractions.items():
-        threshold = (
-            F.when(F.col(strata_col) == name, int(round(frac * SPLIT_BUCKETS)))
-            .otherwise(threshold)
-        )
-    return df.where(bucket < threshold)
 
 
 def domain_quality_gate(

@@ -4,7 +4,7 @@ dataset views -- the relational surface of the engine.
 Maps the reference's reporting aggregations (SURVEY.md §2.6-2.8) onto
 Catalyst: A1 size stats, A2 keep/drop counters, A3 classification cube,
 A5 per-dataset totals, A6/O2 top-k, A7 success rate, U1 dataset views,
-plus tokenization/fingerprinting for the training-data stack.
+plus whitespace token counting and fingerprinting.
 """
 
 from __future__ import annotations
@@ -12,18 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: BPE-ish token regex: words, numbers, or single punctuation marks
-TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 
 def token_count_col(text_col) -> F.Column:
     """Whitespace token count (JVM-side)."""
     return F.size(F.filter(F.split(F.trim(text_col), r"\s+"), lambda w: w != F.lit("")))
-
-
-def bpe_ish_token_count_col(text_col) -> F.Column:
-    """Token count under the BPE-ish regex (regexp_count, JVM-side)."""
-    return F.regexp_count(text_col, F.lit(TOKEN_PATTERN))
 
 
 def fingerprint_col(text_col) -> F.Column:
