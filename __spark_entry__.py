@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wikisource_latin_text_cleaner_spark.functions import quality, udfs  # noqa: E402
+from wikisource_latin_text_cleaner_spark.functions import quality, rules, udfs  # noqa: E402
 from wikisource_latin_text_cleaner_spark.functions import urls as urlsx  # noqa: E402
 from wikisource_latin_text_cleaner_spark.functions import html as htmlx  # noqa: E402
 from wikisource_latin_text_cleaner_spark.operators import (  # noqa: E402
@@ -886,10 +886,11 @@ def q_gopher_ablation(spark, sf):
     """Gopher rule-ablation report (textstats.gopher_ablation): per rule,
     how many docs fail it at all and for how many it is the SOLE failing
     rule -- the marginal cost a threshold retune would win back, which the
-    first-fail ladder cannot express. One fused Catalyst projection, a
-    single-row partial agg, and a constant-size stack; the oracle
-    re-derives every flag from the shared _GOPHER_FEAT_CTES and replays
-    both counts with an 8-arm unpivot."""
+    first-fail ladder cannot express. One pandas UDF over the engine's
+    Gopher ladder (quality.gopher_flags_udf), a single-row partial agg,
+    and a constant-size stack; the oracle re-derives every flag from the
+    shared _GOPHER_FEAT_CTES and replays both counts with an 8-arm
+    unpivot."""
     return textstats.gopher_ablation(_docs(spark, sf), "text")
 
 
@@ -986,20 +987,22 @@ def q_corpus_overlap(spark, sf):
 
 def q_gopher_quality_gate(spark, sf):
     """Gopher document-quality rule battery (Rae et al. 2021 sec. A1.1;
-    functions/quality.py:gopher_first_fail): word-count bounds, mean-word-
+    functions/rules.py:gopher_rule_flags): word-count bounds, mean-word-
     length bounds, symbol ratio, bullet/ellipsis line fractions,
     alphabetic-word fraction, distinct-stopword minimum. Per doc the FIRST
     failing rule in paper order (NULL -> 'keep'); the report is the verdict
-    histogram with mean word count. One fused Catalyst projection, no
-    Python, no shuffle beyond the final tiny groupBy; the oracle re-derives
-    every rule and the first-fail ladder in SQL."""
+    histogram with mean word count. The flags come from one pandas UDF over
+    the engine's ladder (quality.gopher_flags_udf) and the first-fail is a
+    CASE over them; no shuffle beyond the final tiny groupBy. The oracle
+    re-derives every rule and the first-fail ladder in SQL."""
     d = _docs(spark, sf, spread=True)
-    ff = quality.gopher_first_fail(F.col("text"))
+    flags = d.select(
+        quality.gopher_flags_udf()(F.col("text")).alias("f"),
+        quality.n_words(F.col("text")).alias("nw"),
+    )
+    ff = quality.first_fail_from_flags(F.col("f"))
     return (
-        d.select(
-            F.coalesce(ff, F.lit("keep")).alias("verdict"),
-            quality.n_words(F.col("text")).alias("nw"),
-        )
+        flags.select(F.coalesce(ff, F.lit("keep")).alias("verdict"), "nw")
         .groupBy("verdict")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1010,20 +1013,18 @@ def q_gopher_quality_gate(spark, sf):
 
 def q_gopher_repetition(spark, sf):
     """Gopher repetition battery (Rae et al. 2021 table A1; functions/
-    quality.py:top_ngram_char_fraction / dup_ngram_char_fraction): per-lang
-    averages of the top-{2,3,4}-gram and duplicated-{5,10}-gram character
-    fractions plus the count of docs tripping ANY of the paper's nine
-    thresholds. Computed by the Arrow-fused battery UDF
-    (quality.repetition_fracs_udf, one pass for all nine; bit-identical
-    to the Catalyst sort+fold twins by the 3-way parity test, ~25x
-    faster when the whole battery is needed). The oracle re-derives all
-    nine metrics via UNNEST + window argmax in SQL, so a tie-break or
-    guard divergence surfaces as a value mismatch."""
+    rules.py:_repetition_fracs_py): per-lang averages of the top-{2,3,4}-
+    gram and duplicated-{5,10}-gram character fractions plus the count of
+    docs tripping ANY of the paper's nine thresholds. Computed by the
+    battery's pandas UDF (quality.repetition_fracs_udf, one pass for all
+    nine). The oracle re-derives all nine metrics via UNNEST + window
+    argmax in SQL, so a tie-break or guard divergence surfaces as a value
+    mismatch."""
     d = _docs(spark, sf, spread=True)
     fracs = d.select(
         "lang", quality.repetition_fracs_udf()(F.col("text")).alias("g")
     ).select("lang", "g.*")
-    flagged = quality.repetition_flag_from_fracs(F.struct(*quality.REPETITION_FIELDS))
+    flagged = quality.repetition_flag_from_fracs(F.struct(*rules.REPETITION_FIELDS))
     return fracs.groupBy("lang").agg(
         F.round(F.avg("top2"), 6).alias("avg_top2"),
         F.round(F.avg("top3"), 6).alias("avg_top3"),

@@ -229,8 +229,9 @@ def main() -> None:
     # one very long line — BENCH_r03.json lost its headline `value` to that
     # tail capture. Persist the full record to a file, print it for humans,
     # then print a short totals-only JSON line LAST so the tail always
-    # parses as complete JSON no matter where truncation lands.
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    # parses as complete JSON no matter where truncation lands. The file
+    # goes to the git-ignored .bench/, so a run leaves the tree clean.
+    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench")
     os.makedirs(bench_dir, exist_ok=True)
     with open(os.path.join(bench_dir, "last_run.json"), "w") as f:
         json.dump(full, f, indent=1)
@@ -247,7 +248,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "pipeline_docs_per_sec": docs_per_sec,
                 "calibration_mops": {"before": cal_before, "after": cal_after},
-                "full_record": "BENCH/last_run.json",
+                "full_record": ".bench/last_run.json",
             }
         )
     )
@@ -264,7 +265,7 @@ def main() -> None:
                 "cpus": CPUS,
                 "n_queries": len(timings),
                 "pipeline_docs_per_sec": docs_per_sec,
-                "full_record": "BENCH/last_run.json",
+                "full_record": ".bench/last_run.json",
             }
         )
     )

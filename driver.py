@@ -15,11 +15,11 @@ Local smoke (same code path; spark-submit not required):
         --master "local[8]"
 
 Stages (one declarative DataFrame chain, SURVEY.md §3.4): read -> [salted
-repartition] -> fused scrub/verdict/langid/perplexity/PII Arrow UDF -> URL
-and Gopher gates -> run counters and per-bucket counts (df.observe) ->
-bucket-checkpointed write (quarantine rows kept, never deleted) -> per-bucket
-counts files -> manifest append -> per-run metrics rows append. Resume
-(--resume) skips buckets whose manifest rows exist.
+repartition] -> fused scrub/verdict/langid/perplexity/PII/Gopher Arrow UDF
+-> URL gate -> Gopher verdict -> run counters and per-bucket counts
+(df.observe) -> bucket-checkpointed write (quarantine rows kept, never
+deleted) -> per-bucket counts files -> manifest append -> per-run metrics
+rows append. Resume (--resume) skips buckets whose manifest rows exist.
 
 The bucket write is the run's only Spark job besides the input's schema
 inference. The counters ride that write, so the run record and the metrics
@@ -173,7 +173,6 @@ def main(argv: list[str] | None = None) -> int:
         rule_metrics=args.rule_metrics,
         url_blocklist=comma_list(args.url_blocklist) or None,
         max_url_kw_hits=args.max_url_kw_hits,
-        gopher_gate=args.gopher_gate,
         gopher_opts=(
             {"min_words": args.gopher_min_words} if args.gopher_gate else None
         ),

@@ -74,7 +74,8 @@ def test_quality_exprs_survive(corpus):
         quality.stopword_ratio(F.col("text")).alias("sw"),
         quality.symbol_ratio(F.col("text")).alias("sym"),
         quality.dup_line_char_fraction(F.col("text")).alias("dup"),
-        quality.gopher_first_fail(F.col("text")).alias("gate"),
+        quality.first_fail_from_flags(
+            quality.gopher_flags_udf()(F.col("text"))).alias("gate"),
     )
     assert out.count() == corpus.count()
     fr = corpus.select(quality.repetition_fracs_udf()(F.col("text")).alias("r"))

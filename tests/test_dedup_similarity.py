@@ -250,23 +250,6 @@ def test_signature_kernels_bounded_memory_on_huge_doc():
     assert r.returncode == 0 and "OK" in r.stdout, r.stderr[-2000:]
 
 
-def test_word_ngrams_col_short_doc_empty(spark):
-    """A doc shorter than n words yields no grams (not a descending
-    F.sequence); exactly n words yields the one whole-doc gram."""
-    from wikisource_latin_text_cleaner_spark.functions import quality
-
-    df = spark.createDataFrame(
-        [(0, "only five words right here"),
-         (1, " ".join(f"w{i}" for i in range(13)))],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["g"] for r in df.select(
-        "doc_id", quality.word_ngrams(F.col("text"), 13).alias("g")
-    ).collect()}
-    assert got[0] == []
-    assert got[1] == [" ".join(f"w{i}" for i in range(13))]
-
-
 # --- KMV corpus-overlap sketches -------------------------------------------
 
 def test_kmv_overlap_exact_below_k(spark):

@@ -1,8 +1,9 @@
-"""Gopher gate / repetition battery, C4 line cleaning and PII redaction:
-Spark Catalyst expressions vs pure-Python twins on planted and randomized
-inputs. The corpus oracles check the aggregate surface; these pin
-per-document semantics (tie-breaks, guards, rule order, chain order) on
-inputs the synthetic corpus cannot produce."""
+"""Gopher ladder / repetition battery, C4 line cleaning and PII redaction:
+the engine's definitions (pure Python in rules.py, wrapped as pandas UDFs in
+quality.py; Catalyst expressions for C4 and PII) against brute-force
+twins and planted inputs. The corpus oracles check the aggregate surface;
+these pin per-document semantics (tie-breaks, guards, tokenization, rule
+order, chain order) on inputs the synthetic corpus cannot produce."""
 
 import random
 import re
@@ -10,10 +11,10 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from wikisource_latin_text_cleaner_spark.functions import pii, quality
+from wikisource_latin_text_cleaner_spark.functions import pii, quality, rules
 
 
-# -- python twins -----------------------------------------------------------
+# -- brute-force twins ------------------------------------------------------
 
 def py_top_ngram(t: str, n: int) -> float:
     ws = re.findall(r"\w+", t.lower())
@@ -34,6 +35,19 @@ def py_dup_ngram(t: str, n: int) -> float:
     return sum(cnt * len(g) for g, cnt in c.items() if cnt >= 2) / len(t)
 
 
+NS_TOP = sorted(rules.GOPHER_TOP_NGRAM_MAX)
+NS_DUP = sorted(rules.GOPHER_DUP_NGRAM_MAX)
+
+
+def py_fracs(t: str | None) -> tuple:
+    """The nine battery fractions, brute force, in REPETITION_FIELDS order
+    (python's unicode \\w: only valid on ASCII-word texts)."""
+    if t is None:
+        return (0.0,) * len(rules.REPETITION_FIELDS)
+    return tuple([py_top_ngram(t, n) for n in NS_TOP]
+                 + [py_dup_ngram(t, n) for n in NS_DUP])
+
+
 TEXTS = [
     "b a b a c",
     "x y x y z w z w",                      # count tie: 'x y' must win over 'z w'
@@ -44,20 +58,32 @@ TEXTS = [
     "aa bb aa bb aa bb aa bb cc dd cc dd",
 ]
 
+#: Java \w is ASCII-only, so only "ascii token ascii token" tokenizes
+#: (text length 41): top2 'ascii token' x2, top3 a count tie won by the
+#: smaller 'ascii token ascii', top4 the whole tail, too few words for dup
+CJK = "你好 世界 你好 世界 你好 世界 ascii token ascii token"
+CJK_FRACS = (2 * 11 / 41, 17 / 41, 23 / 41) + (0.0,) * len(NS_DUP)
+
+
+def udf_fracs(spark, texts) -> dict:
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    g = quality.repetition_fracs_udf()(F.col("text"))
+    return {r["i"]: tuple(r["g"][f] for f in rules.REPETITION_FIELDS)
+            for r in df.select("i", g.alias("g")).collect()}
+
 
 def test_top_and_dup_ngram_match_python(spark):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(TEXTS)], "i long, text string"
-    )
-    cols = ["i"]
-    for n in (2, 3, 5):
-        cols.append(F.round(quality.top_ngram_char_fraction(F.col("text"), n), 10).alias(f"t{n}"))
-        cols.append(F.round(quality.dup_ngram_char_fraction(F.col("text"), n), 10).alias(f"d{n}"))
-    got = {r["i"]: r for r in df.select(*cols).collect()}
-    for i, t in enumerate(TEXTS):
-        for n in (2, 3, 5):
-            assert abs(got[i][f"t{n}"] - py_top_ngram(t, n)) < 1e-9, (i, n, t)
-            assert abs(got[i][f"d{n}"] - py_dup_ngram(t, n)) < 1e-9, (i, n, t)
+    """The repetition battery, direct and through repetition_fracs_udf
+    (bit-identical), on the planted tie, guard, empty, NULL and CJK cases
+    against the brute-force twins."""
+    texts = TEXTS + [None, CJK]
+    want = [py_fracs(t) for t in TEXTS] + [py_fracs(None), CJK_FRACS]
+    via_udf = udf_fracs(spark, texts)
+    for i, t in enumerate(texts):
+        got = rules._repetition_fracs_py(t)
+        assert via_udf[i] == got, (i, t)
+        for f, g, w in zip(rules.REPETITION_FIELDS, got, want[i]):
+            assert abs(g - w) < 1e-12, (i, f, t)
 
 
 def test_ngram_fractions_randomized_vs_python(spark):
@@ -67,77 +93,45 @@ def test_ngram_fractions_randomized_vs_python(spark):
         " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 60)))
         for _ in range(40)
     ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, text string"
-    )
-    cols = ["i"] + [
-        F.round(quality.top_ngram_char_fraction(F.col("text"), n), 10).alias(f"t{n}")
-        for n in range(2, 11)
-    ] + [
-        F.round(quality.dup_ngram_char_fraction(F.col("text"), n), 10).alias(f"d{n}")
-        for n in range(2, 11)
-    ]
-    got = {r["i"]: r for r in df.select(*cols).collect()}
+    via_udf = udf_fracs(spark, texts)
     for i, t in enumerate(texts):
-        for n in range(2, 11):
-            assert abs(got[i][f"t{n}"] - py_top_ngram(t, n)) < 1e-9, (i, n)
-            assert abs(got[i][f"d{n}"] - py_dup_ngram(t, n)) < 1e-9, (i, n)
+        assert via_udf[i] == rules._repetition_fracs_py(t), i
+        for f, g, w in zip(rules.REPETITION_FIELDS, via_udf[i], py_fracs(t)):
+            assert abs(g - w) < 1e-9, (i, f)
 
 
-def test_repetition_fracs_udf_three_way_parity(spark):
-    """The Arrow-fused battery (repetition_fracs_udf) must be BIT-identical
-    to the Catalyst fold exprs and the Python twins on every planted edge
-    case plus randomized texts -- exact ==, no tolerance: the UDF replays
-    the fold's tokenization, tie-break, and double-addition order."""
+def test_repetition_flag_matches_battery(spark):
+    """The repetition verdict, as rules.repetition_fails and as
+    repetition_flag_from_fracs over the UDF struct, is 'any brute-force
+    fraction above its bound', on planted and randomized texts with both
+    outcomes present."""
     rng = random.Random(43)
     vocab = ["spark", "data", "row", "the", "a", "join", "merge", "scan"]
-    texts = TEXTS + [
+    texts = TEXTS + [None, CJK] + [
         " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 80)))
         for _ in range(40)
-    ] + [None, "你好 世界 你好 世界 你好 世界 ascii token ascii token"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, text string"
-    )
-    fused = {
-        r["i"]: r
-        for r in df.select(
-            "i", quality.repetition_fracs_udf()(F.col("text")).alias("g")
-        ).select("i", "g.*").collect()
-    }
-    ns = sorted(quality.GOPHER_TOP_NGRAM_MAX) + sorted(quality.GOPHER_DUP_NGRAM_MAX)
-    expr_cols = ["i"] + [
-        quality.top_ngram_char_fraction(F.col("text"), n).alias(f"top{n}")
-        for n in sorted(quality.GOPHER_TOP_NGRAM_MAX)
-    ] + [
-        quality.dup_ngram_char_fraction(F.col("text"), n).alias(f"dup{n}")
-        for n in sorted(quality.GOPHER_DUP_NGRAM_MAX)
-    ]
-    exprs = {r["i"]: r for r in df.select(*expr_cols).collect()}
+    ] + [" ".join(f"w{i}" for i in range(60))]
+    bounds = ([rules.GOPHER_TOP_NGRAM_MAX[n] for n in NS_TOP]
+              + [rules.GOPHER_DUP_NGRAM_MAX[n] for n in NS_DUP])
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    flag = quality.repetition_flag_from_fracs(
+        quality.repetition_fracs_udf()(F.col("text")))
+    via_udf = {r["i"]: r["f"] for r in df.select("i", flag.alias("f")).collect()}
+    seen = set()
     for i, t in enumerate(texts):
-        for f in quality.REPETITION_FIELDS:
-            assert fused[i][f] == exprs[i][f], (i, f, t)
-        if t:  # python twins (unicode-\w) only match on ascii-word texts
-            if all(ord(c) < 128 for c in t):
-                for n in sorted(quality.GOPHER_TOP_NGRAM_MAX):
-                    assert abs(fused[i][f"top{n}"] - py_top_ngram(t, n)) < 1e-12
-                for n in sorted(quality.GOPHER_DUP_NGRAM_MAX):
-                    assert abs(fused[i][f"dup{n}"] - py_dup_ngram(t, n)) < 1e-12
-    # the flag built from the struct equals the Catalyst flag expr
-    flags = df.select(
-        "i",
-        quality.repetition_flag_from_fracs(
-            quality.repetition_fracs_udf()(F.col("text"))
-        ).alias("fu"),
-        quality.gopher_repetition_flag(F.col("text")).alias("fc"),
-    ).collect()
-    for r in flags:
-        assert bool(r["fu"] or False) == bool(r["fc"] or False), r["i"]
+        fracs = CJK_FRACS if t == CJK else py_fracs(t)
+        want = any(f > b for f, b in zip(fracs, bounds))
+        assert rules.repetition_fails(t) == want == via_udf[i], (i, t)
+        seen.add(want)
+    assert seen == {True, False}
 
 
 def test_gopher_first_fail_rule_order(spark):
     """One planted doc per rule, each failing exactly its rule first; plus a
-    doc passing everything. Word counts are kept >= 50 downstream of the
-    word-count rules so later rules are actually reached."""
+    doc passing everything, checked on rules.gopher_first_fail and on the
+    CASE over gopher_flags_udf. Word counts are kept >= 50 downstream of
+    the word-count rules so later rules are actually reached. Words split
+    on Java \\s only: an em space joins, a vertical tab splits."""
     fifty = " ".join(["word the a nice text"] * 12)          # 60 words, has stopwords
     cases = [
         ("short text here.", "too_few_words"),
@@ -149,17 +143,21 @@ def test_gopher_first_fail_rule_order(spark):
         (" ".join(["word"] * 30 + ["1234"] * 25), "alpha_words"),
         (" ".join(["zzzz"] * 60), "stopwords"),
         (fifty, None),
+        (fifty.replace(" ", "\u2003"), "too_few_words"),     # one 'word'
+        (fifty.replace(" ", "\x0b"), None),
     ]
     df = spark.createDataFrame(
         [(i, t) for i, (t, _) in enumerate(cases)], "i long, text string"
     )
+    flags = quality.gopher_flags_udf()(F.col("text"))
     got = {
         r["i"]: r["ff"]
         for r in df.select(
-            "i", quality.gopher_first_fail(F.col("text")).alias("ff")
+            "i", quality.first_fail_from_flags(flags).alias("ff")
         ).collect()
     }
-    for i, (_t, want) in enumerate(cases):
+    for i, (t, want) in enumerate(cases):
+        assert rules.gopher_first_fail(t) == want, (i, want)
         assert got[i] == want, (i, got[i], want)
 
 
@@ -209,58 +207,66 @@ def test_pii_redact_matches_python_scrub(spark):
 
 
 def test_pipeline_gopher_gates_differential(spark):
-    """Gate-on vs gate-off pipeline runs over the same pages: already-
-    dropped rows are untouched, keep=true rows failing the ladder (or the
-    repetition battery) flip with exactly one appended 'gopher:*' reason,
-    and passing rows are byte-identical. Thresholds are tuned so both the
-    dropped and surviving sets are non-empty."""
+    """Gate-on vs gate-off pipeline runs over the same pages, the gated run
+    also blocking one URL domain. Already-dropped rows are untouched. A
+    kept row on the blocked domain gets exactly 'url_blocklist' and no
+    Gopher reason, even when it fails a Gopher rule. Other kept rows
+    failing the ladder (or, passing it, the repetition battery) flip with
+    exactly one appended 'gopher:*' reason, and passing rows are unchanged.
+    Expectations come from the rules functions on the gate-off run's
+    clean_text. Thresholds are tuned so both the dropped and surviving sets
+    are non-empty."""
     import __spark_entry__ as em
     from wikisource_latin_text_cleaner_spark.operators.pipeline import (
         PipelineConfig,
         QualityFilterPipeline,
     )
 
-    pages = em._docs_as_pages(em._docs(spark, "/root/testdata/sf0.001"))
+    # urls doc://site0<k>.example/<doc_id>: four registrable domains
+    docs = em._docs(spark, "/root/testdata/sf0.001").withColumn(
+        "source", F.format_string("site%02d.example", F.col("doc_id") % 4))
+    pages = em._docs_as_pages(docs)
     base_cfg = PipelineConfig(langid=False, classify=False)
     gate_cfg = PipelineConfig(
         langid=False,
         classify=False,
-        gopher_gate=True,
         gopher_opts={"min_words": 10},
         gopher_repetition_gate=True,
+        url_blocklist=("site00.example",),
     )
     base = (
         QualityFilterPipeline(base_cfg)
         .transform(pages)
         .select("url", "keep", "drop_reasons", "clean_text")
+        .collect()
     )
     gated = {
         r["url"]: r
         for r in QualityFilterPipeline(gate_cfg).transform(pages).collect()
     }
-    expect = base.select(
-        "url",
-        "keep",
-        "drop_reasons",
-        quality.gopher_first_fail(F.col("clean_text"), min_words=10).alias("ff"),
-        quality.gopher_repetition_flag(F.col("clean_text")).alias("rep"),
-    ).collect()
-    n_ladder, n_rep = 0, 0
-    for r in expect:
+    n_ladder, n_blocked_failing = 0, 0
+    for r in base:
         g = gated[r["url"]]
+        assert g["clean_text"] == r["clean_text"]
         if not r["keep"]:
             assert not g["keep"] and g["drop_reasons"] == r["drop_reasons"]
-        elif r["ff"] is not None:
+            continue
+        ff = rules.gopher_first_fail(r["clean_text"], min_words=10)
+        rep = rules.repetition_fails(r["clean_text"])
+        if r["url"].startswith("doc://site00.example/"):
             assert not g["keep"]
-            assert g["drop_reasons"] == r["drop_reasons"] + ["gopher:" + r["ff"]]
+            assert g["drop_reasons"] == r["drop_reasons"] + ["url_blocklist"]
+            n_blocked_failing += ff is not None or rep
+        elif ff is not None:
+            assert not g["keep"]
+            assert g["drop_reasons"] == r["drop_reasons"] + ["gopher:" + ff]
             n_ladder += 1
-        elif r["rep"]:
+        elif rep:
             assert not g["keep"]
             assert g["drop_reasons"] == r["drop_reasons"] + ["gopher:repetition"]
-            n_rep += 1
         else:
             assert g["keep"] and g["drop_reasons"] == r["drop_reasons"]
-    assert n_ladder > 0
+    assert n_ladder > 0 and n_blocked_failing > 0
     assert any(g["keep"] for g in gated.values())
 
 
@@ -268,18 +274,17 @@ def test_gopher_ablation_consistent_with_first_fail(spark, sf_dir):
     """Structural invariants tying the ablation report to the ladder:
     n_failing >= first-fail attributions per rule, totals reconcile, and a
     doc with zero flags is exactly a ladder-NULL doc."""
-    from pyspark.sql import functions as F
+    from functools import reduce
 
-    from wikisource_latin_text_cleaner_spark.functions import quality
     from wikisource_latin_text_cleaner_spark.operators import textstats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     abl = {r["rule"]: (r["n_failing"], r["n_sole_failure"])
            for r in textstats.gopher_ablation(docs, "text").collect()}
-    flags = quality.gopher_rule_flags(F.col("text"))
-    assert set(abl) == set(flags)
+    assert set(abl) == set(rules.GOPHER_RULES)
+    flagged = docs.select(quality.gopher_flags_udf()(F.col("text")).alias("f"))
     ladder = (
-        docs.select(quality.gopher_first_fail(F.col("text")).alias("r"))
+        flagged.select(quality.first_fail_from_flags(F.col("f")).alias("r"))
         .groupBy("r").count().collect()
     )
     first_fail = {row["r"]: row["count"] for row in ladder}
@@ -290,7 +295,7 @@ def test_gopher_ablation_consistent_with_first_fail(spark, sf_dir):
         # a sole failure is always attributed to itself by the ladder
         assert n_sole <= first_fail.get(rule, 0)
     # docs with no failing rule == ladder NULLs
-    flagged_any = docs.where(
-        __import__("functools").reduce(lambda a, b: a | b, flags.values())
+    flagged_any = flagged.where(
+        reduce(lambda a, b: a | b, [F.col("f")[r] for r in rules.GOPHER_RULES])
     ).count()
     assert docs.count() - flagged_any == first_fail.get(None, 0)

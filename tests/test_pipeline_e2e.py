@@ -60,15 +60,18 @@ def test_spark_output_matches_reference_labels(spark, transformed):
 
 
 def test_transform_has_no_shuffle(spark):
-    """Reference and web mode both plan as scan -> ONE ArrowEvalPython
-    (the fused UDF: text crosses the Arrow boundary once) -> project, with
-    no shuffle (vectorization constraint, BASELINE.md §2)."""
+    """Reference and web mode, the latter also with both Gopher gates on,
+    all plan as scan -> ONE ArrowEvalPython (the fused UDF: text crosses
+    the Arrow boundary once) -> project, with no shuffle (vectorization
+    constraint, BASELINE.md §2)."""
     df = synth.pages_dataframe(spark, 10, seed=7)  # no repartition in source
     for cfg in (
         PipelineConfig(langid=False, classify=False),
         PipelineConfig(extensions=WEB, classify=True, langid=True,
                        perplexity_threshold=60.0, pii_scrub=True,
                        rule_metrics=True),
+        PipelineConfig(extensions=WEB, pii_scrub=True, gopher_opts={},
+                       gopher_repetition_gate=True),
     ):
         pipe = QualityFilterPipeline(cfg)
         plan = pipe.transform(df)._jdf.queryExecution().executedPlan().toString()

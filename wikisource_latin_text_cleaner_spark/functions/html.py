@@ -130,8 +130,8 @@ def extract_main_content(
 
 
 def main_content_udf():
-    """Deferred factory (struct-typed pandas UDFs need an active session
-    to parse their DDL schema; see quality.repetition_fracs_udf)."""
+    """Deferred factory: a struct-typed pandas UDF parses its DDL schema
+    when it is built, which needs an active session."""
 
     @pandas_udf("text string, n_kept long, n_total long")
     def extract_main(payloads: pd.Series) -> pd.DataFrame:

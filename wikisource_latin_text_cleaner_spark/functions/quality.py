@@ -1,19 +1,17 @@
-"""Gopher/C4-style quality heuristics as pure Catalyst Column expressions.
+"""Gopher/C4-style quality signals as Spark Columns for the relational
+quality queries in __spark_entry__ (each with a DuckDB oracle).
 
 The reference computes the same *shapes* in Python loops (index thresholds
 Text Cleaner/step1_remove_short_files.py:87-109, line-length analysis
-step2_sort_by_period_genre.py:316-364); here they are JVM-side expressions
-that stay inside whole-stage codegen -- no Python in the hot path. These
-feed the relational quality queries in __spark_entry__ (with DuckDB
-oracles); the keep/drop pipeline itself uses the pure-Python twin in
-rules.extension_reasons so the Spark output and the label oracle share one
-definition.
+step2_sort_by_period_genre.py:316-364). The single-signal ratios and C4
+line cleaning here are Catalyst expressions that stay inside whole-stage
+codegen. The Gopher quality ladder and repetition battery are defined once,
+in Python, in rules.py (the keep/drop pipeline runs them inside its fused
+UDF); ``gopher_flags_udf`` and ``repetition_fracs_udf`` wrap them as one
+pandas UDF each for the queries.
 """
 
 from __future__ import annotations
-
-import re
-from collections import Counter
 
 import pandas as pd
 from pyspark.sql import Column
@@ -149,179 +147,17 @@ def top_bigram_ratio(col) -> Column:
     return F.when(n >= 8, best / (n - 1).cast("double")).otherwise(F.lit(0.0))
 
 
-def word_ngrams(col, n: int) -> Column:
-    """Word n-grams (space-joined, ``\\w+`` tokens of the lowercased text --
-    the same tokenization as top_bigram_ratio / the Python rule twin).
-    Empty array when the document has fewer than ``n`` words; the guard
-    matters because F.sequence(1, m) with m < 1 would produce a *descending*
-    sequence, not an empty one."""
-    w = F.regexp_extract_all(F.lower(col), F.lit(r"\w+"), F.lit(0))
-    m = F.size(w) - F.lit(n - 1)
-    return F.when(
-        m >= 1,
-        F.transform(F.sequence(F.lit(1), m), lambda i: F.concat_ws(" ", F.slice(w, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def top_ngram_char_fraction(col, n: int) -> Column:
-    """Gopher repetition metric (Rae et al. 2021, table A1): fraction of
-    document characters attributable to the single most frequent word
-    n-gram -- occurrences(top gram) * length(top gram) / length(text).
-    Count ties resolve to the lexicographically smallest gram (sorted fold
-    with a strict ``>`` update, so the first run at the maximum wins),
-    making the value deterministic and oracle-checkable.
-
-    Same O(L log L) sort + single-fold shape as top_bigram_ratio: equal
-    grams become adjacent runs in the sorted array and one pass tracks the
-    best run and its gram, all inside whole-stage codegen.
-    """
-    g = word_ngrams(col, n)
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-            F.when(run > acc["best"], x).otherwise(acc["bg"]).alias("bg"),
-        )
-
-    st0 = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"),
-        F.lit(0).alias("best"), F.lit("").alias("bg"),
-    )
-    top = F.aggregate(
-        F.array_sort(g), st0, step,
-        lambda acc: acc["best"] * F.length(acc["bg"]),
-    )
-    return F.when(
-        (F.size(g) > 0) & (F.length(col) > 0), top / F.length(col)
-    ).otherwise(F.lit(0.0))
-
-
-def dup_ngram_char_fraction(col, n: int) -> Column:
-    """Gopher repetition metric: fraction of document characters inside
-    word n-grams that occur >= 2 times -- sum(count * length(gram)) over
-    duplicated grams / length(text). Overlapping occurrences each count
-    (the cheap whole-gram accounting, same simplification DataTrove's
-    default config uses); span-exact de-overlapped removal is what
-    operators/dedup.py:exact_span_dedup provides when the goal is editing
-    rather than scoring.
-
-    Sorted fold identical in shape to dup_line_char_fraction: the second
-    member of a run retro-credits the first, later members pay for
-    themselves. O(L log L), codegen-resident.
-    """
-    g = word_ngrams(col, n)
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            (
-                acc["dup"]
-                + F.when(
-                    x == acc["prev"],
-                    F.when(acc["run"] == 1, 2.0 * F.length(x)).otherwise(
-                        F.length(x).cast("double")
-                    ),
-                ).otherwise(F.lit(0.0))
-            ).alias("dup"),
-        )
-
-    st0 = F.struct(F.lit("").alias("prev"), F.lit(1).alias("run"), F.lit(0.0).alias("dup"))
-    dup = F.aggregate(F.array_sort(g), st0, step, lambda acc: acc["dup"])
-    return F.when(
-        (F.size(g) > 0) & (F.length(col) > 0), dup / F.length(col)
-    ).otherwise(F.lit(0.0))
-
-
-#: Gopher repetition thresholds (Rae et al. 2021 table A1): a doc is
-#: repetition-flagged when any fraction exceeds its bound.
-GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
-GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
-
-
-def gopher_repetition_flag(col) -> Column:
-    """True when any Gopher repetition bound is exceeded."""
-    conds = [
-        top_ngram_char_fraction(col, n) > t for n, t in GOPHER_TOP_NGRAM_MAX.items()
-    ] + [
-        dup_ngram_char_fraction(col, n) > t for n, t in GOPHER_DUP_NGRAM_MAX.items()
-    ]
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
-
-
-#: Java-regex-\w tokenization (ASCII [A-Za-z0-9_]) so the Arrow twin
-#: tokenizes EXACTLY like the Catalyst regexp_extract_all('\\w+') exprs
-#: (Python's re.\w is unicode-wide and would diverge on CJK text).
-_TOKEN_RE = re.compile(r"[A-Za-z0-9_]+")
-_REP_NS_TOP = tuple(sorted(GOPHER_TOP_NGRAM_MAX))
-_REP_NS_DUP = tuple(sorted(GOPHER_DUP_NGRAM_MAX))
-REPETITION_FIELDS = tuple(
-    [f"top{n}" for n in _REP_NS_TOP] + [f"dup{n}" for n in _REP_NS_DUP]
-)
-
-
-def _repetition_fracs_py(t: str | None) -> tuple:
-    """All nine Gopher repetition fractions for one document, O(L) via
-    hashed gram counts. Bit-identical to the Catalyst sort+fold exprs:
-    same tokenization (_TOKEN_RE == Java \\w), same tie-break (the
-    lexicographically smallest gram at the max count), and the dup
-    accumulator replays the fold's EXACT double-addition sequence
-    (2*len on a run's second member, +len per later member, runs in
-    sorted-gram order) so even fp summation matches ULP-for-ULP."""
-    if not t:
-        return (0.0,) * len(REPETITION_FIELDS)
-    length = len(t)
-    ws = _TOKEN_RE.findall(t.lower())
-    out = []
-    for n in _REP_NS_TOP:
-        m = len(ws) - n + 1
-        if m < 1:
-            out.append(0.0)
-            continue
-        c = Counter(" ".join(ws[i : i + n]) for i in range(m))
-        best = max(c.values())
-        bg = min(g for g, cc in c.items() if cc == best)
-        out.append(best * len(bg) / length)
-    for n in _REP_NS_DUP:
-        m = len(ws) - n + 1
-        if m < 1:
-            out.append(0.0)
-            continue
-        c = Counter(" ".join(ws[i : i + n]) for i in range(m))
-        acc = 0.0
-        for g in sorted(g for g, cc in c.items() if cc >= 2):
-            lg = float(len(g))
-            acc += 2.0 * lg
-            for _ in range(c[g] - 2):
-                acc += lg
-        out.append(acc / length)
-    return tuple(out)
-
-
 def repetition_fracs_udf():
-    """Arrow-fused hot path for the full repetition battery: ONE pandas
-    UDF emitting the struct of all nine fractions. The Catalyst exprs
-    (top_ngram_char_fraction / dup_ngram_char_fraction) are the tested
-    reference twins and remain right for computing one or two fractions;
-    evaluating all nine per doc through nested HOF folds runs
-    interpreter-bound (~25x slower at sf0.1 -- the struct-state
-    aggregate defeats codegen), so batteries and the pipeline gate use
-    this instead. The 3-way parity test (UDF vs exprs vs Python twin)
-    pins bit-identical output."""
-    schema = ", ".join(f"{f} double" for f in REPETITION_FIELDS)
+    """The Gopher repetition battery (rules._repetition_fracs_py) as one
+    pandas UDF emitting the struct of all nine fractions, fields in
+    rules.REPETITION_FIELDS order. NULL text scores 0.0 throughout."""
+    schema = ", ".join(f"{f} double" for f in _rules.REPETITION_FIELDS)
 
     @pandas_udf(schema)
     def gopher_repetition_fracs(texts: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(
-            [_repetition_fracs_py(t) for t in texts],
-            columns=list(REPETITION_FIELDS),
+            [_rules._repetition_fracs_py(t) for t in texts],
+            columns=list(_rules.REPETITION_FIELDS),
         )
 
     return gopher_repetition_fracs
@@ -330,99 +166,38 @@ def repetition_fracs_udf():
 def repetition_flag_from_fracs(fracs_col) -> Column:
     """Gopher repetition verdict over a repetition_fracs_udf struct."""
     conds = [
-        fracs_col[f"top{n}"] > t for n, t in GOPHER_TOP_NGRAM_MAX.items()
-    ] + [fracs_col[f"dup{n}"] > t for n, t in GOPHER_DUP_NGRAM_MAX.items()]
+        fracs_col[f"top{n}"] > t for n, t in _rules.GOPHER_TOP_NGRAM_MAX.items()
+    ] + [fracs_col[f"dup{n}"] > t for n, t in _rules.GOPHER_DUP_NGRAM_MAX.items()]
     out = conds[0]
     for c in conds[1:]:
         out = out | c
     return out
 
 
-def gopher_rule_flags(
-    col,
-    *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_distinct_stopwords: int = 2,
-    stopwords: list[str] | None = None,
-) -> dict:
-    """Per-rule boolean fail Columns for the Gopher quality ladder, keyed
-    by rule name IN THE PAPER'S ORDER (dicts preserve insertion order --
-    ``gopher_first_fail`` builds its CASE ladder from this, and the
-    ablation report counts each flag independently). Same thresholds and
-    stop-word note as ``gopher_first_fail``.
-    """
-    stops = sorted(stopwords) if stopwords is not None else STOPWORDS
-    w = words(col)
-    nw = F.size(w)
-    mwl = mean_word_len(col)
-    lines = F.filter(
-        F.transform(F.split(col, r"\n"), lambda l: F.trim(l)),
-        lambda l: F.length(l) > 0,
-    )
-    nl = F.size(lines)
-    bullet_frac = F.when(
-        nl > 0,
-        F.size(
-            F.filter(lines, lambda l: F.substring(l, 1, 1).isin("•", "-", "*"))
-        ) / nl,
-    ).otherwise(F.lit(0.0))
-    ellipsis_frac = F.when(
-        nl > 0,
-        F.size(
-            F.filter(
-                lines,
-                lambda l: l.endswith(F.lit("...")) | l.endswith(F.lit("…")),
-            )
-        ) / nl,
-    ).otherwise(F.lit(0.0))
-    alpha_frac = F.when(
-        nw > 0,
-        F.size(F.filter(w, lambda x: x.rlike("[A-Za-z]"))) / nw,
-    ).otherwise(F.lit(0.0))
-    n_stop = F.size(
-        F.array_intersect(
-            F.array_distinct(F.transform(w, lambda x: F.lower(x))),
-            F.array([F.lit(s) for s in stops]),
+def gopher_flags_udf(**opts):
+    """The Gopher quality ladder (rules.gopher_rule_flags, same options) as
+    one pandas UDF emitting the struct of the eight rule fail flags, fields
+    in rules.GOPHER_RULES order. NULL text scores as ""."""
+    schema = ", ".join(f"{r} boolean" for r in _rules.GOPHER_RULES)
+
+    @pandas_udf(schema)
+    def gopher_flags(texts: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_rules.gopher_rule_flags(t or "", **opts) for t in texts],
+            columns=list(_rules.GOPHER_RULES),
         )
-    )
-    return {
-        "too_few_words": nw < min_words,
-        "too_many_words": nw > max_words,
-        "word_length": (mwl < min_mean_word_len) | (mwl > max_mean_word_len),
-        "symbol_ratio": symbol_ratio(col) > max_symbol_ratio,
-        "bullet_lines": bullet_frac > max_bullet_line_frac,
-        "ellipsis_lines": ellipsis_frac > max_ellipsis_line_frac,
-        "alpha_words": alpha_frac < min_alpha_word_frac,
-        "stopwords": n_stop < min_distinct_stopwords,
-    }
+
+    return gopher_flags
 
 
-def gopher_first_fail(col, **kwargs) -> Column:
-    """Gopher document-quality gate (Rae et al. 2021 sec. A1.1): NULL when
-    the document passes every rule, else the name of the FIRST failing rule
-    in the paper's order. All pure Catalyst -- one pass over the words /
-    lines arrays per rule family, no Python; the CASE ladder is composed
-    from ``gopher_rule_flags`` in its (paper) insertion order.
-
-    The stop-word rule defaults to the engine's corpus-derived STOPWORDS
-    (rules.STOPWORDS) rather than Gopher's 8 English function words so the
-    gate stays discriminative on non-English web text; pass
-    ``stopwords=["the","be","to","of","and","that","have","with"]`` for the
-    paper-exact variant.
-    """
-    ladder = None
-    for name, cond in gopher_rule_flags(col, **kwargs).items():
-        ladder = (
-            F.when(cond, F.lit(name)) if ladder is None
-            else ladder.when(cond, F.lit(name))
-        )
+def first_fail_from_flags(flags_col) -> Column:
+    """The first failing rule of a gopher_flags_udf struct in the paper's
+    order (rules.gopher_first_fail as a CASE), NULL when every rule
+    passes."""
+    first, *rest = _rules.GOPHER_RULES
+    ladder = F.when(flags_col[first], F.lit(first))
+    for r in rest:
+        ladder = ladder.when(flags_col[r], F.lit(r))
     return ladder
 
 

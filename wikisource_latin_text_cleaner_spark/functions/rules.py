@@ -13,7 +13,9 @@ Re-expresses the reference's document-level filtering:
 
 plus engine-extension rules for the web-text generalization (Gopher/C4-style
 heuristics, langid gate) that are OFF in reference-fidelity mode and ON in
-web mode (see evaluate_document(extensions=...)).
+web mode (see evaluate_document(extensions=...)), and the opt-in Gopher
+quality ladder and repetition battery (gopher_first_fail,
+repetition_fails) that the fused UDF runs on rows it still keeps.
 
 Everything is pure Python so the same code is the test oracle and the body
 of the Arrow-batched pandas UDFs in functions/udfs.py.
@@ -22,6 +24,7 @@ of the Arrow-batched pandas UDFs in functions/udfs.py.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 
 from . import scrub
@@ -185,6 +188,148 @@ def dup_line_char_fraction(text: str) -> float:
     total = sum(len(l) for l in lines)
     dup = sum(len(l) for l in lines if counts[l] >= 2)
     return dup / total
+
+
+# --------------------------------------------------------------------------
+# Gopher quality ladder and repetition battery (Rae et al. 2021)
+# --------------------------------------------------------------------------
+
+#: Gopher quality rules (sec. A1.1) in the paper's order; the ladder
+#: reports the first one that fails
+GOPHER_RULES = ("too_few_words", "too_many_words", "word_length",
+                "symbol_ratio", "bullet_lines", "ellipsis_lines",
+                "alpha_words", "stopwords")
+#: the fail name of the repetition battery
+GOPHER_REPETITION = "repetition"
+
+#: Java-regex ``\s`` (Spark's ``split(text, '\s+')``), narrower than
+#: ``str.split()``, which also splits on unicode spaces and \x1c-\x1f
+_JAVA_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")
+_ALPHA = re.compile(r"[A-Za-z]")
+
+
+def gopher_rule_flags(
+    text: str,
+    *,
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: float = 3.0,
+    max_mean_word_len: float = 10.0,
+    max_symbol_ratio: float = 0.1,
+    max_bullet_line_frac: float = 0.9,
+    max_ellipsis_line_frac: float = 0.3,
+    min_alpha_word_frac: float = 0.8,
+    min_distinct_stopwords: int = 2,
+    stopwords=None,
+) -> dict:
+    """Per-rule fail flags of the Gopher quality ladder, keyed by the names
+    of ``GOPHER_RULES`` in that order.
+
+    Words are the non-empty pieces between Java ``\\s`` runs; lines are the
+    non-empty ``"\\n"`` pieces with ASCII spaces stripped (Spark's
+    ``trim``). The stop-word rule defaults to the engine's ``STOPWORDS``
+    rather than Gopher's 8 English function words, so the gate stays
+    discriminative on non-English web text; pass
+    ``stopwords=["the","be","to","of","and","that","have","with"]`` for the
+    paper-exact variant.
+    """
+    stops = STOPWORDS if stopwords is None else frozenset(stopwords)
+    words = [w for w in _JAVA_SPACE.split(text) if w]
+    nw = len(words)
+    lines = [ln for ln in (ln.strip(" ") for ln in text.split("\n")) if ln]
+    nl = len(lines)
+    mwl = sum(map(len, words)) / nw if nw else 0.0
+    symbols = len(_SYMBOLS.findall(text)) / len(text) if text else 0.0
+    bullets = sum(ln[0] in "•-*" for ln in lines) / nl if nl else 0.0
+    ellipses = sum(ln.endswith(("...", "…")) for ln in lines) / nl if nl else 0.0
+    alpha = sum(1 for w in words if _ALPHA.search(w)) / nw if nw else 0.0
+    flags = (
+        nw < min_words,
+        nw > max_words,
+        mwl < min_mean_word_len or mwl > max_mean_word_len,
+        symbols > max_symbol_ratio,
+        bullets > max_bullet_line_frac,
+        ellipses > max_ellipsis_line_frac,
+        alpha < min_alpha_word_frac,
+        len({w.lower() for w in words} & stops) < min_distinct_stopwords,
+    )
+    return dict(zip(GOPHER_RULES, flags))
+
+
+def gopher_first_fail(text: str, **opts) -> str | None:
+    """The first failing rule of the Gopher ladder in the paper's order,
+    None when the document passes every rule (same options as
+    ``gopher_rule_flags``)."""
+    for rule, fails in gopher_rule_flags(text, **opts).items():
+        if fails:
+            return rule
+    return None
+
+
+#: Gopher repetition thresholds (table A1): a doc is repetition-flagged
+#: when any fraction exceeds its bound.
+GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
+GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
+
+#: Java-regex-\w tokenization (ASCII [A-Za-z0-9_]), the tokenization of the
+#: DuckDB oracle's ``regexp_extract_all(lower(text), '\w+')`` on this
+#: corpus (Python's re.\w is unicode-wide and would diverge on CJK text)
+_TOKEN_RE = re.compile(r"[A-Za-z0-9_]+")
+_REP_NS_TOP = tuple(sorted(GOPHER_TOP_NGRAM_MAX))
+_REP_NS_DUP = tuple(sorted(GOPHER_DUP_NGRAM_MAX))
+REPETITION_FIELDS = tuple(
+    [f"top{n}" for n in _REP_NS_TOP] + [f"dup{n}" for n in _REP_NS_DUP]
+)
+_REP_BOUNDS = tuple(GOPHER_TOP_NGRAM_MAX[n] for n in _REP_NS_TOP) + tuple(
+    GOPHER_DUP_NGRAM_MAX[n] for n in _REP_NS_DUP
+)
+
+
+def _repetition_fracs_py(t: str | None) -> tuple:
+    """All nine Gopher repetition fractions for one document, in
+    ``REPETITION_FIELDS`` order, O(L) via hashed gram counts.
+
+    ``top<n>``: occurrences * length of the most frequent word n-gram over
+    the text length; count ties go to the lexicographically smallest gram.
+    ``dup<n>``: characters inside word n-grams occurring >= 2 times (each
+    overlapping occurrence counts) over the text length, summed in sorted-
+    gram order (2*len on a gram's second occurrence, +len per later one)
+    so the double sum is stable. Grams are space-joined ``_TOKEN_RE``
+    tokens of the lowercased text; NULL, empty and shorter-than-n docs
+    score 0.0."""
+    if not t:
+        return (0.0,) * len(REPETITION_FIELDS)
+    length = len(t)
+    ws = _TOKEN_RE.findall(t.lower())
+    out = []
+    for n in _REP_NS_TOP:
+        m = len(ws) - n + 1
+        if m < 1:
+            out.append(0.0)
+            continue
+        c = Counter(" ".join(ws[i : i + n]) for i in range(m))
+        best = max(c.values())
+        bg = min(g for g, cc in c.items() if cc == best)
+        out.append(best * len(bg) / length)
+    for n in _REP_NS_DUP:
+        m = len(ws) - n + 1
+        if m < 1:
+            out.append(0.0)
+            continue
+        c = Counter(" ".join(ws[i : i + n]) for i in range(m))
+        acc = 0.0
+        for g in sorted(g for g, cc in c.items() if cc >= 2):
+            lg = float(len(g))
+            acc += 2.0 * lg
+            for _ in range(c[g] - 2):
+                acc += lg
+        out.append(acc / length)
+    return tuple(out)
+
+
+def repetition_fails(text: str | None) -> bool:
+    """True when any Gopher repetition fraction exceeds its bound."""
+    return any(f > b for f, b in zip(_repetition_fracs_py(text), _REP_BOUNDS))
 
 
 # --------------------------------------------------------------------------

@@ -95,6 +95,7 @@ FUSED_SCHEMA = StructType([
     StructField("ppx", DoubleType()),
     StructField("pii_spans", IntegerType()),
     StructField("rule_hits", MapType(StringType(), IntegerType())),
+    StructField("gopher_fail", StringType()),
 ])
 
 
@@ -107,13 +108,23 @@ def make_fused_udf(
     ppx_threshold: float | None = None,
     pii_on: bool = False,
     rule_metrics: bool = False,
+    gopher_opts: dict | None = None,
+    gopher_repetition: bool = False,
 ):
     """Single-pass UDF computing the whole per-document pipeline.
 
-    Composes verdict -> classify -> langid -> perplexity -> pii per
-    document, so the text crosses the JVM<->Python Arrow boundary exactly
-    once, in one ArrowEvalPython stage with one Python worker pool.
+    Composes verdict -> classify -> langid -> perplexity -> pii -> Gopher
+    per document, so the text crosses the JVM<->Python Arrow boundary
+    exactly once, in one ArrowEvalPython stage with one Python worker pool.
     Fields for disabled components are null.
+
+    The Gopher gates run only on rows still kept, over the PII-scrubbed
+    clean text: the quality ladder (``rules.gopher_first_fail`` with
+    ``gopher_opts`` as its options; None = off, ``{}`` = paper defaults)
+    first, then, with ``gopher_repetition``, the repetition battery.
+    ``gopher_fail`` holds the first failing rule name (or
+    ``rules.GOPHER_REPETITION``), else null. The verdict fields do not
+    reflect it: the pipeline applies it after its URL gate.
     """
 
     @pandas_udf(FUSED_SCHEMA)
@@ -121,7 +132,7 @@ def make_fused_udf(
         out: dict = {k: [] for k in (
             "keep", "drop_reasons", "clean_text", "period", "genre",
             "confidence", "lang_pred", "lang_margin", "ppx", "pii_spans",
-            "rule_hits",
+            "rule_hits", "gopher_fail",
         )}
         for t in texts:
             v = rules.evaluate_document(t, min_size_bytes, extensions,
@@ -149,6 +160,12 @@ def make_fused_udf(
                 spans = sum(counts.values())
                 if keep:
                     cleaned = scrubbed
+            gopher_fail = None
+            if keep and gopher_opts is not None:
+                gopher_fail = rules.gopher_first_fail(cleaned, **gopher_opts)
+            if (keep and gopher_fail is None and gopher_repetition
+                    and rules.repetition_fails(cleaned)):
+                gopher_fail = rules.GOPHER_REPETITION
             out["keep"].append(keep)
             out["drop_reasons"].append(reasons)
             out["clean_text"].append(cleaned)
@@ -160,6 +177,7 @@ def make_fused_udf(
             out["ppx"].append(px)
             out["pii_spans"].append(spans)
             out["rule_hits"].append(v.rule_hits)
+            out["gopher_fail"].append(gopher_fail)
         return pd.DataFrame(out)
 
     return fused_udf

@@ -2,11 +2,12 @@
 
 One declarative DataFrame chain (SURVEY.md §3.4): scan -> [salt] -> one
 fused Arrow UDF (the byte-identical step3..6 composition, rule gates,
-classify / langid / perplexity / PII) -> Catalyst URL and Gopher gates ->
-keep/drop decision. There is NO shuffle in the transform itself --
-Catalyst plans scan -> ArrowEvalPython -> project/filter per partition;
-only the metrics aggregation (tiny) and an optional skew-defusing
-repartition shuffle anything.
+classify / langid / perplexity / PII, and the opt-in Gopher ladder and
+repetition battery) -> Catalyst URL gate -> the Gopher verdict the UDF
+computed -> keep/drop decision. There is NO shuffle in the transform
+itself -- Catalyst plans scan -> ONE ArrowEvalPython -> project/filter per
+partition; only the metrics aggregation (tiny) and an optional
+skew-defusing repartition shuffle anything.
 
 Quarantine semantics (ref: Text Cleaner/step1_remove_short_files.py:215-231
 backs removed files up rather than losing them): dropped rows are never
@@ -28,7 +29,7 @@ from .skew import salted_repartition
 #: drop reasons the post-UDF gates append
 URL_BLOCKLIST_REASON = "url_blocklist"
 GOPHER_PREFIX = "gopher:"
-GOPHER_REPETITION_REASON = GOPHER_PREFIX + "repetition"
+GOPHER_REPETITION_REASON = GOPHER_PREFIX + rules.GOPHER_REPETITION
 #: metrics-table rule-name prefix of the per-orthography-rule hit rows
 VARIANT_PREFIX = "variant:"
 
@@ -70,15 +71,14 @@ class PipelineConfig:
     max_url_kw_hits: int | None = None
     #: opt-in Gopher document-quality ladder (Rae et al. 2021 sec. A1.1)
     #: over the CLEANED text: keep=true rows failing a rule flip to
-    #: keep=false with drop reason 'gopher:<rule>'. Pure Catalyst, rides
-    #: the same projection as the other gates -- no extra Python stage.
-    gopher_gate: bool = False
-    #: kwargs for quality.gopher_first_fail (threshold tuning per corpus)
+    #: keep=false with drop reason 'gopher:<rule>'. None (default) = off;
+    #: otherwise the kwargs of rules.gopher_first_fail ({} = the paper's
+    #: thresholds). Runs inside the fused UDF, on rows still kept.
     gopher_opts: dict | None = None
     #: opt-in Gopher repetition battery (nine top/dup n-gram thresholds)
-    #: over the cleaned text; failing rows get 'gopher:repetition'. Kept
-    #: separate from gopher_gate because it is the one gate whose cost is
-    #: superlinear in doc length (O(L log L) per n) -- enable deliberately.
+    #: over the cleaned text; failing rows get 'gopher:repetition'. Runs
+    #: in the fused UDF after the ladder, on rows the ladder passes; its
+    #: O(L) gram counting is the dearest gate per kept row.
     gopher_repetition_gate: bool = False
 
 
@@ -141,31 +141,14 @@ class QualityFilterPipeline:
         )
 
     def _apply_quality_gates(self, df: DataFrame) -> DataFrame:
-        """Gopher quality/repetition gates over the CLEANED text (gate
-        discipline of ``_flip``; dropped rows keep their clean_text for the
-        quarantine sink). Both gates evaluate every row, already-dropped
-        ones included: the early drops (null_text, min_size, index_toc,
-        pre_clean_len, post_clean_len) carry clean_text == "", and the
-        extension, langid, perplexity and URL-gate drops carry the full
-        cleaned text. What stops a second reason on an already-dropped row
-        is ``_flip``'s ``keep`` guard, not the clean_text value."""
-        cfg = self.config
-        if not cfg.gopher_gate and not cfg.gopher_repetition_gate:
+        """Gopher gates (``_flip`` discipline): keep=true rows for which the
+        fused UDF found a failing Gopher rule get 'gopher:<rule>'. Applied
+        after the URL gate, so a URL-blocked row gets no Gopher reason."""
+        if not self._gopher_on():
             return df
-        from ..functions import quality as _q
-
-        if cfg.gopher_gate:
-            ff = _q.gopher_first_fail(F.col("clean_text"), **(cfg.gopher_opts or {}))
-            df = _flip(df, ff.isNotNull(), F.concat(F.lit(GOPHER_PREFIX), ff))
-        if cfg.gopher_repetition_gate:
-            # Arrow-fused battery (one UDF for all nine fractions); the
-            # Catalyst fold twin is ~25x slower when all nine are needed
-            rep = _q.repetition_flag_from_fracs(
-                _q.repetition_fracs_udf()(F.col("clean_text"))
-            )
-            df = _flip(df, F.coalesce(rep, F.lit(False)),
-                       F.lit(GOPHER_REPETITION_REASON))
-        return df
+        ff = F.col("gopher_fail")
+        return _flip(df, ff.isNotNull(), F.concat(F.lit(GOPHER_PREFIX), ff)
+                     ).drop("gopher_fail")
 
     def _apply_url_gate(self, df: DataFrame) -> DataFrame:
         """RefinedWeb-style URL gate (domain blocklist + keyword score),
@@ -200,6 +183,10 @@ class QualityFilterPipeline:
         return (self.config.url_blocklist is not None
                 or self.config.max_url_kw_hits is not None)
 
+    def _gopher_on(self) -> bool:
+        return (self.config.gopher_opts is not None
+                or self.config.gopher_repetition_gate)
+
     def _transform_fused(self, df: DataFrame) -> DataFrame:
         """One ArrowEvalPython stage for the whole per-document pipeline:
         the document text crosses the JVM<->Python boundary once."""
@@ -213,6 +200,8 @@ class QualityFilterPipeline:
             ppx_threshold=cfg.perplexity_threshold,
             pii_on=cfg.pii_scrub,
             rule_metrics=cfg.rule_metrics,
+            gopher_opts=cfg.gopher_opts,
+            gopher_repetition=cfg.gopher_repetition_gate,
         )
         df = df.withColumn("v", fused("text"))
         cols = [
@@ -234,6 +223,9 @@ class QualityFilterPipeline:
             cols.append(F.col("v.pii_spans").alias("pii_spans"))
         if cfg.rule_metrics:
             cols.append(F.col("v.rule_hits").alias("rule_hits"))
+        if self._gopher_on():
+            # consumed and dropped by _apply_quality_gates
+            cols.append(F.col("v.gopher_fail").alias("gopher_fail"))
         # ref A4 counter, last column: chars removed vs the final
         # (post-PII) clean text (detailed_progress_logger.py:158-186 analog)
         cols.append(
@@ -255,11 +247,8 @@ class QualityFilterPipeline:
             reasons += (udfs.PERPLEXITY_REASON,)
         if self._url_gate_on():
             reasons += (URL_BLOCKLIST_REASON,)
-        if cfg.gopher_gate:
-            from ..functions import quality as _q
-
-            reasons += tuple(GOPHER_PREFIX + k for k in _q.gopher_rule_flags(
-                F.col("clean_text"), **(cfg.gopher_opts or {})))
+        if cfg.gopher_opts is not None:
+            reasons += tuple(GOPHER_PREFIX + r for r in rules.GOPHER_RULES)
         if cfg.gopher_repetition_gate:
             reasons += (GOPHER_REPETITION_REASON,)
         return reasons

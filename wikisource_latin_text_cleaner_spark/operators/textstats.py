@@ -305,20 +305,18 @@ def gopher_ablation(
     first-fail ladder alone can't provide it because a doc failing rules
     3 and 7 is only attributed to rule 3 there.
 
-    Scale shape: ONE corpus pass -- all rule flags evaluate in a single
-    fused projection (pure Catalyst, shared words/lines subexpressions),
-    the counts partial-aggregate to a single row, and the 8-rule unpivot
-    is a constant-size stack on the driver-bound row. Zero Python, one
-    (tiny) shuffle.
+    Scale shape: ONE corpus pass -- all rule flags come from one pandas
+    UDF over the ladder (``quality.gopher_flags_udf``), the counts
+    partial-aggregate to a single row, and the 8-rule unpivot is a
+    constant-size stack on the driver-bound row. One (tiny) shuffle.
     """
-    from ..functions import quality
+    from ..functions import quality, rules
 
-    flags = quality.gopher_rule_flags(F.col(text_col), **gopher_kwargs)
-    names = list(flags)
+    names = list(rules.GOPHER_RULES)
     flagged = df.select(
-        *[cond.cast("int").alias(f"_f_{i}") for i, cond in
-          enumerate(flags.values())]
-    )
+        quality.gopher_flags_udf(**gopher_kwargs)(F.col(text_col)).alias("_f")
+    ).select(*[F.col("_f")[n].cast("int").alias(f"_f_{i}")
+               for i, n in enumerate(names)])
     nf = sum(F.col(f"_f_{i}") for i in range(len(names)))
     flagged = flagged.withColumn("_nf", nf)
     aggs = []
