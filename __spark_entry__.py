@@ -1315,10 +1315,12 @@ _MINHASH_SIG_CTES = """t AS (
 #: arrays, mean word length, symbol/bullet/ellipsis/alpha fractions,
 #: distinct-stopword count) -- reused by the quality-gate and ablation
 #: oracles. Defined as an f-string so {_STOP_SQL} and the {{}}-escaped
-#: regex braces resolve exactly as in the original inline oracle.
+#: regex braces resolve exactly as in the original inline oracle. Words
+#: split on the engine's Java ``\s`` (rules._JAVA_SPACE); RE2's ``\s``
+#: leaves out the vertical tab.
 _GOPHER_FEAT_CTES = f"""base AS (
               SELECT doc_id, text, length(text) AS L,
-                     list_filter(string_split_regex(trim(text), '\\s+'),
+                     list_filter(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+'),
                                  x -> x <> '') AS ws,
                      list_filter(list_transform(string_split(text, chr(10)),
                                                 x -> trim(x, ' ')),
@@ -3665,36 +3667,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents GROUP BY lang
         """,
         "gopher_quality_gate": f"""
-            WITH base AS (
-              SELECT doc_id, text, length(text) AS L,
-                     list_filter(string_split_regex(trim(text), '\\s+'),
-                                 x -> x <> '') AS ws,
-                     list_filter(list_transform(string_split(text, chr(10)),
-                                                x -> trim(x, ' ')),
-                                 x -> x <> '') AS ls
-              FROM documents
-            ),
-            feat AS (
-              SELECT doc_id, len(ws) AS nw,
-                CASE WHEN len(ws) > 0
-                     THEN list_sum(list_transform(ws, x -> length(x) * 1.0)) / len(ws)
-                     ELSE 0.0 END AS mwl,
-                CASE WHEN L > 0
-                     THEN length(regexp_replace(text, '[^#@^*\\\\~|<>=_{{}}]', '', 'g')) * 1.0 / L
-                     ELSE 0.0 END AS sym,
-                CASE WHEN len(ls) > 0
-                     THEN len(list_filter(ls, l -> substr(l, 1, 1) IN ('•', '-', '*'))) * 1.0 / len(ls)
-                     ELSE 0.0 END AS bullet,
-                CASE WHEN len(ls) > 0
-                     THEN len(list_filter(ls, l -> l LIKE '%...' OR l LIKE '%…')) * 1.0 / len(ls)
-                     ELSE 0.0 END AS ell,
-                CASE WHEN len(ws) > 0
-                     THEN len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(ws)
-                     ELSE 0.0 END AS alpha,
-                len(list_intersect(list_distinct(list_transform(ws, x -> lower(x))),
-                                   {_STOP_SQL})) AS nstop
-              FROM base
-            ),
+            WITH {_GOPHER_FEAT_CTES},
             verdicts AS (
               SELECT CASE
                 WHEN nw < 50 THEN 'too_few_words'

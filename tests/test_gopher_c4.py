@@ -299,3 +299,23 @@ def test_gopher_ablation_consistent_with_first_fail(spark, sf_dir):
         reduce(lambda a, b: a | b, [F.col("f")[r] for r in rules.GOPHER_RULES])
     ).count()
     assert docs.count() - flagged_any == first_fail.get(None, 0)
+
+
+def test_gopher_oracle_word_split_is_java_space():
+    """The Gopher oracles' SQL word split (``_GOPHER_FEAT_CTES``) is the
+    engine's Java ``\\s``, which unlike RE2's ``\\s`` holds the vertical tab."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+
+    texts = ["\x0ba\x0bb c", "one\ttwo\x0cthree\r\nfour", "x\x0b\x0by",
+             "  lead and trail  ", ""]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)",
+                    list(enumerate(texts)))
+    got = dict(con.execute(
+        f"WITH {entry_mod._GOPHER_FEAT_CTES} SELECT doc_id, nw FROM feat"
+    ).fetchall())
+    assert got == {i: len([w for w in rules._JAVA_SPACE.split(t) if w])
+                   for i, t in enumerate(texts)}

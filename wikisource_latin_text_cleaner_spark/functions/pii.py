@@ -21,6 +21,7 @@ IPV4 = re.compile(r"\b(?:\d{1,3}\.){3}\d{1,3}\b")
 CARDISH = re.compile(r"\b(?:\d[ -]?){13,19}\b")
 PHONEISH = re.compile(r"\+?\d{1,3}[ -.]?\(?\d{2,4}\)?[ -.]?\d{3,4}[ -.]?\d{3,4}\b")
 LONG_DIGITS = re.compile(r"\b\d{9,}\b")
+_DIGIT = re.compile(r"\d")
 
 #: (name, pattern, replacement) in application order; URL before the digit
 #: rules so numeric path segments don't half-match.
@@ -77,6 +78,11 @@ _TOX_WORD = re.compile(r"[a-z]+")
 
 def scrub_pii(text: str) -> tuple[str, dict]:
     """Replace PII spans with typed placeholders; return (text, counts)."""
+    # EMAIL needs "@", URL "://" or a case-insensitive "www." (w has no
+    # non-ASCII case partner), and the other four a \d
+    if ("@" not in text and "://" not in text and not _DIGIT.search(text)
+            and "www." not in text.lower()):
+        return text, {}
     counts: dict = {}
     for name, pat, repl in BATTERY:
         text, n = pat.subn(repl, text)

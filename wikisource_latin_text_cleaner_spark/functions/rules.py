@@ -44,6 +44,8 @@ _CHAPTER_REF = re.compile(
     r"(liber|book|chapter|capitulum|epistul|carmen|versus|sectio|pars)\s+[ivxlcdm0-9]+",
     _I,
 )
+#: _CHAPTER_REF's lowercase pattern, case-sensitive, for scrub.fold(line)
+_CHAPTER_REF_FOLDED = re.compile(_CHAPTER_REF.pattern)
 _NUMBERED_TOC = re.compile(r"^[ivxlcdm0-9]+[\.\s\-]", _I)
 _PAGE_NUMBER = re.compile(r"^\s*\d+\s*$|^\s*p\.\s*\d+", _I)
 _FUNCTION_WORDS = re.compile(r"\b(et|in|de|ad|cum|ex|pro|per|ab)\b", _I)
@@ -70,7 +72,9 @@ def looks_like_index(text: str) -> bool:
     chapterish = 0
     bullets = 0
     for line in content[:50]:
-        if _CHAPTER_REF.search(line):
+        # a case-insensitive match is a folded case-sensitive one
+        if (_CHAPTER_REF_FOLDED.search(scrub.fold(line))
+                and _CHAPTER_REF.search(line)):
             chapterish += 1
         elif _NUMBERED_TOC.match(line) and len(line) < 80:
             chapterish += 1

@@ -25,6 +25,17 @@ differences (word boundaries, DOTALL+MULTILINE interplay) make Catalyst's
 ``regexp_replace`` unsuitable for byte-fidelity, so these functions run
 inside Arrow-batched pandas UDFs (see functions/udfs.py). All patterns are
 compiled once per process at import time.
+
+Most case-insensitive batteries never match a given document, and Python's
+``re`` runs an ``IGNORECASE`` scan about 4x slower than a case-sensitive one.
+So each hot case-insensitive scan is fronted by an exact necessary-condition
+check over ``fold(text)``: a guard literal, or one case-sensitive alternation
+of the lowered patterns. ``fold`` maps every code point that ``IGNORECASE``
+equates with an ASCII letter to that letter, keeps every offset, and keeps
+every character's ``\\w``/``\\s`` class (tests/test_property_scrub.py checks
+this over all code points), so a pattern of ASCII letters, ``\\b``, ``\\s`` and
+punctuation that matches ``text`` case-insensitively at some offset matches
+``fold(text)`` case-sensitively, lowered, at the same offset.
 """
 
 from __future__ import annotations
@@ -59,22 +70,35 @@ def _is_roman(token: str) -> bool:
     return bool(ROMAN_NUMERAL_CI.fullmatch(token.upper()))
 
 
-def _sub_all(text: str, battery, counts: dict | None = None) -> str:
+#: The only non-ASCII code points that ``re.IGNORECASE`` equates with an
+#: ASCII letter and ``lower()`` does not map to it (K, U+212A, lowers to k).
+_FOLD_TABLE = str.maketrans("İıſ", "iis")
+
+
+def fold(text: str) -> str:
+    """Lowercase view of ``text`` in which a character equals an ASCII
+    letter iff ``re.IGNORECASE`` equates them, at the same offsets."""
+    # on a str without these chars (always so for Latin-1 text) each test
+    # is a kind check or one memchr; İ is the one code point whose lower()
+    # is two characters, so translating it first keeps every offset
+    if "İ" in text or "ı" in text or "ſ" in text:
+        text = text.translate(_FOLD_TABLE)
+    return text.lower()
+
+
+def _sub_all(text: str, battery) -> str:
     """Apply an ordered battery of (compiled_pattern, replacement, guards).
 
-    ``counts`` (optional dict) accumulates substitutions per rule, keyed by
-    the rule's first guard literal (its canonical name; the ref's analog is
-    the per-pattern stats standardize_orthography returns,
-    Text Cleaner/step5_standardize_orthography.py:302-338). Counting rides
-    the subn call the hot path already makes -- zero extra scans.
-
-    ``guards`` is a tuple of lowercase literals such that every possible
-    match of the pattern must contain at least one of them; when none occurs
-    in the (lowercased) text the pattern provably cannot match and the regex
-    scan is skipped. An empty tuple means "always run". The lowercased view
-    is invalidated whenever a substitution fires, so a literal introduced by
-    an earlier replacement is still seen -- guard skipping is therefore
-    byte-exact vs running every pattern unconditionally. This is the same
+    ``guards`` is a tuple of lowercase ASCII literals such that every
+    possible match of the pattern must contain at least one of them; when
+    none occurs in ``fold(text)`` the pattern provably cannot match (a
+    case-insensitive match of a literal is that literal in the folded view)
+    and the regex scan is skipped. An empty tuple means "always run". The
+    folded view is invalidated whenever a substitution fires, so a literal
+    introduced by an earlier replacement is still seen -- guard skipping is
+    therefore byte-exact vs running every pattern unconditionally. A plain
+    ``lower()`` view would not be: it misses ``ſ``, ``ı`` and ``İ``, which
+    ``IGNORECASE`` matches as s, i and i. This is the same
     cheap-check-first idea the reference applies at document level
     (Text Cleaner/step1_remove_short_files.py:190-209), pushed down to the
     per-pattern level: most documents contain none of the rare artifacts, so
@@ -84,7 +108,7 @@ def _sub_all(text: str, battery, counts: dict | None = None) -> str:
     for pat, repl, guards in battery:
         if guards:
             if low is None:
-                low = text.lower()
+                low = fold(text)
             if len(guards) == 1:  # fast path: most rules have one guard
                 if guards[0] not in low:
                     continue
@@ -93,9 +117,6 @@ def _sub_all(text: str, battery, counts: dict | None = None) -> str:
         text, n = pat.subn(repl, text)
         if n:
             low = None
-            if counts is not None:
-                key = guards[0] if guards else pat.pattern
-                counts[key] = counts.get(key, 0) + n
     return text
 
 
@@ -156,6 +177,28 @@ ABBREVIATION_RULES = tuple(
         (r"\bMax\.", "Maximus"),
     )
 )
+
+
+def _first_letter_alternation(bodies) -> str:
+    """``(?:a(?:…)|c(?:…)|…)`` over regex bodies that each start with a
+    literal letter: one branch per first letter, so ``re`` rejects a scan
+    position after one character comparison per distinct letter."""
+    groups: dict = {}
+    for b in bodies:
+        groups.setdefault(b[0], []).append(b[1:])
+    return "(?:" + "|".join(
+        k + "(?:" + "|".join(rest) + ")" for k, rest in groups.items()
+    ) + ")"
+
+
+# every rule is \b + letters, \. and \s* / \s+, so lowering its letters
+# is the whole change that a case-sensitive scan over fold(text) needs
+assert all(re.fullmatch(r"\\b(?:[A-Za-z]|\\\.|\\s[*+])+", p.pattern)
+           for p, _r, _g in ABBREVIATION_RULES)
+#: any rule match in ``text`` is a match of this in ``fold(text)`` at the
+#: same offset, so no match here means the whole battery is a no-op
+_ABBREVIATION_PRESCAN = re.compile(r"\b" + _first_letter_alternation(
+    p.pattern[2:].lower() for p, _r, _g in ABBREVIATION_RULES))
 
 #: Praenomen regex fragment -> full name, in evaluation order.
 #: (ref: step3_clean_content.py:22-47)
@@ -269,7 +312,8 @@ _PUNCT_COLLAPSE = tuple(
 
 _FINAL_WS = (
     (re.compile(r"\n{3,}"), "\n\n", ("\n\n\n",)),
-    (re.compile(r"[ \t]+"), " ", ()),
+    # a lone space is already " ": rewrite only runs and lone tabs
+    (re.compile(r"[ \t]{2,}|\t"), " ", ()),
 )
 
 
@@ -373,7 +417,8 @@ def _gender_context(text: str, pos: int) -> str:
 def _expand_abbreviations(text: str) -> str:
     # standard rules first (ref step3:370-382), then contextual praenomina
     # (ref step3:336-368)
-    text = _sub_all(text, ABBREVIATION_RULES)
+    if _ABBREVIATION_PRESCAN.search(fold(text)):
+        text = _sub_all(text, ABBREVIATION_RULES)
     for frag, full, pat, lit in _PRAENOMEN_PATTERNS:
         if lit not in text:
             continue
@@ -444,6 +489,11 @@ _HEADING_INDICATORS = (
     "pars", "part", "sectio", "section", "titulus", "title",
 )
 
+_ROMAN_FIRST = frozenset("ivxlcdmIVXLCDMİı")
+#: lowered first chars that IGNORECASE equates with a _CHAPTER_LINE keyword's
+#: (cap/caput/capitulum/chapter, liber, pars, sectio, book)
+_CHAPTER_FIRST = frozenset("clpsbſ")
+_DIGIT = re.compile(r"\d")
 _SEPARATOR_LINE = re.compile(r"^[\s\-–—\.=\*#]+$")
 _ROMAN_STRIP = re.compile(r"[.\s\-–—]")
 _LOWER_WORD = re.compile(r"^[a-z]+$")
@@ -470,9 +520,11 @@ def _is_roman_heading(line: str) -> bool:
     line = line.strip()
     if not line:
         return False
-    if _is_roman(_ROMAN_STRIP.sub("", line)) and len(line) < 20:
+    if len(line) < 20 and _is_roman(_ROMAN_STRIP.sub("", line)):
         return True
-    if ROMAN_LINE_START.match(line):
+    # ROMAN_LINE_START's lookahead needs a first char that IGNORECASE
+    # equates with one of IVXLCDM: exactly these 16 (see fold)
+    if line[0] in _ROMAN_FIRST and ROMAN_LINE_START.match(line):
         rest = ROMAN_LINE_START.sub("", line).strip()
         if not rest or len(rest) < 30:
             return True
@@ -504,7 +556,9 @@ def stage_headings(text: str) -> str:
         low = s.lower()
         if (
             _is_roman_heading(s)
-            or any(p.match(low) for p in _CHAPTER_LINE)
+            # s is stripped (str.strip and \s agree), so ^\s* is empty
+            or (low[0] in _CHAPTER_FIRST
+                and any(p.match(low) for p in _CHAPTER_LINE))
             or _is_title_author(s)
             or _SEPARATOR_LINE.match(s)
             or (len(s) < 3 and not _LOWER_WORD.match(low))
@@ -513,9 +567,12 @@ def stage_headings(text: str) -> str:
         kept.append(raw)
 
     # page-number scrub; note every surviving line comes out stripped
-    # (ref step4:86-107)
+    # (ref step4:86-107). Each of the three patterns needs a \d, so a
+    # document without one only strips its lines.
+    if not _DIGIT.search(text):
+        return _sub_all("\n".join(s.strip() for s in kept), _INLINE_MARKUP)
     out = []
-    for raw in "\n".join(kept).split("\n"):
+    for raw in kept:
         s = raw.strip()
         if _BARE_NUMBER_LINE.match(s):
             continue
@@ -608,6 +665,47 @@ VARIANT_RULES = tuple(
         (r"\bdecimus\b", "decimus"),
     )
 )
+
+# every rule is \bword\b and every replacement one literal word, so a rule
+# that fires turns each whole-word occurrence of its word into its
+# replacement and leaves every other word of the text as it was
+assert all(
+    re.fullmatch(r"\\b[A-Za-z]+\\b(?:\(\?!\\w\))?", p.pattern)
+    and re.fullmatch(r"[A-Za-z]+", r)
+    for p, r, _g in VARIANT_RULES
+)
+_VARIANT_WORDS = tuple(dict.fromkeys(g[0] for _p, _r, g in VARIANT_RULES))
+#: finds every whole-word occurrence of a rule word in ``fold(text)``: the
+#: words whose rules can match ``text``
+_VARIANT_PRESCAN = re.compile(
+    r"\b" + _first_letter_alternation(_VARIANT_WORDS) + r"\b")
+
+
+def _apply_variants(text: str, counts: dict | None = None) -> str:
+    """Apply VARIANT_RULES in order, running only the rules whose word is
+    in the text and tracking that set across substitutions.
+
+    ``counts`` (optional dict) accumulates substitutions per rule, keyed by
+    the rule's word (its canonical name; the ref's analog is the per-pattern
+    stats standardize_orthography returns,
+    Text Cleaner/step5_standardize_orthography.py:302-338). Counting rides
+    the subn call the rule already makes -- zero extra scans.
+    """
+    present = set(_VARIANT_PRESCAN.findall(fold(text)))
+    if not present:
+        return text
+    for pat, repl, (word,) in VARIANT_RULES:
+        if word not in present:
+            continue
+        text, n = pat.subn(repl, text)
+        if n:
+            # all of word became repl; no other word changed
+            present.discard(word)
+            present.add(repl.lower())
+            if counts is not None:
+                counts[word] = counts.get(word, 0) + n
+    return text
+
 
 #: Explicit diacritic fold table (ref: step5:142-187). Note targets are
 #: lowercase even for uppercase sources -- faithful to the reference.
@@ -704,7 +802,7 @@ def stage_orthography(text: str, variant_counts: dict | None = None) -> str:
     ``variant_counts`` optionally accumulates per-rule M11 hit counts (the
     ref's per-pattern stats, step5:302-338 / detailed_progress_logger.py:119-156).
     """
-    text = _sub_all(text, VARIANT_RULES, variant_counts)
+    text = _apply_variants(text, variant_counts)
     text = text.translate(DIACRITIC_MAP)
     text = text.translate(_NFD_STRIP_TABLE)
     for a, b in LIGATURE_PAIRS:
