@@ -74,6 +74,11 @@ def _docs_as_pages(docs: DataFrame) -> DataFrame:
 _STOPWORDS = quality.STOPWORDS
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 
+#: The engine's Java ``\s`` as the body of an RE2 character class, for the
+#: oracles' word splits (``'[{_JAVA_WS}]+'``): RE2's ``\s`` leaves out the
+#: vertical tab, which Java's holds.
+_JAVA_WS = r" \t\n\x0b\f\r"
+
 from wikisource_latin_text_cleaner_spark.functions import pii as piix  # noqa: E402
 
 _TOX_SQL = "[" + ", ".join(f"'{w}'" for w in sorted(piix.TOXICITY_LEXICON)) + "]"
@@ -1316,11 +1321,10 @@ _MINHASH_SIG_CTES = """t AS (
 #: distinct-stopword count) -- reused by the quality-gate and ablation
 #: oracles. Defined as an f-string so {_STOP_SQL} and the {{}}-escaped
 #: regex braces resolve exactly as in the original inline oracle. Words
-#: split on the engine's Java ``\s`` (rules._JAVA_SPACE); RE2's ``\s``
-#: leaves out the vertical tab.
+#: split on the engine's Java ``\s`` (_JAVA_WS).
 _GOPHER_FEAT_CTES = f"""base AS (
               SELECT doc_id, text, length(text) AS L,
-                     list_filter(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+'),
+                     list_filter(string_split_regex(text, '[{_JAVA_WS}]+'),
                                  x -> x <> '') AS ws,
                      list_filter(list_transform(string_split(text, chr(10)),
                                                 x -> trim(x, ' ')),
@@ -1474,17 +1478,17 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_copies
             FROM documents GROUP BY md5(text)
         """,
-        "token_counts": """
+        "token_counts": f"""
             SELECT lang,
-                   CAST(sum(len(list_filter(string_split_regex(trim(text), '\\s+'),
+                   CAST(sum(len(list_filter(string_split_regex(trim(text), '[{_JAVA_WS}]+'),
                                        x -> x <> ''))) AS BIGINT) AS total_tokens,
-                   round(avg(len(list_filter(string_split_regex(trim(text), '\\s+'),
+                   round(avg(len(list_filter(string_split_regex(trim(text), '[{_JAVA_WS}]+'),
                                              x -> x <> ''))), 4) AS avg_tokens
             FROM documents GROUP BY lang
         """,
-        "fingerprints": """
+        "fingerprints": f"""
             SELECT doc_id,
-                   md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fingerprint
+                   md5(lower(regexp_replace(text, '[{_JAVA_WS}]+', ' ', 'g'))) AS fingerprint
             FROM documents
         """,
         "dup_line_stats": """
@@ -1549,15 +1553,15 @@ def oracle_sql() -> dict[str, str]:
         "stopword_ratio": f"""
             SELECT lang,
                    round(avg(
-                     CASE WHEN len(list_filter(string_split_regex(lower(text), '\\s+'),
+                     CASE WHEN len(list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                                x -> x <> '')) > 0
                      THEN len(list_filter(
                             list_transform(
-                              list_filter(string_split_regex(lower(text), '\\s+'),
+                              list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                           x -> x <> ''),
                               x -> regexp_replace(x, '[^\\w]', '', 'g')),
                             x -> list_contains({_STOP_SQL}, x))) * 1.0
-                          / len(list_filter(string_split_regex(lower(text), '\\s+'),
+                          / len(list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                             x -> x <> ''))
                      ELSE 0.0 END), 4) AS avg_stopword_ratio
             FROM documents GROUP BY lang
@@ -1585,25 +1589,25 @@ def oracle_sql() -> dict[str, str]:
                      ELSE 0.0 END), 6) AS avg_symbol_ratio
             FROM documents GROUP BY source
         """,
-        "mean_word_len": """
+        "mean_word_len": f"""
             SELECT lang,
                    round(avg(
-                     CASE WHEN len(list_filter(string_split_regex(trim(text), '\\s+'),
+                     CASE WHEN len(list_filter(string_split_regex(trim(text), '[{_JAVA_WS}]+'),
                                                x -> x <> '')) > 0
                      THEN list_sum(list_transform(
-                            list_filter(string_split_regex(trim(text), '\\s+'),
+                            list_filter(string_split_regex(trim(text), '[{_JAVA_WS}]+'),
                                         x -> x <> ''),
                             x -> length(x) * 1.0))
-                          / len(list_filter(string_split_regex(trim(text), '\\s+'),
+                          / len(list_filter(string_split_regex(trim(text), '[{_JAVA_WS}]+'),
                                             x -> x <> ''))
                      ELSE 0.0 END), 4) AS avg_word_len
             FROM documents GROUP BY lang
         """,
-        "pii_matches": """
+        "pii_matches": f"""
             SELECT lang,
                    CAST(sum(len(regexp_extract_all(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))) AS BIGINT) AS email_matches,
-                   CAST(sum(len(regexp_extract_all(text, 'https?://[^\\s]+'))) AS BIGINT) AS url_matches
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}'))) AS BIGINT) AS email_matches,
+                   CAST(sum(len(regexp_extract_all(text, 'https?://[^{_JAVA_WS}]+'))) AS BIGINT) AS url_matches
             FROM documents GROUP BY lang
         """,
         "html_extract": """
@@ -1651,11 +1655,11 @@ def oracle_sql() -> dict[str, str]:
                          / n_total, 4) AS boiler_frac
             FROM scored
         """,
-        "vocabulary_top100": """
+        "vocabulary_top100": f"""
             WITH words AS (
               SELECT doc_id AS _doc, w.word
               FROM documents,
-                   unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+                   unnest(list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                       x -> x <> '')) AS w(word)
             )
             SELECT word, count(*) AS n_occurrences,
@@ -1663,7 +1667,7 @@ def oracle_sql() -> dict[str, str]:
             FROM words GROUP BY word
             ORDER BY n_occurrences DESC, word ASC LIMIT 100
         """,
-        "ngram_jaccard_near_dups": """
+        "ngram_jaccard_near_dups": f"""
             -- ALL-pairs exact verification (no blocking): any pair the
             -- Spark side's MinHash-band candidate generation missed would
             -- appear here as an extra row
@@ -1671,9 +1675,9 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id,
                      list_distinct(
                        list_transform(
-                         range(0, greatest(len(string_split_regex(lower(text), '\\s+')) - 3, 0) + 1),
+                         range(0, greatest(len(string_split_regex(lower(text), '[{_JAVA_WS}]+')) - 3, 0) + 1),
                          i -> array_to_string(
-                                list_slice(string_split_regex(lower(text), '\\s+'),
+                                list_slice(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                            i + 1, i + 3), ' ')))
                        AS g
               FROM documents
@@ -1749,13 +1753,13 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(s), 4) AS avg_mojibake_rate
             FROM s GROUP BY lang
         """,
-        "oov_rate": """
+        "oov_rate": f"""
             -- re-derive the top-1000 vocabulary AND the per-doc scoring;
             -- zero-token docs re-enter via the LEFT JOIN at oov = 0.0
             WITH toks AS (
               SELECT doc_id, u.word
               FROM (SELECT doc_id,
-                           list_filter(string_split_regex(lower(text), '\\s+'),
+                           list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                        x -> x <> '') AS ws
                     FROM documents), unnest(ws) AS u(word)
             ),
@@ -1944,15 +1948,15 @@ def oracle_sql() -> dict[str, str]:
             ),
             s AS (
               SELECT doc_id, domain,
-                CASE WHEN len(list_filter(string_split_regex(lower(text), '\\s+'),
+                CASE WHEN len(list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                           x -> x <> '')) > 0
                 THEN len(list_filter(
                        list_transform(
-                         list_filter(string_split_regex(lower(text), '\\s+'),
+                         list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                      x -> x <> ''),
                          x -> regexp_replace(x, '[^\\w]', '', 'g')),
                        x -> list_contains({_STOP_SQL}, x))) * 1.0
-                     / len(list_filter(string_split_regex(lower(text), '\\s+'),
+                     / len(list_filter(string_split_regex(lower(text), '[{_JAVA_WS}]+'),
                                        x -> x <> ''))
                 ELSE 0.0 END AS r
               FROM d
@@ -1965,12 +1969,12 @@ def oracle_sql() -> dict[str, str]:
             FROM s JOIN v USING (domain)
             WHERE v.n >= 3 AND v.mean_r >= 0.055
         """,
-        "tfidf_top_terms": r"""
+        "tfidf_top_terms": rf"""
             WITH toks AS (
               SELECT lang AS g, u.t AS term
               FROM documents,
                    UNNEST(list_filter(string_split_regex(trim(lower(text)),
-                                                         '\s+'),
+                                                         '[{_JAVA_WS}]+'),
                                       x -> x <> '')) AS u(t)
               WHERE lang IS NOT NULL
             ),
@@ -3744,7 +3748,7 @@ def oracle_sql() -> dict[str, str]:
                             THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged
             FROM feat GROUP BY lang
         """,
-        "c4_line_filter": """
+        "c4_line_filter": f"""
             WITH synth AS (
               SELECT doc_id, lang,
                      substr(text, 1, 40) || '.' || chr(10) ||
@@ -3753,18 +3757,18 @@ def oracle_sql() -> dict[str, str]:
                           ELSE substr(text, 41, 40) || '!' END || chr(10) ||
                      'Click here' || chr(10) ||
                      CASE WHEN doc_id % 7 = 0 THEN 'Lorem ipsum dolor sit amet.'
-                          WHEN doc_id % 11 = 0 THEN 'function(){ return 1; }'
+                          WHEN doc_id % 11 = 0 THEN 'function(){{ return 1; }}'
                           ELSE 'All rights reserved.' END || chr(10) ||
                      substr(text, 81, 40) || '?' AS text
               FROM documents
             ),
             cleaned AS (
               SELECT lang,
-                     (lower(text) LIKE '%lorem ipsum%' OR lower(text) LIKE '%{%') AS poisoned,
+                     (lower(text) LIKE '%lorem ipsum%' OR lower(text) LIKE '%{{%') AS poisoned,
                      list_filter(
                        list_transform(string_split(text, chr(10)), x -> trim(x, ' ')),
                        l -> regexp_matches(l, '[.!?]["'']?$')
-                            AND len(list_filter(string_split_regex(l, '\\s+'),
+                            AND len(list_filter(string_split_regex(l, '[{_JAVA_WS}]+'),
                                                 x -> x <> '')) >= 3
                             AND NOT contains(lower(l), 'javascript')) AS kept
               FROM synth

@@ -138,3 +138,42 @@ def test_no_oracle_sql_contains_control_chars():
     for name, sql in ORACLES.items():
         mangled = [hex(ord(c)) for c in sql if ord(c) < 9]
         assert not mangled, (name, mangled)
+
+
+#: Documents whose vertical tabs (``\x0b``) separate words: Java's ``\s``,
+#: which the engine's word splits use, holds it and RE2's does not.
+VT_TEXTS = ["\x0ba\x0bb c", "one\ttwo\x0cthree\r\nfour", "x\x0b\x0bet in",
+            "  lead and trail  ", "", "http://a.la\x0bhttp://b.la et",
+            "Et\x0bnon\x0bsed"]
+
+
+@pytest.fixture(scope="module")
+def vt_sf(tmp_path_factory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("vt_sf")
+    pq.write_table(pa.table({
+        "doc_id": list(range(len(VT_TEXTS))),
+        "text": VT_TEXTS,
+        "lang": ["la", "en"] * (len(VT_TEXTS) // 2) + ["la"] * (len(VT_TEXTS) % 2),
+        "source": ["wikisource"] * len(VT_TEXTS),
+        "n_chars": [len(t) for t in VT_TEXTS],
+    }), d / "documents.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["token_counts", "fingerprints",
+                                  "stopword_ratio", "mean_word_len",
+                                  "pii_matches", "vocabulary_top100"])
+def test_oracle_word_split_is_java_space(spark, vt_sf, name):
+    """The oracles split words on the engine's Java ``\\s``: on documents
+    whose words are separated by vertical tabs, Spark and DuckDB agree."""
+    sdf = QUERIES[name](spark, vt_sf)
+    con = _duck(vt_sf)
+    res = con.execute(ORACLES[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    con.close()
+    assert _canon([tuple(r) for r in sdf.collect()], sdf.columns) == \
+        _canon(drows, dcols), name

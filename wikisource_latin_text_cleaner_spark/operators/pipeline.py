@@ -11,8 +11,10 @@ skew-defusing repartition shuffle anything.
 
 Quarantine semantics (ref: Text Cleaner/step1_remove_short_files.py:215-231
 backs removed files up rather than losing them): dropped rows are never
-deleted, they carry keep=false + drop_reasons, and sinks partition by
-`keep` so consumers prune quarantined rows at scan time.
+deleted, they carry keep=false + drop_reasons, and consumers filter on
+`keep`. No sink partitions by it: the driver's write partitions by
+`bucket` (the resume unit; none with ``--buckets 0``) plus any
+``--partition-by`` columns.
 """
 
 from __future__ import annotations
